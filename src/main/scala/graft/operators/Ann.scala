@@ -640,29 +640,19 @@ object Ann extends Serializable {
   }
 
   // ---------------------------------------------------------------
-  // Committed standing IVF index: versioned manifest storage — the
-  // [[Bm25]] commit discipline ([[ManifestIO]]), specialized to pure
-  // cell appends.
-  //
-  // Layout under the index dir:
-  //   data/<v>/cells/cell=<c>/…   (cid, cvec) rows assigned by tick v
-  //   data/<v>/centroids/         (cell, cvec) — the trained geometry
+  // Committed standing IVF index ([[ManifestIO]]'s versioned-manifest
+  // model):
+  //   data/<v>/cells/cell=<c>/…     (cid, cvec) rows assigned by tick v
+  //   data/<v>/cellstats/           per-cell drift stats of tick v
   //   data/<v>/cidmap/cbucket=<b>/… (cid, cell) reverse map rows — the
-  //                               [[Bm25]] docmap's IVF sibling; see
-  //                               [[readIvfCidmapAt]]
-  //   manifest/v<v>.txt           cell → owning data versions, at v
-  //   CURRENT                     the committed manifest version
+  //                                 [[Bm25]] docmap's IVF sibling; see
+  //                                 [[readIvfCidmapAt]]
+  //   data/<v>/centroids/           (cell, cvec) — the trained geometry
   //
-  // An IVF cell only ever GAINS rows on append (the model the BM25
-  // postings adopted in round 16 and both reverse maps in round 17),
-  // so the manifest maps each cell
-  // to the LIST of data versions contributing files. Every tick writes
-  // only new files under a fresh data/<v>/, then commits with one
-  // atomic CURRENT rename: a writer crash at any point leaves readers
-  // on the previous version, uncommitted data dirs are garbage, and —
-  // because the centroid artifact travels INSIDE the commit — a serve
-  // can never pair one tick's probe geometry with another's cell
-  // contents. Single writer per index dir, any number of readers.
+  // An IVF cell only ever GAINS rows on append, so the manifest maps
+  // each cell to the LIST of data versions contributing files. Because
+  // the centroid artifact travels INSIDE the commit, a serve can never
+  // pair one tick's probe geometry with another's cell contents.
   // Centroids are deliberately NOT retrained per tick: geometry drift
   // is a periodic offline rebuild (the standard IVF maintenance
   // split); [[ivfIndexBuild]] over a live dir allocates the next
@@ -693,39 +683,56 @@ object Ann extends Serializable {
       cidVersions: Map[Int, Seq[Long]] = Map.empty,
       cellstats: Boolean = false)
 
-  private def renderIvfManifest(m: IvfManifest): String = {
-    val cv = m.cellVersions.toSeq.sortBy(_._1)
-      .map { case (c, vs) => s"$c:${vs.mkString("|")}" }.mkString(",")
-    val dv = if (m.cidVersions.isEmpty) ""
-      else "cidVersions=" + m.cidVersions.toSeq.sortBy(_._1)
-        .map { case (b, vs) => s"$b:${vs.mkString("|")}" }.mkString(",") + "\n"
-    val cs = if (m.cellstats) "cellstats=1\n" else ""
-    s"version=${m.version}\ncells=${m.cells}\n" +
-      s"centroids=${m.centroidsVersion}\ncellVersions=$cv\n" + dv + cs +
-      ManifestIO.renderTxns(m.txns)
-  }
+  /** The IVF layout for the shared lifecycle verbs. The drift-stats
+    * sidecar is one directory per version: the drift read filters it
+    * to the referenced (version, cell) pairs. */
+  private object IvfSpec extends ManifestIO.IndexSpec[IvfManifest] {
+    val what = "IVF index"
 
-  private def parseIvfManifest(text: String): IvfManifest = {
-    val kv = ManifestIO.parseKv(text)
-    val cv = kv("cellVersions").split(",").filter(_.nonEmpty).map { e =>
-      val Array(c, vs) = e.split(":")
-      c.toInt -> vs.split("\\|").map(_.toLong).toSeq
-    }.toMap
-    // "b:v1|v2|…" — a legacy single-owner cidmap entry ("b:v") parses
-    // as a one-element list, so pre-accretion dirs read unchanged
-    val dv = kv.get("cidVersions").map(_.split(",").filter(_.nonEmpty).map { e =>
-      val Array(b, vs) = e.split(":")
-      b.toInt -> vs.split("\\|").map(_.toLong).toSeq
-    }.toMap).getOrElse(Map.empty[Int, Seq[Long]])
-    // cellstats is OPTIONAL: a pre-sidecar manifest parses to false and
-    // drift falls back to the full cells scan
-    IvfManifest(kv("version").toLong, kv("cells").toInt, kv("centroids").toLong, cv,
-      ManifestIO.parseTxns(kv), dv, kv.get("cellstats").contains("1"))
+    def render(m: IvfManifest): String =
+      s"version=${m.version}\ncells=${m.cells}\ncentroids=${m.centroidsVersion}\n" +
+        s"cellVersions=${ManifestIO.renderVersions(m.cellVersions)}\n" +
+        (if (m.cidVersions.isEmpty) ""
+         else s"cidVersions=${ManifestIO.renderVersions(m.cidVersions)}\n") +
+        (if (m.cellstats) "cellstats=1\n" else "") + ManifestIO.renderTxns(m.txns)
+
+    // cidVersions and cellstats are OPTIONAL: a pre-cidmap manifest
+    // parses to an empty reverse map, a pre-sidecar one to false (drift
+    // falls back to the full cells scan)
+    def parse(text: String): IvfManifest = {
+      val kv = ManifestIO.parseKv(text)
+      IvfManifest(kv("version").toLong, kv("cells").toInt, kv("centroids").toLong,
+        ManifestIO.parseVersions(kv("cellVersions")), ManifestIO.parseTxns(kv),
+        kv.get("cidVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty),
+        kv.get("cellstats").contains("1"))
+    }
+
+    def accreting(m: IvfManifest): Seq[ManifestIO.Accreting] = Seq(
+      ManifestIO.Accreting("cells", "cell", m.cellVersions,
+        Some(ManifestIO.Sidecar("cellstats", perPartition = false, m.cellstats))),
+      ManifestIO.Accreting("cidmap", "cbucket", m.cidVersions))
+
+    override def single(m: IvfManifest): Seq[(String, Long)] =
+      Seq("centroids" -> m.centroidsVersion)
+
+    def read(spark: SparkSession, dir: String, m: IvfManifest, name: String,
+        parts: Set[Int]): DataFrame =
+      if (name == "cells") readIvfCellsAt(spark, dir, m, Some(parts))
+      else readIvfCidmapAt(spark, dir, m, Some(parts))
+
+    def writeSidecar(spark: SparkSession, dir: String, m: IvfManifest,
+        ver: Long): Unit =
+      writeCellstats(spark, dir, ver, readIvfCentroidsAt(spark, dir, m))
+
+    def updated(m: IvfManifest, version: Long,
+        versions: Map[String, Map[Int, Seq[Long]]]): IvfManifest =
+      m.copy(version = version, cellVersions = versions("cells"),
+        cidVersions = versions("cidmap"))
   }
 
   /** The committed manifest — every reader's one CURRENT read. */
   def readIvfManifest(spark: SparkSession, dir: String): IvfManifest =
-    parseIvfManifest(ManifestIO.readCurrent(spark, dir, "IVF index")._2)
+    IvfSpec.current(spark, dir)
 
   /** The committed centroid geometry, indexed by cell id. */
   def readIvfCentroids(spark: SparkSession, dir: String): Array[Array[Float]] =
@@ -844,14 +851,11 @@ object Ann extends Serializable {
     * entries. */
   private def writeCidmap(spark: SparkSession, dir: String,
       ver: Long, cells: Int): Seq[Int] = {
-    spark.read.parquet(s"$dir/data/$ver/cells")
+    ManifestIO.writePartitioned(spark.read.parquet(s"$dir/data/$ver/cells")
       .select(col("cid"), col("cell").cast("int").as("cell"))
       .distinct()
-      .withColumn("cbucket", cidCbucket(col("cid"), cells))
-      .repartition(col("cbucket")) // one file per cbucket (the compact write shape)
-      .write.partitionBy("cbucket").mode("overwrite")
-      .parquet(s"$dir/data/$ver/cidmap")
-    ManifestIO.partitionIds(spark, s"$dir/data/$ver/cidmap", "cbucket=")
+      .withColumn("cbucket", cidCbucket(col("cid"), cells)),
+      dir, ver, "cidmap", "cbucket")
   }
 
   /** Derive one tick's DRIFT-STATS sidecar from its JUST-WRITTEN cells
@@ -911,20 +915,11 @@ object Ann extends Serializable {
     // rebuild-over-union contract), same as [[Bm25.buildIndex]]
     val (ver, priorTxns) = ManifestIO.buildSlot(spark, dir)
     ManifestIO.guardSlot(spark, dir, ver)
-    // one exchange on the cell id → one file per cell (the compact
-    // write shape the cidmap/compact writers already use): without it
-    // every assignment task leaves its own file per cell it touched
-    // (tasks × cells files), and every later serve pays a parquet
-    // reader init per file inside its probed-cell read
-    assignCells(corpus, cents)
-      .repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$dir/data/$ver/cells")
+    val present = ManifestIO.writePartitioned(assignCells(corpus, cents),
+      dir, ver, "cells", "cell").map(_ -> Seq(ver)).toMap
     cents.toSeq.zipWithIndex.map { case (v, c) => (c, v.toSeq) }
       .toDF("cell", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$ver/centroids")
-    val present = ManifestIO.partitionIds(spark, s"$dir/data/$ver/cells", "cell=")
-      .map(_ -> Seq(ver)).toMap
     // the cid→cell reverse map, fresh with the build
     val cidVers =
       if (present.isEmpty) Map.empty[Int, Seq[Long]]
@@ -933,9 +928,8 @@ object Ann extends Serializable {
     // the drift-stats sidecar rides every build (see [[writeCellstats]])
     writeCellstats(spark, dir, ver, cents)
     ManifestIO.commit(spark, dir, ver,
-      renderIvfManifest(
-        IvfManifest(ver, cents.length, ver, present, priorTxns, cidVers,
-          cellstats = true)))
+      IvfSpec.render(IvfManifest(ver, cents.length, ver, present, priorTxns, cidVers,
+        cellstats = true)))
   }
 
   /** APPEND tick of the committed served-IVF lifecycle
@@ -979,11 +973,8 @@ object Ann extends Serializable {
     if (batch.isEmpty) return // the index already is the post-tick state
     val cents = readIvfCentroidsAt(spark, dir, m)
     ManifestIO.guardSlot(spark, dir, newVer)
-    assignCells(batch, cents)
-      .repartition(col("cell")) // one file per cell (the compact write shape)
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/cells")
-    val touched = ManifestIO.partitionIds(spark, s"$dir/data/$newVer/cells", "cell=")
+    val touched = ManifestIO.writePartitioned(assignCells(batch, cents),
+      dir, newVer, "cells", "cell")
     // reverse-map maintenance — ACCRETIVE, like the cells themselves:
     // the tick writes ONLY the batch's (cid, cell) rows and appends its
     // version onto the touched cbuckets' manifest lists; the committed
@@ -997,24 +988,16 @@ object Ann extends Serializable {
     // dir would leave a map that silently misses every pre-existing
     // member.
     val maintainCidmap = m.cidVersions.nonEmpty || m.cellVersions.isEmpty
-    val newCidVers = if (maintainCidmap) {
-      val presentC = writeCidmap(spark, dir, newVer, m.cells)
-      m.cidVersions ++ presentC.map(k =>
-        k -> (m.cidVersions.getOrElse(k, Seq.empty) :+ newVer))
-    } else m.cidVersions
+    val newCidVers =
+      if (maintainCidmap)
+        ManifestIO.accrete(m.cidVersions, writeCidmap(spark, dir, newVer, m.cells), newVer)
+      else m.cidVersions
     // the drift-stats sidecar rides the same write (batch-sized)
     if (m.cellstats) writeCellstats(spark, dir, newVer, cents)
-    if (crashPoint == 1) return // simulated death: data written, nothing committed
-    val newCells = m.cellVersions ++ touched.map(c =>
-      c -> (m.cellVersions.getOrElse(c, Seq.empty) :+ newVer))
-    val body = renderIvfManifest(
-      IvfManifest(newVer, m.cells, m.centroidsVersion, newCells,
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
+      IvfManifest(newVer, m.cells, m.centroidsVersion,
+        ManifestIO.accrete(m.cellVersions, touched, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
   }
 
   /** DELETE tick of the committed-IVF lifecycle — the takedown /
@@ -1073,14 +1056,13 @@ object Ann extends Serializable {
       .filter(m.cellVersions.contains)
     ManifestIO.guardSlot(spark, dir, newVer)
     val delIds = assigned.select(col("cid")).distinct()
-    if (touched.nonEmpty) {
-      readIvfCellsAt(spark, dir, m, Some(touched.toSet))
+    // a cell emptied by the delete never materializes under newVer and
+    // leaves the manifest
+    val present =
+      if (touched.isEmpty) Seq.empty[Int]
+      else ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m, Some(touched.toSet))
         .join(delIds, Seq("cid"), "left_anti")
-        .select(col("cid"), col("cvec"), col("cell"))
-        .repartition(col("cell")) // one file per cell (the compact write shape)
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/cells")
-    }
+        .select(col("cid"), col("cvec"), col("cell")), dir, newVer, "cells", "cell")
     // reverse-map consolidation: exactly the member rows the anti-join
     // removed — (cid ∈ batch) ∧ (cell ∈ touched) — leave their
     // cbuckets (located by the pure id→cbucket function); a stale copy
@@ -1091,35 +1073,20 @@ object Ann extends Serializable {
         .distinct().collect().map(_.getInt(0)).toSet
         .filter(m.cidVersions.contains)
       if (candC.isEmpty) m.cidVersions
-      else {
+      else ManifestIO.consolidate(m.cidVersions, candC, ManifestIO.writePartitioned(
         readIvfCidmapAt(spark, dir, m, Some(candC))
           .join(delIds.withColumn("_del", lit(true)), Seq("cid"), "left")
           .filter(col("_del").isNull || !col("cell").isin(touched.toSeq: _*))
-          .select(col("cid"), col("cell"), col("cbucket"))
-          .repartition(col("cbucket")) // one file per cbucket (the compact write shape)
-          .write.partitionBy("cbucket").mode("overwrite")
-          .parquet(s"$dir/data/$newVer/cidmap")
-        val presentD = ManifestIO
-          .partitionIds(spark, s"$dir/data/$newVer/cidmap", "cbucket=").toSet
-        (m.cidVersions -- candC) ++ presentD.map(_ -> Seq(newVer))
-      }
+          .select(col("cid"), col("cell"), col("cbucket")),
+        dir, newVer, "cidmap", "cbucket"), newVer)
     } else m.cidVersions
     // the consolidated cells' drift stats (touched-cell-sized)
     if (m.cellstats && touched.nonEmpty)
       writeCellstats(spark, dir, newVer, cents)
-    if (crashPoint == 1) return // simulated death: data written, nothing committed
-    val present =
-      if (touched.isEmpty) Set.empty[Int]
-      else ManifestIO.partitionIds(spark, s"$dir/data/$newVer/cells", "cell=").toSet
-    val newCells = (m.cellVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val body = renderIvfManifest(
-      IvfManifest(newVer, m.cells, m.centroidsVersion, newCells,
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
+      IvfManifest(newVer, m.cells, m.centroidsVersion,
+        ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
   }
 
   /** ID-ONLY (strict) takedown of the committed IVF index — the
@@ -1185,40 +1152,26 @@ object Ann extends Serializable {
       .filter(m.cellVersions.contains)
     if (touched.isEmpty) return // no id matched: nothing to remove
     ManifestIO.guardSlot(spark, dir, newVer)
-    readIvfCellsAt(spark, dir, m, Some(touched.toSet))
+    val present = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m, Some(touched.toSet))
       .join(delIds, Seq("cid"), "left_anti")
-      .select(col("cid"), col("cvec"), col("cell"))
-      .repartition(col("cell")) // one file per cell (the compact write shape)
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/cells")
+      .select(col("cid"), col("cvec"), col("cell")), dir, newVer, "cells", "cell")
     // reverse-map consolidation: the matched cids' rows (EVERY copy)
     // leave their cbuckets
-    val newCidVers = if (hasCidmap && candC.nonEmpty) {
-      readIvfCidmapAt(spark, dir, m, Some(candC))
-        .join(delIds, Seq("cid"), "left_anti")
-        .select(col("cid"), col("cell"), col("cbucket"))
-        .repartition(col("cbucket")) // one file per cbucket (the compact write shape)
-        .write.partitionBy("cbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/cidmap")
-      val presentD = ManifestIO
-        .partitionIds(spark, s"$dir/data/$newVer/cidmap", "cbucket=").toSet
-      (m.cidVersions -- candC) ++ presentD.map(_ -> Seq(newVer))
-    } else m.cidVersions
+    val newCidVers =
+      if (hasCidmap && candC.nonEmpty)
+        ManifestIO.consolidate(m.cidVersions, candC, ManifestIO.writePartitioned(
+          readIvfCidmapAt(spark, dir, m, Some(candC))
+            .join(delIds, Seq("cid"), "left_anti")
+            .select(col("cid"), col("cell"), col("cbucket")),
+          dir, newVer, "cidmap", "cbucket"), newVer)
+      else m.cidVersions
     // the consolidated cells' drift stats (touched-cell-sized)
     if (m.cellstats)
       writeCellstats(spark, dir, newVer, readIvfCentroidsAt(spark, dir, m))
-    if (crashPoint == 1) return // simulated death: data written, nothing committed
-    val present =
-      ManifestIO.partitionIds(spark, s"$dir/data/$newVer/cells", "cell=").toSet
-    val newCells = (m.cellVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val body = renderIvfManifest(
-      IvfManifest(newVer, m.cells, m.centroidsVersion, newCells,
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
+      IvfManifest(newVer, m.cells, m.centroidsVersion,
+        ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
   }
 
   /** UPSERT tick of the committed-IVF lifecycle — the REFRESH verb
@@ -1258,18 +1211,12 @@ object Ann extends Serializable {
     val newVer = m.version + 1
     ManifestIO.guardSlot(spark, dir, newVer)
     // ONE full cells scan — the price the map exists to retire
-    readIvfCellsAt(spark, dir, m)
+    val presentD = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m)
       .select(col("cid"), col("cell")).distinct()
-      .withColumn("cbucket", cidCbucket(col("cid"), m.cells))
-      .repartition(col("cbucket")) // one file per cbucket
-      .write.partitionBy("cbucket").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/cidmap")
-    val presentD = ManifestIO
-      .partitionIds(spark, s"$dir/data/$newVer/cidmap", "cbucket=")
-    ManifestIO.commit(spark, dir, newVer,
-      renderIvfManifest(IvfManifest(newVer, m.cells, m.centroidsVersion,
-        m.cellVersions, m.txns, presentD.map(_ -> Seq(newVer)).toMap,
-        m.cellstats)))
+      .withColumn("cbucket", cidCbucket(col("cid"), m.cells)),
+      dir, newVer, "cidmap", "cbucket")
+    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(m.copy(version = newVer,
+      cidVersions = presentD.map(_ -> Seq(newVer)).toMap)))
     true
   }
 
@@ -1359,13 +1306,11 @@ object Ann extends Serializable {
       .collect().map(_.getInt(0))
     val touched = (touchedOld ++ touchedNew).distinct // ≤ cell count values
     ManifestIO.guardSlot(spark, dir, newVer)
-    readIvfCellsAt(spark, dir, m, Some(touched.toSet))
+    val present = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m, Some(touched.toSet))
       .join(upIds, Seq("cid"), "left_anti")
       .select(col("cid"), col("cvec"), col("cell"))
-      .unionByName(assigned.select(col("cid"), col("cvec"), col("cell")))
-      .repartition(col("cell")) // one file per cell (the compact write shape)
-      .write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/cells")
+      .unionByName(assigned.select(col("cid"), col("cvec"), col("cell"))),
+      dir, newVer, "cells", "cell")
     // reverse-map rewrite: a cid's old rows and its new row live in
     // the SAME cbucket (pure function of the id) — the affected ids'
     // cbuckets (upserted AND purely deleted) rewrite once with
@@ -1378,48 +1323,26 @@ object Ann extends Serializable {
       val remaining =
         if (hasCidmap) candMap.join(upIds, Seq("cid"), "left_anti")
         else readIvfCidmapAt(spark, dir, m, Some(candC)) // empty legacy frame, schema only
-      remaining
-        .unionByName(fresh).distinct()
-        .repartition(col("cbucket")) // one file per cbucket (the compact write shape)
-        .write.partitionBy("cbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/cidmap")
-      val presentD = ManifestIO
-        .partitionIds(spark, s"$dir/data/$newVer/cidmap", "cbucket=").toSet
-      (m.cidVersions -- candC) ++ presentD.map(_ -> Seq(newVer))
+      ManifestIO.consolidate(m.cidVersions, candC, ManifestIO.writePartitioned(
+        remaining.unionByName(fresh).distinct(), dir, newVer, "cidmap", "cbucket"), newVer)
     } else m.cidVersions
     // the rewritten cells' drift stats (touched-cell-sized)
     if (m.cellstats) writeCellstats(spark, dir, newVer, cents)
-    if (crashPoint == 1) return // simulated death: data written, nothing committed
-    val present = ManifestIO
-      .partitionIds(spark, s"$dir/data/$newVer/cells", "cell=").toSet
-    val newCells = (m.cellVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val body = renderIvfManifest(
-      IvfManifest(newVer, m.cells, m.centroidsVersion, newCells,
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
+      IvfManifest(newVer, m.cells, m.centroidsVersion,
+        ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
   }
 
-  /** COMPACT tick of the committed-IVF lifecycle — the read-amplification
-    * bound a long-lived streaming deployment needs: appends ACCRETE, so
-    * a cell ingested by N ticks reads a union of N file groups at every
-    * serve and its manifest entry grows without bound. This tick picks
-    * every cell whose version list has ≥ `minVersions` distinct
-    * contributing versions, rewrites each picked cell's union into ONE
-    * new data version (a pure physical rewrite — membership, vectors
-    * and scores are bit-identical before and after), and collapses the
-    * manifest entries to the single new version; unpicked cells are
-    * never listed. The cid→cell reverse map's fragmented cbuckets (it
-    * accretes on append too, round 17) collapse in the same tick.
-    * The superseded history is the next vacuum's food.
-    * CRASH-ATOMIC via the standard new-version + CURRENT flip; the txn
-    * ledger is carried forward untouched, so a maintenance stream's
-    * exactly-once record survives a compaction (like a rebuild).
-    * Single-writer maintenance, like vacuum — run it from the index's
-    * one writer (the [[graft.streaming.IndexMaintain.ivfSink]] cadence
+  /** COMPACT tick of the committed-IVF lifecycle
+    * ([[ManifestIO.compact]]): every cell with ≥ `minVersions` distinct
+    * contributing versions is rewritten into ONE new data version with
+    * its drift stats (a pure physical rewrite — membership, vectors and
+    * scores are bit-identical, so the recount equals the superseded
+    * versions' sums); the cid→cell reverse map's fragmented cbuckets
+    * (it accretes on append too) collapse in the same tick. Single-
+    * writer maintenance, like vacuum — run it from the index's one
+    * writer (the [[graft.streaming.IndexMaintain.ivfSink]] cadence
     * does). Returns the compacted cell ids. */
   def ivfIndexCompact(spark: SparkSession, dir: String,
       minVersions: Int = 2): Seq[Int] =
@@ -1429,143 +1352,31 @@ object Ann extends Serializable {
     * points (1 = after the data write; 2 = after manifest, before
     * flip). */
   private[graft] def ivfIndexCompactHooked(spark: SparkSession, dir: String,
-      minVersions: Int, crashPoint: Int): Seq[Int] = {
-    require(minVersions >= 2,
-      s"minVersions < 2 would rewrite single-version cells for nothing: $minVersions")
-    val m = readIvfManifest(spark, dir)
-    val picked = m.cellVersions
-      .filter { case (_, vs) => vs.distinct.size >= minVersions }
-      .keys.toSeq.sorted
-    // the cidmap accretes too (round 17): its fragmented cbuckets
-    // collapse in the same tick (compacted silently — the return value
-    // stays the cell ids, the minhash band-partition convention)
-    val pickedC = m.cidVersions
-      .filter { case (_, vs) => vs.distinct.size >= minVersions }
-      .keys.toSeq.sorted
-    if (picked.isEmpty && pickedC.isEmpty)
-      return Seq.empty // nothing fragmented: no tick
-    val newVer = m.version + 1
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // one exchange on the cell id so each cell lands in ONE task →
-    // ONE file per cell: without it the rewrite inherits the read's
-    // parallelism and each cell still fans out over every task that
-    // held its rows — compaction exists to kill exactly that
-    if (picked.nonEmpty) {
-      readIvfCellsAt(spark, dir, m, Some(picked.toSet))
-        .select(col("cid"), col("cvec"), col("cell"))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/cells")
-      // the compacted cells' drift stats (a pure physical rewrite —
-      // the recount equals the superseded versions' sums)
-      if (m.cellstats)
-        writeCellstats(spark, dir, newVer, readIvfCentroidsAt(spark, dir, m))
-    }
-    if (pickedC.nonEmpty)
-      readIvfCidmapAt(spark, dir, m, Some(pickedC.toSet))
-        .select(col("cid"), col("cell"), col("cbucket"))
-        .repartition(col("cbucket"))
-        .write.partitionBy("cbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/cidmap")
-    if (crashPoint == 1) return Seq.empty // simulated death: data written, nothing committed
-    val present =
-      if (picked.isEmpty) Set.empty[Int]
-      else ManifestIO
-        .partitionIds(spark, s"$dir/data/$newVer/cells", "cell=").toSet
-    val presentC =
-      if (pickedC.isEmpty) Set.empty[Int]
-      else ManifestIO
-        .partitionIds(spark, s"$dir/data/$newVer/cidmap", "cbucket=").toSet
-    val newCells = (m.cellVersions -- picked) ++ present.map(_ -> Seq(newVer))
-    val newCidVers = (m.cidVersions -- pickedC) ++ presentC.map(_ -> Seq(newVer))
-    val body = renderIvfManifest(
-      IvfManifest(newVer, m.cells, m.centroidsVersion, newCells,
-        ManifestIO.mergeTxn(m.txns, None), newCidVers, m.cellstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return Seq.empty
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
-    picked
-  }
+      minVersions: Int, crashPoint: Int): Seq[Int] =
+    ManifestIO.compact(spark, dir, IvfSpec, minVersions, crashPoint)
 
   /** EXPORT (deep clone) of the committed IVF index AS OF `version`
-    * (default CURRENT, -1) into the FRESH dir `destDir` — the
-    * [[graft.operators.Bm25.exportIndex]] verb on the vector family:
-    * copy exactly the referenced per-(version, cell) partitions, the
-    * cid→cell reverse-map partitions, the drift-stats sidecar and the
-    * trained centroids, publish the manifest body verbatim. Same
-    * contract: deep (the clone owns its files), bit-identical serves,
-    * tick-able thereafter, dead history never crosses, copy IO
-    * referenced-file-bound. See the BM25 scaladoc for the full
-    * rationale; ExportSpec pins all three families. */
+    * (default CURRENT, -1) into the FRESH dir `destDir`: the referenced
+    * per-(version, cell) partitions, cid→cell reverse-map partitions,
+    * drift-stats dirs and the trained centroids
+    * ([[ManifestIO.exportIndex]]). Returns the exported version. */
   def ivfIndexExport(spark: SparkSession, srcDir: String, destDir: String,
-      version: Long = -1L): Long = {
-    val ver =
-      if (version < 0) ManifestIO.readCurrent(spark, srcDir, "IVF index")._1
-      else version
-    val body = ManifestIO.readVersion(spark, srcDir, ver, "IVF index")
-    val m = parseIvfManifest(body)
-    // manifest→subtree mapping only; the copy/publish protocol lives in
-    // [[ManifestIO.exportReferenced]]. The drift-stats sidecar is
-    // per-version WHOLE dirs (the drift read filters to referenced
-    // (version, cell) pairs), mirroring the cells refs.
-    val subtrees =
-      m.cellVersions.toSeq.flatMap { case (c, vs) =>
-        vs.distinct.map(v => (s"data/$v/cells/cell=$c", true))
-      } ++
-      (if (m.cellstats)
-        m.cellVersions.values.flatten.toSeq.distinct
-          .map(v => (s"data/$v/cellstats", false))
-      else Seq.empty) ++
-      m.cidVersions.toSeq.flatMap { case (b, vs) =>
-        vs.distinct.map(v => (s"data/$v/cidmap/cbucket=$b", true))
-      } :+ (s"data/${m.centroidsVersion}/centroids", true)
-    ManifestIO.exportReferenced(spark, srcDir, destDir, ver, body, subtrees)
-  }
+      version: Long = -1L): Long =
+    ManifestIO.exportIndex(spark, srcDir, destDir, version, IvfSpec)
 
-  /** VACUUM tick of the committed-IVF lifecycle: delete data versions
-    * and manifests the committed manifest no longer references —
-    * replaced rebuilds and crashed ticks' orphans (appends never
+  /** VACUUM tick of the committed-IVF lifecycle ([[ManifestIO.vacuum]]):
+    * retires replaced rebuilds and crashed ticks' orphans. Appends never
     * supersede data — cells AND cidmap cbuckets both accrete — so a
     * healthy append-only index deletes nothing here until a rebuild,
     * delete/upsert consolidation or compaction retires history; the
-    * two artifacts still supersede INDEPENDENTLY — a delete can
-    * consolidate cbuckets whose cells stay live and vice versa — which
-    * the artifact-scoped pre-pass reclaims even while the version's
-    * other artifact keeps the dir).
-    * [[ManifestIO.vacuum]] semantics: single-writer maintenance,
-    * `graceVersions` protects recently-pinned readers; `graceMillis`
-    * adds the wall-clock floor that keeps the window stable under a
-    * hot maintenance stream (see [[ManifestIO.vacuum]]).
-    * Returns the deleted data versions. */
+    * artifacts supersede INDEPENDENTLY (cells by rebuild/delete/compact,
+    * centroids by rebuild only, cidmap cbuckets by every delete/upsert),
+    * which the artifact pass reclaims even while another artifact keeps
+    * the version dir. Returns the data versions that lost their dir or
+    * any artifact subtree. */
   def ivfVacuum(spark: SparkSession, dir: String,
-      graceVersions: Long = 2L, graceMillis: Long = 0L): Seq[Long] = {
-    val m = readIvfManifest(spark, dir)
-    // the keep-set unions every IN-WINDOW manifest's references with
-    // the current one's (the Bm25.vacuumIndex rationale, and sharper
-    // here: a COMPACTION re-owns every fragmented cell in one commit,
-    // instantly un-referencing the whole accreted history from CURRENT
-    // while the pre-compaction manifest, one commit back and still
-    // inside the grace window, points at all of it)
-    val all = m +: ManifestIO.windowManifests(spark, dir, m.version,
-      graceVersions, graceMillis).map(parseIvfManifest)
-    val cellRefs = all.flatMap(_.cellVersions.values.flatten).toSet
-    val centRefs = all.map(_.centroidsVersion).toSet
-    val cidRefs = all.flatMap(_.cidVersions.values.flatten).toSet
-    // the three artifacts supersede INDEPENDENTLY (the Bm25.vacuumIndex
-    // rationale): cells by rebuild/delete/compact, centroids by rebuild
-    // only, cidmap cbuckets by every append/delete
-    // the drift-stats sidecar mirrors the cells' versions exactly
-    // (same ticks), so the same reference set scopes both
-    val arts = ManifestIO.vacuumArtifacts(spark, dir, m.version,
-      Map("cells" -> cellRefs, "centroids" -> centRefs, "cidmap" -> cidRefs,
-        "cellstats" -> cellRefs),
-      graceVersions, graceMillis)
-    val whole = ManifestIO.vacuum(spark, dir, m.version,
-      cellRefs ++ centRefs ++ cidRefs + m.version, graceVersions, graceMillis)
-    (whole ++ arts.map(_._2)).distinct.sorted
-  }
+      graceVersions: Long = 2L, graceMillis: Long = 0L): Seq[Long] =
+    ManifestIO.vacuum(spark, dir, IvfSpec, graceVersions, graceMillis)
 
   /** Geometry-drift report of the committed IVF index, computed from
     * the COMMITTED ARTIFACTS ALONE — one CURRENT read pins manifest,
@@ -1800,7 +1611,7 @@ object Ann extends Serializable {
   /** The committed manifest AS OF a historical version (time travel). */
   def readIvfManifestVersion(spark: SparkSession, dir: String,
       version: Long): IvfManifest =
-    parseIvfManifest(ManifestIO.readVersion(spark, dir, version, "IVF index"))
+    IvfSpec.at(spark, dir, version)
 
   /** The serve body against an already-read manifest — shared by the
     * CURRENT serve, the time-travel serve and the version-reporting

@@ -205,25 +205,13 @@ object Bm25 {
   }
 
   // ---------------------------------------------------------------
-  // Standing-index storage: versioned manifest commit
-  //
-  // Layout under the index dir:
-  //   data/<v>/postings/bucket=<b>/…   bucket partitions written by tick v
-  //   data/<v>/stats/                  1-row (n, sdl) written by tick v
-  //   manifest/v<v>.txt                which data version owns each
-  //                                    bucket + the stats, at version v
-  //   CURRENT                          the committed manifest version
-  //
-  // Every tick (build or append) writes ONLY NEW files under a fresh
-  // data/<v>/ dir, then a new manifest, then atomically renames CURRENT
-  // (FileContext rename-with-overwrite — atomic on HDFS and POSIX).
-  // A writer crash at ANY point leaves CURRENT on the previous version,
-  // whose manifest references only previous-version files — a reader
-  // sees the old index or the new index, NEVER new postings with stale
-  // stats (the hazard a two-write in-place overwrite had). Orphaned
-  // uncommitted data/<v>/ dirs are garbage, not corruption. Single
-  // writer per index dir (ticks are sequential maintenance), any number
-  // of readers.
+  // Standing-index storage ([[ManifestIO]]'s versioned-manifest model):
+  //   data/<v>/postings/bucket=<b>/…    (t, doc_id, tf, dl) rows of tick v
+  //   data/<v>/termstats/bucket=<b>/…   per-(bucket, term) df deltas
+  //   data/<v>/docmap/dbucket=<k>/…     the doc→bucket reverse index
+  //   data/<v>/stats/                   1-row (n, sdl) — written by every
+  //                                     tick, so new postings are never
+  //                                     served against stale (n, avgdl)
   // ---------------------------------------------------------------
 
   /** One committed index state: the bucket count chosen at build time,
@@ -242,51 +230,59 @@ object Bm25 {
       docVersions: Map[Int, Seq[Long]] = Map.empty,
       termstats: Boolean = false)
 
-  private def renderManifest(m: IndexManifest): String = {
-    val bv = m.bucketVersions.toSeq.sortBy(_._1)
-      .map { case (b, vs) => s"$b:${vs.mkString("|")}" }.mkString(",")
-    val dv =
-      if (m.docVersions.isEmpty) ""
-      else "docVersions=" + m.docVersions.toSeq.sortBy(_._1)
-        .map { case (k, vs) => s"$k:${vs.mkString("|")}" }.mkString(",") + "\n"
-    val ts = if (m.termstats) "termstats=1\n" else ""
-    s"version=${m.version}\nbuckets=${m.buckets}\n" +
-      s"stats=${m.statsVersion}\nbucketVersions=$bv\n" + dv + ts +
-      ManifestIO.renderTxns(m.txns)
-  }
+  /** The BM25 layout for the shared lifecycle verbs. */
+  private object Spec extends ManifestIO.IndexSpec[IndexManifest] {
+    val what = "BM25 index"
 
-  private def parseManifest(text: String): IndexManifest = {
-    val kv = ManifestIO.parseKv(text)
-    // "b:v1|v2|…" — a legacy single-owner manifest ("b:v") parses as a
-    // one-element list, so pre-accretion dirs read unchanged
-    val bv = kv("bucketVersions").split(",").filter(_.nonEmpty).map { e =>
-      val Array(b, vs) = e.split(":")
-      b.toInt -> vs.split("\\|").map(_.toLong).toSeq
-    }.toMap
+    def render(m: IndexManifest): String =
+      s"version=${m.version}\nbuckets=${m.buckets}\nstats=${m.statsVersion}\n" +
+        s"bucketVersions=${ManifestIO.renderVersions(m.bucketVersions)}\n" +
+        (if (m.docVersions.isEmpty) ""
+         else s"docVersions=${ManifestIO.renderVersions(m.docVersions)}\n") +
+        (if (m.termstats) "termstats=1\n" else "") + ManifestIO.renderTxns(m.txns)
+
     // docVersions is OPTIONAL: a manifest committed before the docmap
     // existed parses to an empty map, and every reader treats that as
     // "no reverse index" (deleteByIds falls back to its postings scan).
-    // Values are ACCRETIVE lists since round 17 ("k:v1|v2|…"); a legacy
-    // single-owner entry ("k:v") parses as a one-element list, so
-    // pre-accretion docmaps read unchanged.
-    val dv = kv.get("docVersions").iterator
-      .flatMap(_.split(",")).filter(_.nonEmpty).map { e =>
-        val Array(k, vs) = e.split(":")
-        k.toInt -> vs.split("\\|").map(_.toLong).toSeq
-      }.toMap
-    // termstats is OPTIONAL: a manifest committed before the term-stats
-    // sidecar existed parses to false, and the serve falls back to
-    // recomputing df from the postings themselves (one extra scan of
-    // the pruned read — the documented legacy price; a rebuild
-    // upgrades, since the sidecar's versions must mirror the postings')
-    IndexManifest(kv("version").toLong, kv("buckets").toInt, kv("stats").toLong, bv,
-      ManifestIO.parseTxns(kv), dv, kv.get("termstats").contains("1"))
+    // termstats is OPTIONAL too: a pre-sidecar manifest parses to false
+    // and the serve recomputes df from the postings themselves (one
+    // extra scan of the pruned read — the documented legacy price; a
+    // rebuild upgrades, since the sidecar's versions must mirror the
+    // postings')
+    def parse(text: String): IndexManifest = {
+      val kv = ManifestIO.parseKv(text)
+      IndexManifest(kv("version").toLong, kv("buckets").toInt, kv("stats").toLong,
+        ManifestIO.parseVersions(kv("bucketVersions")), ManifestIO.parseTxns(kv),
+        kv.get("docVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty),
+        kv.get("termstats").contains("1"))
+    }
+
+    def accreting(m: IndexManifest): Seq[ManifestIO.Accreting] = Seq(
+      ManifestIO.Accreting("postings", "bucket", m.bucketVersions,
+        Some(ManifestIO.Sidecar("termstats", perPartition = true, m.termstats))),
+      ManifestIO.Accreting("docmap", "dbucket", m.docVersions))
+
+    override def single(m: IndexManifest): Seq[(String, Long)] =
+      Seq("stats" -> m.statsVersion)
+
+    def read(spark: SparkSession, dir: String, m: IndexManifest, name: String,
+        parts: Set[Int]): DataFrame =
+      if (name == "postings") readPostingsAt(spark, dir, m, Some(parts))
+      else readDocmapAt(spark, dir, m, Some(parts))
+
+    def writeSidecar(spark: SparkSession, dir: String, m: IndexManifest,
+        ver: Long): Unit = writeTermstats(spark, dir, ver)
+
+    def updated(m: IndexManifest, version: Long,
+        versions: Map[String, Map[Int, Seq[Long]]]): IndexManifest =
+      m.copy(version = version, bucketVersions = versions("postings"),
+        docVersions = versions("docmap"))
   }
 
   /** Read the COMMITTED manifest — the index state every reader serves
     * from. Fails loudly on a dir with no committed index. */
   def readManifest(spark: SparkSession, dir: String): IndexManifest =
-    parseManifest(ManifestIO.readCurrent(spark, dir, "BM25 index")._2)
+    Spec.current(spark, dir)
 
   /** The committed postings frame: buckets grouped by owning data
     * version, each group read from its explicit bucket paths (basePath
@@ -350,12 +346,26 @@ object Bm25 {
       ver: Long): Unit = {
     val postingsDir = s"$dir/data/$ver/postings"
     if (ManifestIO.partitionIds(spark, postingsDir, "bucket=").nonEmpty)
-      spark.read.parquet(postingsDir)
+      ManifestIO.writePartitioned(spark.read.parquet(postingsDir)
         .groupBy(col("bucket"), col("t")).agg(count(lit(1)).as("df"))
-        .select(col("t"), col("df"), col("bucket"))
-        .repartition(col("bucket")) // one file per bucket (the compact write shape)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$dir/data/$ver/termstats")
+        .select(col("t"), col("df"), col("bucket")), dir, ver, "termstats", "bucket")
+  }
+
+  /** Write one tick's postings rows under `ver` plus, on a sidecar'd
+    * index, their term-stats delta; returns the materialized buckets. */
+  private def writePostings(rows: DataFrame, dir: String, ver: Long,
+      termstats: Boolean): Seq[Int] = {
+    val present = ManifestIO.writePartitioned(rows, dir, ver, "postings", "bucket")
+    if (termstats) writeTermstats(rows.sparkSession, dir, ver)
+    present
+  }
+
+  /** Write one tick's 1-row (n, sdl) stats under `ver`. */
+  private def writeStats(spark: SparkSession, dir: String, ver: Long,
+      n: Long, sdl: Long): Unit = {
+    import spark.implicits._
+    Seq((n, sdl)).toDF("n", "sdl")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$ver/stats")
   }
 
   /** One (doc, term) tf pass with the doc length riding each row,
@@ -463,35 +473,22 @@ object Bm25 {
     val rows = tfRows(docs, idCol, textCol)
       .withColumn("bucket", pmod(xxhash64(col("t")), lit(buckets)).cast("int"))
     ManifestIO.guardSlot(spark, dir, ver)
-    // one exchange on the bucket id → one file per bucket (the compact
-    // write shape the docmap/termstats/compact writers already use):
-    // without it every task holding rows for a bucket leaves its own
-    // file (tasks × buckets files — measured 448 files for 16 buckets
-    // at sf0.1), and EVERY later serve pays a parquet reader init per
-    // file inside its pruned read. The bucket is the rewrite/read unit
-    // by design, so one file per (version, bucket) is the floor.
-    rows.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/data/$ver/postings")
+    // only buckets that materialized get an owner (a tiny corpus at a
+    // large bucket count leaves most buckets empty)
     // the term-stats sidecar rides every build: serves resolve df from
     // it instead of scanning the pruned postings twice
-    writeTermstats(spark, dir, ver)
+    val present = writePostings(
+      rows.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
+      dir, ver, termstats = true).map(_ -> Seq(ver)).toMap
     dl.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$ver/stats")
     // the doc→bucket reverse index rides every build (doc-sized — one
     // row per doc, no per-term rows): id-only takedowns locate their
     // work through it instead of scanning the postings
-    docmapRows(docs, idCol, textCol, buckets)
-      .repartition(col("dbucket")) // one file per dbucket (the compact write shape)
-      .write.partitionBy("dbucket").mode("overwrite").parquet(s"$dir/data/$ver/docmap")
-    // only buckets that materialized get an owner (a tiny corpus at a
-    // large bucket count leaves most buckets empty)
-    val present = ManifestIO.partitionIds(spark, s"$dir/data/$ver/postings", "bucket=")
-      .map(_ -> Seq(ver)).toMap
-    val presentD = ManifestIO.partitionIds(spark, s"$dir/data/$ver/docmap", "dbucket=")
-      .map(_ -> Seq(ver)).toMap
+    val presentD = ManifestIO.writePartitioned(docmapRows(docs, idCol, textCol, buckets),
+      dir, ver, "docmap", "dbucket").map(_ -> Seq(ver)).toMap
     ManifestIO.commit(spark, dir, ver,
-      renderManifest(IndexManifest(ver, buckets, ver, present, priorTxns, presentD,
+      Spec.render(IndexManifest(ver, buckets, ver, present, priorTxns, presentD,
         termstats = true)))
   }
 
@@ -584,7 +581,7 @@ object Bm25 {
     * see [[ManifestIO.readVersion]] for the servability rules). */
   def readManifestVersion(spark: SparkSession, dir: String,
       version: Long): IndexManifest =
-    parseManifest(ManifestIO.readVersion(spark, dir, version, "BM25 index"))
+    Spec.at(spark, dir, version)
 
   /** The serve body over a deterministic (qid, t) frame `q` — see
     * [[serveTopKBounded]] for the pin rationale. */
@@ -713,113 +710,34 @@ object Bm25 {
   }
 
   /** EXPORT (deep clone) of the committed index AS OF `version`
-    * (default CURRENT, -1) into the FRESH dir `destDir` — the
-    * promotion / DR / branching verb: copy exactly the files the
-    * version's manifest references (per-(version, bucket) postings and
-    * termstats partitions, per-(version, dbucket) docmap partitions,
-    * the 1-row stats dir) and publish the manifest body VERBATIM — the
-    * version number is kept so the body's data-version references stay
-    * valid. The clone OWNS its files (deep, where a Delta SHALLOW
-    * CLONE's pointers would dangle after a source vacuum), serves
-    * bit-identically, and accepts its own ticks thereafter (next slot
-    * = version + 1, its own compact/vacuum cadence, the txn ledger
-    * carried verbatim so a resumed maintenance stream stays
-    * exactly-once across the promotion). Unreferenced partitions of
-    * partially superseded source versions are NOT copied (ExportSpec's
-    * filesystem audit) — dead history never crosses. History below the
-    * exported version does not exist at the clone; time travel there
-    * fails loudly, exactly like a vacuumed version at the source.
-    * Copy IO is referenced-file-bound — at any index size the export
-    * moves the live index mass once, never the accumulated history.
-    * Fails loudly when `version` is uncommitted or already vacuumed —
-    * which means an export racing a maintenance stream's vacuum can
-    * die mid-copy like any deep reader; run it under
-    * [[WriterLease.withLease]] there (it serializes with the leased
-    * sink's vacuum tick), or export a version the grace window
-    * protects. Returns the exported version. */
+    * (default CURRENT, -1) into the FRESH dir `destDir`: the postings
+    * and termstats partitions, docmap partitions and the stats dir the
+    * version references ([[ManifestIO.exportIndex]] — deep, tick-able
+    * thereafter, dead history never crosses). Returns the exported
+    * version. */
   def exportIndex(spark: SparkSession, srcDir: String, destDir: String,
-      version: Long = -1L): Long = {
-    val ver =
-      if (version < 0) ManifestIO.readCurrent(spark, srcDir, "BM25 index")._1
-      else version
-    val body = ManifestIO.readVersion(spark, srcDir, ver, "BM25 index")
-    val m = parseManifest(body)
-    // the manifest→subtree mapping is this family's whole contribution;
-    // the copy/publish protocol (freshness guard BEFORE the first byte,
-    // required-vs-sidecar handling) lives in ManifestIO.exportReferenced
-    val subtrees =
-      m.bucketVersions.toSeq.flatMap { case (b, vs) =>
-        vs.distinct.flatMap(v =>
-          Seq((s"data/$v/postings/bucket=$b", true)) ++
-            // the termstats sidecar mirrors the postings refs
-            (if (m.termstats) Seq((s"data/$v/termstats/bucket=$b", false))
-             else Seq.empty))
-      } ++
-      m.docVersions.toSeq.flatMap { case (k, vs) =>
-        vs.distinct.map(v => (s"data/$v/docmap/dbucket=$k", true))
-      } :+ (s"data/${m.statsVersion}/stats", true)
-    ManifestIO.exportReferenced(spark, srcDir, destDir, ver, body, subtrees)
-  }
+      version: Long = -1L): Long =
+    ManifestIO.exportIndex(spark, srcDir, destDir, version, Spec)
 
-  /** VACUUM tick of the standing-index lifecycle: delete data versions
-    * and manifests the committed manifest no longer references —
-    * superseded bucket rewrites, crashed ticks' orphans, replaced
-    * rebuilds ([[ManifestIO.vacuum]]; run from the index's single
-    * writer; `graceVersions` protects readers pinned a few commits
-    * back; `graceMillis` adds the wall-clock floor that keeps the
-    * window stable under a hot maintenance stream — see
-    * [[ManifestIO.vacuum]]). Returns the deleted data versions. */
+  /** VACUUM tick of the standing-index lifecycle: delete what no
+    * servable manifest references — superseded bucket rewrites,
+    * crashed ticks' orphans, replaced rebuilds — per artifact
+    * (postings, termstats, docmap, stats), then whole versions
+    * ([[ManifestIO.vacuum]]; run from the index's single writer;
+    * `graceVersions` protects readers pinned a few commits back,
+    * `graceMillis` adds the wall-clock floor). Returns the data
+    * versions that lost their dir or any artifact subtree. */
   def vacuumIndex(spark: SparkSession, dir: String,
-      graceVersions: Long = 2L, graceMillis: Long = 0L): Seq[Long] = {
-    val m = readManifest(spark, dir)
-    // the keep-set unions every IN-WINDOW manifest's references with
-    // the current one's: in-window manifests are still servable
-    // (pinned readers, time travel), and one commit back can reference
-    // data versions far older than the window — without this, a tick
-    // that re-owns many buckets at once would let the same epoch's
-    // vacuum delete data the one-commit-old manifest still points at
-    val all = m +: ManifestIO.windowManifests(spark, dir, m.version,
-      graceVersions, graceMillis).map(parseManifest)
-    val postRefs = all.flatMap(_.bucketVersions.values.flatten).toSet
-    val docRefs = all.flatMap(_.docVersions.values.flatten).toSet
-    val statRefs = all.map(_.statsVersion).toSet
-    // artifact-scoped pre-pass: the three artifacts supersede
-    // INDEPENDENTLY (an append can re-own every postings bucket while
-    // old dbuckets keep live docmap rows), so a version's superseded
-    // postings/stats mass reclaims even while its docmap keeps the
-    // version dir alive — without this, one live kilobyte of reverse
-    // map would pin gigabytes of dead postings
-    // termstats versions mirror the postings' exactly (written by the
-    // same ticks for the same buckets), so the same reference set
-    // scopes both artifacts
-    val arts = ManifestIO.vacuumArtifacts(spark, dir, m.version,
-      Map("postings" -> postRefs, "termstats" -> postRefs,
-        "docmap" -> docRefs, "stats" -> statRefs),
-      graceVersions, graceMillis)
-    val whole = ManifestIO.vacuum(spark, dir, m.version,
-      postRefs ++ docRefs ++ statRefs + m.version, graceVersions, graceMillis)
-    // the receipt covers BOTH passes: a version appears when it lost
-    // its whole dir or any artifact subtree — a monitoring job tailing
-    // it sees mass reclaimed even when live docmap rows keep a dir
-    (whole ++ arts.map(_._2)).distinct.sorted
-  }
+      graceVersions: Long = 2L, graceMillis: Long = 0L): Seq[Long] =
+    ManifestIO.vacuum(spark, dir, Spec, graceVersions, graceMillis)
 
   /** COMPACT tick — the read-amplification bound the accretive
-    * [[appendToIndex]] needs (the [[graft.operators.Ann.ivfIndexCompact]]
-    * / [[MinhashIndex.compact]] sibling): appends ACCRETE, so a term
-    * bucket fed by N ticks reads a union of N file groups at every
-    * serve and its manifest entry grows without bound. Rewrite every
-    * bucket with ≥ `minVersions` distinct contributing versions into
-    * ONE new data version (a pure physical rewrite — rows, scores and
-    * stats bit-identical before and after), collapse the manifest
-    * entries, leave unpicked buckets unlisted; the superseded history
-    * is the next vacuum's food. The docmap's fragmented dbuckets (it
-    * accretes on append too, round 17) collapse in the same tick;
-    * stats are untouched (their version carries forward).
-    * Crash-atomic, txn ledger carried forward, single-writer
-    * maintenance. Returns the compacted postings bucket ids (docmap
-    * dbuckets compact in the same tick, unreported — the minhash
-    * band-partition convention). */
+    * [[appendToIndex]] needs ([[ManifestIO.compact]]): every bucket
+    * with ≥ `minVersions` distinct contributing versions is rewritten
+    * into ONE new data version with its termstats; the docmap's
+    * fragmented dbuckets (it accretes on append too) collapse in the
+    * same tick; stats are untouched (their version carries forward).
+    * Returns the compacted postings bucket ids. */
   def compactIndex(spark: SparkSession, dir: String,
       minVersions: Int = 2): Seq[Int] =
     compactIndexHooked(spark, dir, minVersions, crashPoint = 0)
@@ -827,61 +745,8 @@ object Bm25 {
   /** [[compactIndex]] with the standard injectable writer-death points
     * (1 = after the data write; 2 = after manifest, before flip). */
   private[graft] def compactIndexHooked(spark: SparkSession, dir: String,
-      minVersions: Int, crashPoint: Int): Seq[Int] = {
-    require(minVersions >= 2,
-      s"minVersions < 2 would rewrite single-version buckets for nothing: $minVersions")
-    val m = readManifest(spark, dir)
-    val picked = m.bucketVersions
-      .filter { case (_, vs) => vs.distinct.size >= minVersions }
-      .keys.toSeq.sorted
-    // the docmap accretes too (round 17): its fragmented dbuckets
-    // collapse in the same tick (compacted silently, like the minhash
-    // band partitions — the return value stays the postings buckets)
-    val pickedD = m.docVersions
-      .filter { case (_, vs) => vs.distinct.size >= minVersions }
-      .keys.toSeq.sorted
-    if (picked.isEmpty && pickedD.isEmpty)
-      return Seq.empty // nothing fragmented: no tick
-    val newVer = m.version + 1
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // one exchange on the bucket id → one file per bucket (the
-    // ivfIndexCompact rationale: the rewrite must not inherit the
-    // read's per-task fan-out)
-    if (picked.nonEmpty) {
-      readPostingsAt(spark, dir, m, Some(picked.toSet))
-        .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/postings")
-      if (m.termstats) writeTermstats(spark, dir, newVer)
-    }
-    if (pickedD.nonEmpty)
-      readDocmapAt(spark, dir, m, Some(pickedD.toSet))
-        .select(col("doc_id"), col("dl"), col("tbuckets"), col("dbucket"))
-        .repartition(col("dbucket"))
-        .write.partitionBy("dbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/docmap")
-    if (crashPoint == 1) return Seq.empty // simulated death: data written, nothing committed
-    val present =
-      if (picked.isEmpty) Set.empty[Int]
-      else ManifestIO
-        .partitionIds(spark, s"$dir/data/$newVer/postings", "bucket=").toSet
-    val presentD =
-      if (pickedD.isEmpty) Set.empty[Int]
-      else ManifestIO
-        .partitionIds(spark, s"$dir/data/$newVer/docmap", "dbucket=").toSet
-    val newOwners = (m.bucketVersions -- picked) ++ present.map(_ -> Seq(newVer))
-    val newDocVers = (m.docVersions -- pickedD) ++ presentD.map(_ -> Seq(newVer))
-    val body = renderManifest(
-      IndexManifest(newVer, m.buckets, m.statsVersion, newOwners,
-        ManifestIO.mergeTxn(m.txns, None), newDocVers, m.termstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return Seq.empty
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
-    picked
-  }
+      minVersions: Int, crashPoint: Int): Seq[Int] =
+    ManifestIO.compact(spark, dir, Spec, minVersions, crashPoint)
 
   /** APPEND tick of the standing-index lifecycle ([[buildIndex]]
     * builds, [[serveTopK]] serves, this grows) — ACCRETIVE: the tick
@@ -979,20 +844,14 @@ object Bm25 {
       // the ACCRETIVE write: batch rows only — the committed postings
       // are neither read nor rewritten, so the tick's IO is O(batch)
       // at any index size (df resolves at read time; see readPostingsAt)
-      newTf.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .repartition(col("bucket")) // one file per bucket (the compact write shape)
-        .write.partitionBy("bucket")
-        .mode("overwrite").parquet(s"$dir/data/$newVer/postings")
-      // the version's term-stats delta (batch vocabulary-sized)
-      if (m.termstats) writeTermstats(spark, dir, newVer)
+      // (plus the version's batch-vocabulary-sized term-stats delta)
+      writePostings(
+        newTf.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
+        dir, newVer, m.termstats)
     }
     val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    val statsDf = {
-      import spark.implicits._
-      Seq((old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1)))
-        .toDF("n", "sdl")
-    }
-    statsDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$newVer/stats")
+    writeStats(spark, dir, newVer,
+      old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1))
     // docmap maintenance — ACCRETIVE, like the postings above: the tick
     // writes ONLY the batch's doc-sized reverse-map rows and appends
     // its version onto the touched dbuckets' manifest lists; the
@@ -1009,30 +868,16 @@ object Bm25 {
     // would leave a map that silently misses every older doc, worse
     // than no map at all.
     val maintainDocmap = m.docVersions.nonEmpty || m.bucketVersions.isEmpty
-    val newDocVers = if (maintainDocmap) {
-      docmapRows(docs, idCol, textCol, m.buckets)
-        .repartition(col("dbucket")) // one file per dbucket (the compact write shape)
-        .write.partitionBy("dbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/docmap")
-      val presentD =
-        ManifestIO.partitionIds(spark, s"$dir/data/$newVer/docmap", "dbucket=")
-      m.docVersions ++ presentD.map(k =>
-        k -> (m.docVersions.getOrElse(k, Seq.empty) :+ newVer))
-    } else m.docVersions
-    if (crashPoint == 1) return // simulated writer death: data written, nothing committed
+    val newDocVers =
+      if (!maintainDocmap) m.docVersions
+      else ManifestIO.accrete(m.docVersions, ManifestIO.writePartitioned(
+        docmapRows(docs, idCol, textCol, m.buckets), dir, newVer, "docmap", "dbucket"),
+        newVer)
     // touched buckets ACCRETE the new version onto their lists
-    val newOwners = m.bucketVersions ++ touched.map(b =>
-      b -> (m.bucketVersions.getOrElse(b, Seq.empty) :+ newVer))
-    val body = renderManifest(
-      IndexManifest(newVer, m.buckets, newVer, newOwners,
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats))
-    if (crashPoint == 2) {
-      // simulated death between manifest write and CURRENT flip: the
-      // manifest file exists but is unreferenced garbage
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      IndexManifest(newVer, m.buckets, newVer,
+        ManifestIO.accrete(m.bucketVersions, touched, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
   }
 
   /** DELETE tick of the standing-index lifecycle — the takedown /
@@ -1114,25 +959,19 @@ object Bm25 {
       .distinct().collect().map(_.getInt(0)) // ≤ manifest bucket count values
       .filter(m.bucketVersions.contains) // only materialized buckets hold rows
     ManifestIO.guardSlot(spark, dir, newVer)
-    if (touched.nonEmpty) {
-      // CONSOLIDATION: the touched buckets' full version unions minus
-      // the batch — each bucket's manifest entry collapses back to the
-      // single new version (no df recompute: df is read-time now)
-      val delIds = delDl.select(col("doc_id")).distinct()
-      readPostingsAt(spark, dir, m, Some(touched.toSet))
+    // CONSOLIDATION: the touched buckets' full version unions minus
+    // the batch — each bucket's manifest entry collapses back to the
+    // single new version (no df recompute: df is read-time now); a
+    // touched bucket that emptied never materializes under newVer and
+    // leaves the manifest entirely (no terms hash there anymore)
+    val present =
+      if (touched.isEmpty) Seq.empty[Int]
+      else writePostings(readPostingsAt(spark, dir, m, Some(touched.toSet))
         .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .join(delIds, Seq("doc_id"), "left_anti")
-        .repartition(col("bucket")) // one file per bucket (the compact write shape)
-        .write.partitionBy("bucket")
-        .mode("overwrite").parquet(s"$dir/data/$newVer/postings")
-      if (m.termstats) writeTermstats(spark, dir, newVer)
-    }
-    val statsDf = {
-      import spark.implicits._
-      Seq((old.getLong(0) - batch.getLong(0), old.getLong(1) - batch.getLong(1)))
-        .toDF("n", "sdl")
-    }
-    statsDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$newVer/stats")
+        .join(delDl.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"),
+        dir, newVer, m.termstats)
+    writeStats(spark, dir, newVer,
+      old.getLong(0) - batch.getLong(0), old.getLong(1) - batch.getLong(1))
     // docmap maintenance: the deleted docs' reverse-index rows leave
     // their dbuckets (located by the pure id→dbucket function, read
     // only those, consolidated into the new version)
@@ -1142,36 +981,18 @@ object Bm25 {
         .select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int").as("k"))
         .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
         .filter(m.docVersions.contains)
+      // consolidation: each touched dbucket's list collapses to the
+      // single new version (the accretive model's delete contract)
       if (candD.isEmpty) m.docVersions
-      else {
-        readDocmapAt(spark, dir, m, Some(candD.toSet))
-          .join(delIds, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("dl"), col("tbuckets"), col("dbucket"))
-          .repartition(col("dbucket")) // one file per dbucket (the compact write shape)
-          .write.partitionBy("dbucket").mode("overwrite")
-          .parquet(s"$dir/data/$newVer/docmap")
-        val presentD =
-          ManifestIO.partitionIds(spark, s"$dir/data/$newVer/docmap", "dbucket=").toSet
-        // consolidation: each touched dbucket's list collapses to the
-        // single new version (the accretive model's delete contract)
-        (m.docVersions -- candD) ++ presentD.map(_ -> Seq(newVer))
-      }
+      else ManifestIO.consolidate(m.docVersions, candD,
+        ManifestIO.writePartitioned(readDocmapAt(spark, dir, m, Some(candD.toSet))
+          .join(delIds, Seq("doc_id"), "left_anti"), dir, newVer, "docmap", "dbucket"),
+        newVer)
     } else m.docVersions
-    if (crashPoint == 1) return // simulated writer death: data written, nothing committed
-    // a touched bucket that emptied never materialized under newVer —
-    // it leaves the manifest entirely (no terms hash there anymore)
-    val present =
-      if (touched.isEmpty) Set.empty[Int]
-      else ManifestIO.partitionIds(spark, s"$dir/data/$newVer/postings", "bucket=").toSet
-    val newOwners = (m.bucketVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val body = renderManifest(
-      IndexManifest(newVer, m.buckets, newVer, newOwners,
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      IndexManifest(newVer, m.buckets, newVer,
+        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
   }
 
   /** ID-ONLY takedown — the real opt-out feed shape
@@ -1269,53 +1090,31 @@ object Bm25 {
       .distinct().collect().map(_.getInt(0)) // ≤ manifest bucket count values
       .filter(m.bucketVersions.contains)
     ManifestIO.guardSlot(spark, dir, newVer)
-    if (touched.nonEmpty) {
-      // consolidation: each touched bucket's full version union minus
-      // the ids, collapsing its manifest entry (df is read-time now)
-      readPostingsAt(spark, dir, m, Some(touched.toSet))
+    // consolidation: each touched bucket's full version union minus
+    // the ids, collapsing its manifest entry (df is read-time now)
+    val present =
+      if (touched.isEmpty) Seq.empty[Int]
+      else writePostings(readPostingsAt(spark, dir, m, Some(touched.toSet))
         .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .join(delIds, Seq("doc_id"), "left_anti")
-        .repartition(col("bucket")) // one file per bucket (the compact write shape)
-        .write.partitionBy("bucket")
-        .mode("overwrite").parquet(s"$dir/data/$newVer/postings")
-      if (m.termstats) writeTermstats(spark, dir, newVer)
-    }
+        .join(delIds, Seq("doc_id"), "left_anti"), dir, newVer, m.termstats)
     val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    val statsDf = {
-      import spark.implicits._
-      Seq((old.getLong(0) - rm.getLong(0), old.getLong(1) - rm.getLong(1)))
-        .toDF("n", "sdl")
-    }
-    statsDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$newVer/stats")
+    writeStats(spark, dir, newVer,
+      old.getLong(0) - rm.getLong(0), old.getLong(1) - rm.getLong(1))
     // docmap consolidation: the matched docs' rows leave their dbuckets
     val newDocVers = if (hasDocmap) {
       val matchedD = matched
         .select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int").as("k"))
         .distinct().collect().map(_.getInt(0))
         .filter(m.docVersions.contains)
-      readDocmapAt(spark, dir, m, Some(matchedD.toSet))
-        .join(delIds, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("dl"), col("tbuckets"), col("dbucket"))
-        .repartition(col("dbucket")) // one file per dbucket (the compact write shape)
-        .write.partitionBy("dbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/docmap")
-      val presentD =
-        ManifestIO.partitionIds(spark, s"$dir/data/$newVer/docmap", "dbucket=").toSet
-      (m.docVersions -- matchedD) ++ presentD.map(_ -> Seq(newVer))
+      ManifestIO.consolidate(m.docVersions, matchedD,
+        ManifestIO.writePartitioned(readDocmapAt(spark, dir, m, Some(matchedD.toSet))
+          .join(delIds, Seq("doc_id"), "left_anti"), dir, newVer, "docmap", "dbucket"),
+        newVer)
     } else m.docVersions
-    if (crashPoint == 1) return // simulated writer death: data written, nothing committed
-    val present =
-      if (touched.isEmpty) Set.empty[Int]
-      else ManifestIO.partitionIds(spark, s"$dir/data/$newVer/postings", "bucket=").toSet
-    val newOwners = (m.bucketVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val body = renderManifest(
-      IndexManifest(newVer, m.buckets, newVer, newOwners,
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      IndexManifest(newVer, m.buckets, newVer,
+        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
   }
 
   /** MIGRATION tick: retrofit the doc→bucket reverse index onto a
@@ -1338,21 +1137,15 @@ object Bm25 {
     val newVer = m.version + 1
     ManifestIO.guardSlot(spark, dir, newVer)
     // ONE full postings scan — the price the map exists to retire
-    readPostingsAt(spark, dir, m)
+    val presentD = ManifestIO.writePartitioned(readPostingsAt(spark, dir, m)
       .groupBy(col("doc_id"))
       .agg(first(col("dl")).as("dl"),
         array_sort(collect_set(col("bucket"))).as("tbuckets"))
       .withColumn("dbucket",
-        pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int"))
-      .repartition(col("dbucket")) // one file per dbucket
-      .write.partitionBy("dbucket").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/docmap")
-    val presentD = ManifestIO
-      .partitionIds(spark, s"$dir/data/$newVer/docmap", "dbucket=")
-    ManifestIO.commit(spark, dir, newVer,
-      renderManifest(IndexManifest(newVer, m.buckets, m.statsVersion,
-        m.bucketVersions, m.txns, presentD.map(_ -> Seq(newVer)).toMap,
-        m.termstats)))
+        pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int")),
+      dir, newVer, "docmap", "dbucket")
+    ManifestIO.commit(spark, dir, newVer, Spec.render(m.copy(version = newVer,
+      docVersions = presentD.map(_ -> Seq(newVer)).toMap)))
     true
   }
 
@@ -1503,28 +1296,21 @@ object Bm25 {
       .filter(m.bucketVersions.contains)
     val touched = (touchedNew ++ touchedOld).distinct // ≤ bucket count values
     ManifestIO.guardSlot(spark, dir, newVer)
-    if (touched.nonEmpty) {
-      // one consolidating rewrite: (existing − old copies) ∪ new rows —
-      // what the rebuild-over-modified-corpus would have written for
-      // these buckets; their manifest entries collapse to the single
-      // new version (df is read-time now)
-      readPostingsAt(spark, dir, m, Some(touched.toSet))
+    // one consolidating rewrite: (existing − old copies) ∪ new rows —
+    // what the rebuild-over-modified-corpus would have written for
+    // these buckets; their manifest entries collapse to the single
+    // new version (df is read-time now)
+    val present =
+      if (touched.isEmpty) Seq.empty[Int]
+      else writePostings(readPostingsAt(spark, dir, m, Some(touched.toSet))
         .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
         .join(upIds, Seq("doc_id"), "left_anti")
         .unionByName(
-          newTf.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket")))
-        .repartition(col("bucket")) // one file per bucket (the compact write shape)
-        .write.partitionBy("bucket")
-        .mode("overwrite").parquet(s"$dir/data/$newVer/postings")
-      if (m.termstats) writeTermstats(spark, dir, newVer)
-    }
+          newTf.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))),
+        dir, newVer, m.termstats)
     val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    val statsDf = {
-      import spark.implicits._
-      Seq((old.getLong(0) - rm.getLong(0) + add.getLong(0),
-        old.getLong(1) - rm.getLong(1) + add.getLong(1))).toDF("n", "sdl")
-    }
-    statsDf.coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$newVer/stats")
+    writeStats(spark, dir, newVer, old.getLong(0) - rm.getLong(0) + add.getLong(0),
+      old.getLong(1) - rm.getLong(1) + add.getLong(1))
     // docmap rewrite: an id's old row and its new row live in the SAME
     // dbucket (dbucket is a pure function of the id), so the affected
     // ids' dbuckets — upserted AND purely deleted — rewrite once with
@@ -1532,31 +1318,16 @@ object Bm25 {
     // delete half leaves the manifest
     val maintainDocmap = m.docVersions.nonEmpty || m.bucketVersions.isEmpty
     val newDocVers = if (maintainDocmap) {
-      val batchRows = docmapRows(docs, idCol, textCol, m.buckets)
       val remaining =
         if (hasDocmap) candMap.join(upIds, Seq("doc_id"), "left_anti")
         else readDocmapAt(spark, dir, m, Some(candTouched)) // empty legacy frame, schema only
-      remaining
-        .unionByName(batchRows)
-        .repartition(col("dbucket")) // one file per dbucket (the compact write shape)
-        .write.partitionBy("dbucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/docmap")
-      val presentD =
-        ManifestIO.partitionIds(spark, s"$dir/data/$newVer/docmap", "dbucket=").toSet
-      (m.docVersions -- candTouched) ++ presentD.map(_ -> Seq(newVer))
+      ManifestIO.consolidate(m.docVersions, candTouched, ManifestIO.writePartitioned(
+        remaining.unionByName(docmapRows(docs, idCol, textCol, m.buckets)),
+        dir, newVer, "docmap", "dbucket"), newVer)
     } else m.docVersions
-    if (crashPoint == 1) return // simulated writer death: data written, nothing committed
-    val present =
-      if (touched.isEmpty) Set.empty[Int]
-      else ManifestIO.partitionIds(spark, s"$dir/data/$newVer/postings", "bucket=").toSet
-    val newOwners = (m.bucketVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val body = renderManifest(
-      IndexManifest(newVer, m.buckets, newVer, newOwners,
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      IndexManifest(newVer, m.buckets, newVer,
+        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
   }
 }

@@ -3,13 +3,31 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
-/** Versioned-manifest commit protocol shared by the standing indexes
-  * ([[Bm25]] term buckets, [[Ann]] IVF segments).
+/** Versioned-manifest storage shared by the three standing indexes:
+  * [[Bm25]] (term-bucket postings), the IVF half of [[Ann]] (cell-
+  * partitioned vectors) and [[MinhashIndex]] (sid-bucket signature
+  * rows plus band partitions).
   *
   * Layout under an index dir:
-  *   data/<v>/…          immutable data files written by tick v
-  *   manifest/v<v>.txt   the index state at version v (module-defined body)
+  *   data/<v>/<artifact>/<partCol>=<p>/…  the partitions an ACCRETING
+  *                       artifact gained at tick v (BM25 postings and
+  *                       docmap, IVF cells and cidmap, minhash rows and
+  *                       bands)
+  *   data/<v>/<sidecar>/… a derived artifact whose versions mirror its
+  *                       parent's (termstats, cellstats, bandstats)
+  *   data/<v>/<single>/  a one-version artifact (BM25 stats, IVF
+  *                       centroids)
+  *   manifest/v<v>.txt   the index state at version v: `key=value`
+  *                       lines, one `p:v1|v2,…` version map per
+  *                       accreting artifact, the txn ledger
   *   CURRENT             the committed version — ONE atomic rename flips it
+  *
+  * An append writes only its batch's partitions and appends its version
+  * to their lists; delete/upsert consolidate a touched partition back to
+  * one version; compact collapses long lists; vacuum retires what no
+  * servable manifest references. The verbs that are identical across
+  * the families (compact, vacuum, export) are written once here against
+  * a small per-family [[IndexSpec]].
   *
   * A tick writes only NEW files, then its manifest, then renames
   * CURRENT (FileContext rename-with-overwrite: atomic on HDFS and
@@ -70,6 +88,18 @@ private[graft] object ManifestIO {
       new org.apache.hadoop.fs.Path(dir).toUri, spark.sessionState.newHadoopConf())
     fc.rename(tmp, new org.apache.hadoop.fs.Path(s"$dir/CURRENT"),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  /** [[commit]] behind the standard injectable writer-death points
+    * every tick's `*Hooked` entry takes: 1 = the writer died after its
+    * data writes (no manifest lands), 2 = it died between the manifest
+    * write and the CURRENT flip (the manifest is unreferenced garbage);
+    * 0, the production value, commits. True iff committed. */
+  def commit(spark: SparkSession, dir: String, version: Long,
+      manifestBody: String, crashPoint: Int): Boolean = crashPoint match {
+    case 1 => false
+    case 2 => writeManifestOnly(spark, dir, version, manifestBody); false
+    case _ => commit(spark, dir, version, manifestBody); true
   }
 
   /** Pre-write half of the lost-update guard: a tick calls this with
@@ -364,14 +394,22 @@ private[graft] object ManifestIO {
     if (!f.exists(new org.apache.hadoop.fs.Path(s"$dir/CURRENT")))
       return Seq.empty
     val (current, _) = readCurrent(spark, dir, "index")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifest")
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq.flatMap { st =>
+    versionsUnder(f, s"$dir/manifest").map(_._1).sorted
+      .map(v => (v, v <= current, v == current))
+  }
+
+  /** The numbered entries of `dir` — `manifest/v<n>.txt` files or
+    * `data/<n>` dirs — with their statuses; empty when `dir` is absent. */
+  private def versionsUnder(f: org.apache.hadoop.fs.FileSystem,
+      dir: String): Seq[(Long, org.apache.hadoop.fs.FileStatus)] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!f.exists(path)) Seq.empty
+    else f.listStatus(path).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      if (n.startsWith("v") && n.endsWith(".txt"))
-        scala.util.Try(n.stripPrefix("v").stripSuffix(".txt").toLong).toOption
-      else None
-    }.sorted.map(v => (v, v <= current, v == current))
+      val v = if (n.startsWith("v") && n.endsWith(".txt"))
+        n.stripPrefix("v").stripSuffix(".txt") else n
+      scala.util.Try(v.toLong).toOption.map(_ -> st)
+    }
   }
 
   /** The `key=value` lines of a manifest body — every index module's
@@ -380,40 +418,6 @@ private[graft] object ManifestIO {
   def parseKv(text: String): Map[String, String] =
     text.linesIterator.filter(_.contains("="))
       .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
-
-  /** The manifest BODIES of the committed versions still inside the
-    * vacuum grace window, EXCLUDING the current one (the caller holds
-    * it) and uncommitted orphans (> current): the states a pinned
-    * reader or a time-travel read may still legally serve. A vacuum's
-    * keep-set must union THESE manifests' references with the current
-    * one's — an in-window manifest can reference data versions far
-    * older than the window (a compaction re-owns every fragmented
-    * partition, instantly un-referencing years of accreted versions
-    * from CURRENT while the pre-compaction manifest, one commit back,
-    * still points at all of them). */
-  def windowManifests(spark: SparkSession, dir: String, currentVersion: Long,
-      graceVersions: Long, graceMillis: Long = 0L): Seq[String] = {
-    val f = fs(spark, dir)
-    val cutoff = currentVersion - 1 - graceVersions
-    val tCutoff =
-      if (graceMillis > 0L) System.currentTimeMillis() - graceMillis
-      else Long.MaxValue
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifest")
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq.flatMap { st =>
-      val n = st.getPath.getName
-      val v =
-        if (n.startsWith("v") && n.endsWith(".txt"))
-          scala.util.Try(n.stripPrefix("v").stripSuffix(".txt").toLong).toOption
-        else None
-      // a manifest is in-window by GENERATION COUNT or by WALL CLOCK
-      // (mtime within graceMillis) — the time floor makes the pinned-
-      // reader guarantee load-independent (see [[vacuum]])
-      v.filter(x => x < currentVersion &&
-          (x > cutoff || st.getModificationTime >= tCutoff))
-        .map(_ => readText(f, st.getPath))
-    }
-  }
 
   /** Validate and split a CDC change batch — the shared preamble of
     * the three indexes' applyChanges ticks: pin the RAW frame (the op
@@ -661,133 +665,6 @@ private[graft] object ManifestIO {
     committed.get(app).exists(_ >= e)
   }
 
-  /** Garbage-collect an index dir: delete `data/<v>` trees and
-    * `manifest/v<v>.txt` files that the COMMITTED manifest does not
-    * reference — crashed ticks' orphans and versions superseded by
-    * appends/rebuilds. Without this, a long-lived index accumulates
-    * every rewrite it ever made (the commit protocol's documented
-    * "garbage, not corruption").
-    *
-    * `graceVersions` counts the SUPERSEDED GENERATIONS kept for
-    * in-flight readers that pinned a manifest just before the latest
-    * commits (the Delta/Iceberg retention idea, counted in versions —
-    * the protocol has no clock): grace g keeps every version newer
-    * than `currentVersion - 1 - g`, so g = 0 deletes all unreferenced
-    * history and g = 1 spares the most recent superseded generation.
-    * Referenced versions are kept regardless of age.
-    * Run it from the index's single writer (it is maintenance, like
-    * the ticks); deleting garbage is idempotent, so a vacuum that
-    * crashes midway just leaves some garbage for the next one.
-    * A crashed tick's orphan always sits at currentVersion+1 — newer
-    * than current, so the grace rule never touches it; that is safe
-    * because the NEXT successful tick allocates the same version and
-    * overwrites the slot (orphans self-heal, they cannot accumulate).
-    *
-    * `graceMillis` is the WALL-CLOCK floor on the same window: any
-    * manifest or data dir whose mtime is within graceMillis of now
-    * survives regardless of how many generations have passed. Without
-    * it the guarantee is load-DEPENDENT — a hot maintenance stream at
-    * seconds-per-tick burns a grace-2 generation window in seconds,
-    * so "pinned readers are protected" would hold only at low commit
-    * rates; the time floor makes the pinned-reader and time-travel
-    * windows wall-clock-stable at any tick cadence (the Delta/Iceberg
-    * retention-by-age idea, layered on the version count). 0 = no
-    * time floor (the original versions-only rule).
-    * Returns the deleted data versions. */
-  def vacuum(spark: SparkSession, dir: String, currentVersion: Long,
-      referenced: Set[Long], graceVersions: Long,
-      graceMillis: Long = 0L): Seq[Long] = {
-    require(graceVersions >= 0, s"graceVersions must be >= 0, got $graceVersions")
-    require(graceMillis >= 0, s"graceMillis must be >= 0, got $graceMillis")
-    val f = fs(spark, dir)
-    val cutoff = currentVersion - 1 - graceVersions
-    val tCutoff =
-      if (graceMillis > 0L) System.currentTimeMillis() - graceMillis
-      else Long.MaxValue
-    def versionsUnder(p: String): Seq[(Long, org.apache.hadoop.fs.FileStatus)] = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      if (!f.exists(path)) Seq.empty
-      else f.listStatus(path).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        val v = if (n.startsWith("v") && n.endsWith(".txt"))
-          n.stripPrefix("v").stripSuffix(".txt") else n
-        scala.util.Try(v.toLong).toOption.map(_ -> st)
-      }
-    }
-    // a version's AGE is its COMMIT time = its manifest file's mtime
-    // (immutable after the write); a data dir's own mtime is only the
-    // fallback for manifest-less orphans — the dir mtime MUTATES when
-    // the artifact pre-pass deletes subtrees under it, which must not
-    // rejuvenate the version
-    val manifests = versionsUnder(s"$dir/manifest")
-    val commitTime = manifests.map { case (v, st) =>
-      v -> st.getModificationTime }.toMap
-    val dataDead = versionsUnder(s"$dir/data")
-      .filter { case (v, st) =>
-        !referenced(v) && v <= cutoff &&
-          commitTime.getOrElse(v, st.getModificationTime) < tCutoff }
-    dataDead.foreach { case (_, st) => f.delete(st.getPath, true) }
-    // manifests: the current one is always load-bearing; older ones
-    // only serve readers inside the grace window
-    manifests
-      .filter { case (v, st) =>
-        v != currentVersion && v <= cutoff && st.getModificationTime < tCutoff }
-      .foreach { case (_, st) => f.delete(st.getPath, false) }
-    dataDead.map(_._1).sorted
-  }
-
-  /** ARTIFACT-scoped vacuum pre-pass, for indexes whose version dirs
-    * hold several artifacts with independent supersession (the BM25
-    * dir holds postings, stats AND the doc→bucket reverse map; a tick
-    * can re-own every postings bucket while old docmap dbuckets stay
-    * live): delete `data/<v>/<artifact>` SUBTREES whose version that
-    * artifact's reference set no longer contains, under the same
-    * grace rule as [[vacuum]] — so a version's multi-gigabyte
-    * superseded postings reclaim even while its kilobytes of live
-    * docmap rows keep the version dir itself alive. Returns the
-    * deleted (artifact, version) pairs; run the whole-version
-    * [[vacuum]] after it to retire dirs with nothing left referenced. */
-  def vacuumArtifacts(spark: SparkSession, dir: String, currentVersion: Long,
-      artifactRefs: Map[String, Set[Long]],
-      graceVersions: Long, graceMillis: Long = 0L): Seq[(String, Long)] = {
-    require(graceVersions >= 0, s"graceVersions must be >= 0, got $graceVersions")
-    require(graceMillis >= 0, s"graceMillis must be >= 0, got $graceMillis")
-    val f = fs(spark, dir)
-    val cutoff = currentVersion - 1 - graceVersions
-    val tCutoff =
-      if (graceMillis > 0L) System.currentTimeMillis() - graceMillis
-      else Long.MaxValue
-    val dataPath = new org.apache.hadoop.fs.Path(s"$dir/data")
-    if (!f.exists(dataPath)) return Seq.empty
-    // version age = commit time = manifest mtime (the [[vacuum]] rule);
-    // a subtree under a time-protected version is protected with it.
-    // Manifest-less versions fall back to the version DIR's mtime, the
-    // same fallback [[vacuum]] uses — never 0: an export clone's
-    // non-exported data versions have no manifest (only the exported
-    // version's crossed), and a zero fallback would void the
-    // wall-clock floor for exactly those versions. (An earlier
-    // artifact deletion under the dir refreshes its mtime, which only
-    // DELAYS reclamation — the safe direction.)
-    def commitTime(v: Long, dirMtime: Long): Long = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/manifest/v$v.txt")
-      if (f.exists(p)) f.getFileStatus(p).getModificationTime else dirMtime
-    }
-    val out = Seq.newBuilder[(String, Long)]
-    f.listStatus(dataPath).foreach { st =>
-      scala.util.Try(st.getPath.getName.toLong).toOption.foreach { v =>
-        if (v <= cutoff && commitTime(v, st.getModificationTime) < tCutoff)
-          artifactRefs.foreach { case (art, refs) =>
-            val sub = new org.apache.hadoop.fs.Path(st.getPath, art)
-            if (!refs(v) && f.exists(sub)) {
-              f.delete(sub, true)
-              out += ((art, v))
-            }
-          }
-      }
-    }
-    out.result()
-  }
-
   /** Partition subdirectory names of `dataDir` with the given partition
     * column prefix, e.g. `bucket=` → the bucket ids materialized by a
     * write (partitionBy skips empty partitions). */
@@ -796,5 +673,257 @@ private[graft] object ManifestIO {
     f.listStatus(new org.apache.hadoop.fs.Path(dataDir))
       .map(_.getPath.getName).filter(_.startsWith(prefix))
       .map(_.stripPrefix(prefix).toInt).toSeq.sorted
+  }
+
+  /** The one write shape of every partitioned index artifact: one
+    * exchange on the partition column, so each partition lands in ONE
+    * task and ONE file per (version, partition). Without it every task
+    * holding rows for a partition leaves its own file (tasks ×
+    * partitions — measured 448 files for 16 BM25 buckets at sf0.1),
+    * and every later read of the partition pays a parquet reader init
+    * per file; a rewrite must not inherit its read's fan-out either.
+    * Returns the partition ids that materialized (partitionBy skips
+    * empty ones). */
+  def writePartitioned(df: DataFrame, dir: String, ver: Long,
+      artifact: String, partCol: String): Seq[Int] = {
+    val out = s"$dir/data/$ver/$artifact"
+    df.repartition(col(partCol)).write.partitionBy(partCol)
+      .mode("overwrite").parquet(out)
+    partitionIds(df.sparkSession, out, s"$partCol=")
+  }
+
+  // ───────────────────────── shared lifecycle ─────────────────────────
+
+  /** `p:v1|v2,…` — the version-map codec of every accreting artifact,
+    * sorted by partition. A legacy single-owner entry (`p:v`) parses as
+    * a one-element list, so pre-accretion dirs read unchanged. */
+  def renderVersions(vs: Map[Int, Seq[Long]]): String =
+    vs.toSeq.sortBy(_._1).map { case (p, v) => s"$p:${v.mkString("|")}" }.mkString(",")
+
+  def parseVersions(s: String): Map[Int, Seq[Long]] =
+    s.split(",").filter(_.nonEmpty).map { e =>
+      val Array(p, vs) = e.split(":")
+      p.toInt -> vs.split("\\|").map(_.toLong).toSeq
+    }.toMap
+
+  /** `vs` with `ver` appended to the lists of `parts` — an ACCRETING
+    * write's manifest update. */
+  def accrete(vs: Map[Int, Seq[Long]], parts: Iterable[Int],
+      ver: Long): Map[Int, Seq[Long]] =
+    vs ++ parts.map(p => p -> (vs.getOrElse(p, Seq.empty) :+ ver))
+
+  /** `vs` after a CONSOLIDATING rewrite of the `touched` partitions into
+    * `ver`: each collapses to `ver` where it re-materialized (`present`)
+    * and leaves the map where the rewrite emptied it. */
+  def consolidate(vs: Map[Int, Seq[Long]], touched: Iterable[Int],
+      present: Iterable[Int], ver: Long): Map[Int, Seq[Long]] =
+    (vs -- touched) ++ present.map(_ -> Seq(ver))
+
+  /** A derived artifact written by the same ticks as its parent, from
+    * the parent's just-written partitions — so its versions mirror the
+    * parent's and the manifest needs no reference list of its own:
+    * per partition (`data/<v>/<name>/<partCol>=<p>`) or one directory
+    * per version (`data/<v>/<name>`). `present` is the manifest's flag;
+    * a dir built before the sidecar existed lacks it. */
+  final case class Sidecar(name: String, perPartition: Boolean, present: Boolean)
+
+  /** An accreting artifact as one manifest references it: every version
+    * listed under partition `p` owns `data/<v>/<name>/<partCol>=<p>`. */
+  final case class Accreting(name: String, partCol: String,
+      versions: Map[Int, Seq[Long]], sidecar: Option[Sidecar] = None)
+
+  /** What one index family supplies to the shared verbs: its manifest
+    * codec, the artifacts a manifest references (accreting ones primary
+    * first, plus single-version ones), the readers and sidecar writer
+    * it already has, and "this manifest at a new version with new
+    * version maps" (the ledger rides along unchanged). */
+  trait IndexSpec[M] {
+    def what: String
+    def parse(body: String): M
+    def render(m: M): String
+    def accreting(m: M): Seq[Accreting]
+    def single(m: M): Seq[(String, Long)] = Seq.empty
+    /** Artifact `name`'s committed rows of `parts`, columns as written
+      * (partition column last). */
+    def read(spark: SparkSession, dir: String, m: M, name: String,
+        parts: Set[Int]): DataFrame
+    /** Write the sidecar of the artifact just rewritten under `ver`. */
+    def writeSidecar(spark: SparkSession, dir: String, m: M, ver: Long): Unit
+    def updated(m: M, version: Long, versions: Map[String, Map[Int, Seq[Long]]]): M
+
+    /** The committed manifest. */
+    def current(spark: SparkSession, dir: String): M =
+      parse(readCurrent(spark, dir, what)._2)
+
+    /** The manifest AS OF a committed historical version ([[readVersion]]). */
+    def at(spark: SparkSession, dir: String, version: Long): M =
+      parse(readVersion(spark, dir, version, what))
+  }
+
+  /** COMPACT tick — the read-amplification bound accreting appends
+    * need: a partition fed by N ticks reads a union of N file groups at
+    * every serve, and its manifest entry grows without bound. Every
+    * partition of every accreting artifact with ≥ `minVersions`
+    * distinct contributing versions is rewritten into ONE new data
+    * version (a pure physical rewrite: rows, scores and verdicts are
+    * bit-identical before and after) with its sidecar recomputed, and
+    * its entry collapses to that version; unpicked partitions are never
+    * listed. The superseded history is the next vacuum's food. The txn
+    * ledger rides forward untouched, so a maintenance stream's
+    * exactly-once record survives a compaction. Crash-atomic (new
+    * version + one CURRENT flip; `crashPoint` as in [[commit]]).
+    * Returns the compacted partitions of the PRIMARY artifact — the
+    * others compact in the same tick, unreported. */
+  def compact[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
+      minVersions: Int, crashPoint: Int): Seq[Int] = {
+    require(minVersions >= 2, "minVersions < 2 would rewrite single-version " +
+      s"partitions for nothing: $minVersions")
+    val (cur, body) = readCurrent(spark, dir, spec.what)
+    val m = spec.parse(body)
+    val picked = spec.accreting(m).map(a => a -> a.versions
+      .collect { case (p, vs) if vs.distinct.size >= minVersions => p }.toSeq.sorted)
+    if (picked.forall(_._2.isEmpty)) return Seq.empty // nothing fragmented: no tick
+    val newVer = cur + 1
+    guardSlot(spark, dir, newVer)
+    val versions = picked.map { case (a, ps) =>
+      val present = if (ps.isEmpty) Seq.empty else {
+        val out = writePartitioned(spec.read(spark, dir, m, a.name, ps.toSet),
+          dir, newVer, a.name, a.partCol)
+        if (a.sidecar.exists(_.present)) spec.writeSidecar(spark, dir, m, newVer)
+        out
+      }
+      a.name -> consolidate(a.versions, ps, present, newVer)
+    }.toMap
+    val committed = commit(spark, dir, newVer,
+      spec.render(spec.updated(m, newVer, versions)), crashPoint)
+    if (committed) picked.head._2 else Seq.empty
+  }
+
+  /** EXPORT (deep clone) of the index AS OF `version` (default CURRENT,
+    * -1) into the FRESH dir `destDir` — the promotion / DR / branching
+    * verb: copy exactly the subtrees the version's manifest references
+    * and publish the manifest body VERBATIM through
+    * [[exportReferenced]]; the version number is kept so the body's
+    * data-version references stay valid. The clone OWNS its files
+    * (deep, where a Delta SHALLOW CLONE's pointers would dangle after a
+    * source vacuum), serves bit-identically, and accepts its own ticks
+    * thereafter (next slot = version + 1, its own compact/vacuum
+    * cadence, the txn ledger carried verbatim so a resumed maintenance
+    * stream stays exactly-once across the promotion). Unreferenced
+    * partitions of partially superseded source versions are NOT copied
+    * — dead history never crosses, and copy IO moves the live index
+    * mass once, never the accumulated history. History below the
+    * exported version does not exist at the clone; time travel there
+    * fails loudly, like a vacuumed version at the source. Fails loudly
+    * when `version` is uncommitted or already vacuumed — so an export
+    * racing a maintenance stream's vacuum can die mid-copy like any
+    * deep reader; run it under [[WriterLease.withLease]] there, or
+    * export a version the grace window protects. Sidecars are optional
+    * subtrees (a legacy version may lack them). Returns the exported
+    * version. */
+  def exportIndex[M](spark: SparkSession, srcDir: String, destDir: String,
+      version: Long, spec: IndexSpec[M]): Long = {
+    val ver = if (version < 0) readCurrent(spark, srcDir, spec.what)._1 else version
+    val body = readVersion(spark, srcDir, ver, spec.what)
+    val m = spec.parse(body)
+    val subtrees = spec.accreting(m).flatMap { a =>
+      val side = a.sidecar.filter(_.present)
+      a.versions.toSeq.flatMap { case (p, vs) =>
+        vs.distinct.flatMap(v =>
+          (s"data/$v/${a.name}/${a.partCol}=$p", true) +:
+            side.filter(_.perPartition)
+              .map(sc => (s"data/$v/${sc.name}/${a.partCol}=$p", false)).toSeq)
+      } ++ side.filterNot(_.perPartition).toSeq.flatMap(sc =>
+        a.versions.values.flatten.toSeq.distinct.map(v => (s"data/$v/${sc.name}", false)))
+    } ++ spec.single(m).map { case (name, v) => (s"data/$v/$name", true) }
+    exportReferenced(spark, srcDir, destDir, ver, body, subtrees)
+  }
+
+  /** VACUUM tick: delete the `data/<v>` trees, `data/<v>/<artifact>`
+    * subtrees and `manifest/v<v>.txt` files that no servable manifest
+    * references — crashed ticks' orphans, history superseded by
+    * consolidation, compaction or rebuild. Without it a long-lived
+    * index keeps every rewrite it ever made (the commit protocol's
+    * "garbage, not corruption").
+    *
+    * The keep-set is, per artifact, the references of CURRENT plus
+    * those of every committed manifest still inside the grace window:
+    * in-window manifests are still servable (pinned readers, time
+    * travel), and one commit back can reference data versions far older
+    * than the window — a compaction re-owns every fragmented partition
+    * at once, un-referencing the whole accreted history from CURRENT
+    * while the pre-compaction manifest still points at all of it.
+    *
+    * `graceVersions` counts the SUPERSEDED GENERATIONS kept for
+    * in-flight readers (the Delta/Iceberg retention idea, counted in
+    * versions): grace g keeps every version newer than
+    * `current - 1 - g`, so g = 0 deletes all unreferenced history.
+    * `graceMillis` is the WALL-CLOCK floor on the same window: a
+    * version committed within graceMillis of now survives however many
+    * generations have passed. Without it the guarantee is
+    * load-DEPENDENT — a hot maintenance stream at seconds-per-tick
+    * burns a grace-2 window in seconds; 0 = no time floor. A version's
+    * AGE is its commit time, the mtime of its (immutable) manifest; a
+    * data dir's own mtime is only the fallback for manifest-less
+    * versions (crashed ticks' orphans, an export clone's non-exported
+    * versions) — never 0, which would void the wall-clock floor for
+    * exactly those.
+    *
+    * Two passes over ONE listing of each directory and one clock
+    * reading. The whole-version pass deletes out-of-window versions no
+    * artifact references. The ARTIFACT pass then deletes, inside the
+    * surviving out-of-window versions, the subtrees of artifacts whose
+    * own references dropped the version: artifacts supersede
+    * independently (an append can re-own every postings bucket while
+    * old docmap dbuckets stay live), and without this pass one live
+    * kilobyte of reverse map would pin gigabytes of dead postings.
+    * Sidecars are scoped by their parent's references. Manifests go
+    * last; the current one is always load-bearing.
+    *
+    * Run it from the index's single writer. Deleting garbage is
+    * idempotent, so a vacuum that crashes midway leaves garbage for the
+    * next one. A crashed tick's orphan at current+1 is newer than
+    * current, so the grace rule never touches it — safe, because the
+    * next tick allocates the same slot and overwrites it. Returns the
+    * data versions that lost their dir or any artifact subtree. */
+  def vacuum[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
+      graceVersions: Long, graceMillis: Long): Seq[Long] = {
+    require(graceVersions >= 0, s"graceVersions must be >= 0, got $graceVersions")
+    require(graceMillis >= 0, s"graceMillis must be >= 0, got $graceMillis")
+    val f = fs(spark, dir)
+    val (current, body) = readCurrent(spark, dir, spec.what)
+    val cutoff = current - 1 - graceVersions
+    val tCutoff =
+      if (graceMillis > 0L) System.currentTimeMillis() - graceMillis
+      else Long.MaxValue
+    val manifests = versionsUnder(f, s"$dir/manifest")
+    val commitTime = manifests.map { case (v, st) => v -> st.getModificationTime }.toMap
+    val servable = spec.parse(body) +: manifests.collect {
+      case (v, st) if v < current && (v > cutoff || st.getModificationTime >= tCutoff) =>
+        spec.parse(readText(f, st.getPath))
+    }
+    val refs: Map[String, Set[Long]] = servable.flatMap { m =>
+      spec.accreting(m).flatMap { a =>
+        val vs = a.versions.values.flatten.toSet
+        (a.name -> vs) +: a.sidecar.map(_.name -> vs).toSeq
+      } ++ spec.single(m).map { case (name, v) => name -> Set(v) }
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+    val live = refs.values.flatten.toSet + current
+    val (dead, kept) = versionsUnder(f, s"$dir/data")
+      .filter { case (v, st) =>
+        v <= cutoff && commitTime.getOrElse(v, st.getModificationTime) < tCutoff }
+      .partition { case (v, _) => !live(v) }
+    dead.foreach { case (_, st) => f.delete(st.getPath, true) }
+    val trimmed = kept.filter { case (v, st) =>
+      refs.count { case (art, rs) =>
+        val sub = new org.apache.hadoop.fs.Path(st.getPath, art)
+        !rs(v) && f.exists(sub) && f.delete(sub, true)
+      } > 0
+    }
+    manifests
+      .filter { case (v, st) =>
+        v != current && v <= cutoff && st.getModificationTime < tCutoff }
+      .foreach { case (_, st) => f.delete(st.getPath, false) }
+    (dead ++ trimmed).map(_._1).distinct.sorted
   }
 }

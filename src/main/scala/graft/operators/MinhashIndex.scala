@@ -86,48 +86,61 @@ object MinhashIndex {
       bandVersions: Map[Int, Seq[Long]] = Map.empty,
       bandstats: Boolean = false)
 
-  private def renderVers(m: Map[Int, Seq[Long]]): String =
-    m.toSeq.sortBy(_._1)
-      .map { case (b, vs) => s"$b:${vs.mkString("|")}" }.mkString(",")
+  /** The minhash layout for the shared lifecycle verbs. */
+  private object Spec extends ManifestIO.IndexSpec[Manifest] {
+    val what = "minhash index"
 
-  private def parseVers(s: String): Map[Int, Seq[Long]] =
-    s.split(",").filter(_.nonEmpty).map { e =>
-      val Array(b, vs) = e.split(":")
-      b.toInt -> vs.split("\\|").map(_.toLong).toSeq
-    }.toMap
+    def render(m: Manifest): String = {
+      val bandLines =
+        if (m.bandBuckets > 0)
+          s"bandBuckets=${m.bandBuckets}\n" +
+            s"bandVersions=${ManifestIO.renderVersions(m.bandVersions)}\n" +
+            (if (m.bandstats) "bandstats=1\n" else "")
+        else ""
+      s"version=${m.version}\nbuckets=${m.buckets}\n" +
+        s"params=${m.n}:${m.bands}:${m.rowsPerBand}\n" +
+        s"bucketVersions=${ManifestIO.renderVersions(m.bucketVersions)}\n" + bandLines +
+        ManifestIO.renderTxns(m.txns)
+    }
 
-  private def render(m: Manifest): String = {
-    val bandLines =
-      if (m.bandBuckets > 0)
-        s"bandBuckets=${m.bandBuckets}\n" +
-          s"bandVersions=${renderVers(m.bandVersions)}\n" +
-          (if (m.bandstats) "bandstats=1\n" else "")
-      else ""
-    s"version=${m.version}\nbuckets=${m.buckets}\n" +
-      s"params=${m.n}:${m.bands}:${m.rowsPerBand}\n" +
-      s"bucketVersions=${renderVers(m.bucketVersions)}\n" + bandLines +
-      ManifestIO.renderTxns(m.txns)
-  }
+    def parse(text: String): Manifest = {
+      val kv = ManifestIO.parseKv(text)
+      val Array(n, bands, rpb) = kv("params").split(":").map(_.toInt)
+      // band fields are OPTIONAL: a manifest committed before the band
+      // artifact existed parses to bandBuckets = 0, and every reader
+      // treats that as "no band artifact" (gate falls back to the full
+      // fan-out, ticks don't maintain a partial artifact); bandstats is
+      // OPTIONAL the same way (occupancy falls back to the full band
+      // read on a pre-sidecar dir)
+      Manifest(kv("version").toLong, kv("buckets").toInt, n, bands, rpb,
+        ManifestIO.parseVersions(kv("bucketVersions")), ManifestIO.parseTxns(kv),
+        kv.get("bandBuckets").map(_.toInt).getOrElse(0),
+        kv.get("bandVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty),
+        kv.get("bandstats").contains("1"))
+    }
 
-  private def parse(text: String): Manifest = {
-    val kv = ManifestIO.parseKv(text)
-    val Array(n, bands, rpb) = kv("params").split(":").map(_.toInt)
-    // band fields are OPTIONAL: a manifest committed before the band
-    // artifact existed parses to bandBuckets = 0, and every reader
-    // treats that as "no band artifact" (gate falls back to the full
-    // fan-out, ticks don't maintain a partial artifact); bandstats is
-    // OPTIONAL the same way (occupancy falls back to the full band
-    // read on a pre-sidecar dir)
-    Manifest(kv("version").toLong, kv("buckets").toInt, n, bands, rpb,
-      parseVers(kv("bucketVersions")), ManifestIO.parseTxns(kv),
-      kv.get("bandBuckets").map(_.toInt).getOrElse(0),
-      kv.get("bandVersions").map(parseVers).getOrElse(Map.empty),
-      kv.get("bandstats").contains("1"))
+    def accreting(m: Manifest): Seq[ManifestIO.Accreting] = Seq(
+      ManifestIO.Accreting("rows", "bucket", m.bucketVersions),
+      ManifestIO.Accreting("bands", "bb", m.bandVersions,
+        Some(ManifestIO.Sidecar("bandstats", perPartition = true, m.bandstats))))
+
+    def read(spark: SparkSession, dir: String, m: Manifest, name: String,
+        parts: Set[Int]): DataFrame =
+      if (name == "rows") readRowsAt(spark, dir, m, Some(parts))
+      else readBandsAt(spark, dir, m, Some(parts))
+
+    def writeSidecar(spark: SparkSession, dir: String, m: Manifest,
+        ver: Long): Unit = writeBandstats(spark, dir, ver)
+
+    def updated(m: Manifest, version: Long,
+        versions: Map[String, Map[Int, Seq[Long]]]): Manifest =
+      m.copy(version = version, bucketVersions = versions("rows"),
+        bandVersions = versions("bands"))
   }
 
   /** The committed manifest — every reader's one CURRENT read. */
   def readManifest(spark: SparkSession, dir: String): Manifest =
-    parse(ManifestIO.readCurrent(spark, dir, "minhash index")._2)
+    Spec.current(spark, dir)
 
   private def bucketOf(buckets: Int) =
     pmod(xxhash64(col("sid")), lit(buckets)).cast("int").as("bucket")
@@ -180,15 +193,14 @@ object MinhashIndex {
       pmod(xxhash64(col("band"), col("bucket")), lit(m.bandBuckets)))
   }
 
-  /** Write one tick's band rows (derived from its (sid, bhs) rows)
-    * under `data/<ver>/bands` and return the materialized bb ids. */
-  private def writeBands(spark: SparkSession, dir: String, ver: Long,
-      rows: DataFrame, bandBuckets: Int): Seq[Int] = {
-    bandRowsDF(rows, bandBuckets)
-      .repartition(col("bb")) // one file per partition (the compact write shape)
-      .write.partitionBy("bb").mode("overwrite")
-      .parquet(s"$dir/data/$ver/bands")
-    ManifestIO.partitionIds(spark, s"$dir/data/$ver/bands", "bb=")
+  /** Write one tick's band rows (band, bucket, sid, bhs, bb) under
+    * `data/<ver>/bands` plus, on a sidecar'd index, their occupancy
+    * deltas; returns the materialized bb ids. */
+  private def writeBands(bandRows: DataFrame, dir: String, ver: Long,
+      bandstats: Boolean): Seq[Int] = {
+    val present = ManifestIO.writePartitioned(bandRows, dir, ver, "bands", "bb")
+    if (bandstats) writeBandstats(bandRows.sparkSession, dir, ver)
+    present
   }
 
   /** Derive one tick's band-OCCUPANCY sidecar from its JUST-WRITTEN
@@ -206,13 +218,11 @@ object MinhashIndex {
       ver: Long): Unit = {
     val bandsDir = s"$dir/data/$ver/bands"
     if (ManifestIO.partitionIds(spark, bandsDir, "bb=").nonEmpty)
-      spark.read.parquet(bandsDir)
+      ManifestIO.writePartitioned(spark.read.parquet(bandsDir)
         .groupBy(col("bb"), col("band"), col("bucket"))
         .agg(count(lit(1)).as("c"))
-        .select(col("band"), col("bucket"), col("c"), col("bb"))
-        .repartition(col("bb")) // one file per partition (the compact write shape)
-        .write.partitionBy("bb").mode("overwrite")
-        .parquet(s"$dir/data/$ver/bandstats")
+        .select(col("band"), col("bucket"), col("c"), col("bb")),
+        dir, ver, "bandstats", "bb")
   }
 
   /** The committed band-occupancy sidecar (band, bucket, c, bb) — the
@@ -244,24 +254,19 @@ object MinhashIndex {
     val spark = docs.sparkSession
     val (ver, priorTxns) = ManifestIO.buildSlot(spark, dir)
     ManifestIO.guardSlot(spark, dir, ver)
-    Dedup.minhashDocIndex(docs, idCol, textCol, n, bands, rowsPerBand)
-      .select(col("sid"), col("gs"), col("bhs"), bucketOf(buckets))
-      .repartition(col("bucket")) // one file per bucket (the compact write shape)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$dir/data/$ver/rows")
-    val present = ManifestIO.partitionIds(spark, s"$dir/data/$ver/rows", "bucket=")
-      .map(_ -> Seq(ver)).toMap
+    val present = ManifestIO.writePartitioned(
+      Dedup.minhashDocIndex(docs, idCol, textCol, n, bands, rowsPerBand)
+        .select(col("sid"), col("gs"), col("bhs"), bucketOf(buckets)),
+      dir, ver, "rows", "bucket").map(_ -> Seq(ver)).toMap
+    // the occupancy sidecar rides every build (see [[writeBandstats]])
     val presentBb =
-      if (bandBuckets > 0 && present.nonEmpty) {
-        val bb = writeBands(spark, dir, ver,
-          spark.read.parquet(s"$dir/data/$ver/rows").select("sid", "bhs"),
-          bandBuckets).map(_ -> Seq(ver)).toMap
-        // the occupancy sidecar rides every build (see [[writeBandstats]])
-        writeBandstats(spark, dir, ver)
-        bb
-      } else Map.empty[Int, Seq[Long]]
+      if (bandBuckets > 0 && present.nonEmpty)
+        writeBands(bandRowsDF(spark.read.parquet(s"$dir/data/$ver/rows")
+          .select("sid", "bhs"), bandBuckets), dir, ver, bandstats = true)
+          .map(_ -> Seq(ver)).toMap
+      else Map.empty[Int, Seq[Long]]
     ManifestIO.commit(spark, dir, ver,
-      render(Manifest(ver, buckets, n, bands, rowsPerBand, present, priorTxns,
+      Spec.render(Manifest(ver, buckets, n, bands, rowsPerBand, present, priorTxns,
         bandBuckets, presentBb, bandstats = bandBuckets > 0)))
   }
 
@@ -284,15 +289,10 @@ object MinhashIndex {
     ManifestIO.guardSlot(spark, dir, newVer)
     val presentBb =
       if (m.bucketVersions.isEmpty) Map.empty[Int, Seq[Long]]
-      else {
-        val bb = writeBands(spark, dir, newVer,
-          readRowsAt(spark, dir, m).select(col("sid"), col("bhs")),
-          bandBuckets).map(_ -> Seq(newVer)).toMap
-        writeBandstats(spark, dir, newVer)
-        bb
-      }
+      else writeBands(bandRowsDF(readRowsAt(spark, dir, m).select(col("sid"), col("bhs")),
+        bandBuckets), dir, newVer, bandstats = true).map(_ -> Seq(newVer)).toMap
     ManifestIO.commit(spark, dir, newVer,
-      render(m.copy(version = newVer, bandBuckets = bandBuckets,
+      Spec.render(m.copy(version = newVer, bandBuckets = bandBuckets,
         bandVersions = presentBb, bandstats = true)))
     true
   }
@@ -451,7 +451,7 @@ object MinhashIndex {
   /** The committed manifest AS OF a historical version (time travel). */
   def readManifestVersion(spark: SparkSession, dir: String,
       version: Long): Manifest =
-    parse(ManifestIO.readVersion(spark, dir, version, "minhash index"))
+    Spec.at(spark, dir, version)
 
   /** ADMISSION tick — the committed form of
     * [[Dedup.minhashIndexAdmit]]: gate the batch against the committed
@@ -559,34 +559,20 @@ object MinhashIndex {
       .join(decisions.filter(col("admitted")).select(col("sid")), Seq("sid"))
       .select(col("sid"), col("gs"), col("bhs"), bucketOf(m.buckets))
     ManifestIO.guardSlot(spark, dir, newVer)
-    admittedRows
-      .repartition(col("bucket")) // one file per bucket (the compact write shape)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/rows")
+    val touched = ManifestIO.writePartitioned(admittedRows, dir, newVer, "rows", "bucket")
     // the band artifact accretes the same admitted docs (derived from
     // the same two pins, so rows and bands cannot diverge); the
     // occupancy sidecar rides the same write
     val touchedBb =
-      if (m.bandBuckets > 0) {
-        val bb = writeBands(spark, dir, newVer,
-          admittedRows.select(col("sid"), col("bhs")), m.bandBuckets)
-        if (m.bandstats) writeBandstats(spark, dir, newVer)
-        bb
-      } else Seq.empty
-    if (crashPoint == 1) return Admission(decisions, appended)
-    val touched = ManifestIO.partitionIds(spark, s"$dir/data/$newVer/rows", "bucket=")
-    val newBuckets = m.bucketVersions ++ touched.map(b =>
-      b -> (m.bucketVersions.getOrElse(b, Seq.empty) :+ newVer))
-    val newBands = m.bandVersions ++ touchedBb.map(k =>
-      k -> (m.bandVersions.getOrElse(k, Seq.empty) :+ newVer))
-    val body = render(Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-      newBuckets, ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands,
-      m.bandstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return Admission(decisions, appended)
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
+      if (m.bandBuckets > 0)
+        writeBands(bandRowsDF(admittedRows.select(col("sid"), col("bhs")), m.bandBuckets),
+          dir, newVer, m.bandstats)
+      else Seq.empty
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
+        ManifestIO.accrete(m.bucketVersions, touched, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets,
+        ManifestIO.accrete(m.bandVersions, touchedBb, newVer), m.bandstats)), crashPoint)
     Admission(decisions, appended)
   }
 
@@ -637,47 +623,27 @@ object MinhashIndex {
       .collect().map(_.getInt(0)) // ≤ candidate count values
     if (touched.isEmpty) return // no id matched: the index already is the post-tick state
     ManifestIO.guardSlot(spark, dir, newVer)
-    readRowsAt(spark, dir, m, Some(touched.toSet))
+    val present = ManifestIO.writePartitioned(readRowsAt(spark, dir, m, Some(touched.toSet))
       .join(delIds, Seq("sid"), "left_anti")
-      .select(col("sid"), col("gs"), col("bhs"), col("bucket"))
-      .repartition(col("bucket")) // one file per bucket (the compact write shape)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/rows")
+      .select(col("sid"), col("gs"), col("bhs"), col("bucket")), dir, newVer, "rows", "bucket")
     // band consolidation: the matched rows' bb partitions — a pure
     // function of their bhs — rewrite without the deleted sids
-    val (touchedBb, presentBb) =
-      if (m.bandBuckets > 0) {
-        val tb = bandRowsDF(matched.select(col("sid"), col("bhs")),
-            m.bandBuckets)
-          .select(col("bb")).distinct()
-          .collect().map(_.getInt(0)) // ≤ bandBuckets values
-          .filter(m.bandVersions.contains)
-        if (tb.isEmpty) (Seq.empty[Int], Set.empty[Int])
-        else {
-          readBandsAt(spark, dir, m, Some(tb.toSet))
-            .join(delIds, Seq("sid"), "left_anti")
-            .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb"))
-            .repartition(col("bb"))
-            .write.partitionBy("bb").mode("overwrite")
-            .parquet(s"$dir/data/$newVer/bands")
-          if (m.bandstats) writeBandstats(spark, dir, newVer)
-          (tb.toSeq, ManifestIO
-            .partitionIds(spark, s"$dir/data/$newVer/bands", "bb=").toSet)
-        }
-      } else (Seq.empty[Int], Set.empty[Int])
-    if (crashPoint == 1) return
-    val present =
-      ManifestIO.partitionIds(spark, s"$dir/data/$newVer/rows", "bucket=").toSet
-    val newBuckets = (m.bucketVersions -- touched) ++ present.map(_ -> Seq(newVer))
-    val newBands = (m.bandVersions -- touchedBb) ++ presentBb.map(_ -> Seq(newVer))
-    val body = render(Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-      newBuckets, ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands,
-      m.bandstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
+    val newBands = if (m.bandBuckets == 0) m.bandVersions else {
+      val tb = bandRowsDF(matched.select(col("sid"), col("bhs")), m.bandBuckets)
+        .select(col("bb")).distinct()
+        .collect().map(_.getInt(0)) // ≤ bandBuckets values
+        .filter(m.bandVersions.contains)
+      if (tb.isEmpty) m.bandVersions
+      else ManifestIO.consolidate(m.bandVersions, tb, writeBands(
+        readBandsAt(spark, dir, m, Some(tb.toSet))
+          .join(delIds, Seq("sid"), "left_anti")
+          .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb")),
+        dir, newVer, m.bandstats), newVer)
     }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
+        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands, m.bandstats)), crashPoint)
   }
 
   /** UPSERT tick — the REFRESH verb (the [[Bm25.upsertIndex]]
@@ -777,117 +743,47 @@ object MinhashIndex {
     val candRows = readRowsAt(spark, dir, m, Some(candOld))
       .localCheckpoint(true)
     ManifestIO.guardSlot(spark, dir, newVer)
-    candRows
+    val present = ManifestIO.writePartitioned(candRows
       .join(upSids, Seq("sid"), "left_anti")
       .select(col("sid"), col("gs"), col("bhs"), col("bucket"))
-      .unionByName(newRows)
-      .repartition(col("bucket")) // one file per bucket (the compact write shape)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$dir/data/$newVer/rows")
+      .unionByName(newRows), dir, newVer, "rows", "bucket")
     // band rewrite: the affected partitions are the OLD copies' bbs
     // (from their committed bhs) ∪ the NEW rows' bbs — every old band
     // row's bb is in that set, so one anti ∪ new rewrite per bb
-    val (touchedBb, presentBb) =
-      if (m.bandBuckets > 0) {
-        val oldBhs = candRows.join(upSids, Seq("sid"), "left_semi")
-          .select(col("sid"), col("bhs"))
-        val tb = bandRowsDF(oldBhs.unionByName(
-            newRows.select(col("sid"), col("bhs"))), m.bandBuckets)
-          .select(col("bb")).distinct()
-          .collect().map(_.getInt(0)) // ≤ bandBuckets values
-        val tbOld = tb.filter(m.bandVersions.contains)
+    val newBands = if (m.bandBuckets == 0) m.bandVersions else {
+      val oldBhs = candRows.join(upSids, Seq("sid"), "left_semi")
+        .select(col("sid"), col("bhs"))
+      val tbOld = bandRowsDF(oldBhs.unionByName(
+          newRows.select(col("sid"), col("bhs"))), m.bandBuckets)
+        .select(col("bb")).distinct()
+        .collect().map(_.getInt(0)) // ≤ bandBuckets values
+        .filter(m.bandVersions.contains)
+      ManifestIO.consolidate(m.bandVersions, tbOld, writeBands(
         readBandsAt(spark, dir, m, Some(tbOld.toSet))
           .join(upSids, Seq("sid"), "left_anti")
           .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb"))
-          .unionByName(bandRowsDF(newRows.select(col("sid"), col("bhs")),
-            m.bandBuckets))
-          .repartition(col("bb"))
-          .write.partitionBy("bb").mode("overwrite")
-          .parquet(s"$dir/data/$newVer/bands")
-        if (m.bandstats) writeBandstats(spark, dir, newVer)
-        (tbOld.toSeq, ManifestIO
-          .partitionIds(spark, s"$dir/data/$newVer/bands", "bb=").toSet)
-      } else (Seq.empty[Int], Set.empty[Int])
-    if (crashPoint == 1) return // simulated death: data written, nothing committed
-    val present = ManifestIO
-      .partitionIds(spark, s"$dir/data/$newVer/rows", "bucket=").toSet
-    val newBuckets = (m.bucketVersions -- candOld) ++ present.map(_ -> Seq(newVer))
-    val newBands = (m.bandVersions -- touchedBb) ++ presentBb.map(_ -> Seq(newVer))
-    val body = render(Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-      newBuckets, ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands,
-      m.bandstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return
+          .unionByName(bandRowsDF(newRows.select(col("sid"), col("bhs")), m.bandBuckets)),
+        dir, newVer, m.bandstats), newVer)
     }
-    ManifestIO.commit(spark, dir, newVer, body)
+    ManifestIO.commit(spark, dir, newVer, Spec.render(
+      Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
+        ManifestIO.consolidate(m.bucketVersions, candOld, present, newVer),
+        ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands, m.bandstats)), crashPoint)
   }
 
-  /** COMPACT tick — the [[graft.operators.Ann.ivfIndexCompact]]
-    * sibling: admissions ACCRETE, so a signature bucket (or band
-    * partition) fed by N ticks reads a union of N file groups at every
-    * gate and its manifest entry grows without bound. Rewrite every
-    * partition of EITHER artifact with ≥ `minVersions` distinct
-    * contributing versions into ONE new data version (a pure physical
-    * rewrite — rows bit-identical), collapse the manifest entries,
-    * leave unpicked partitions unlisted; the superseded history is the
-    * next vacuum's food. Crash-atomic, txn ledger carried forward,
-    * single-writer maintenance. Returns the compacted `rows` bucket
-    * ids (band partitions compact in the same tick, unreported). */
+  /** COMPACT tick ([[ManifestIO.compact]]): admissions ACCRETE, so
+    * every partition of EITHER artifact with ≥ `minVersions` distinct
+    * contributing versions is rewritten into ONE new data version (rows
+    * bit-identical, band occupancy deltas recomputed) and its manifest
+    * entry collapses. Returns the compacted `rows` bucket ids (band
+    * partitions compact in the same tick, unreported). */
   def compact(spark: SparkSession, dir: String, minVersions: Int = 2): Seq[Int] =
     compactHooked(spark, dir, minVersions, crashPoint = 0)
 
   /** [[compact]] with the standard injectable writer-death points. */
   private[graft] def compactHooked(spark: SparkSession, dir: String,
-      minVersions: Int, crashPoint: Int): Seq[Int] = {
-    require(minVersions >= 2,
-      s"minVersions < 2 would rewrite single-version buckets for nothing: $minVersions")
-    val m = readManifest(spark, dir)
-    val picked = m.bucketVersions
-      .filter { case (_, vs) => vs.distinct.size >= minVersions }
-      .keys.toSeq.sorted
-    val pickedBb = m.bandVersions
-      .filter { case (_, vs) => vs.distinct.size >= minVersions }
-      .keys.toSeq.sorted
-    if (picked.isEmpty && pickedBb.isEmpty) return Seq.empty // nothing fragmented: no tick
-    val newVer = m.version + 1
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // one exchange on the partition id → one file per partition (the
-    // ivfIndexCompact rationale: the rewrite must not inherit the
-    // read's per-task fan-out)
-    if (picked.nonEmpty)
-      readRowsAt(spark, dir, m, Some(picked.toSet))
-        .select(col("sid"), col("gs"), col("bhs"), col("bucket"))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/rows")
-    if (pickedBb.nonEmpty) {
-      readBandsAt(spark, dir, m, Some(pickedBb.toSet))
-        .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb"))
-        .repartition(col("bb"))
-        .write.partitionBy("bb").mode("overwrite")
-        .parquet(s"$dir/data/$newVer/bands")
-      if (m.bandstats) writeBandstats(spark, dir, newVer)
-    }
-    if (crashPoint == 1) return Seq.empty // simulated death: data written, nothing committed
-    val present =
-      if (picked.isEmpty) Set.empty[Int]
-      else ManifestIO.partitionIds(spark, s"$dir/data/$newVer/rows", "bucket=").toSet
-    val presentBb =
-      if (pickedBb.isEmpty) Set.empty[Int]
-      else ManifestIO.partitionIds(spark, s"$dir/data/$newVer/bands", "bb=").toSet
-    val newBuckets = (m.bucketVersions -- picked) ++ present.map(_ -> Seq(newVer))
-    val newBands = (m.bandVersions -- pickedBb) ++ presentBb.map(_ -> Seq(newVer))
-    val body = render(Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-      newBuckets, ManifestIO.mergeTxn(m.txns, None), m.bandBuckets, newBands,
-      m.bandstats))
-    if (crashPoint == 2) {
-      ManifestIO.writeManifestOnly(spark, dir, newVer, body)
-      return Seq.empty
-    }
-    ManifestIO.commit(spark, dir, newVer, body)
-    picked
-  }
+      minVersions: Int, crashPoint: Int): Seq[Int] =
+    ManifestIO.compact(spark, dir, Spec, minVersions, crashPoint)
 
   /** Fixed-point scale of the occupancy metrics ([[indexProfile]] /
     * [[occupancyVerdict]]): floor(mean · 10⁶) as BIGINT — integral
@@ -1007,65 +903,21 @@ object MinhashIndex {
   }
 
   /** EXPORT (deep clone) of the committed minhash index AS OF
-    * `version` (default CURRENT, -1) into the FRESH dir `destDir` —
-    * the [[graft.operators.Bm25.exportIndex]] verb on the dedup
-    * family: copy exactly the referenced per-(version, bucket) rows
-    * partitions, per-(version, bb) band partitions and their
-    * occupancy-sidecar mirrors, publish the manifest body verbatim.
-    * Same contract: deep (the clone owns its files), bit-identical
-    * gates, tick-able thereafter, dead history never crosses, copy IO
-    * referenced-file-bound. See the BM25 scaladoc for the full
-    * rationale; ExportSpec pins all three families. */
+    * `version` (default CURRENT, -1) into the FRESH dir `destDir`: the
+    * referenced rows partitions, band partitions and their occupancy
+    * mirrors ([[ManifestIO.exportIndex]]). Returns the exported
+    * version. */
   def exportIndex(spark: SparkSession, srcDir: String, destDir: String,
-      version: Long = -1L): Long = {
-    val ver =
-      if (version < 0) ManifestIO.readCurrent(spark, srcDir, "minhash index")._1
-      else version
-    val body = ManifestIO.readVersion(spark, srcDir, ver, "minhash index")
-    val m = parse(body)
-    // manifest→subtree mapping only; the copy/publish protocol lives in
-    // [[ManifestIO.exportReferenced]]. The bandstats sidecar mirrors
-    // the band refs by construction.
-    val subtrees =
-      m.bucketVersions.toSeq.flatMap { case (b, vs) =>
-        vs.distinct.map(v => (s"data/$v/rows/bucket=$b", true))
-      } ++
-      m.bandVersions.toSeq.flatMap { case (k, vs) =>
-        vs.distinct.flatMap(v =>
-          Seq((s"data/$v/bands/bb=$k", true)) ++
-            (if (m.bandstats) Seq((s"data/$v/bandstats/bb=$k", false))
-             else Seq.empty))
-      }
-    ManifestIO.exportReferenced(spark, srcDir, destDir, ver, body, subtrees)
-  }
+      version: Long = -1L): Long =
+    ManifestIO.exportIndex(spark, srcDir, destDir, version, Spec)
 
-  /** VACUUM tick: retire data versions and manifests the committed
-    * manifest no longer references ([[ManifestIO.vacuum]] semantics —
-    * single-writer maintenance, grace counted in versions with an
-    * optional wall-clock floor). The two artifacts supersede
-    * INDEPENDENTLY (a delete can consolidate band partitions whose
-    * rows buckets stay live and vice versa), so the artifact-scoped
-    * pre-pass reclaims each side on its own references — the
-    * Bm25.vacuumIndex discipline. */
+  /** VACUUM tick ([[ManifestIO.vacuum]]): retire what no servable
+    * manifest references. The two artifacts supersede INDEPENDENTLY (a
+    * delete can consolidate band partitions whose rows buckets stay
+    * live and vice versa), so the artifact pass reclaims each side on
+    * its own references. Returns the data versions that lost their dir
+    * or any artifact subtree. */
   def vacuum(spark: SparkSession, dir: String,
-      graceVersions: Long = 2L, graceMillis: Long = 0L): Seq[Long] = {
-    val m = readManifest(spark, dir)
-    // in-window manifests are still servable (pinned readers, the
-    // time-travel gate): their references survive too — the
-    // Bm25.vacuumIndex rationale; sharpest after a compaction re-owned
-    // every fragmented bucket in one commit
-    val all = m +: ManifestIO.windowManifests(spark, dir, m.version,
-      graceVersions, graceMillis).map(parse)
-    val rowRefs = all.flatMap(_.bucketVersions.values.flatten).toSet
-    val bandRefs = all.flatMap(_.bandVersions.values.flatten).toSet
-    // the occupancy sidecar mirrors the band artifact's versions
-    // exactly (same ticks, same partitions), so the same reference set
-    // scopes both — the Bm25 termstats rule
-    val arts = ManifestIO.vacuumArtifacts(spark, dir, m.version,
-      Map("rows" -> rowRefs, "bands" -> bandRefs, "bandstats" -> bandRefs),
-      graceVersions, graceMillis)
-    val whole = ManifestIO.vacuum(spark, dir, m.version,
-      rowRefs ++ bandRefs + m.version, graceVersions, graceMillis)
-    (whole ++ arts.map(_._2)).distinct.sorted
-  }
+      graceVersions: Long = 2L, graceMillis: Long = 0L): Seq[Long] =
+    ManifestIO.vacuum(spark, dir, Spec, graceVersions, graceMillis)
 }

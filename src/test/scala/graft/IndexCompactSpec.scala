@@ -120,6 +120,78 @@ class IndexCompactSpec extends AnyFunSuite {
   private val Rpb = 2
   private val Tau = 0.5
 
+  /** One family's compact surface for the crash table: a fragmenting
+    * set-up, the committed manifest version, the serve/gate answer, and
+    * the hooked compact. */
+  private case class CrashCase(family: String, setUp: String => Unit,
+      manifest: String => Any, version: String => Long,
+      answer: String => Seq[Seq[Any]], compact: (String, Int) => Seq[Int])
+
+  private lazy val crashCases = Seq(
+    CrashCase("bm25",
+      dir => {
+        val bm25 = graft.operators.Bm25
+        bm25.buildIndex((0 until 20).map(i => (i.toLong, s"w${i % 7} common shared"))
+          .toDF("doc_id", "text"), "doc_id", "text", dir, buckets = 4)
+        bm25.appendToIndex(spark, dir, Seq((50L, "w1 w2 w3 w4 common"),
+          (51L, "w5 w6 shared fresh")).toDF("doc_id", "text"), "doc_id", "text")
+      },
+      dir => graft.operators.Bm25.readManifest(spark, dir),
+      dir => graft.operators.Bm25.readManifest(spark, dir).version,
+      dir => graft.operators.Bm25.serveTopK(spark, dir,
+          Seq((1L, "w1"), (1L, "common"), (2L, "w6")).toDF("qid", "term"), 5)
+        .orderBy(col("qid"), col("rank")).collect().map(_.toSeq).toSeq,
+      (dir, cp) => graft.operators.Bm25.compactIndexHooked(spark, dir, 2, cp)),
+    CrashCase("ivf",
+      dir => {
+        Ann.ivfIndexBuild((100 until 110).map(i => (i.toLong, vec(i)))
+          .toDF("cid", "cvec"), dir, cents)
+        Ann.ivfIndexAppend(spark, dir,
+          (10 until 20).map(i => (i.toLong, vec(i))).toDF("cid", "cvec"))
+      },
+      dir => Ann.readIvfManifest(spark, dir),
+      dir => Ann.readIvfManifest(spark, dir).version,
+      serve,
+      (dir, cp) => Ann.ivfIndexCompactHooked(spark, dir, 2, cp)),
+    CrashCase("minhash",
+      dir => {
+        MinhashIndex.build((0 until 10).map(i =>
+            (i.toLong, s"document number $i about topic ${i % 4} with enough tokens"))
+          .toDF("doc_id", "text"), "doc_id", "text", dir, N, Bands, Rpb, buckets = 4)
+        MinhashIndex.admit(spark, dir, (0 until 3).map(t =>
+            (100L + t, s"totally novel admission number $t unlike all others ever"))
+          .toDF("doc_id", "text"), "doc_id", "text", Tau)
+      },
+      dir => MinhashIndex.readManifest(spark, dir),
+      dir => MinhashIndex.readManifest(spark, dir).version,
+      dir => MinhashIndex.gate(spark, dir, Seq(
+          (200L, "document number 3 about topic 3 with enough tokens"),
+          (201L, "totally novel admission number 1 unlike all others ever more"))
+          .toDF("doc_id", "text"), "doc_id", "text", Tau)
+        .orderBy(col("da"), col("db")).collect().map(_.toSeq).toSeq,
+      (dir, cp) => MinhashIndex.compactHooked(spark, dir, 2, cp)))
+
+  crashCases.foreach { c =>
+    test(s"${c.family}: compact crash points 1 and 2 leave manifest and answers unmoved; the retry commits") {
+      val dir = Files.createTempDirectory(s"${c.family}compactcrash").toString
+      c.setUp(dir)
+      val m = c.manifest(dir)
+      val v = c.version(dir)
+      val answer = c.answer(dir)
+      assert(answer.nonEmpty, "precondition: the probe must hit the index")
+      for (crashPoint <- Seq(1, 2)) {
+        assert(c.compact(dir, crashPoint).isEmpty,
+          s"crashPoint=$crashPoint must report nothing compacted")
+        assert(c.manifest(dir) == m, s"crashPoint=$crashPoint moved the committed manifest")
+        assert(c.answer(dir) == answer, s"crashPoint=$crashPoint changed the answer")
+      }
+      // the retry reuses the orphaned slot and commits
+      assert(c.compact(dir, 0).nonEmpty)
+      assert(c.version(dir) == v + 1)
+      assert(c.answer(dir) == answer, "a compaction is physically invisible")
+    }
+  }
+
   test("minhash: compact collapses fragmented buckets; the gate is bit-identical; history vacuums") {
     val dir = Files.createTempDirectory("mhcompact").toString
     val ref = (0 until 12).map(i =>

@@ -310,4 +310,63 @@ class VacuumSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(cellsOf(dir) == cellsOf(dirU))
   }
+
+  test("minhash: the artifact pass reclaims superseded rows buckets while the band partitions stay live") {
+    val spark = SparkTest.spark
+    import spark.implicits._
+    val (n, bands, rpb, buckets, bandBuckets, tau) = (3, 4, 2, 2, 16, 0.5)
+    val dir = Files.createTempDirectory("mhartvac").toString
+    graft.operators.MinhashIndex.build((0 until 10).map(i =>
+        (i.toLong, s"document number $i about topic ${i % 4} with enough tokens"))
+      .toDF("doc_id", "text"), "doc_id", "text", dir, n, bands, rpb,
+      buckets = buckets, bandBuckets = bandBuckets)
+    // a live-bands-dead-rows version arises from CONSOLIDATION: admit
+    // two docs whose sids share ONE rows bucket but whose band rows
+    // reach a partition the other's do not (found under the index's
+    // own hashes, precondition asserted), then id-delete one — its rows
+    // bucket (v2's ONLY rows partition) consolidates into v3 while the
+    // kept doc's band partitions keep v2's bands subtree live
+    val texts = (300 until 340).map(i =>
+      (i.toLong, s"arrival $i brings words q${i * 7} r${i * 13} s${i * 3} t${i}"))
+    val sig = graft.operators.Dedup.minhashDocIndex(texts.toDF("doc_id", "text"),
+        "doc_id", "text", n, bands, rpb)
+      .select(col("sid"), posexplode(col("bhs")).as(Seq("band", "bucket")))
+      .select(col("sid"), pmod(xxhash64(col("sid")), lit(buckets)).cast("int").as("b"),
+        pmod(xxhash64(col("band"), col("bucket")), lit(bandBuckets)).cast("int").as("bb"))
+      .collect().groupBy(_.getLong(0)).map { case (sid, rs) =>
+        sid -> (rs.head.getInt(1), rs.map(_.getInt(2)).toSet) }
+    val pair = sig.toSeq.sortBy(_._1).flatMap(a => sig.toSeq.sortBy(_._1).map(a -> _))
+      .find { case (a, b) => a._1 != b._1 && a._2._1 == b._2._1 &&
+        (b._2._2 -- a._2._2).nonEmpty }
+      .map { case (a, b) => (a._1, b._1) }
+    assert(pair.nonEmpty, "precondition: need two sids sharing a rows bucket, not all bands")
+    val (drop, keep) = pair.get
+    val textOf = texts.toMap
+    val adm = graft.operators.MinhashIndex.admit(spark, dir,
+      Seq((drop, textOf(drop)), (keep, textOf(keep))).toDF("doc_id", "text"),
+      "doc_id", "text", tau)
+    assert(adm.appended == 2L, "precondition: both arrivals must be admitted")
+    graft.operators.MinhashIndex.deleteByIds(spark, dir, Seq(drop).toDF("sid"))
+    val m3 = graft.operators.MinhashIndex.readManifest(spark, dir)
+    assert(m3.version == 3L)
+    assert(!m3.bucketVersions.values.flatten.toSet.contains(2L),
+      s"precondition: the consolidation must supersede v2's rows, got ${m3.bucketVersions}")
+    assert(m3.bandVersions.values.flatten.toSet.contains(2L),
+      s"precondition: the kept doc's bands must keep v2's bands live, got ${m3.bandVersions}")
+    def gate() = graft.operators.MinhashIndex.gate(spark, dir,
+        Seq((900L, textOf(keep)), (901L, textOf(drop))).toDF("doc_id", "text"),
+        "doc_id", "text", tau)
+      .orderBy(col("da"), col("db")).collect().map(_.toSeq).toSeq
+    val before = gate()
+    assert(before.map(r => (r(0), r(1))) == Seq((900L, keep)),
+      "precondition: the gate finds the kept doc and not the deleted one")
+    // v2's bands are live gate data; v2's rows are fully superseded —
+    // the artifact pass reclaims the dead subtree under a live version
+    assert(graft.operators.MinhashIndex.vacuum(spark, dir, graceVersions = 0L).contains(2L))
+    assert(new java.io.File(s"$dir/data/2/bands").exists,
+      "live band files must survive the artifact pass")
+    assert(!new java.io.File(s"$dir/data/2/rows").exists,
+      "the superseded rows subtree must be reclaimed")
+    assert(gate() == before)
+  }
 }
