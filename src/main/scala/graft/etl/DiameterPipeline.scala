@@ -9,23 +9,23 @@ import graft.sources.Pcap
 /** End-to-end Diameter ingestion (SURVEY §3.1), Spark-shaped:
   *
   * {{{
-  * pcap frames → decode L2-L4 (narrow) → filter chain (narrow)
+  * pcap frames → decode L2-L4 → (flow key, piece) per SCTP DATA chunk
+  *   and per TCP ACK/PSH+ACK segment (narrow, one scan)
   *   → Exchange(flow key) → reassembly (flatMapGroups)
   *   → Exchange(correlation key) → correlation+enrichment (flatMapGroups)
   * }}}
   *
   * Two shuffles total, both on keys whose cardinality grows with traffic
-  * (flows / transactions), never a global ordering step. The per-file
-  * frame counter provides in-group order (§7.3 #1).
+  * (flows / transactions), never a global ordering step. SCTP and TCP
+  * share the one flow exchange, so the capture is read once per call.
+  * The per-file frame counter provides in-group order (§7.3 #1).
   */
-/** SCTP flow key for R1 (stream id, stream seq, endpoints, file) —
-  * `diameter.py:52-71`. */
-final case class SctpFlowKey(
-    file: String, srcIp: String, dstIp: String, streamId: Int, streamSeq: Int)
-
-/** TCP flow key for R2 (4-tuple + ack, file) — `diameter.py:74-96`. */
-final case class TcpFlowKey(
-    file: String, srcIp: String, dstIp: String, srcPort: Int, dstPort: Int, ack: Long)
+/** R1/R2 reassembly key: one byte stream per (transport, file,
+  * endpoints, a, b, c). SCTP (R1, `diameter.py:52-71`) is (stream id,
+  * stream seq, 0); TCP (R2, `diameter.py:74-96`) is (src port, dst
+  * port, ack). */
+final case class FlowKey(
+    transport: Int, file: String, srcIp: String, dstIp: String, a: Long, b: Long, c: Long)
 
 /** J1 correlation key — `diameter.py:30-49`. */
 final case class CorrKey(
@@ -36,34 +36,25 @@ object DiameterPipeline {
   def records(spark: SparkSession, path: String): Dataset[DiameterRec] = {
     import spark.implicits._
 
-    val pkts = Pcap.frames(spark, path)
+    val decoded = Pcap.frames(spark, path)
       .flatMap(Packets.decode _)
       .filter(p => p.srcPort == Diameter.Port || p.dstPort == Diameter.Port)
-
-    // SCTP branch: chunk explode (R7) → DATA filter (P8) → R1 reassembly
-    val sctpAssembled = pkts
-      .filter(_.ipProto == Packets.ProtoSctp)
-      .flatMap(Packets.sctpChunks _)
-      .filter(c => c.chunkType == 0 && c.payload.nonEmpty)
-      .groupByKey(c => SctpFlowKey(c.pcapFilename, c.srcIp, c.dstIp, c.streamId, c.streamSeq))
-      .flatMapGroups { (_, it) =>
-        Stateful.reassemble(
-          it.map(c => Piece(c.frameNo, c.tsSec, c.tsUsec, c.srcIp, c.dstIp, c.pcapFilename, c.payload)).toSeq,
-          Diameter.expectedLength)
+      .flatMap { p =>
+        def piece(payload: Array[Byte]) =
+          Piece(p.frameNo, p.tsSec, p.tsUsec, p.srcIp, p.dstIp, p.pcapFilename, payload)
+        if (p.ipProto == Packets.ProtoSctp)
+          // chunk explode (R7) → DATA filter (P8)
+          Packets.sctpChunks(p).filter(c => c.chunkType == 0 && c.payload.nonEmpty).map(c =>
+            (FlowKey(Packets.ProtoSctp, p.pcapFilename, p.srcIp, p.dstIp,
+              c.streamId, c.streamSeq, 0L), piece(c.payload)))
+        else if (p.ipProto == Packets.ProtoTcp
+            && (p.tcpFlags == 16 || p.tcpFlags == 24) && p.payload.nonEmpty) // P5, P6
+          Seq((FlowKey(Packets.ProtoTcp, p.pcapFilename, p.srcIp, p.dstIp,
+            p.srcPort, p.dstPort, p.tcpAck), piece(p.payload)))
+        else Nil
       }
-
-    // TCP branch: ACK/PSH+ACK only (P5), non-empty payload (P6) → R2
-    val tcpAssembled = pkts
-      .filter(p => p.ipProto == Packets.ProtoTcp
-        && (p.tcpFlags == 16 || p.tcpFlags == 24) && p.payload.nonEmpty)
-      .groupByKey(p => TcpFlowKey(p.pcapFilename, p.srcIp, p.dstIp, p.srcPort, p.dstPort, p.tcpAck))
-      .flatMapGroups { (_, it) =>
-        Stateful.reassemble(
-          it.map(p => Piece(p.frameNo, p.tsSec, p.tsUsec, p.srcIp, p.dstIp, p.pcapFilename, p.payload)).toSeq,
-          Diameter.expectedLength)
-      }
-
-    val decoded = sctpAssembled.union(tcpAssembled)
+      .groupByKey(_._1)
+      .flatMapGroups((_, it) => Stateful.reassemble(it.map(_._2).toSeq, Diameter.expectedLength))
       .flatMap { a: Assembled =>
         Diameter.decode(a.payload)
           .filter(_.commandCode != Diameter.CmdDeviceWatchdog) // P7

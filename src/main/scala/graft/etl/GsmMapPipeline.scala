@@ -9,10 +9,11 @@ import graft.sources.Pcap
   * (optional R6 segmentation reassembly keyed by segmentation ref) →
   * TCAP targeted BER parse → flat ss7map rows (`models.py:30-50`).
   */
-/** R6 regroup key: one segmented SCCP message per (file, endpoints,
-  * segmentation reference). Top-level so Spark's bean/encoder codegen can
-  * construct it. */
-final case class SegKey(file: String, srcIp: String, dstIp: String, ref: Long)
+/** SCCP regroup key: a segmented message groups per (file, endpoints,
+  * segmentation reference) for R6 reassembly; a direct message groups
+  * per frame (`ref` = frame number). Top-level so Spark's bean/encoder
+  * codegen can construct it. */
+final case class SegKey(file: String, srcIp: String, dstIp: String, segmented: Boolean, ref: Long)
 
 /** One TCAP packet with the sigshark transaction-key fields
   * (`sigshark.py` tshark columns CGSSN/CGPA/OTID, CDSSN/CDPA/DTID).
@@ -87,25 +88,30 @@ object GsmMapPipeline {
     }
   }
 
+  /** One exchange over [[sccpMessages]], so the capture is read once:
+    * a direct group emits one row per message, a segmented group
+    * reassembles first. */
   def records(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val sccp = sccpMessages(spark, path)
-
-    val direct = sccp.filter(_._2.segmentation.isEmpty)
-      .flatMap { case (c, m) => toRow(c, m, m.data, c.frameNo.toString) }
-
-    val segmented = sccp.filter(_._2.segmentation.isDefined)
-      .groupByKey { case (c, m) => SegKey(c.pcapFilename, c.srcIp, c.dstIp, m.segmentation.get._3) }
-      .flatMapGroups { (_, it) =>
-        val parts = it.toSeq.sortBy(_._1.frameNo)
-        val frames = parts.map(_._1.frameNo).mkString(" ")
-        GsmMap.reassembleSegments(parts.map(_._2)).toSeq.flatMap { data =>
-          val (c, m) = parts.head
-          toRow(c, m, data, frames)
+    sccpMessages(spark, path)
+      .groupByKey { case (c, m) =>
+        m.segmentation match {
+          case Some((_, _, ref)) => SegKey(c.pcapFilename, c.srcIp, c.dstIp, segmented = true, ref)
+          case None => SegKey(c.pcapFilename, c.srcIp, c.dstIp, segmented = false, c.frameNo)
         }
       }
-
-    direct.union(segmented).toDF()
+      .flatMapGroups { (k, it) =>
+        if (!k.segmented) it.flatMap { case (c, m) => toRow(c, m, m.data, c.frameNo.toString) }
+        else {
+          val parts = it.toSeq.sortBy(_._1.frameNo)
+          val frames = parts.map(_._1.frameNo).mkString(" ")
+          GsmMap.reassembleSegments(parts.map(_._2)).iterator.flatMap { data =>
+            val (c, m) = parts.head
+            toRow(c, m, data, frames)
+          }
+        }
+      }
+      .toDF()
   }
 
   /** TCAP packets with sigshark key fields — the input to

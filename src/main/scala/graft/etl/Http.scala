@@ -18,10 +18,10 @@ import graft.sources.Pcap
   *
   * Linking (J4): the reference bulk-inserts responses first to obtain DB
   * ids, then patches each request's `http_response_in` — redesigned here
-  * as engine-assigned `row_number()` ids + a reversed-4-tuple join,
-  * preserving the reference's "last response wins" rule
-  * (`http_ingestor.py:484-492`; SURVEY §7.3 #2 documents the id-value
-  * deviation).
+  * as engine-assigned `row_number()` ids + one window keyed by the
+  * requester-side 4-tuple, preserving the reference's "last response
+  * wins" rule (`http_ingestor.py:484-492`; SURVEY §7.3 #2 documents the
+  * id-value deviation).
   */
 final case class HttpMsg(
     framesList: String,
@@ -333,7 +333,14 @@ object Http {
   def records(spark: SparkSession, path: String): DataFrame =
     link(messages(spark, path).toDF())
 
-  /** J4 linking, engine-side ids (SURVEY §4.2 "redesigned").
+  /** J4 linking, engine-side ids (SURVEY §4.2 "redesigned"): a
+    * request's `http_response_in` is the id of the LAST response on its
+    * reversed 4-tuple (`http_ingestor.py:484-492`). Keyed, not joined:
+    * one window over (file, requester-side 4-tuple), where that tuple
+    * is a request's own and a response's reversed, takes `max(id)` over
+    * the partition's responses and hands it to its requests, so the
+    * messages flow through one plan instead of a join and union of
+    * themselves. A request missing any key column links to nothing.
     *
     * Scale note: ids are a row_number window per capture FILE — one
     * pathological multi-GB capture is one window partition. That matches
@@ -342,21 +349,18 @@ object Http {
     * schemes would scale further but break the reference's file-scoped
     * id semantics. */
   def link(msgs: DataFrame): DataFrame = {
-    val withId = msgs.withColumn("id",
-      row_number().over(Window.partitionBy(col("pcapFilename"))
+    val isReq = col("httpIsRequest")
+    def requester(own: String, reversed: String) = when(isReq, col(own)).otherwise(col(reversed))
+    val keyed = Seq("pcapFilename", "srcIp", "srcPort", "dstIp", "dstPort")
+      .map(col(_).isNotNull).reduce(_ && _)
+    val conversation = Window.partitionBy(col("pcapFilename"),
+      requester("srcIp", "dstIp"), requester("srcPort", "dstPort"),
+      requester("dstIp", "srcIp"), requester("dstPort", "srcPort"))
+    msgs
+      .withColumn("id", row_number().over(Window.partitionBy(col("pcapFilename"))
         .orderBy(col("firstFrame"), col("tcpSequence"))).cast("long"))
-    val req = withId.filter(col("httpIsRequest"))
-    val res = withId.filter(!col("httpIsRequest"))
-      .groupBy(col("pcapFilename").as("r_file"), col("srcIp").as("r_src"),
-        col("srcPort").as("r_sport"), col("dstIp").as("r_dst"), col("dstPort").as("r_dport"))
-      .agg(max(col("id")).as("http_response_in"))
-    req.join(res,
-      col("pcapFilename") === col("r_file")
-        && col("srcIp") === col("r_dst") && col("srcPort") === col("r_dport")
-        && col("dstIp") === col("r_src") && col("dstPort") === col("r_sport"),
-      "left")
-      .drop("r_file", "r_src", "r_sport", "r_dst", "r_dport")
-      .unionByName(withId.filter(!col("httpIsRequest"))
-        .withColumn("http_response_in", lit(null).cast("long")))
+      .filter(isReq.isNotNull)
+      .withColumn("http_response_in",
+        when(isReq && keyed, max(when(!isReq, col("id"))).over(conversation)))
   }
 }

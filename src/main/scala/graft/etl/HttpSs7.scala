@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.xml.{Elem, Node}
@@ -41,11 +41,14 @@ final case class Ss7Msg(
   * reportSMDeliver/sms/error XML field tables.
   *
   * The reference pairs a request with the response whose TCP sequence
-  * equals the request's acknowledge (per flow); paired rows exchange
-  * subscriber fields bidirectionally; unpaired rows are emitted to the
-  * "unlinked" output and unioned back (§2.7). Expressed as a full-outer
-  * self-join on (flow, request.ack == response.seq) + symmetric coalesce
-  * — the dict-free J5.
+  * equals the request's acknowledge (per flow), collecting `[req, res]`
+  * cells keyed by that slot during its scan
+  * (`http_ss7_ingestor.py:193-213`); paired rows exchange subscriber
+  * fields bidirectionally; unpaired rows are emitted to the "unlinked"
+  * output and unioned back (§2.7). Expressed here as the same keyed
+  * cells: one group per (file, flow, slot) whose aggregate holds the
+  * first request and the first response, then a symmetric coalesce —
+  * the dict-free J5, one pass over the messages.
   */
 object HttpSs7 {
 
@@ -126,44 +129,49 @@ object HttpSs7 {
 
   /** `msgs` must carry: pcapFilename, srcIp, dstIp, srcPort, dstPort,
     * tcpSequence, tcpAcknowledge, httpIsRequest, firstFrame, framesList,
-    * plus `fillCols` and `carryCols`. Returns one row per PAIR (full
-    * outer) with `q_`/`r_` prefixed sides, `matched` + `link_state`,
-    * enriched bidirectionally on `fillCols` (empty strings count as
-    * missing — the reference's null-or-empty semantics). D4: only the
-    * first request/response per slot pairs (`row_number() == 1`). */
+    * plus `fillCols` and `carryCols` (orderable types). Returns one row
+    * per PAIR (full outer) with `q_`/`r_` prefixed sides, `matched` +
+    * `link_state`, enriched bidirectionally on `fillCols` (empty strings
+    * count as missing — the reference's null-or-empty semantics).
+    *
+    * One aggregation builds the `[req, res]` cells: messages group on
+    * (file, flow, slot), where the slot is a request's ack and a
+    * response's seq (R4 key arithmetic), and each side's cell is the
+    * `min` of a struct led by `firstFrame` — D4: only the first
+    * request/response per slot pairs, later ones drop. Ties on
+    * `firstFrame` (two messages starting in one segment) are broken by
+    * `framesList`. A message with a null file or slot never pairs; it
+    * groups only with its own side. */
   def pairAndEnrich(msgs: DataFrame, fillCols: Seq[String],
       carryCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
     // flow id with direction removed: both sides of the conversation map
     // to one key (requests a→b pair with responses b→a)
     val flow = array_join(array_sort(array(
       concat_ws(":", col("srcIp"), col("srcPort")),
       concat_ws(":", col("dstIp"), col("dstPort")))), "|")
-    val base = msgs.withColumn("flowId", flow)
+    val isReq = col("httpIsRequest")
     val sideCols = (carryCols ++ fillCols).distinct
+    val cellCols = Seq("firstFrame", "framesList") ++ sideCols
+    def firstOf(side: Column) = min(when(side, struct(cellCols.map(col): _*)))
+    val cells = msgs.filter(isReq.isNotNull)
+      .withColumn("flowId", flow)
+      .withColumn("slot", when(isReq, col("tcpAcknowledge")).otherwise(col("tcpSequence")))
+      .groupBy(col("pcapFilename"), col("flowId"), col("slot"),
+        when(col("pcapFilename").isNull || col("slot").isNull, isReq).as("unkeyed"))
+      .agg(firstOf(isReq).as("q"), firstOf(!isReq).as("r"))
 
-    def side(isReq: Boolean, slotKey: org.apache.spark.sql.Column, prefix: String) = {
-      val w = Window.partitionBy(col("pcapFilename"), col("flowId"), slotKey)
-        .orderBy(col("firstFrame"))
-      base.filter(if (isReq) col("httpIsRequest") else !col("httpIsRequest"))
-        .withColumn("slot", slotKey)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn") // D4
-        .select((Seq(col("pcapFilename").as(s"${prefix}_file"), col("flowId").as(s"${prefix}_flow"),
-          col("slot").as(s"${prefix}_slot"), col("framesList").as(s"${prefix}_frames"),
-          col("firstFrame").as(s"${prefix}_frame")) ++
-          sideCols.map(c => col(c).as(s"${prefix}_$c"))): _*)
+    def side(prefix: String): Seq[Column] = {
+      val cell = col(prefix)
+      def keyed(c: String) = when(cell.isNotNull, col(c))
+      Seq(keyed("pcapFilename").as(s"${prefix}_file"), keyed("flowId").as(s"${prefix}_flow"),
+        keyed("slot").as(s"${prefix}_slot"), cell.getField("framesList").as(s"${prefix}_frames"),
+        cell.getField("firstFrame").as(s"${prefix}_frame")) ++
+        sideCols.map(c => cell.getField(c).as(s"${prefix}_$c"))
     }
-    // R4 key arithmetic: request keyed by its ack, response by its seq
-    val req = side(isReq = true, col("tcpAcknowledge"), "q")
-    val res = side(isReq = false, col("tcpSequence"), "r")
-
-    val joined = req.join(res,
-      col("q_file") === col("r_file") && col("q_flow") === col("r_flow")
-        && col("q_slot") === col("r_slot"), "full_outer")
+    val paired = cells.select(side("q") ++ side("r"): _*)
 
     val matched = col("q_frames").isNotNull && col("r_frames").isNotNull
-    val enriched = fillCols.foldLeft(joined) { (df, c) =>
+    val enriched = fillCols.foldLeft(paired) { (df, c) =>
       val qc = nullif(col(s"q_$c").cast("string"), lit(""))
       val rc = nullif(col(s"r_$c").cast("string"), lit(""))
       df.withColumn(s"q_$c", coalesce(qc, rc))
@@ -181,7 +189,8 @@ object HttpSs7 {
 
   /** Unpivot one paired row back to per-message table rows: requests get
     * `http_response_in` = the id of their paired response, responses get
-    * null. Ids are engine-assigned (the documented K2 redesign): even for
+    * null. Both sides leave through one `explode` of a two-cell array.
+    * Ids are engine-assigned (the documented K2 redesign): even for
     * responses, odd for requests — unique per file, stable per input,
     * value-disjoint from the reference's DB sequences. Column names
     * follow `models.py`. */
@@ -198,18 +207,20 @@ object HttpSs7 {
         idOver("q_frame", "q_slot") * 2 + 1))
     def snake(c: String): String =
       c.replaceAll("([A-Z])", "_$1").toLowerCase
-    def sideRows(prefix: String) = {
-      val present = col(s"${prefix}_frames").isNotNull
-      withId.filter(present).select(
-        (Seq((if (prefix == "q") col("req_id") else col("res_id")).as("id"),
+    def sideRow(prefix: String) = {
+      val isReq = prefix == "q"
+      when(col(s"${prefix}_frames").isNotNull, struct(
+        (Seq(col(if (isReq) "req_id" else "res_id").as("id"),
           col(s"${prefix}_frames").as("frames_list"),
           file.as("pcap_filename"),
-          (if (prefix == "q") when(col("matched"), col("res_id")).otherwise(lit(null))
-           else lit(null)).cast("long").as("http_response_in"),
+          (if (isReq) when(col("matched"), col("res_id")) else lit(null))
+            .cast("long").as("http_response_in"),
           col("link_state")) ++
-          cols.map(c => col(s"${prefix}_$c").as(snake(c)))): _*)
+          cols.map(c => col(s"${prefix}_$c").as(snake(c)))): _*))
     }
-    sideRows("q").unionByName(sideRows("r"))
+    withId.select(explode(array(sideRow("q"), sideRow("r"))).as("row"))
+      .filter(col("row").isNotNull)
+      .select("row.*")
   }
 
   private val FillCols = Seq("msisdnOrig", "msisdnDest", "imsi")

@@ -81,11 +81,14 @@ object IndexMaintain {
 
   /** The BM25 foreachBatch sink body: one idempotent committed append
     * tick per micro-batch, plus — every `vacuumEvery` epochs — a
-    * vacuum tick ([[Bm25.vacuumIndex]]): a standing index under
-    * continuous ingest supersedes bucket files every tick and would
-    * otherwise accumulate unbounded version history between manual
-    * vacuums. The sink IS the index's single writer, so running
-    * maintenance here honors the vacuum's writer discipline. */
+    * maintenance tick: compact ([[Bm25.compactIndex]]), then vacuum
+    * ([[Bm25.vacuumIndex]]). Appends accrete: every tick adds its
+    * version to each touched bucket's list, so without the compaction
+    * a serve would read more files per bucket the longer the stream
+    * runs; the vacuum then reclaims what compaction and deletes
+    * superseded. Both are idempotent under re-delivery. The sink IS
+    * the index's single writer, so running maintenance here honors
+    * the vacuum's writer discipline. */
   def bm25Sink(dir: String, idCol: String, textCol: String, appId: String,
       vacuumEvery: Int = 0, graceVersions: Long = 2L,
       profileEvery: Int = 0, alarmDir: String = ""): (DataFrame, Long) => Unit = {
@@ -94,8 +97,10 @@ object IndexMaintain {
     (batch, epoch) => {
       Bm25.appendToIndexTxn(batch.sparkSession, dir, batch, idCol, textCol,
         appId, epoch)
-      if (due(vacuumEvery, epoch))
+      if (due(vacuumEvery, epoch)) {
+        Bm25.compactIndex(batch.sparkSession, dir)
         Bm25.vacuumIndex(batch.sparkSession, dir, graceVersions)
+      }
       if (due(profileEvery, epoch))
         writeAlarm(Bm25.indexProfile(batch.sparkSession, dir), alarmDir, epoch)
     }
@@ -104,8 +109,9 @@ object IndexMaintain {
   /** Maintain a standing BM25 index from a streaming document frame.
     * `checkpoint` must be durable and paired with `appId` for the
     * exactly-once contract to hold across restarts. `vacuumEvery` > 0
-    * runs [[Bm25.vacuumIndex]] every that-many epochs (grace counted
-    * in versions, see [[graft.operators.ManifestIO.vacuum]]). */
+    * runs [[Bm25.compactIndex]] then [[Bm25.vacuumIndex]] every
+    * that-many epochs (grace counted in versions, see
+    * [[graft.operators.ManifestIO.vacuum]]). */
   def maintainBm25(docs: DataFrame, dir: String, idCol: String,
       textCol: String, appId: String, checkpoint: String,
       vacuumEvery: Int = 0, graceVersions: Long = 2L,

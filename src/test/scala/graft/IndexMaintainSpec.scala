@@ -238,6 +238,47 @@ class IndexMaintainSpec extends AnyFunSuite {
       Bm25.serveTopK(spark, dirU, q, 5).collect().map(_.toSeq).toSeq)
   }
 
+  test("bm25: the maintenance cadence compacts, bounding every bucket's version list; serving == rebuild") {
+    val k = 3
+    def maxVersions(d: String): Int = {
+      val m = Bm25.readManifest(spark, d)
+      (m.bucketVersions.values ++ m.docVersions.values).map(_.size).max
+    }
+    val dir = Files.createTempDirectory("bm25compactcad").toString
+    val plain = Files.createTempDirectory("bm25compactoff").toString
+    Seq(dir, plain).foreach(d =>
+      Bm25.buildIndex(initial.toDF("doc_id", "text"), "doc_id", "text", d))
+    val sink = IndexMaintain.bm25Sink(dir, "doc_id", "text", "bm25-compact-spec",
+      vacuumEvery = k)
+    val noCadence = IndexMaintain.bm25Sink(plain, "doc_id", "text", "bm25-compact-off")
+    // the same words every epoch: the same buckets accrete each tick
+    val batches = (0 until 7).map(i => Seq((200L + i, s"plum pear quince word$i")))
+    for ((b, epoch) <- batches.zipWithIndex) {
+      val batch = b.toDF("doc_id", "text")
+      sink(batch, epoch.toLong)
+      noCadence(batch, epoch.toLong)
+      assert(maxVersions(dir) <= k, s"epoch $epoch: a bucket lists more than $k versions")
+      if (epoch == 2 * k - 1) {
+        // re-delivery of a cadence epoch: the append no-ops through the
+        // ledger and the compaction finds nothing left to rewrite
+        val before = Bm25.readManifest(spark, dir)
+        sink(batch, epoch.toLong)
+        assert(Bm25.readManifest(spark, dir) == before, "re-delivered epoch must be a no-op")
+      }
+    }
+    // the default keeps accreting: the bound above is the cadence's doing
+    assert(maxVersions(plain) > k)
+
+    val dirU = Files.createTempDirectory("bm25compactU").toString
+    Bm25.buildIndex((initial ++ batches.flatten).toDF("doc_id", "text"),
+      "doc_id", "text", dirU)
+    val q = Seq((1L, "plum"), (1L, "banana"), (2L, "word5"), (3L, "apple quince"))
+      .toDF("qid", "term")
+    for (d <- Seq(dir, plain))
+      assert(Bm25.serveTopK(spark, d, q, 5).collect().map(_.toSeq).toSeq ==
+        Bm25.serveTopK(spark, dirU, q, 5).collect().map(_.toSeq).toSeq)
+  }
+
   test("ivf: auto-vacuum retires a replaced rebuild's history under streaming ingest") {
     val cents = Array.tabulate(4)(c => vec(c * 7 + 1).toArray)
     val dir = Files.createTempDirectory("ivfautovac").toString

@@ -510,6 +510,38 @@ class PlanAuditSpec extends AnyFunSuite {
       s"v19 read cells $cellsRead beyond the probed $allowed")
   }
 
+  // every capture entry point plans exactly one pcap scan: a self-join,
+  // a union or a two-consumer Dataset would re-run scan → decode →
+  // reassembly once per branch. The HTTP family pairs by keyed groups
+  // and windows, never by joining or unioning its messages with
+  // themselves.
+  private lazy val capture = GoldenCapture.write() + "/*.pcap"
+  private val captureCalls: Seq[(String, () => org.apache.spark.sql.DataFrame)] = {
+    import graft.etl._
+    lazy val spark = SparkTest.spark
+    Seq(
+      "diameter" -> (() => DiameterPipeline.records(spark, capture).toDF()),
+      "gsm_map" -> (() => GsmMapPipeline.records(spark, capture)),
+      "sip" -> (() => Sip.records(spark, capture)),
+      "smpp" -> (() => SmppPipeline.records(spark, capture)),
+      "gtp" -> (() => GtpPipeline.records(spark, capture)),
+      "http" -> (() => Http.records(spark, capture)),
+      "http_ss7" -> (() => HttpSs7.records(spark, capture)),
+      "http_ocs" -> (() => HttpOcs.records(spark, capture)),
+      "sigshark_diameter" -> (() => Sigshark.diameterTransactions(spark, capture).toDF()),
+      "sigshark_tcap" -> (() => Sigshark.tcapTransactions(spark, capture).toDF()))
+  }
+
+  for ((name, mk) <- captureCalls)
+    test(s"$name: the capture call plans exactly one pcap scan") {
+      val plan = planOf(mk())
+      val scans = plan.linesIterator.count(_.contains("BatchScan"))
+      assert(scans == 1, s"$name must scan the capture once, got $scans:\n$plan")
+      if (name.startsWith("http"))
+        assert(!plan.contains("Join") && !plan.contains("Union"),
+          s"$name must pair without a join or union:\n$plan")
+    }
+
   test("whole-stage codegen covers the scalar query") {
     val df = Text.t1TokenStats.run(SparkTest.spark, sf)
     val codegen = df.queryExecution.explainString(
