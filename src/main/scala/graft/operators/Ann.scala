@@ -686,7 +686,7 @@ object Ann extends Serializable {
   /** The IVF layout for the shared lifecycle verbs. The drift-stats
     * sidecar is one directory per version: the drift read filters it
     * to the referenced (version, cell) pairs. */
-  private object IvfSpec extends ManifestIO.IndexSpec[IvfManifest] {
+  private[graft] object IvfSpec extends ManifestIO.IndexSpec[IvfManifest] {
     val what = "IVF index"
 
     def render(m: IvfManifest): String =
@@ -728,6 +728,11 @@ object Ann extends Serializable {
         versions: Map[String, Map[Int, Seq[Long]]]): IvfManifest =
       m.copy(version = version, cellVersions = versions("cells"),
         cidVersions = versions("cidmap"))
+
+    def txns(m: IvfManifest): Map[String, Long] = m.txns
+
+    def withTxns(m: IvfManifest, txns: Map[String, Long]): IvfManifest =
+      m.copy(txns = txns)
   }
 
   /** The committed manifest — every reader's one CURRENT read. */
@@ -937,265 +942,208 @@ object Ann extends Serializable {
     * assign a new vector batch under the index's OWN committed
     * centroids (read from the manifest — the caller cannot hand the
     * tick a geometry the serve side won't use) and write the rows as
-    * new files under a fresh data version, committed with one CURRENT
-    * rename. Nothing is rewritten — an IVF append is pure accretion —
-    * but the commit still matters: an uncommitted tick's files are
-    * invisible to every reader, so a writer crash can never leave a
-    * half-appended batch in serve results. An empty batch is a no-op. */
-  def ivfIndexAppend(spark: SparkSession, dir: String, corpus: DataFrame): Unit =
-    ivfIndexAppendHooked(spark, dir, corpus, crashPoint = 0)
+    * new files under a fresh data version. Nothing is rewritten — an
+    * IVF append is pure accretion — but the commit still matters: an
+    * uncommitted tick's files are invisible to every reader, so a
+    * writer crash can never leave a half-appended batch in serve
+    * results. An empty batch is a no-op. One [[ManifestIO.tick]]. */
+  def ivfIndexAppend(spark: SparkSession, dir: String, corpus: DataFrame,
+      txn: Option[(String, Long)] = None): Unit =
+    ivfAppendTick(spark, dir, corpus, txn)
 
-  /** [[ivfIndexAppend]] carrying a writer transaction (appId, epoch) —
-    * the exactly-once form for streaming maintenance: a retried epoch
-    * the committed manifest already records is a no-op (see
-    * [[ManifestIO.txnAlreadyApplied]]). */
-  def ivfIndexAppendTxn(spark: SparkSession, dir: String, corpus: DataFrame,
-      appId: String, epoch: Long): Unit =
-    ivfIndexAppendHooked(spark, dir, corpus, crashPoint = 0,
-      txn = Some((appId, epoch)))
+  /** The ACCRETING kernel behind [[ivfIndexAppend]]; `crashPoint` as in
+    * [[ManifestIO.tick]]. */
+  private[graft] def ivfAppendTick(spark: SparkSession, dir: String,
+      corpus: DataFrame, txn: Option[(String, Long)] = None, crashPoint: Int = 0): Unit =
+    ManifestIO.tick(spark, dir, IvfSpec, txn, crashPoint) { m =>
+      // ONE pinned, cid-distinct materialization of the batch
+      // (ManifestIO.dedupBatch — the uniform intra-batch rule): the
+      // no-op gate and the cell write see the same rows for
+      // non-deterministic frames, a vector re-submitted within one
+      // micro-batch ingests once, and two DIFFERENT vectors under one
+      // cid in one batch reject loudly
+      val batch = ManifestIO.dedupBatch(corpus, "cid", Seq("cvec"), "IVF append")
+      if (batch.isEmpty) None
+      else Some { newVer =>
+        val cents = readIvfCentroidsAt(spark, dir, m)
+        val touched = ManifestIO.writePartitioned(assignCells(batch, cents),
+          dir, newVer, "cells", "cell")
+        // reverse-map maintenance — ACCRETIVE, like the cells: the
+        // batch's (cid, cell) rows only, the version appended onto the
+        // touched cbuckets' lists (O(batch) at any index size).
+        // delete/upsert consolidate; [[ivfIndexCompact]] collapses long
+        // lists. Maintained iff the index HAS a cidmap (or is being
+        // born) — starting one mid-life on a pre-cidmap legacy dir would
+        // leave a map that silently misses every pre-existing member.
+        val newCidVers =
+          if (m.cidVersions.isEmpty && m.cellVersions.nonEmpty) m.cidVersions
+          else ManifestIO.accrete(m.cidVersions, writeCidmap(spark, dir, newVer, m.cells),
+            newVer)
+        // the drift-stats sidecar rides the same write (batch-sized)
+        if (m.cellstats) writeCellstats(spark, dir, newVer, cents)
+        m.copy(version = newVer,
+          cellVersions = ManifestIO.accrete(m.cellVersions, touched, newVer),
+          cidVersions = newCidVers)
+      }
+    }
 
-  /** [[ivfIndexAppend]] with an injectable writer-death point for the
-    * crash-atomicity spec: 1 = die after the data write, before the
-    * manifest; 2 = die after the manifest, before the CURRENT flip. */
-  private[graft] def ivfIndexAppendHooked(spark: SparkSession, dir: String,
-      corpus: DataFrame, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    val m = readIvfManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    // ONE pinned, cid-distinct materialization of the batch
-    // (ManifestIO.dedupBatch — the uniform intra-batch rule): the
-    // no-op gate and the cell write see the same rows for
-    // non-deterministic frames, a vector re-submitted within one
-    // micro-batch ingests once, and two DIFFERENT vectors under one
-    // cid in one batch reject loudly
-    val batch = ManifestIO.dedupBatch(corpus, "cid", Seq("cvec"), "IVF append")
-    if (batch.isEmpty) return // the index already is the post-tick state
-    val cents = readIvfCentroidsAt(spark, dir, m)
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val touched = ManifestIO.writePartitioned(assignCells(batch, cents),
-      dir, newVer, "cells", "cell")
-    // reverse-map maintenance — ACCRETIVE, like the cells themselves:
-    // the tick writes ONLY the batch's (cid, cell) rows and appends its
-    // version onto the touched cbuckets' manifest lists; the committed
-    // cidmap is neither read nor rewritten, so the reverse map's
-    // per-append IO is O(batch) at any index size. (The previous
-    // design rewrote each touched cbucket with (existing ∪ batch) —
-    // index-bound contents per touched cbucket, the round-16 verdict's
-    // weak flag.) delete/upsert consolidate; [[ivfIndexCompact]]
-    // collapses long lists. Maintained iff the index HAS a cidmap (or
-    // is being born) — starting one mid-life on a pre-cidmap legacy
-    // dir would leave a map that silently misses every pre-existing
-    // member.
-    val maintainCidmap = m.cidVersions.nonEmpty || m.cellVersions.isEmpty
-    val newCidVers =
-      if (maintainCidmap)
-        ManifestIO.accrete(m.cidVersions, writeCidmap(spark, dir, newVer, m.cells), newVer)
-      else m.cidVersions
-    // the drift-stats sidecar rides the same write (batch-sized)
-    if (m.cellstats) writeCellstats(spark, dir, newVer, cents)
-    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
-      IvfManifest(newVer, m.cells, m.centroidsVersion,
-        ManifestIO.accrete(m.cellVersions, touched, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
+  /** What a consolidating IVF tick takes out, located against the
+    * tick's pinned manifest: the cids leaving (distinct), the
+    * materialized cells holding the copies to remove, and the
+    * materialized cbuckets of the cid→cell reverse map to rewrite. */
+  private[graft] final case class IvfRemoval(ids: DataFrame, cells: Seq[Int],
+      cbuckets: Seq[Int])
+
+  /** An IVF removal locator: None = nothing to do, no commit. */
+  private[graft] type IvfLocate = (SparkSession, String, IvfManifest) => Option[IvfRemoval]
+
+  /** The CONSOLIDATING kernel behind every IVF delete, upsert and CDC
+    * verb: each touched cell — the located removal's plus, for an
+    * upsert, the new assignments' — is rewritten ONCE as
+    * (committed − removed cids) ∪ new rows, consolidating its manifest
+    * entry to the new version (a cell emptied by the rewrite leaves the
+    * manifest); a reverse-map row leaves with exactly the (cid, cell)
+    * copy it points at, so the map mirrors the cells; the rewritten
+    * cells' drift stats ride along. `upserts` are pinned, cid-distinct
+    * (cid, cvec) rows. Contract: tick == build over
+    * (corpus − removed) ∪ upserts. */
+  private[graft] def ivfChangeTick(spark: SparkSession, dir: String,
+      upserts: Option[DataFrame], locate: IvfLocate,
+      txn: Option[(String, Long)] = None, crashPoint: Int = 0): Unit =
+    ManifestIO.tick(spark, dir, IvfSpec, txn, crashPoint) { m =>
+      locate(spark, dir, m).map { rm => newVer =>
+        val cents = readIvfCentroidsAt(spark, dir, m)
+        val assigned = upserts.map(assignCells(_, cents)
+          .select(col("cid"), col("cvec"), col("cell")).localCheckpoint(true))
+        val touched = (rm.cells ++ assigned.toSeq.flatMap(_.select(col("cell"))
+          .distinct().collect().map(_.getInt(0)))).distinct // ≤ cell count values
+        val kept = readIvfCellsAt(spark, dir, m, Some(touched.toSet))
+          .join(rm.ids, Seq("cid"), "left_anti")
+          .select(col("cid"), col("cvec"), col("cell"))
+        val present =
+          if (touched.isEmpty) Seq.empty[Int]
+          else ManifestIO.writePartitioned(assigned.fold(kept)(a => kept.unionByName(a)),
+            dir, newVer, "cells", "cell")
+        val maintainCidmap =
+          m.cidVersions.nonEmpty || (upserts.isDefined && m.cellVersions.isEmpty)
+        val newCidVers =
+          if (!maintainCidmap ||
+              (upserts.isEmpty && (rm.cells.isEmpty || rm.cbuckets.isEmpty))) m.cidVersions
+          else {
+            // a cid's old and new reverse rows share one cbucket (a pure
+            // function of the id); a copy in an untouched cell keeps its
+            // row — the assignment-local gap of [[ivfIndexDelete]]
+            val keptC = readIvfCidmapAt(spark, dir, m, Some(rm.cbuckets.toSet))
+              .join(rm.ids.withColumn("_del", lit(true)), Seq("cid"), "left")
+              .filter(col("_del").isNull || !col("cell").isin(rm.cells: _*))
+              .select(col("cid"), col("cell"), col("cbucket"))
+            ManifestIO.consolidate(m.cidVersions, rm.cbuckets, ManifestIO.writePartitioned(
+              assigned.fold(keptC)(a => keptC.unionByName(a.select(col("cid"), col("cell"))
+                .withColumn("cbucket", cidCbucket(col("cid"), m.cells))).distinct()),
+              dir, newVer, "cidmap", "cbucket"), newVer)
+          }
+        if (m.cellstats && touched.nonEmpty) writeCellstats(spark, dir, newVer, cents)
+        m.copy(version = newVer,
+          cellVersions = ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
+          cidVersions = newCidVers)
+      }
+    }
+
+  /** The materialized reverse-map cbuckets of `ids` (cid) — a pure
+    * function of the ids; empty on a pre-cidmap dir. */
+  private def cbucketsOf(ids: DataFrame, m: IvfManifest): Seq[Int] =
+    if (m.cidVersions.isEmpty) Seq.empty
+    else ids.select(cidCbucket(col("cid"), m.cells))
+      .distinct().collect().map(_.getInt(0)).toSeq // ≤ cell count values
+      .filter(m.cidVersions.contains)
+
+  /** Locate a vector-carrying takedown batch ([[ivfIndexDelete]]) by
+    * ASSIGNMENT under the committed centroids: one pinned copy, the
+    * cells its vectors assign to (broadcast geometry, no index scan).
+    * None for an empty batch; a batch assigning only to unmaterialized
+    * cells still ticks (nothing to rewrite). */
+  private[graft] def byVector(batch: DataFrame): IvfLocate = (spark, dir, m) => {
+    val pinned = batch.select(col("cid").cast("long").as("cid"), col("cvec"))
+      .localCheckpoint(true)
+    if (pinned.isEmpty) None
+    else {
+      val assigned = assignCells(pinned, readIvfCentroidsAt(spark, dir, m))
+      val cells = assigned.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)).toSeq // ≤ cell count values
+        .filter(m.cellVersions.contains)
+      val ids = assigned.select(col("cid")).distinct()
+      Some(IvfRemoval(ids, cells, if (cells.isEmpty) Seq.empty else cbucketsOf(ids, m)))
+    }
   }
+
+  /** Locate by cid ([[ivfIndexDeleteByIds]], [[ivfIndexUpsert]],
+    * [[ivfApplyChanges]]) — EVERY copy of a cid, including a stale
+    * update-by-append vector in another cell: the cid→cell reverse map
+    * is read from the ids' cbuckets only (≤ |ids| dirs, no cells scan);
+    * a pre-cidmap legacy dir pays ONE full cells scan instead. A pure
+    * delete whose ids match nothing is no tick. */
+  private[graft] def ivfByIds(ids0: DataFrame, upserting: Boolean): IvfLocate =
+    (spark, dir, m) => {
+      val ids = ids0.select(col("cid")).distinct().localCheckpoint(true)
+      if (ids.isEmpty) None
+      else {
+        val cbuckets = cbucketsOf(ids, m)
+        val cells = (if (m.cidVersions.nonEmpty)
+            readIvfCidmapAt(spark, dir, m, Some(cbuckets.toSet))
+          else readIvfCellsAt(spark, dir, m))
+          .join(ids, Seq("cid"), "left_semi").select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSeq // ≤ cell count values
+          .filter(m.cellVersions.contains)
+        if (cells.isEmpty && !upserting) None
+        else Some(IvfRemoval(ids, cells, cbuckets))
+      }
+    }
 
   /** DELETE tick of the committed-IVF lifecycle — the takedown /
     * opt-out verb, inverse of [[ivfIndexAppend]]: `batch` carries the
     * (cid, cvec) rows to remove WITH their vectors, so the affected
     * cells are known by ASSIGNMENT under the index's own committed
-    * centroids (broadcast geometry, no index scan — the same locality
-    * argument as BM25's term buckets). Those cells' full version lists
-    * are read, the batch's cids filtered out, and each affected cell
-    * consolidated into the new data version (its manifest entry
-    * collapses to the single new version — the superseded history is
-    * the next vacuum's food); untouched cells are never listed. A cell
-    * emptied by the delete leaves the manifest. Serving afterwards
-    * equals an index built over the corpus minus the batch. Contract:
-    * the batch must be previously ingested (cid, cvec) rows — the
-    * vector is what locates the cell; re-deliveries are the txn
-    * ledger's job. LIMITATION, stated for the legal-takedown use: the
-    * cell is found by RE-ASSIGNING the batch's vector under the
-    * committed centroids, so if a cid was ever ingested with a
-    * DIFFERENT vector (update-by-append), that stale copy sits in
-    * another cell and survives this tick silently — the txn ledger
-    * gates epochs, not row coverage. An id-level takedown that must
-    * catch every copy belongs on [[ivfIndexDeleteByIds]], which
-    * anti-joins ALL materialized cells by cid at full-scan cost.
-    * CRASH-ATOMIC: new version + one CURRENT rename. */
-  def ivfIndexDelete(spark: SparkSession, dir: String, batch: DataFrame): Unit =
-    ivfIndexDeleteHooked(spark, dir, batch, crashPoint = 0)
-
-  /** [[ivfIndexDelete]] carrying a writer transaction — exactly-once
-    * under re-delivery, like [[ivfIndexAppendTxn]]. */
-  def ivfIndexDeleteTxn(spark: SparkSession, dir: String, batch: DataFrame,
-      appId: String, epoch: Long): Unit =
-    ivfIndexDeleteHooked(spark, dir, batch, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[ivfIndexDelete]] with the standard injectable writer-death
-    * points (1 = after the data write; 2 = after manifest, before
-    * flip). */
-  private[graft] def ivfIndexDeleteHooked(spark: SparkSession, dir: String,
-      batch: DataFrame, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    val m = readIvfManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    // pin ONE materialization of the takedown batch: the touched-cell
-    // plan and the anti-join must see the same rows, or a torn batch
-    // could leave a legally deleted vector servable while its epoch is
-    // recorded as applied (the Bm25.deleteFromIndex rationale)
-    val pinned = batch.select(col("cid").cast("long").as("cid"), col("cvec"))
-      .localCheckpoint(true)
-    if (pinned.isEmpty) return // the index already is the post-tick state
-    val cents = readIvfCentroidsAt(spark, dir, m)
-    val assigned = assignCells(pinned, cents)
-    val touched = assigned.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)) // ≤ cell count values
-      .filter(m.cellVersions.contains)
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val delIds = assigned.select(col("cid")).distinct()
-    // a cell emptied by the delete never materializes under newVer and
-    // leaves the manifest
-    val present =
-      if (touched.isEmpty) Seq.empty[Int]
-      else ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m, Some(touched.toSet))
-        .join(delIds, Seq("cid"), "left_anti")
-        .select(col("cid"), col("cvec"), col("cell")), dir, newVer, "cells", "cell")
-    // reverse-map consolidation: exactly the member rows the anti-join
-    // removed — (cid ∈ batch) ∧ (cell ∈ touched) — leave their
-    // cbuckets (located by the pure id→cbucket function); a stale copy
-    // in an UNtouched cell keeps its row, mirroring the documented
-    // assignment-local gap
-    val newCidVers = if (m.cidVersions.nonEmpty && touched.nonEmpty) {
-      val candC = pinned.select(cidCbucket(col("cid"), m.cells).as("cbucket"))
-        .distinct().collect().map(_.getInt(0)).toSet
-        .filter(m.cidVersions.contains)
-      if (candC.isEmpty) m.cidVersions
-      else ManifestIO.consolidate(m.cidVersions, candC, ManifestIO.writePartitioned(
-        readIvfCidmapAt(spark, dir, m, Some(candC))
-          .join(delIds.withColumn("_del", lit(true)), Seq("cid"), "left")
-          .filter(col("_del").isNull || !col("cell").isin(touched.toSeq: _*))
-          .select(col("cid"), col("cell"), col("cbucket")),
-        dir, newVer, "cidmap", "cbucket"), newVer)
-    } else m.cidVersions
-    // the consolidated cells' drift stats (touched-cell-sized)
-    if (m.cellstats && touched.nonEmpty)
-      writeCellstats(spark, dir, newVer, cents)
-    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
-      IvfManifest(newVer, m.cells, m.centroidsVersion,
-        ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
-  }
+    * centroids ([[byVector]] — the same locality argument as BM25's
+    * term buckets); only those cells are read and consolidated. Serving
+    * afterwards equals an index built over the corpus minus the batch.
+    * Contract: the batch must be previously ingested (cid, cvec) rows;
+    * re-deliveries are the txn ledger's job. LIMITATION, stated for the
+    * legal-takedown use: if a cid was ever ingested with a DIFFERENT
+    * vector (update-by-append), that stale copy sits in another cell
+    * and survives this tick silently. An id-level takedown that must
+    * catch every copy belongs on [[ivfIndexDeleteByIds]]. One
+    * [[ManifestIO.tick]]. */
+  def ivfIndexDelete(spark: SparkSession, dir: String, batch: DataFrame,
+      txn: Option[(String, Long)] = None): Unit =
+    ivfChangeTick(spark, dir, None, byVector(batch), txn)
 
   /** ID-ONLY (strict) takedown of the committed IVF index — the
     * [[Bm25.deleteByIds]] sibling: `ids` carries bare cids (the real
     * opt-out feed shape, no vectors), and the tick removes a cid's
-    * EVERY copy — including a stale vector from an update-by-append
-    * sitting in a different cell, the copy [[ivfIndexDelete]]'s
-    * assignment-local locate cannot see. LOCATE: an index this
-    * lifecycle built carries the cid→cell REVERSE MAP
-    * ([[readIvfCidmapAt]] — one (cid, cell) row per materialized
-    * member, partitioned by the pure id→cbucket function), so the
-    * matched cells are found by reading ≤ |ids| cbucket dirs of an
-    * id-sized artifact — NO cells scan anywhere; a pre-cidmap legacy
-    * dir falls back to ONE full scan of the committed cells (the
-    * documented legacy price). The REWRITE stays local either way —
-    * only cells that actually held a matched cid consolidate into the
-    * new version, untouched cells keep their version lists, and the
-    * matched cids' reverse rows consolidate out of their cbuckets.
-    * Ids never ingested (or already deleted) match nothing and change
-    * nothing — re-delete-proof by construction. CRASH-ATOMIC +
-    * exactly-once like every tick. */
+    * EVERY copy ([[ivfByIds]] — no cells scan on any index this
+    * lifecycle built). The rewrite stays local: only cells that held a
+    * matched cid consolidate. Ids never ingested (or already deleted)
+    * match nothing and commit nothing. One [[ManifestIO.tick]]. */
   def ivfIndexDeleteByIds(spark: SparkSession, dir: String,
-      ids: DataFrame): Unit =
-    ivfIndexDeleteByIdsHooked(spark, dir, ids, crashPoint = 0)
-
-  /** [[ivfIndexDeleteByIds]] carrying a writer transaction. */
-  def ivfIndexDeleteByIdsTxn(spark: SparkSession, dir: String,
-      ids: DataFrame, appId: String, epoch: Long): Unit =
-    ivfIndexDeleteByIdsHooked(spark, dir, ids, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[ivfIndexDeleteByIds]] with the standard injectable writer-death
-    * points. */
-  private[graft] def ivfIndexDeleteByIdsHooked(spark: SparkSession,
-      dir: String, ids: DataFrame, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    val m = readIvfManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    val delIds = ids.select(col("cid").cast("long").as("cid"))
-      .distinct().localCheckpoint(true)
-    if (delIds.isEmpty) return // empty request: the index already is the post-tick state
-    val hasCidmap = m.cidVersions.nonEmpty
-    // candidate cbuckets: a pure function of the request's ids
-    val candC =
-      if (!hasCidmap) Set.empty[Int]
-      else delIds.select(cidCbucket(col("cid"), m.cells).as("cbucket"))
-        .distinct().collect().map(_.getInt(0)).toSet
-        .filter(m.cidVersions.contains)
-    // every cell holding a matched cid — cid-sized output either way;
-    // the cidmap path reads only the request's cbucket dirs
-    val touched = (if (hasCidmap) {
-        readIvfCidmapAt(spark, dir, m, Some(candC))
-          .join(delIds, Seq("cid"), "left_semi")
-          .select(col("cell"))
-      } else {
-        // legacy pre-cidmap dir: ONE full scan, the documented price
-        readIvfCellsAt(spark, dir, m)
-          .join(delIds, Seq("cid"), "left_semi")
-          .select(col("cell"))
-      }).distinct()
-      .collect().map(_.getInt(0)) // ≤ cell count values
-      .filter(m.cellVersions.contains)
-    if (touched.isEmpty) return // no id matched: nothing to remove
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val present = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m, Some(touched.toSet))
-      .join(delIds, Seq("cid"), "left_anti")
-      .select(col("cid"), col("cvec"), col("cell")), dir, newVer, "cells", "cell")
-    // reverse-map consolidation: the matched cids' rows (EVERY copy)
-    // leave their cbuckets
-    val newCidVers =
-      if (hasCidmap && candC.nonEmpty)
-        ManifestIO.consolidate(m.cidVersions, candC, ManifestIO.writePartitioned(
-          readIvfCidmapAt(spark, dir, m, Some(candC))
-            .join(delIds, Seq("cid"), "left_anti")
-            .select(col("cid"), col("cell"), col("cbucket")),
-          dir, newVer, "cidmap", "cbucket"), newVer)
-      else m.cidVersions
-    // the consolidated cells' drift stats (touched-cell-sized)
-    if (m.cellstats)
-      writeCellstats(spark, dir, newVer, readIvfCentroidsAt(spark, dir, m))
-    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
-      IvfManifest(newVer, m.cells, m.centroidsVersion,
-        ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
-  }
+      ids: DataFrame, txn: Option[(String, Long)] = None): Unit =
+    ivfChangeTick(spark, dir, None,
+      ivfByIds(ids.select(col("cid").cast("long").as("cid")), upserting = false), txn)
 
   /** UPSERT tick of the committed-IVF lifecycle — the REFRESH verb
     * (the [[Bm25.upsertIndex]] sibling): `batch` carries (cid, cvec)
     * rows that REPLACE every committed copy of the same cid — stale
-    * update-by-append copies in other cells included, the strict
-    * [[ivfIndexDeleteByIds]] contract — and plain-append cids the
-    * index has never seen, in ONE crash-atomic commit (a delete tick
-    * then an append tick would leave a crash window in which the
-    * vector is simply absent). LOCATE rides the cid→cell reverse map
-    * (≤ |ids| cbucket dirs; legacy pre-cidmap dirs pay the one-scan
-    * fallback); REWRITE consolidates the union of the old copies'
-    * cells and the new assignments' cells, each once. The batch is
-    * deduplicated by cid (set semantics). Serving afterwards equals an
-    * index built over (corpus − batch cids) ∪ batch. */
+    * update-by-append copies in other cells included — and
+    * plain-append cids the index has never seen, in ONE crash-atomic
+    * commit. Two revisions of one cid reject loudly
+    * ([[ManifestIO.dedupBatch]]). Serving afterwards equals an index
+    * built over (corpus − batch cids) ∪ batch. */
   def ivfIndexUpsert(spark: SparkSession, dir: String,
-      batch: DataFrame): Unit =
-    ivfIndexUpsertHooked(spark, dir, batch, crashPoint = 0)
-
-  /** [[ivfIndexUpsert]] carrying a writer transaction. */
-  def ivfIndexUpsertTxn(spark: SparkSession, dir: String, batch: DataFrame,
-      appId: String, epoch: Long): Unit =
-    ivfIndexUpsertHooked(spark, dir, batch, crashPoint = 0,
-      txn = Some((appId, epoch)))
+      batch: DataFrame, txn: Option[(String, Long)] = None): Unit = {
+    val up = ManifestIO.dedupBatch(
+      batch.select(col("cid").cast("long").as("cid"), col("cvec")),
+      "cid", Seq("cvec"), "IVF upsert")
+    ivfChangeTick(spark, dir, Some(up), ivfByIds(up, upserting = true), txn)
+  }
 
   /** MIGRATION tick — the [[Bm25.buildDocmap]] sibling: retrofit the
     * cid→cell reverse map onto a pre-cidmap legacy dir with ONE full
@@ -1203,22 +1151,20 @@ object Ann extends Serializable {
     * by the pure id→cbucket function. (Appends refuse to start a
     * partial map; this builds the complete one in one committed
     * version.) A dir that already has a cidmap is a no-op (returns
-    * false). CRASH-ATOMIC like every tick. */
-  def ivfBuildCidmap(spark: SparkSession, dir: String): Boolean = {
-    val m = readIvfManifest(spark, dir)
-    if (m.cidVersions.nonEmpty) return false // already maintained: no tick
-    if (m.cellVersions.isEmpty) return false // empty index: the next append starts one
-    val newVer = m.version + 1
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // ONE full cells scan — the price the map exists to retire
-    val presentD = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m)
-      .select(col("cid"), col("cell")).distinct()
-      .withColumn("cbucket", cidCbucket(col("cid"), m.cells)),
-      dir, newVer, "cidmap", "cbucket")
-    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(m.copy(version = newVer,
-      cidVersions = presentD.map(_ -> Seq(newVer)).toMap)))
-    true
-  }
+    * false). One [[ManifestIO.tick]]. */
+  def ivfBuildCidmap(spark: SparkSession, dir: String): Boolean =
+    ManifestIO.tick(spark, dir, IvfSpec, None) { m =>
+      // already maintained, or empty (the next append starts one): no tick
+      if (m.cidVersions.nonEmpty || m.cellVersions.isEmpty) None
+      else Some { newVer =>
+        // ONE full cells scan — the price the map exists to retire
+        val presentD = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m)
+          .select(col("cid"), col("cell")).distinct()
+          .withColumn("cbucket", cidCbucket(col("cid"), m.cells)),
+          dir, newVer, "cidmap", "cbucket")
+        m.copy(version = newVer, cidVersions = presentD.map(_ -> Seq(newVer)).toMap)
+      }
+    }
 
   /** CHANGE-APPLY tick — the CDC verb (the [[Bm25.applyChanges]]
     * sibling): ONE mixed micro-batch of upserts and deletes folds into
@@ -1229,109 +1175,12 @@ object Ann extends Serializable {
     * An id carrying both ops in one batch is rejected. Contract:
     * apply == build over (corpus − all change cids) ∪ upsert rows. */
   def ivfApplyChanges(spark: SparkSession, dir: String, changes: DataFrame,
-      opCol: String): Unit =
-    ivfApplyChangesHooked(spark, dir, changes, opCol, crashPoint = 0)
-
-  /** [[ivfApplyChanges]] carrying a writer transaction. */
-  def ivfApplyChangesTxn(spark: SparkSession, dir: String,
-      changes: DataFrame, opCol: String, appId: String, epoch: Long): Unit =
-    ivfApplyChangesHooked(spark, dir, changes, opCol, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[ivfApplyChanges]] with the standard injectable writer-death
-    * points. */
-  private[graft] def ivfApplyChangesHooked(spark: SparkSession, dir: String,
-      changes: DataFrame, opCol: String, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
+      opCol: String, txn: Option[(String, Long)] = None): Unit = {
     val (ups, dels) = ManifestIO.splitChanges(
       changes.select(col(opCol), col("cid").cast("long").as("cid"), col("cvec")),
       opCol, "cid", Seq("cvec"))
-    ivfUpsertCore(spark, dir, ups, dels, crashPoint, txn)
-  }
-
-  /** [[ivfIndexUpsert]] with the standard injectable writer-death
-    * points. */
-  private[graft] def ivfIndexUpsertHooked(spark: SparkSession, dir: String,
-      batch: DataFrame, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    // the uniform intra-batch rule (ManifestIO.dedupBatch): exact
-    // duplicates collapse, two revisions of one cid reject loudly
-    val pinned = ManifestIO.dedupBatch(
-      batch.select(col("cid").cast("long").as("cid"), col("cvec")),
-      "cid", Seq("cvec"), "IVF upsert")
-    ivfUpsertCore(spark, dir, pinned, pinned.select(col("cid")).limit(0),
-      crashPoint, txn)
-  }
-
-  /** The shared replace-or-insert core: `pinned` (cid, cvec) upserts,
-    * `extraDeleteIds` pure removals folded into the same commit —
-    * empty for a plain [[ivfIndexUpsert]]. `pinned` must already be
-    * pinned and cid-distinct. */
-  private def ivfUpsertCore(spark: SparkSession, dir: String,
-      pinned: DataFrame, extraDeleteIds: DataFrame, crashPoint: Int,
-      txn: Option[(String, Long)]): Unit = {
-    val m = readIvfManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    val upIds = pinned.select(col("cid"))
-      .unionByName(extraDeleteIds.select(col("cid")))
-      .distinct().localCheckpoint(true)
-    if (upIds.isEmpty) return // empty batch: the index already is the post-tick state
-    val hasCidmap = m.cidVersions.nonEmpty
-    // the affected ids' cbuckets — ONE collect, reused by the locate
-    // and the reverse-map rewrite below
-    val candC =
-      if (!hasCidmap) Set.empty[Int]
-      else upIds.select(cidCbucket(col("cid"), m.cells).as("cbucket"))
-        .distinct().collect().map(_.getInt(0)).toSet
-        .filter(m.cidVersions.contains)
-    // ONE materialization of the candidate cbuckets' rows: the locate
-    // (semi-join) and the rewrite (anti-join) both read it
-    val candMap =
-      if (hasCidmap) readIvfCidmapAt(spark, dir, m, Some(candC))
-        .localCheckpoint(true)
-      else null
-    // every cell holding an OLD copy (the strict locate: reverse map
-    // when the index has one, full scan for a legacy dir)
-    val touchedOld = (if (hasCidmap) {
-        candMap.join(upIds, Seq("cid"), "left_semi").select(col("cell"))
-      } else {
-        readIvfCellsAt(spark, dir, m)
-          .join(upIds, Seq("cid"), "left_semi").select(col("cell"))
-      }).distinct()
-      .collect().map(_.getInt(0)).filter(m.cellVersions.contains)
-    val cents = readIvfCentroidsAt(spark, dir, m)
-    val assigned = assignCells(pinned, cents).localCheckpoint(true)
-    val touchedNew = assigned.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))
-    val touched = (touchedOld ++ touchedNew).distinct // ≤ cell count values
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val present = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m, Some(touched.toSet))
-      .join(upIds, Seq("cid"), "left_anti")
-      .select(col("cid"), col("cvec"), col("cell"))
-      .unionByName(assigned.select(col("cid"), col("cvec"), col("cell"))),
-      dir, newVer, "cells", "cell")
-    // reverse-map rewrite: a cid's old rows and its new row live in
-    // the SAME cbucket (pure function of the id) — the affected ids'
-    // cbuckets (upserted AND purely deleted) rewrite once with
-    // (existing − affected cids) ∪ new assignments; a cbucket emptied
-    // by the delete half leaves the manifest
-    val maintainCidmap = m.cidVersions.nonEmpty || m.cellVersions.isEmpty
-    val newCidVers = if (maintainCidmap) {
-      val fresh = assigned.select(col("cid"), col("cell"))
-        .withColumn("cbucket", cidCbucket(col("cid"), m.cells))
-      val remaining =
-        if (hasCidmap) candMap.join(upIds, Seq("cid"), "left_anti")
-        else readIvfCidmapAt(spark, dir, m, Some(candC)) // empty legacy frame, schema only
-      ManifestIO.consolidate(m.cidVersions, candC, ManifestIO.writePartitioned(
-        remaining.unionByName(fresh).distinct(), dir, newVer, "cidmap", "cbucket"), newVer)
-    } else m.cidVersions
-    // the rewritten cells' drift stats (touched-cell-sized)
-    if (m.cellstats) writeCellstats(spark, dir, newVer, cents)
-    ManifestIO.commit(spark, dir, newVer, IvfSpec.render(
-      IvfManifest(newVer, m.cells, m.centroidsVersion,
-        ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newCidVers, m.cellstats)), crashPoint)
+    ivfChangeTick(spark, dir, Some(ups),
+      ivfByIds(ups.select(col("cid")).unionByName(dels), upserting = true), txn)
   }
 
   /** COMPACT tick of the committed-IVF lifecycle
@@ -1346,14 +1195,7 @@ object Ann extends Serializable {
     * does). Returns the compacted cell ids. */
   def ivfIndexCompact(spark: SparkSession, dir: String,
       minVersions: Int = 2): Seq[Int] =
-    ivfIndexCompactHooked(spark, dir, minVersions, crashPoint = 0)
-
-  /** [[ivfIndexCompact]] with the standard injectable writer-death
-    * points (1 = after the data write; 2 = after manifest, before
-    * flip). */
-  private[graft] def ivfIndexCompactHooked(spark: SparkSession, dir: String,
-      minVersions: Int, crashPoint: Int): Seq[Int] =
-    ManifestIO.compact(spark, dir, IvfSpec, minVersions, crashPoint)
+    ManifestIO.compact(spark, dir, IvfSpec, minVersions, crashPoint = 0)
 
   /** EXPORT (deep clone) of the committed IVF index AS OF `version`
     * (default CURRENT, -1) into the FRESH dir `destDir`: the referenced
@@ -1527,7 +1369,7 @@ object Ann extends Serializable {
     * cells under the index's OWN committed centroids; a committed
     * member with cosine ≥ `threshold` is a qualifying near-dup), ADMIT
     * every batch vector with no qualifying match, and append the
-    * admitted rows as one committed tick ([[ivfIndexAppendHooked]]'s
+    * admitted rows as one committed tick ([[ivfIndexAppend]]'s
     * data version + CURRENT flip, `txn` supported for streaming
     * maintenance). This is the loop a live embedding-curation pipeline
     * runs per arriving shard — without it the standing index grows by
@@ -1583,7 +1425,7 @@ object Ann extends Serializable {
       .join(decisions.filter(col("admitted")).select(col("cid")), Seq("cid"))
     val nAdmitted = admitted.count()
     if (nAdmitted > 0)
-      ivfIndexAppendHooked(spark, dir, admitted, crashPoint = 0, txn = txn)
+      ivfIndexAppend(spark, dir, admitted, txn)
     IvfAdmission(decisions, nAdmitted)
   }
 

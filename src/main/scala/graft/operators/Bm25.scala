@@ -231,7 +231,7 @@ object Bm25 {
       termstats: Boolean = false)
 
   /** The BM25 layout for the shared lifecycle verbs. */
-  private object Spec extends ManifestIO.IndexSpec[IndexManifest] {
+  private[graft] object Spec extends ManifestIO.IndexSpec[IndexManifest] {
     val what = "BM25 index"
 
     def render(m: IndexManifest): String =
@@ -277,6 +277,11 @@ object Bm25 {
         versions: Map[String, Map[Int, Seq[Long]]]): IndexManifest =
       m.copy(version = version, bucketVersions = versions("postings"),
         docVersions = versions("docmap"))
+
+    def txns(m: IndexManifest): Map[String, Long] = m.txns
+
+    def withTxns(m: IndexManifest, txns: Map[String, Long]): IndexManifest =
+      m.copy(txns = txns)
   }
 
   /** Read the COMMITTED manifest — the index state every reader serves
@@ -740,13 +745,7 @@ object Bm25 {
     * Returns the compacted postings bucket ids. */
   def compactIndex(spark: SparkSession, dir: String,
       minVersions: Int = 2): Seq[Int] =
-    compactIndexHooked(spark, dir, minVersions, crashPoint = 0)
-
-  /** [[compactIndex]] with the standard injectable writer-death points
-    * (1 = after the data write; 2 = after manifest, before flip). */
-  private[graft] def compactIndexHooked(spark: SparkSession, dir: String,
-      minVersions: Int, crashPoint: Int): Seq[Int] =
-    ManifestIO.compact(spark, dir, Spec, minVersions, crashPoint)
+    ManifestIO.compact(spark, dir, Spec, minVersions, crashPoint = 0)
 
   /** APPEND tick of the standing-index lifecycle ([[buildIndex]]
     * builds, [[serveTopK]] serves, this grows) — ACCRETIVE: the tick
@@ -771,114 +770,219 @@ object Bm25 {
     * union corpus in one shot: avgdl shifts globally, but serve-time
     * scoring reads avgdl from stats, never from postings rows.
     *
-    * CRASH-ATOMIC: the tick writes the rewritten buckets and the
-    * rolled-forward stats under a NEW data version, then commits both
-    * with one atomic CURRENT rename — a writer death at any point
-    * leaves readers on the previous version; new postings can never be
-    * served against stale (n, avgdl). An empty batch is a no-op (the
-    * index is already the correct post-tick state); a nonempty batch
-    * whose docs all tokenize to zero terms rewrites no postings but
-    * still rolls (n, sdl) forward — rebuild-over-union counts such
-    * docs in avgdl, and append == rebuild is the contract. */
+    * One [[ManifestIO.tick]] (crash-atomic; exactly-once under `txn`):
+    * new postings can never be served against stale (n, avgdl). An
+    * empty batch is a no-op (the index is already the correct
+    * post-tick state); a nonempty batch whose docs all tokenize to zero
+    * terms rewrites no postings but still rolls (n, sdl) forward —
+    * rebuild-over-union counts such docs in avgdl, and append ==
+    * rebuild is the contract. */
   def appendToIndex(spark: SparkSession, dir: String, newDocs: DataFrame,
-      idCol: String, textCol: String): Unit =
-    appendToIndexHooked(spark, dir, newDocs, idCol, textCol, crashPoint = 0)
+      idCol: String, textCol: String, txn: Option[(String, Long)] = None): Unit =
+    appendTick(spark, dir, newDocs, idCol, textCol, txn)
 
-  /** [[appendToIndex]] carrying a writer transaction (appId, epoch) —
-    * the EXACTLY-ONCE form for streaming maintenance: if the committed
-    * manifest already records this app at this (or a later) epoch, the
-    * tick is a no-op, so a foreachBatch retry re-delivering the same
-    * micro-batch cannot double-ingest it. A tick that crashed before
-    * its CURRENT flip left no txn record and retries cleanly. */
-  def appendToIndexTxn(spark: SparkSession, dir: String, newDocs: DataFrame,
-      idCol: String, textCol: String, appId: String, epoch: Long): Unit =
-    appendToIndexHooked(spark, dir, newDocs, idCol, textCol, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[appendToIndex]] with an injectable writer-death point for the
-    * crash-atomicity spec: 1 = die after the data writes, before the
-    * manifest; 2 = die after the manifest, before the CURRENT flip.
-    * `interleave` runs after the manifest pin — the lost-update spec's
-    * hook for committing a second writer mid-tick. Production path is
-    * crashPoint = 0, interleave a no-op. */
-  private[graft] def appendToIndexHooked(spark: SparkSession, dir: String,
-      newDocs: DataFrame, idCol: String, textCol: String, crashPoint: Int,
-      txn: Option[(String, Long)] = None,
-      interleave: () => Unit = () => ()): Unit = {
-    // one CURRENT read pins the tick: existing postings AND old stats
-    // resolve from this manifest (single-writer discipline makes a
-    // concurrent commit illegal anyway; the pin keeps the tick correct
-    // even against a misbehaving second writer — and the commit's
-    // lost-update guard makes that second writer's interleaved commit
-    // fail THIS tick's flip loudly instead of silently undoing it)
-    val m = readManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    interleave()
-    val newVer = m.version + 1
-    // ONE pinned, id-distinct materialization of the batch
-    // (ManifestIO.dedupBatch — the uniform intra-batch rule all tick
-    // verbs share): the stats roll, the touched-bucket plan and the
-    // postings write must all see the same rows even for a
-    // non-deterministic caller frame (a torn batch would commit stats
-    // counting rows the postings never gained); a row re-submitted
-    // within one micro-batch ingests ONCE (rebuild-over-union of the
-    // DISTINCT batch is the contract), and two texts under one id in
-    // one batch reject loudly instead of double-counting n/sdl
-    val docs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol), "BM25 append")
-    val newDl = docs.select(col(idCol).cast("long").as("doc_id"),
-      size(tokens(col(textCol))).cast("long").as("dl"))
-    // the no-op gate is the batch ROW count, not the touched-bucket
-    // count: a nonempty batch of zero-token docs rewrites no postings
-    // but must still roll (n, sdl) forward — buildIndex over the union
-    // counts those docs in avgdl, and append == rebuild is the contract
-    val batch = newDl
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .select(col("n"), col("sdl")).head()
-    if (batch.getLong(0) == 0L) return // empty batch: the index already is the post-tick state
-    val newTf = tfRows(docs, idCol, textCol)
-      .withColumn("bucket", pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
-    val touched = newTf.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)) // ≤ manifest bucket count values
-    ManifestIO.guardSlot(spark, dir, newVer)
-    if (touched.nonEmpty) {
-      // the ACCRETIVE write: batch rows only — the committed postings
-      // are neither read nor rewritten, so the tick's IO is O(batch)
-      // at any index size (df resolves at read time; see readPostingsAt)
-      // (plus the version's batch-vocabulary-sized term-stats delta)
-      writePostings(
-        newTf.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
-        dir, newVer, m.termstats)
+  /** The ACCRETING kernel behind [[appendToIndex]]; `crashPoint` and
+    * `interleave` as in [[ManifestIO.tick]]. */
+  private[graft] def appendTick(spark: SparkSession, dir: String,
+      newDocs: DataFrame, idCol: String, textCol: String,
+      txn: Option[(String, Long)] = None, crashPoint: Int = 0,
+      interleave: () => Unit = () => ()): Unit =
+    ManifestIO.tick(spark, dir, Spec, txn, crashPoint, interleave) { m =>
+      // ONE pinned, id-distinct materialization of the batch
+      // (ManifestIO.dedupBatch — the uniform intra-batch rule all tick
+      // verbs share): the stats roll, the touched-bucket plan and the
+      // postings write must all see the same rows even for a
+      // non-deterministic caller frame (a torn batch would commit stats
+      // counting rows the postings never gained); a row re-submitted
+      // within one micro-batch ingests ONCE (rebuild-over-union of the
+      // DISTINCT batch is the contract), and two texts under one id in
+      // one batch reject loudly instead of double-counting n/sdl
+      val docs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol), "BM25 append")
+      // the no-op gate is the batch ROW count, not the touched-bucket
+      // count: a nonempty batch of zero-token docs rewrites no postings
+      // but must still roll (n, sdl) forward
+      val batch = docs.select(size(tokens(col(textCol))).cast("long").as("dl"))
+        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
+        .head()
+      if (batch.getLong(0) == 0L) None
+      else Some { newVer =>
+        val newTf = tfRows(docs, idCol, textCol)
+          .withColumn("bucket", pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
+        val touched = newTf.select(col("bucket")).distinct()
+          .collect().map(_.getInt(0)) // ≤ manifest bucket count values
+        // the ACCRETIVE write: batch rows only — the committed postings
+        // are neither read nor rewritten, so the tick's IO is O(batch)
+        // at any index size (df resolves at read time; see readPostingsAt)
+        // (plus the version's batch-vocabulary-sized term-stats delta)
+        if (touched.nonEmpty)
+          writePostings(newTf.select(postingCols: _*), dir, newVer, m.termstats)
+        val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
+        writeStats(spark, dir, newVer,
+          old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1))
+        // docmap maintenance — ACCRETIVE, like the postings above: the
+        // batch's doc-sized reverse-map rows only, the version appended
+        // onto the touched dbuckets' lists (O(batch) at any index size;
+        // the previous rewrite of each touched dbucket with
+        // (existing ∪ batch) was index-bound, the round-16 verdict's
+        // weak flag). delete/upsert consolidate a dbucket back to one
+        // version; [[compactIndex]] collapses long lists. Maintained iff
+        // the index HAS a docmap (or is empty — a fresh lifecycle starts
+        // one): accreting onto a pre-docmap legacy index would leave a
+        // map that silently misses every older doc, worse than no map.
+        val newDocVers =
+          if (m.docVersions.isEmpty && m.bucketVersions.nonEmpty) m.docVersions
+          else ManifestIO.accrete(m.docVersions, ManifestIO.writePartitioned(
+            docmapRows(docs, idCol, textCol, m.buckets), dir, newVer, "docmap", "dbucket"),
+            newVer)
+        m.copy(version = newVer, statsVersion = newVer,
+          bucketVersions = ManifestIO.accrete(m.bucketVersions, touched, newVer),
+          docVersions = newDocVers)
+      }
     }
-    val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    writeStats(spark, dir, newVer,
-      old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1))
-    // docmap maintenance — ACCRETIVE, like the postings above: the tick
-    // writes ONLY the batch's doc-sized reverse-map rows and appends
-    // its version onto the touched dbuckets' manifest lists; the
-    // committed docmap is neither read nor rewritten, so the reverse
-    // map's per-append IO is O(batch) at any index size. (The previous
-    // design rewrote each touched dbucket with (existing ∪ batch) —
-    // the touched-dbucket COUNT was batch-bounded but their CONTENTS
-    // were index-bound, ~N/B rows per dbucket: the round-16 verdict's
-    // one weak flag, the write-amplification shape the postings escaped
-    // that round, one layer down.) delete/upsert consolidate a dbucket
-    // back to one version; [[compactIndex]] collapses long lists.
-    // Maintained iff the index HAS a docmap (or is empty — a fresh
-    // lifecycle starts one): accreting onto a pre-docmap legacy index
-    // would leave a map that silently misses every older doc, worse
-    // than no map at all.
-    val maintainDocmap = m.docVersions.nonEmpty || m.bucketVersions.isEmpty
-    val newDocVers =
-      if (!maintainDocmap) m.docVersions
-      else ManifestIO.accrete(m.docVersions, ManifestIO.writePartitioned(
-        docmapRows(docs, idCol, textCol, m.buckets), dir, newVer, "docmap", "dbucket"),
-        newVer)
-    // touched buckets ACCRETE the new version onto their lists
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      IndexManifest(newVer, m.buckets, newVer,
-        ManifestIO.accrete(m.bucketVersions, touched, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
-  }
+
+  private val postingCols = Seq("t", "doc_id", "tf", "dl", "bucket").map(col)
+
+  /** What a consolidating tick takes out of the index, located against
+    * the tick's pinned manifest: the doc ids leaving (distinct), the
+    * (n, Σdl) the stats roll back by, the materialized term buckets
+    * holding their postings and the materialized docmap dbuckets to
+    * rewrite. */
+  private[graft] final case class Removal(ids: DataFrame, n: Long, sdl: Long,
+      buckets: Seq[Int], dbuckets: Seq[Int])
+
+  /** A removal locator: None = nothing to do, no commit. */
+  private[graft] type Locate = (SparkSession, String, IndexManifest) => Option[Removal]
+
+  /** The CONSOLIDATING kernel behind every delete, upsert and CDC verb:
+    * each touched bucket — the located removal's plus, for an upsert,
+    * the new rows' — is rewritten ONCE as (committed − removed ids) ∪
+    * new rows, consolidating its manifest entry to the new version (df
+    * is read-time, so nothing else needs refreshing; a bucket emptied
+    * by the rewrite leaves the manifest); the stats roll by
+    * (− removal + new rows); the docmap's located dbuckets rewrite the
+    * same way. `upserts` are pinned, id-distinct (doc_id, text) rows.
+    * The verbs differ only in how they locate. Contract:
+    * tick == rebuild over (corpus − removed) ∪ upserts. */
+  private[graft] def changeTick(spark: SparkSession, dir: String,
+      upserts: Option[DataFrame], locate: Locate,
+      txn: Option[(String, Long)] = None, crashPoint: Int = 0): Unit =
+    ManifestIO.tick(spark, dir, Spec, txn, crashPoint) { m =>
+      locate(spark, dir, m).map { rm =>
+        val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
+        require(old.getLong(0) >= rm.n && old.getLong(1) >= rm.sdl,
+          s"delete batch (${rm.n} docs, ${rm.sdl} tokens) exceeds " +
+            s"the index stats (${old.getLong(0)}, ${old.getLong(1)}) — " +
+            "the batch must be previously ingested documents")
+        newVer => {
+          val add = upserts.map(_
+            .select(coalesce(size(tokens(col("text"))).cast("long"), lit(0L)).as("dl"))
+            .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
+            .head())
+          val newTf = upserts.map(tfRows(_, "doc_id", "text")
+            .withColumn("bucket", pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
+            .select(postingCols: _*))
+          val touched = (rm.buckets ++ newTf.toSeq.flatMap(_.select(col("bucket"))
+            .distinct().collect().map(_.getInt(0)))).distinct // ≤ bucket count values
+          val kept = readPostingsAt(spark, dir, m, Some(touched.toSet))
+            .select(postingCols: _*).join(rm.ids, Seq("doc_id"), "left_anti")
+          val present =
+            if (touched.isEmpty) Seq.empty[Int]
+            else writePostings(newTf.fold(kept)(t => kept.unionByName(t)), dir, newVer, m.termstats)
+          writeStats(spark, dir, newVer,
+            old.getLong(0) - rm.n + add.fold(0L)(_.getLong(0)),
+            old.getLong(1) - rm.sdl + add.fold(0L)(_.getLong(1)))
+          // an id's old and new docmap rows share one dbucket (a pure
+          // function of the id); a fresh index starts its docmap here
+          val maintainDocmap =
+            m.docVersions.nonEmpty || (upserts.isDefined && m.bucketVersions.isEmpty)
+          val newDocVers =
+            if (!maintainDocmap || (rm.dbuckets.isEmpty && upserts.isEmpty)) m.docVersions
+            else {
+              val keptD = readDocmapAt(spark, dir, m, Some(rm.dbuckets.toSet))
+                .join(rm.ids, Seq("doc_id"), "left_anti")
+              ManifestIO.consolidate(m.docVersions, rm.dbuckets, ManifestIO.writePartitioned(
+                upserts.fold(keptD)(d => keptD.unionByName(docmapRows(d, "doc_id", "text",
+                  m.buckets))), dir, newVer, "docmap", "dbucket"), newVer)
+            }
+          m.copy(version = newVer, statsVersion = newVer,
+            bucketVersions = ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
+            docVersions = newDocVers)
+        }
+      }
+    }
+
+  /** The materialized docmap dbuckets of `ids` (doc_id) — a pure
+    * function of the ids; empty on a pre-docmap dir. */
+  private def dbucketsOf(ids: DataFrame, m: IndexManifest): Seq[Int] =
+    if (m.docVersions.isEmpty) Seq.empty
+    else ids.select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int"))
+      .distinct().collect().map(_.getInt(0)).toSeq // ≤ bucket count values
+      .filter(m.docVersions.contains)
+
+  /** Locate a text-carrying takedown batch ([[deleteFromIndex]]): one
+    * pinned, id-distinct copy ([[ManifestIO.dedupBatch]] — a torn batch
+    * could plan buckets for one row set and anti-join another, leaving
+    * a legally deleted document servable with its epoch applied; two
+    * texts under one id reject, since the roll trusts the text); the
+    * term buckets come from its tokens, the roll from its own
+    * (count, Σdl). None for an empty batch. */
+  private[graft] def byText(docs: DataFrame, idCol: String, textCol: String): Locate =
+    (_, _, m) => {
+      val pinned = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "BM25 delete")
+      val dl = pinned.select(col(idCol).cast("long").as("doc_id"),
+        size(tokens(col(textCol))).cast("long").as("dl"))
+      val batch = dl
+        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
+      if (batch.getLong(0) == 0L) None
+      else {
+        val buckets = pinned
+          .select(explode(tokens(col(textCol))).as("t"))
+          .select(pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
+          .distinct().collect().map(_.getInt(0)).toSeq // ≤ bucket count values
+          .filter(m.bucketVersions.contains) // only materialized buckets hold rows
+        val ids = dl.select(col("doc_id")).distinct()
+        Some(Removal(ids, batch.getLong(0), batch.getLong(1), buckets, dbucketsOf(ids, m)))
+      }
+    }
+
+  /** Locate by id ([[deleteByIds]], [[upsertIndex]], [[applyChanges]]):
+    * the ids' dbuckets are a PURE FUNCTION of the ids, so the docmap
+    * rows of the committed copies are read from ≤ |ids| dbucket dirs —
+    * no postings scan — and carry both the term buckets to rewrite and
+    * the dl to roll back by (a null-text doc's (1, 0) included). A
+    * pre-docmap legacy dir pays ONE full postings scan instead (per-doc
+    * dl off the denormalized rows; zero-token docs are invisible there,
+    * the documented deviation). The roll derives from the INDEX: ids
+    * never ingested, deleted earlier or repeated roll nothing. One row
+    * per docmap ROW, not per doc: an id re-ingested under a violated
+    * append contract loses EVERY copy. A pure delete whose ids match
+    * nothing is no tick; an upsert rewrites every candidate dbucket,
+    * where its new rows land. */
+  private[graft] def byIds(ids0: DataFrame, upserting: Boolean): Locate =
+    (spark, dir, m) => {
+      val ids = ids0.select(col("doc_id")).distinct().localCheckpoint(true)
+      if (ids.isEmpty) None
+      else {
+        val candD = dbucketsOf(ids, m)
+        val matched = (if (m.docVersions.nonEmpty) {
+          readDocmapAt(spark, dir, m, Some(candD.toSet))
+            .join(ids, Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
+        } else {
+          readPostingsAt(spark, dir, m)
+            .join(ids, Seq("doc_id"), "left_semi")
+            .groupBy(col("doc_id"))
+            .agg(first(col("dl")).as("dl"), collect_set(col("bucket")).as("buckets"))
+        }).localCheckpoint(true)
+        val rm = matched
+          .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
+        if (rm.getLong(0) == 0L && !upserting) None
+        else Some(Removal(ids, rm.getLong(0), rm.getLong(1),
+          matched.select(explode(col("buckets"))).distinct()
+            .collect().map(_.getInt(0)).toSeq.filter(m.bucketVersions.contains),
+          if (upserting) candD else dbucketsOf(matched, m)))
+      }
+    }
 
   /** DELETE tick of the standing-index lifecycle — the takedown /
     * opt-out verb a training-data deployment legally needs, and the
@@ -886,236 +990,39 @@ object Bm25 {
     * to remove, WITH their text (a takedown request has the content;
     * the text is what locates the work — a term lives in exactly one
     * bucket, so only the buckets of the batch's terms are read,
-    * filtered and rewritten — consolidating each back to one version;
-    * df is read-time, so nothing else needs refreshing; no full-index
-    * scan). The 1-row stats roll BACK by the
-    * batch's (count, Σdl). Serving afterwards is bit-identical to an
-    * index built over the corpus MINUS the batch — delete == rebuild
-    * is the contract, mirroring append == rebuild (so deleted docs
-    * stop influencing df/avgdl immediately, not at some later merge —
-    * stricter than Lucene's tombstone-until-merge model, bought at the
-    * cost of the same bucket rewrite an append pays).
+    * filtered and rewritten — no full-index scan). The 1-row stats roll
+    * BACK by the batch's (count, Σdl). Serving afterwards is
+    * bit-identical to an index built over the corpus MINUS the batch —
+    * delete == rebuild is the contract, mirroring append == rebuild (so
+    * deleted docs stop influencing df/avgdl immediately, not at some
+    * later merge — stricter than Lucene's tombstone-until-merge model).
     *
-    * A bucket whose postings are ALL removed drops out of the manifest
-    * (the empty-bucket rule of [[buildIndex]]). Contract: the batch
-    * must be documents previously ingested with the same (id, text) —
-    * the tick trusts it like append trusts its batch; INTRA-BATCH
-    * duplicate rows are collapsed by id (an opt-out re-submitted
-    * within one micro-batch rolls stats once, matching the postings
-    * anti-join's set semantics), but a CROSS-EPOCH re-delete — a doc
+    * Contract: the batch must be documents previously ingested with the
+    * same (id, text) — the tick trusts it like append trusts its batch
+    * (a batch exceeding the stats is rejected); INTRA-BATCH duplicate
+    * rows are collapsed by id, but a CROSS-EPOCH re-delete — a doc
     * already removed by an earlier committed tick — is outside this
     * tick's sight and would double-roll the stats: epoch re-deliveries
     * are the txn ledger's job, and an id-level re-delete feed belongs
-    * on [[deleteByIds]], whose stats roll derives from the index
-    * itself and is therefore re-delete-proof. Zero-token docs carry
-    * no postings but still roll (n, sdl) back — rebuild-over-remaining
-    * would not count them. CRASH-ATOMIC like every tick: new data
-    * version + one CURRENT rename. */
+    * on [[deleteByIds]], whose roll derives from the index itself.
+    * Zero-token docs carry no postings but still roll (n, sdl) back.
+    * One [[ManifestIO.tick]]. */
   def deleteFromIndex(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, textCol: String): Unit =
-    deleteFromIndexHooked(spark, dir, docs, idCol, textCol, crashPoint = 0)
-
-  /** [[deleteFromIndex]] carrying a writer transaction — exactly-once
-    * under re-delivery, like [[appendToIndexTxn]]. */
-  def deleteFromIndexTxn(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, textCol: String, appId: String, epoch: Long): Unit =
-    deleteFromIndexHooked(spark, dir, docs, idCol, textCol, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[deleteFromIndex]] with the standard injectable writer-death
-    * points (1 = after data writes; 2 = after manifest, before flip). */
-  private[graft] def deleteFromIndexHooked(spark: SparkSession, dir: String,
-      docs: DataFrame, idCol: String, textCol: String, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    val m = readManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    // pin ONE id-distinct materialization of the takedown batch (the
-    // append tick's pin, inverted; ManifestIO.dedupBatch — the uniform
-    // intra-batch rule): a torn batch could plan buckets for one row
-    // set, anti-join another, and roll stats back by a third —
-    // silently leaving a legally deleted document servable with its
-    // epoch recorded as applied. A takedown re-submitted within one
-    // micro-batch (which the txn ledger cannot catch — it gates
-    // epochs, not rows) rolls (n, sdl) back ONCE per document, the
-    // same set semantics the postings anti-join applies; two DIFFERENT
-    // texts under one id reject loudly (the stats roll trusts the
-    // text, so an arbitrary winner would roll the wrong dl)
-    val pinned = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "BM25 delete")
-    val delDl = pinned.select(col(idCol).cast("long").as("doc_id"),
-      size(tokens(col(textCol))).cast("long").as("dl"))
-    val batch = delDl
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .select(col("n"), col("sdl")).head()
-    if (batch.getLong(0) == 0L) return // empty batch: the index already is the post-tick state
-    val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    require(old.getLong(0) >= batch.getLong(0) && old.getLong(1) >= batch.getLong(1),
-      s"delete batch (${batch.getLong(0)} docs, ${batch.getLong(1)} tokens) exceeds " +
-        s"the index stats (${old.getLong(0)}, ${old.getLong(1)}) — " +
-        "the batch must be previously ingested documents")
-    val touched = pinned
-      .select(explode(tokens(col(textCol))).as("t"))
-      .select(pmod(xxhash64(col("t")), lit(m.buckets)).cast("int").as("bucket"))
-      .distinct().collect().map(_.getInt(0)) // ≤ manifest bucket count values
-      .filter(m.bucketVersions.contains) // only materialized buckets hold rows
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // CONSOLIDATION: the touched buckets' full version unions minus
-    // the batch — each bucket's manifest entry collapses back to the
-    // single new version (no df recompute: df is read-time now); a
-    // touched bucket that emptied never materializes under newVer and
-    // leaves the manifest entirely (no terms hash there anymore)
-    val present =
-      if (touched.isEmpty) Seq.empty[Int]
-      else writePostings(readPostingsAt(spark, dir, m, Some(touched.toSet))
-        .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .join(delDl.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"),
-        dir, newVer, m.termstats)
-    writeStats(spark, dir, newVer,
-      old.getLong(0) - batch.getLong(0), old.getLong(1) - batch.getLong(1))
-    // docmap maintenance: the deleted docs' reverse-index rows leave
-    // their dbuckets (located by the pure id→dbucket function, read
-    // only those, consolidated into the new version)
-    val newDocVers = if (m.docVersions.nonEmpty) {
-      val delIds = delDl.select(col("doc_id"))
-      val candD = delDl
-        .select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int").as("k"))
-        .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
-        .filter(m.docVersions.contains)
-      // consolidation: each touched dbucket's list collapses to the
-      // single new version (the accretive model's delete contract)
-      if (candD.isEmpty) m.docVersions
-      else ManifestIO.consolidate(m.docVersions, candD,
-        ManifestIO.writePartitioned(readDocmapAt(spark, dir, m, Some(candD.toSet))
-          .join(delIds, Seq("doc_id"), "left_anti"), dir, newVer, "docmap", "dbucket"),
-        newVer)
-    } else m.docVersions
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      IndexManifest(newVer, m.buckets, newVer,
-        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
-  }
+      idCol: String, textCol: String, txn: Option[(String, Long)] = None): Unit =
+    changeTick(spark, dir, None, byText(docs, idCol, textCol), txn)
 
   /** ID-ONLY takedown — the real opt-out feed shape
     * ([[deleteFromIndex]] needs the document TEXT to locate its term
-    * buckets; legal takedown requests often carry only ids/URLs).
-    *
-    * HOW THE WORK IS LOCATED: every index this lifecycle builds
-    * carries a doc→bucket REVERSE INDEX (the docmap — one
-    * (doc_id, dl, term-buckets) row per doc, partitioned by
-    * dbucket = pmod(xxhash64(doc_id), buckets) and maintained by
-    * build/append/delete ticks alike), so the requests' rows are
-    * found by a PURE FUNCTION of their ids: read ≤ |ids| dbucket
-    * dirs of a doc-sized artifact, then rewrite only the term buckets
-    * those docs actually used — NO postings scan at any corpus size.
-    * A pre-docmap legacy index dir falls back to ONE full postings
-    * scan to locate (the rewrite stays bucket-local either way), the
-    * documented legacy price.
-    *
-    * WHAT ROLLS BACK derives from the INDEX, not the request: the
-    * matched docs' dl comes off their docmap rows (legacy: off the
-    * denormalized postings rows), so (n, sdl) roll by exactly the
-    * docs the index actually held — ids never ingested, already
-    * deleted in an earlier epoch, or re-submitted within the batch
-    * roll NOTHING (re-delete-proof, unlike the text-carrying tick
-    * whose stats trust its batch). Null-text docs have a docmap row
-    * with dl = 0 and no term buckets, so even their (1, 0) stats
-    * contribution rolls back exactly; only the LEGACY scan path
-    * cannot see them (no postings rows — its documented deviation
-    * from delete == rebuild).
-    *
-    * Same lifecycle contract as every tick: delete == rebuild-over-
-    * remaining, emptied buckets leave the manifest, touched buckets
-    * consolidate to one version (df is read-time), docmap rows
-    * consolidated out of their dbuckets, CRASH-ATOMIC via new data
-    * version + one CURRENT rename, exactly-once under
-    * [[deleteByIdsTxn]]. */
+    * buckets; legal takedown requests often carry only ids/URLs),
+    * located through the doc→bucket reverse index ([[byIds]]): no
+    * postings scan on any index this lifecycle built, re-delete-proof
+    * stats. Ids that match nothing commit nothing. Same contract as
+    * every tick: delete == rebuild-over-remaining, one
+    * [[ManifestIO.tick]]. */
   def deleteByIds(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String): Unit =
-    deleteByIdsHooked(spark, dir, ids, idCol, crashPoint = 0)
-
-  /** [[deleteByIds]] carrying a writer transaction — exactly-once under
-    * re-delivery, like [[deleteFromIndexTxn]]. */
-  def deleteByIdsTxn(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String, appId: String, epoch: Long): Unit =
-    deleteByIdsHooked(spark, dir, ids, idCol, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[deleteByIds]] with the standard injectable writer-death points
-    * (1 = after data writes; 2 = after manifest, before flip). */
-  private[graft] def deleteByIdsHooked(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    val m = readManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    // pin the request ids once (set semantics; the locate, the stats
-    // roll and the anti-join must agree on one id set)
-    val delIds = ids.select(col(idCol).cast("long").as("doc_id"))
-      .distinct().localCheckpoint(true)
-    if (delIds.isEmpty) return // empty request: the index already is the post-tick state
-    val hasDocmap = m.docVersions.nonEmpty
-    // LOCATE, two regimes, one doc-sized (doc_id, dl, buckets) frame:
-    //   - docmap (the scale path, any index this lifecycle built): the
-    //     requests' dbuckets are a PURE FUNCTION of their ids — read
-    //     ≤ |ids| dbucket dirs, no postings scan anywhere; dl comes
-    //     from the docmap row, so even a null-text doc's (1, 0) stats
-    //     contribution rolls back (no zero-token blind spot);
-    //   - legacy fallback (a pre-docmap index dir): ONE full postings
-    //     scan, per-doc dl via first() off the denormalized rows —
-    //     zero-token docs are invisible here (documented deviation).
-    val matched = (if (hasDocmap) {
-      val candD = delIds
-        .select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int").as("k"))
-        .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
-        .filter(m.docVersions.contains)
-      // one row per docmap ROW, not per doc: a doc the append contract
-      // was violated for (re-ingested under the same id) holds several
-      // rows, each of which contributed to stats and each of whose
-      // bucket sets may differ — keeping them all removes EVERY copy's
-      // postings and rolls back exactly what the index counted
-      readDocmapAt(spark, dir, m, Some(candD.toSet))
-        .join(delIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
-    } else {
-      readPostingsAt(spark, dir, m)
-        .join(delIds, Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id"))
-        .agg(first(col("dl")).as("dl"), collect_set(col("bucket")).as("buckets"))
-    }).localCheckpoint(true)
-    val rm = matched
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .select(col("n"), col("sdl")).head()
-    if (rm.getLong(0) == 0L) return // no id matched: nothing to remove, nothing to roll
-    val touched = matched.select(explode(col("buckets")).as("bucket"))
-      .distinct().collect().map(_.getInt(0)) // ≤ manifest bucket count values
-      .filter(m.bucketVersions.contains)
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // consolidation: each touched bucket's full version union minus
-    // the ids, collapsing its manifest entry (df is read-time now)
-    val present =
-      if (touched.isEmpty) Seq.empty[Int]
-      else writePostings(readPostingsAt(spark, dir, m, Some(touched.toSet))
-        .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .join(delIds, Seq("doc_id"), "left_anti"), dir, newVer, m.termstats)
-    val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    writeStats(spark, dir, newVer,
-      old.getLong(0) - rm.getLong(0), old.getLong(1) - rm.getLong(1))
-    // docmap consolidation: the matched docs' rows leave their dbuckets
-    val newDocVers = if (hasDocmap) {
-      val matchedD = matched
-        .select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int").as("k"))
-        .distinct().collect().map(_.getInt(0))
-        .filter(m.docVersions.contains)
-      ManifestIO.consolidate(m.docVersions, matchedD,
-        ManifestIO.writePartitioned(readDocmapAt(spark, dir, m, Some(matchedD.toSet))
-          .join(delIds, Seq("doc_id"), "left_anti"), dir, newVer, "docmap", "dbucket"),
-        newVer)
-    } else m.docVersions
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      IndexManifest(newVer, m.buckets, newVer,
-        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
-  }
+      idCol: String, txn: Option[(String, Long)] = None): Unit =
+    changeTick(spark, dir, None,
+      byIds(ids.select(col(idCol).cast("long").as("doc_id")), upserting = false), txn)
 
   /** MIGRATION tick: retrofit the doc→bucket reverse index onto a
     * pre-docmap legacy dir, paying the full postings scan ONCE so
@@ -1128,206 +1035,58 @@ object Bm25 {
     * legacy doc left no rows, so it stays invisible to id-only deletes
     * — the same blind spot the legacy fallback always had, now frozen
     * into the map rather than re-derived per scan. A dir that already
-    * has a docmap is a no-op (returns false). CRASH-ATOMIC like every
-    * tick. */
-  def buildDocmap(spark: SparkSession, dir: String): Boolean = {
-    val m = readManifest(spark, dir)
-    if (m.docVersions.nonEmpty) return false // already maintained: no tick
-    if (m.bucketVersions.isEmpty) return false // empty index: the next append starts one
-    val newVer = m.version + 1
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // ONE full postings scan — the price the map exists to retire
-    val presentD = ManifestIO.writePartitioned(readPostingsAt(spark, dir, m)
-      .groupBy(col("doc_id"))
-      .agg(first(col("dl")).as("dl"),
-        array_sort(collect_set(col("bucket"))).as("tbuckets"))
-      .withColumn("dbucket",
-        pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int")),
-      dir, newVer, "docmap", "dbucket")
-    ManifestIO.commit(spark, dir, newVer, Spec.render(m.copy(version = newVer,
-      docVersions = presentD.map(_ -> Seq(newVer)).toMap)))
-    true
-  }
+    * has a docmap is a no-op (returns false). One [[ManifestIO.tick]]. */
+  def buildDocmap(spark: SparkSession, dir: String): Boolean =
+    ManifestIO.tick(spark, dir, Spec, None) { m =>
+      // already maintained, or empty (the next append starts one): no tick
+      if (m.docVersions.nonEmpty || m.bucketVersions.isEmpty) None
+      else Some { newVer =>
+        // ONE full postings scan — the price the map exists to retire
+        val presentD = ManifestIO.writePartitioned(readPostingsAt(spark, dir, m)
+          .groupBy(col("doc_id"))
+          .agg(first(col("dl")).as("dl"),
+            array_sort(collect_set(col("bucket"))).as("tbuckets"))
+          .withColumn("dbucket",
+            pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int")),
+          dir, newVer, "docmap", "dbucket")
+        m.copy(version = newVer, docVersions = presentD.map(_ -> Seq(newVer)).toMap)
+      }
+    }
 
   /** UPSERT tick of the standing-index lifecycle — the REFRESH verb:
     * `docs` carries (id, text) rows that REPLACE any committed copy of
     * the same id and plain-append ids the index has never seen, in ONE
-    * crash-atomic commit. Without it a refresh feed must run a delete
-    * tick then an append tick — two commits, with a crash window
-    * between them in which the document is simply absent (and two
-    * bucket rewrites for the same term set). Semantics: upsert ==
-    * rebuild over (corpus − batch ids) ∪ batch — the delete contract
-    * and the append contract fused; old copies stop influencing
-    * df/avgdl in the same flip that publishes the new ones.
-    *
-    * LOCATE is [[deleteByIds]]'s: the docmap finds the old copies'
-    * term buckets and dl by a pure function of the ids (≤ |ids|
-    * dbucket dirs read); a pre-docmap legacy dir pays the documented
-    * one-scan fallback (and its zero-token blind spot). REWRITE is the
-    * union of the old copies' buckets and the new texts' buckets —
-    * each rewritten ONCE, consolidating to one version (df is
-    * read-time). The
-    * batch is deduplicated BY ID first (set semantics — a feed that
-    * carries one id twice in a batch has no meaningful "both" order;
-    * route ordered feeds through one row per id per tick). An id
-    * re-ingested under a violated append contract loses EVERY old
-    * copy, docmap rows included. CRASH-ATOMIC + exactly-once like
-    * every tick; the index must already exist (build first). */
+    * crash-atomic commit (a delete tick then an append tick would leave
+    * a crash window in which the document is simply absent). Semantics:
+    * upsert == rebuild over (corpus − batch ids) ∪ batch; old copies
+    * stop influencing df/avgdl in the same flip that publishes the new
+    * ones. LOCATE is [[deleteByIds]]'s; each bucket of the old copies
+    * or the new texts is rewritten ONCE. Two revisions of one id in a
+    * batch reject loudly ([[ManifestIO.dedupBatch]]); the index must
+    * already exist (build first). */
   def upsertIndex(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, textCol: String): Unit =
-    upsertIndexHooked(spark, dir, docs, idCol, textCol, crashPoint = 0)
-
-  /** [[upsertIndex]] carrying a writer transaction — exactly-once
-    * under re-delivery, like every tick. */
-  def upsertIndexTxn(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, textCol: String, appId: String, epoch: Long): Unit =
-    upsertIndexHooked(spark, dir, docs, idCol, textCol, crashPoint = 0,
-      txn = Some((appId, epoch)))
+      idCol: String, textCol: String, txn: Option[(String, Long)] = None): Unit = {
+    val up = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "BM25 upsert")
+      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+    changeTick(spark, dir, Some(up), byIds(up, upserting = true), txn)
+  }
 
   /** CHANGE-APPLY tick — the CDC verb: ONE mixed micro-batch of
     * upserts AND deletes folds into the index in ONE crash-atomic
     * commit. `changes` carries (opCol, idCol, textCol) rows with op
-    * `'upsert'` (replace-or-insert, the [[upsertIndex]] semantics) or
-    * `'delete'` (id-only takedown, the [[deleteByIds]] semantics —
-    * text ignored). This is what a change-capture maintenance stream
-    * actually delivers: corrections and removals interleaved in one
-    * epoch — two separate verb ticks would need two commits under one
-    * (appId, epoch), which the txn ledger (correctly) forbids, and
-    * would open a window in which only half the batch is live.
-    * Contract: apply == rebuild over
-    * (corpus − all change ids) ∪ upsert rows. An id carrying BOTH ops
-    * in one batch is rejected (no meaningful order inside a set).
-    * Exactly-once, crash-atomic, reverse-map-located like its parts. */
+    * `'upsert'` (the [[upsertIndex]] semantics) or `'delete'` (the
+    * [[deleteByIds]] semantics — text ignored). This is what a
+    * change-capture stream delivers: two verb ticks would need two
+    * commits under one (appId, epoch), which the ledger refuses.
+    * Contract: apply == rebuild over (corpus − all change ids) ∪ upsert
+    * rows; an id carrying BOTH ops in one batch is rejected
+    * ([[ManifestIO.splitChanges]]). */
   def applyChanges(spark: SparkSession, dir: String, changes: DataFrame,
-      opCol: String, idCol: String, textCol: String): Unit =
-    applyChangesHooked(spark, dir, changes, opCol, idCol, textCol,
-      crashPoint = 0)
-
-  /** [[applyChanges]] carrying a writer transaction. */
-  def applyChangesTxn(spark: SparkSession, dir: String, changes: DataFrame,
       opCol: String, idCol: String, textCol: String,
-      appId: String, epoch: Long): Unit =
-    applyChangesHooked(spark, dir, changes, opCol, idCol, textCol,
-      crashPoint = 0, txn = Some((appId, epoch)))
-
-  /** [[applyChanges]] with the standard injectable writer-death
-    * points. */
-  private[graft] def applyChangesHooked(spark: SparkSession, dir: String,
-      changes: DataFrame, opCol: String, idCol: String, textCol: String,
-      crashPoint: Int, txn: Option[(String, Long)] = None): Unit = {
-    val (ups, dels) =
-      ManifestIO.splitChanges(changes, opCol, idCol, Seq(textCol))
-    upsertCore(spark, dir, ups, dels.select(col(idCol).as("doc_id")),
-      idCol, textCol, crashPoint, txn)
-  }
-
-  /** [[upsertIndex]] with the standard injectable writer-death points
-    * (1 = after data writes; 2 = after manifest, before flip). */
-  private[graft] def upsertIndexHooked(spark: SparkSession, dir: String,
-      newDocs: DataFrame, idCol: String, textCol: String, crashPoint: Int,
       txn: Option[(String, Long)] = None): Unit = {
-    // the uniform intra-batch rule (ManifestIO.dedupBatch): exact
-    // duplicate rows collapse, two REVISIONS of one id in one batch
-    // reject loudly — a silent winner would commit a partitioning-
-    // dependent state (collapse per key upstream instead)
-    val docs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol), "BM25 upsert")
-    upsertCore(spark, dir, docs,
-      docs.select(col(idCol).cast("long").as("doc_id")).limit(0),
-      idCol, textCol, crashPoint, txn)
-  }
-
-  /** The shared replace-or-insert core: `docs` upsert (old copy out,
-    * new row in), `extraDeleteIds` are pure removals folded into the
-    * same commit ([[applyChanges]]' delete half — empty for a plain
-    * [[upsertIndex]]). `docs` must already be pinned and id-distinct. */
-  private def upsertCore(spark: SparkSession, dir: String,
-      docs: DataFrame, extraDeleteIds: DataFrame,
-      idCol: String, textCol: String, crashPoint: Int,
-      txn: Option[(String, Long)]): Unit = {
-    val m = readManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    // the ids whose committed copies must leave: the upserted AND the
-    // purely deleted — one locate, one rewrite
-    val upIds = docs.select(col(idCol).cast("long").as("doc_id"))
-      .unionByName(extraDeleteIds.select(col("doc_id")))
-      .distinct().localCheckpoint(true)
-    if (upIds.isEmpty) return // empty batch: the index already is the post-tick state (gate FIRST — an idle streaming trigger must not pay the stats jobs)
-    val newDl = docs.select(col(idCol).cast("long").as("doc_id"),
-      coalesce(size(tokens(col(textCol))).cast("long"), lit(0L)).as("dl"))
-    val add = newDl
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .select(col("n"), col("sdl")).head()
-    val hasDocmap = m.docVersions.nonEmpty
-    // the affected ids' dbuckets — a pure function of the ids; ONE
-    // collect, reused by the locate AND the docmap rewrite below
-    val candD =
-      if (!hasDocmap) Set.empty[Int]
-      else upIds
-        .select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int").as("k"))
-        .distinct().collect().map(_.getInt(0)).toSet // ≤ bucket count values
-    val candTouched = candD.filter(m.docVersions.contains)
-    // ONE materialization of the candidate dbuckets' rows: the locate
-    // (semi-join) and the rewrite (anti-join) below both read it
-    val candMap =
-      if (hasDocmap) readDocmapAt(spark, dir, m, Some(candTouched))
-        .localCheckpoint(true)
-      else null
-    // the OLD copies: the deleteByIds locate, verbatim
-    val matched = (if (hasDocmap) {
-      candMap
-        .join(upIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
-    } else {
-      readPostingsAt(spark, dir, m)
-        .join(upIds, Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id"))
-        .agg(first(col("dl")).as("dl"), collect_set(col("bucket")).as("buckets"))
-    }).localCheckpoint(true)
-    val rm = matched
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-      .select(col("n"), col("sdl")).head()
-    val newTf = tfRows(docs, idCol, textCol)
-      .withColumn("bucket", pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
-    val touchedNew = newTf.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0))
-    val touchedOld = matched.select(explode(col("buckets")).as("bucket"))
-      .distinct().collect().map(_.getInt(0))
-      .filter(m.bucketVersions.contains)
-    val touched = (touchedNew ++ touchedOld).distinct // ≤ bucket count values
-    ManifestIO.guardSlot(spark, dir, newVer)
-    // one consolidating rewrite: (existing − old copies) ∪ new rows —
-    // what the rebuild-over-modified-corpus would have written for
-    // these buckets; their manifest entries collapse to the single
-    // new version (df is read-time now)
-    val present =
-      if (touched.isEmpty) Seq.empty[Int]
-      else writePostings(readPostingsAt(spark, dir, m, Some(touched.toSet))
-        .select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))
-        .join(upIds, Seq("doc_id"), "left_anti")
-        .unionByName(
-          newTf.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket"))),
-        dir, newVer, m.termstats)
-    val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-    writeStats(spark, dir, newVer, old.getLong(0) - rm.getLong(0) + add.getLong(0),
-      old.getLong(1) - rm.getLong(1) + add.getLong(1))
-    // docmap rewrite: an id's old row and its new row live in the SAME
-    // dbucket (dbucket is a pure function of the id), so the affected
-    // ids' dbuckets — upserted AND purely deleted — rewrite once with
-    // (existing − affected ids) ∪ batch rows; a dbucket emptied by the
-    // delete half leaves the manifest
-    val maintainDocmap = m.docVersions.nonEmpty || m.bucketVersions.isEmpty
-    val newDocVers = if (maintainDocmap) {
-      val remaining =
-        if (hasDocmap) candMap.join(upIds, Seq("doc_id"), "left_anti")
-        else readDocmapAt(spark, dir, m, Some(candTouched)) // empty legacy frame, schema only
-      ManifestIO.consolidate(m.docVersions, candTouched, ManifestIO.writePartitioned(
-        remaining.unionByName(docmapRows(docs, idCol, textCol, m.buckets)),
-        dir, newVer, "docmap", "dbucket"), newVer)
-    } else m.docVersions
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      IndexManifest(newVer, m.buckets, newVer,
-        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), newDocVers, m.termstats)), crashPoint)
+    val (ups, dels) = ManifestIO.splitChanges(changes, opCol, idCol, Seq(textCol))
+    val up = ups.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+    changeTick(spark, dir, Some(up), byIds(up.select(col("doc_id"))
+      .unionByName(dels.select(col(idCol).as("doc_id"))), upserting = true), txn)
   }
 }

@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions.{col, count, lit}
   * An append writes only its batch's partitions and appends its version
   * to their lists; delete/upsert consolidate a touched partition back to
   * one version; compact collapses long lists; vacuum retires what no
-  * servable manifest references. The verbs that are identical across
-  * the families (compact, vacuum, export) are written once here against
-  * a small per-family [[IndexSpec]].
+  * servable manifest references. Every write tick runs through the one
+  * skeleton [[tick]]; the verbs that are identical across the families
+  * (compact, vacuum, export) are written once here against a small
+  * per-family [[IndexSpec]].
   *
   * A tick writes only NEW files, then its manifest, then renames
   * CURRENT (FileContext rename-with-overwrite: atomic on HDFS and
@@ -90,11 +91,11 @@ private[graft] object ManifestIO {
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** [[commit]] behind the standard injectable writer-death points
-    * every tick's `*Hooked` entry takes: 1 = the writer died after its
-    * data writes (no manifest lands), 2 = it died between the manifest
-    * write and the CURRENT flip (the manifest is unreferenced garbage);
-    * 0, the production value, commits. True iff committed. */
+  /** [[commit]] behind the injectable writer-death points of
+    * [[tick]]: 1 = the writer died after its data writes (no manifest
+    * lands), 2 = it died between the manifest write and the CURRENT flip
+    * (the manifest is unreferenced garbage); 0, the production value,
+    * commits. True iff committed. */
   def commit(spark: SparkSession, dir: String, version: Long,
       manifestBody: String, crashPoint: Int): Boolean = crashPoint match {
     case 1 => false
@@ -648,11 +649,57 @@ private[graft] object ManifestIO {
     * the stream that made it. */
   def mergeTxn(previous: Map[String, Long],
       txn: Option[(String, Long)]): Map[String, Long] = {
+    requireAppId(txn)
+    previous ++ txn
+  }
+
+  private def requireAppId(txn: Option[(String, Long)]): Unit =
     txn.foreach { case (app, _) =>
       require(!app.contains(";") && !app.contains("\n"),
         s"txn appId must not contain ';' or newlines: $app")
     }
-    previous ++ txn
+
+  /** THE TICK SKELETON — every write of the three index families
+    * (append, delete, upsert, CDC, compact, the reverse-map and band
+    * migrations) runs through it, so the commit protocol is spelled
+    * once:
+    *   1. a malformed txn appId is rejected before anything is read or
+    *      written;
+    *   2. CURRENT is read ONCE and every artifact the tick reads
+    *      resolves from that pinned manifest;
+    *   3. EXACTLY-ONCE: a `txn` (appId, epoch) the committed ledger
+    *      already records — the app at this or a later epoch — makes
+    *      the tick a no-op, so a micro-batch re-delivered by
+    *      foreachBatch's at-least-once delivery cannot apply twice (the
+    *      ledger is the idempotent sink of the Structured Streaming
+    *      argument); a tick that died before its flip left no record,
+    *      so its retry applies cleanly;
+    *   4. `plan` sees the pinned manifest and returns None when the
+    *      index already is the post-tick state (no commit), else the
+    *      write step;
+    *   5. [[guardSlot]] on version current + 1, the write step (it
+    *      writes only under `data/<version>` and returns the next
+    *      manifest), then [[commit]] with the ledger carried forward and
+    *      this tick's (appId, epoch) merged in.
+    * `crashPoint` injects the writer deaths of the crash-atomicity
+    * specs (1 = after the data writes, 2 = between manifest and flip;
+    * 0, production, commits); `interleave` runs right after the txn
+    * check — the lost-update spec's hook for committing a second writer
+    * mid-tick. True iff the tick committed. */
+  def tick[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
+      txn: Option[(String, Long)], crashPoint: Int = 0,
+      interleave: () => Unit = () => ())(plan: M => Option[Long => M]): Boolean = {
+    requireAppId(txn)
+    val (cur, body) = readCurrent(spark, dir, spec.what)
+    val m = spec.parse(body)
+    if (txnAlreadyApplied(spec.txns(m), txn)) return false
+    interleave()
+    plan(m).exists { write =>
+      val ver = cur + 1
+      guardSlot(spark, dir, ver)
+      val next = spec.withTxns(write(ver), mergeTxn(spec.txns(m), txn))
+      commit(spark, dir, ver, spec.render(next), crashPoint)
+    }
   }
 
   /** True iff the committed ledger proves this (appId, epoch) tick
@@ -750,6 +797,8 @@ private[graft] object ManifestIO {
     /** Write the sidecar of the artifact just rewritten under `ver`. */
     def writeSidecar(spark: SparkSession, dir: String, m: M, ver: Long): Unit
     def updated(m: M, version: Long, versions: Map[String, Map[Int, Seq[Long]]]): M
+    def txns(m: M): Map[String, Long]
+    def withTxns(m: M, txns: Map[String, Long]): M
 
     /** The committed manifest. */
     def current(spark: SparkSession, dir: String): M =
@@ -770,33 +819,33 @@ private[graft] object ManifestIO {
     * its entry collapses to that version; unpicked partitions are never
     * listed. The superseded history is the next vacuum's food. The txn
     * ledger rides forward untouched, so a maintenance stream's
-    * exactly-once record survives a compaction. Crash-atomic (new
-    * version + one CURRENT flip; `crashPoint` as in [[commit]]).
+    * exactly-once record survives a compaction. One [[tick]]
+    * (`crashPoint` as there).
     * Returns the compacted partitions of the PRIMARY artifact — the
     * others compact in the same tick, unreported. */
   def compact[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
       minVersions: Int, crashPoint: Int): Seq[Int] = {
     require(minVersions >= 2, "minVersions < 2 would rewrite single-version " +
       s"partitions for nothing: $minVersions")
-    val (cur, body) = readCurrent(spark, dir, spec.what)
-    val m = spec.parse(body)
-    val picked = spec.accreting(m).map(a => a -> a.versions
-      .collect { case (p, vs) if vs.distinct.size >= minVersions => p }.toSeq.sorted)
-    if (picked.forall(_._2.isEmpty)) return Seq.empty // nothing fragmented: no tick
-    val newVer = cur + 1
-    guardSlot(spark, dir, newVer)
-    val versions = picked.map { case (a, ps) =>
-      val present = if (ps.isEmpty) Seq.empty else {
-        val out = writePartitioned(spec.read(spark, dir, m, a.name, ps.toSet),
-          dir, newVer, a.name, a.partCol)
-        if (a.sidecar.exists(_.present)) spec.writeSidecar(spark, dir, m, newVer)
-        out
+    var primary = Seq.empty[Int]
+    val committed = tick(spark, dir, spec, None, crashPoint) { m =>
+      val picked = spec.accreting(m).map(a => a -> a.versions
+        .collect { case (p, vs) if vs.distinct.size >= minVersions => p }.toSeq.sorted)
+      if (picked.forall(_._2.isEmpty)) None // nothing fragmented: no tick
+      else Some { newVer =>
+        primary = picked.head._2
+        spec.updated(m, newVer, picked.map { case (a, ps) =>
+          val present = if (ps.isEmpty) Seq.empty else {
+            val out = writePartitioned(spec.read(spark, dir, m, a.name, ps.toSet),
+              dir, newVer, a.name, a.partCol)
+            if (a.sidecar.exists(_.present)) spec.writeSidecar(spark, dir, m, newVer)
+            out
+          }
+          a.name -> consolidate(a.versions, ps, present, newVer)
+        }.toMap)
       }
-      a.name -> consolidate(a.versions, ps, present, newVer)
-    }.toMap
-    val committed = commit(spark, dir, newVer,
-      spec.render(spec.updated(m, newVer, versions)), crashPoint)
-    if (committed) picked.head._2 else Seq.empty
+    }
+    if (committed) primary else Seq.empty
   }
 
   /** EXPORT (deep clone) of the index AS OF `version` (default CURRENT,

@@ -87,7 +87,7 @@ object MinhashIndex {
       bandstats: Boolean = false)
 
   /** The minhash layout for the shared lifecycle verbs. */
-  private object Spec extends ManifestIO.IndexSpec[Manifest] {
+  private[graft] object Spec extends ManifestIO.IndexSpec[Manifest] {
     val what = "minhash index"
 
     def render(m: Manifest): String = {
@@ -136,6 +136,10 @@ object MinhashIndex {
         versions: Map[String, Map[Int, Seq[Long]]]): Manifest =
       m.copy(version = version, bucketVersions = versions("rows"),
         bandVersions = versions("bands"))
+
+    def txns(m: Manifest): Map[String, Long] = m.txns
+
+    def withTxns(m: Manifest, txns: Map[String, Long]): Manifest = m.copy(txns = txns)
   }
 
   /** The committed manifest — every reader's one CURRENT read. */
@@ -278,23 +282,21 @@ object MinhashIndex {
     * one would silently miss every older doc's band rows and the gate
     * would stop catching their near-dups; this tick builds the
     * COMPLETE artifact in one committed version.) A dir that already
-    * has one is a no-op (returns false). CRASH-ATOMIC like every
-    * tick. */
+    * has one is a no-op (returns false). One [[ManifestIO.tick]]. */
   def buildBands(spark: SparkSession, dir: String,
       bandBuckets: Int = BandBuckets): Boolean = {
     require(bandBuckets > 0, s"band bucket count must be positive, got $bandBuckets")
-    val m = readManifest(spark, dir)
-    if (m.bandBuckets > 0) return false // already maintained: no tick
-    val newVer = m.version + 1
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val presentBb =
-      if (m.bucketVersions.isEmpty) Map.empty[Int, Seq[Long]]
-      else writeBands(bandRowsDF(readRowsAt(spark, dir, m).select(col("sid"), col("bhs")),
-        bandBuckets), dir, newVer, bandstats = true).map(_ -> Seq(newVer)).toMap
-    ManifestIO.commit(spark, dir, newVer,
-      Spec.render(m.copy(version = newVer, bandBuckets = bandBuckets,
-        bandVersions = presentBb, bandstats = true)))
-    true
+    ManifestIO.tick(spark, dir, Spec, None) { m =>
+      if (m.bandBuckets > 0) None // already maintained: no tick
+      else Some { newVer =>
+        val presentBb =
+          if (m.bucketVersions.isEmpty) Map.empty[Int, Seq[Long]]
+          else writeBands(bandRowsDF(readRowsAt(spark, dir, m).select(col("sid"), col("bhs")),
+            bandBuckets), dir, newVer, bandstats = true).map(_ -> Seq(newVer)).toMap
+        m.copy(version = newVer, bandBuckets = bandBuckets, bandVersions = presentBb,
+          bandstats = true)
+      }
+    }
   }
 
   /** GATE (serve): which batch documents near-duplicate the committed
@@ -458,217 +460,226 @@ object MinhashIndex {
     * rows, ADMIT every batch doc with no qualifying near-dup (and no
     * replayed sid — the same defense), and append the admitted docs'
     * signature rows as ONE committed tick (new data version accreting
-    * onto the touched buckets' — and band partitions' — version lists
-    * + one CURRENT rename, `txn`-capable for exactly-once streaming).
+    * onto the touched buckets' — and band partitions' — version lists).
     * Returns the per-doc verdicts (sid, admitted, n_ref_matches) —
     * computed and pinned BEFORE the commit, so a caller routing
-    * admitted docs downstream and the index always agree. The batch
-    * pays one tokenize+minhash scan ([[Dedup.minhashDocIndex]],
-    * pinned); the committed side is the PRUNED band probe plus the
-    * candidate/replay sid-bucket reads — never a full index read. */
+    * admitted docs downstream and the index always agree; a re-delivered
+    * `txn` epoch returns the empty verdict frame (nothing admitted
+    * twice). `onDecisions` receives the verdicts before the commit — a
+    * writer dying between the two re-delivers the epoch, recomputes the
+    * identical verdicts against the unchanged committed state and
+    * rewrites them; dying after the commit leaves them written (the
+    * streaming sink's exactly-once pairing of decisions dir + ledger).
+    * The batch pays one tokenize+minhash scan
+    * ([[Dedup.minhashDocIndex]], pinned); the committed side is the
+    * PRUNED band probe plus the candidate/replay sid-bucket reads —
+    * never a full index read. One [[ManifestIO.tick]]. */
   final case class Admission(decisions: DataFrame, appended: Long)
 
   def admit(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String, textCol: String, threshold: Double,
-      maxBucket: Int = Int.MaxValue): Admission =
-    admitHooked(spark, dir, newDocs, idCol, textCol, threshold, maxBucket,
-      crashPoint = 0)
-
-  /** [[admit]] carrying a writer transaction (appId, epoch) — a
-    * re-delivered epoch returns the no-op verdict frame (nothing
-    * admitted twice); see [[ManifestIO.txnAlreadyApplied]]. */
-  def admitTxn(spark: SparkSession, dir: String, newDocs: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      appId: String, epoch: Long, maxBucket: Int = Int.MaxValue,
+      maxBucket: Int = Int.MaxValue, txn: Option[(String, Long)] = None,
       onDecisions: DataFrame => Unit = _ => ()): Admission =
-    admitHooked(spark, dir, newDocs, idCol, textCol, threshold, maxBucket,
-      crashPoint = 0, txn = Some((appId, epoch)), onDecisions = onDecisions)
+    admitTick(spark, dir, newDocs, idCol, textCol, threshold, maxBucket, txn,
+      onDecisions)
 
-  /** [[admit]] with the standard injectable writer-death points
-    * (1 = after the data write; 2 = after manifest, before flip). */
-  private[graft] def admitHooked(spark: SparkSession, dir: String,
+  /** The ACCRETING kernel behind [[admit]]; `crashPoint` as in
+    * [[ManifestIO.tick]]. */
+  private[graft] def admitTick(spark: SparkSession, dir: String,
       newDocs: DataFrame, idCol: String, textCol: String, threshold: Double,
-      maxBucket: Int, crashPoint: Int,
-      txn: Option[(String, Long)] = None,
-      onDecisions: DataFrame => Unit = _ => ()): Admission = {
+      maxBucket: Int, txn: Option[(String, Long)] = None,
+      onDecisions: DataFrame => Unit = _ => (), crashPoint: Int = 0): Admission = {
     import spark.implicits._
-    val m = readManifest(spark, dir)
-    val emptyDecisions = Seq.empty[(Long, Boolean, Long)]
-      .toDF("sid", "admitted", "n_ref_matches")
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn))
-      return Admission(emptyDecisions, 0L) // retried epoch: already committed
-    val newVer = m.version + 1
-    // the uniform intra-batch rule first (ManifestIO.dedupBatch): a
-    // doc re-submitted within one micro-batch gates and admits ONCE
-    // (duplicate signature rows would emit duplicate band rows — and
-    // duplicated pairs — on every later gate); two texts under one id
-    // reject loudly. Then ONE tokenize+minhash scan of the batch,
-    // pinned: the gate probe, the verdicts and the admitted-subset
-    // write all see the same rows.
-    val batchDocs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol),
-      "minhash admission")
-    val batchIndex = Dedup.minhashDocIndex(batchDocs, idCol, textCol,
-      m.n, m.bands, m.rowsPerBand).localCheckpoint(true)
-    if (batchIndex.isEmpty) return Admission(emptyDecisions, 0L)
-    val gatePairs =
-      if (m.bandBuckets > 0)
-        gatePairsPruned(spark, dir, m, batchIndex, threshold, maxBucket)
-      else Dedup.acrossPairs(
-        Dedup.indexBandRows(batchIndex, m.bands, isNew = true)
-          .unionAll(Dedup.indexBandRows(readRowsAt(spark, dir, m), m.bands,
-            isNew = false)),
-        threshold, maxBucket)
-    val matches = gatePairs.groupBy(col("da").as("sid"))
-      .agg(count(lit(1)).as("n_ref_matches"))
-    // a replayed sid (already committed) pairs with nothing through the
-    // same-id guard; its verdict must still be admitted=false or the
-    // caller would double-ingest it — the minhashIndexAdmit defense,
-    // kept verbatim on the committed rail. sid→bucket is a pure
-    // function, so the check reads only the BATCH sids' candidate
-    // buckets, never the whole index (round-15 What's-wrong #3).
-    val candSidB = batchIndex.select(bucketOf(m.buckets))
-      .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
-      .filter(m.bucketVersions.contains)
-    val replayed = readRowsAt(spark, dir, m, Some(candSidB.toSet))
-      .join(batchIndex.select(col("sid")), Seq("sid"), "left_semi")
-      .select(col("sid")).distinct()
-      .withColumn("replayed", lit(true))
-    // decisions are batch-sized and consumed twice (returned + the
-    // admitted-subset anti-join): pin them so verdicts and the written
-    // rows cannot diverge
-    val decisions = batchIndex.select(col("sid"))
-      .join(matches, Seq("sid"), "left")
-      .join(replayed, Seq("sid"), "left")
-      .select(col("sid"),
-        (col("n_ref_matches").isNull && col("replayed").isNull).as("admitted"),
-        coalesce(col("n_ref_matches"), lit(0L)).as("n_ref_matches"))
-      .localCheckpoint(true)
-    // the verdict sink runs BEFORE the commit: a writer dying between
-    // the two re-delivers the epoch, recomputes the identical verdicts
-    // against the unchanged committed state and rewrites them — dying
-    // after the commit leaves them already written; either way the
-    // epoch's verdicts survive (the streaming sink's exactly-once
-    // pairing of decisions dir + txn ledger)
-    onDecisions(decisions)
-    // the gate counts the PINNED decisions (cheap scan of a batch-sized
-    // checkpoint) so the batchIndex ⋈ decisions join below executes
-    // exactly once, at the write
-    val appended = decisions.filter(col("admitted")).count()
-    if (appended == 0L) return Admission(decisions, 0L) // nothing admitted: index already post-tick
-    val admittedRows = batchIndex
-      .join(decisions.filter(col("admitted")).select(col("sid")), Seq("sid"))
-      .select(col("sid"), col("gs"), col("bhs"), bucketOf(m.buckets))
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val touched = ManifestIO.writePartitioned(admittedRows, dir, newVer, "rows", "bucket")
-    // the band artifact accretes the same admitted docs (derived from
-    // the same two pins, so rows and bands cannot diverge); the
-    // occupancy sidecar rides the same write
-    val touchedBb =
-      if (m.bandBuckets > 0)
-        writeBands(bandRowsDF(admittedRows.select(col("sid"), col("bhs")), m.bandBuckets),
-          dir, newVer, m.bandstats)
-      else Seq.empty
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-        ManifestIO.accrete(m.bucketVersions, touched, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets,
-        ManifestIO.accrete(m.bandVersions, touchedBb, newVer), m.bandstats)), crashPoint)
-    Admission(decisions, appended)
-  }
-
-  /** DELETE tick — id-only takedown with NO scan at all: sid→bucket is
-    * a pure function (pmod(xxhash64(sid), buckets)), so only the
-    * requests' buckets are read, anti-joined and consolidated into the
-    * new version (~1/B of the index per batch — better locality than
-    * either sibling's id-only path); the matched rows' band partitions
-    * (a pure function of their bhs) consolidate in the same commit.
-    * Ids never ingested match nothing; a bucket emptied by the delete
-    * leaves the manifest; superseded version history is the next
-    * vacuum's food. CRASH-ATOMIC + exactly-once like every tick. */
-  def deleteByIds(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    deleteByIdsHooked(spark, dir, ids, crashPoint = 0)
-
-  /** [[deleteByIds]] carrying a writer transaction. */
-  def deleteByIdsTxn(spark: SparkSession, dir: String, ids: DataFrame,
-      appId: String, epoch: Long): Unit =
-    deleteByIdsHooked(spark, dir, ids, crashPoint = 0,
-      txn = Some((appId, epoch)))
-
-  /** [[deleteByIds]] with the standard injectable writer-death points. */
-  private[graft] def deleteByIdsHooked(spark: SparkSession, dir: String,
-      ids: DataFrame, crashPoint: Int,
-      txn: Option[(String, Long)] = None): Unit = {
-    val m = readManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    val delIds = ids.select(col("sid").cast("long").as("sid"))
-      .distinct().localCheckpoint(true)
-    if (delIds.isEmpty) return
-    // the requests' buckets by the pure sid→bucket function — no scan
-    // participates in locating the CANDIDATE buckets; one read of just
-    // those buckets then confirms which actually hold a matching row,
-    // so ids never ingested (or already deleted) commit nothing — the
-    // re-delete-proof contract, at candidate-buckets cost (~1/B)
-    val candidates = delIds.select(bucketOf(m.buckets))
-      .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
-      .filter(m.bucketVersions.contains)
-    if (candidates.isEmpty) return // no materialized bucket can hold these ids
-    // the matched rows, PINNED: the touched-bucket plan, the band-
-    // partition plan (their bhs) and the no-op gate all read them
-    val matched = readRowsAt(spark, dir, m, Some(candidates.toSet))
-      .join(delIds, Seq("sid"), "left_semi")
-      .select(col("sid"), col("bhs"), col("bucket"))
-      .localCheckpoint(true)
-    val touched = matched.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)) // ≤ candidate count values
-    if (touched.isEmpty) return // no id matched: the index already is the post-tick state
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val present = ManifestIO.writePartitioned(readRowsAt(spark, dir, m, Some(touched.toSet))
-      .join(delIds, Seq("sid"), "left_anti")
-      .select(col("sid"), col("gs"), col("bhs"), col("bucket")), dir, newVer, "rows", "bucket")
-    // band consolidation: the matched rows' bb partitions — a pure
-    // function of their bhs — rewrite without the deleted sids
-    val newBands = if (m.bandBuckets == 0) m.bandVersions else {
-      val tb = bandRowsDF(matched.select(col("sid"), col("bhs")), m.bandBuckets)
-        .select(col("bb")).distinct()
-        .collect().map(_.getInt(0)) // ≤ bandBuckets values
-        .filter(m.bandVersions.contains)
-      if (tb.isEmpty) m.bandVersions
-      else ManifestIO.consolidate(m.bandVersions, tb, writeBands(
-        readBandsAt(spark, dir, m, Some(tb.toSet))
-          .join(delIds, Seq("sid"), "left_anti")
-          .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb")),
-        dir, newVer, m.bandstats), newVer)
+    var result = Admission(Seq.empty[(Long, Boolean, Long)]
+      .toDF("sid", "admitted", "n_ref_matches"), 0L)
+    ManifestIO.tick(spark, dir, Spec, txn, crashPoint) { m =>
+      // the uniform intra-batch rule first (ManifestIO.dedupBatch): a
+      // doc re-submitted within one micro-batch gates and admits ONCE
+      // (duplicate signature rows would emit duplicate band rows — and
+      // duplicated pairs — on every later gate); two texts under one id
+      // reject loudly. Then ONE tokenize+minhash scan of the batch,
+      // pinned: the gate probe, the verdicts and the admitted-subset
+      // write all see the same rows.
+      val batchDocs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol),
+        "minhash admission")
+      val batchIndex = Dedup.minhashDocIndex(batchDocs, idCol, textCol,
+        m.n, m.bands, m.rowsPerBand).localCheckpoint(true)
+      if (batchIndex.isEmpty) None
+      else {
+        val gatePairs =
+          if (m.bandBuckets > 0)
+            gatePairsPruned(spark, dir, m, batchIndex, threshold, maxBucket)
+          else Dedup.acrossPairs(
+            Dedup.indexBandRows(batchIndex, m.bands, isNew = true)
+              .unionAll(Dedup.indexBandRows(readRowsAt(spark, dir, m), m.bands,
+                isNew = false)),
+            threshold, maxBucket)
+        val matches = gatePairs.groupBy(col("da").as("sid"))
+          .agg(count(lit(1)).as("n_ref_matches"))
+        // a replayed sid (already committed) pairs with nothing through
+        // the same-id guard; its verdict must still be admitted=false or
+        // the caller would double-ingest it — the minhashIndexAdmit
+        // defense, kept verbatim. sid→bucket is a pure function, so the
+        // check reads only the BATCH sids' candidate buckets.
+        val candSidB = batchIndex.select(bucketOf(m.buckets))
+          .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
+          .filter(m.bucketVersions.contains)
+        val replayed = readRowsAt(spark, dir, m, Some(candSidB.toSet))
+          .join(batchIndex.select(col("sid")), Seq("sid"), "left_semi")
+          .select(col("sid")).distinct()
+          .withColumn("replayed", lit(true))
+        // decisions are batch-sized and consumed twice (returned + the
+        // admitted-subset join): pinned so verdicts and the written rows
+        // cannot diverge
+        val decisions = batchIndex.select(col("sid"))
+          .join(matches, Seq("sid"), "left")
+          .join(replayed, Seq("sid"), "left")
+          .select(col("sid"),
+            (col("n_ref_matches").isNull && col("replayed").isNull).as("admitted"),
+            coalesce(col("n_ref_matches"), lit(0L)).as("n_ref_matches"))
+          .localCheckpoint(true)
+        onDecisions(decisions)
+        // counted off the PINNED decisions, so the batchIndex ⋈ decisions
+        // join below executes exactly once, at the write
+        val appended = decisions.filter(col("admitted")).count()
+        result = Admission(decisions, appended)
+        if (appended == 0L) None // nothing admitted: index already post-tick
+        else Some { newVer =>
+          val admittedRows = batchIndex
+            .join(decisions.filter(col("admitted")).select(col("sid")), Seq("sid"))
+            .select(col("sid"), col("gs"), col("bhs"), bucketOf(m.buckets))
+          val touched = ManifestIO.writePartitioned(admittedRows, dir, newVer, "rows", "bucket")
+          // the band artifact accretes the same admitted docs (derived
+          // from the same two pins, so rows and bands cannot diverge);
+          // the occupancy sidecar rides the same write
+          val touchedBb =
+            if (m.bandBuckets > 0)
+              writeBands(bandRowsDF(admittedRows.select(col("sid"), col("bhs")),
+                m.bandBuckets), dir, newVer, m.bandstats)
+            else Seq.empty
+          m.copy(version = newVer,
+            bucketVersions = ManifestIO.accrete(m.bucketVersions, touched, newVer),
+            bandVersions = ManifestIO.accrete(m.bandVersions, touchedBb, newVer))
+        }
+      }
     }
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-        ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands, m.bandstats)), crashPoint)
+    result
   }
+
+  /** What a consolidating minhash tick takes out, located against the
+    * tick's pinned manifest: the sids leaving (distinct), the
+    * materialized sid-buckets to rewrite, and the (sid, bhs) of the
+    * committed copies leaving — their band partitions are a pure
+    * function of bhs. */
+  private[graft] final case class Removal(ids: DataFrame, buckets: Seq[Int],
+      old: DataFrame)
+
+  /** A removal locator: None = nothing to do, no commit. */
+  private[graft] type Locate = (SparkSession, String, Manifest) => Option[Removal]
+
+  /** The CONSOLIDATING kernel behind [[deleteByIds]], [[upsert]] and
+    * [[applyChanges]]: the located sid-buckets are rewritten ONCE as
+    * (committed − removed sids) ∪ new signature rows — an id's old and
+    * new rows share one bucket, sid→bucket being a pure function — and
+    * the band partitions of the old copies' and the new rows' bhs
+    * rewrite the same way in the same commit; emptied partitions leave
+    * the manifest. `upserts` are pinned, id-distinct (sid, text) rows;
+    * a doc too short to shingle (< n tokens) gets NO new row, its old
+    * rows still leave — the family's totality convention. */
+  private[graft] def changeTick(spark: SparkSession, dir: String,
+      upserts: Option[DataFrame], locate: Locate,
+      txn: Option[(String, Long)] = None, crashPoint: Int = 0): Unit =
+    ManifestIO.tick(spark, dir, Spec, txn, crashPoint) { m =>
+      locate(spark, dir, m).map { rm => newVer =>
+        val newRows = upserts.map(Dedup.minhashDocIndex(_, "sid", "text",
+            m.n, m.bands, m.rowsPerBand)
+          .select(col("sid"), col("gs"), col("bhs"), bucketOf(m.buckets))
+          .localCheckpoint(true))
+        val kept = readRowsAt(spark, dir, m, Some(rm.buckets.toSet))
+          .join(rm.ids, Seq("sid"), "left_anti")
+          .select(col("sid"), col("gs"), col("bhs"), col("bucket"))
+        val present = ManifestIO.writePartitioned(newRows.fold(kept)(n => kept.unionByName(n)),
+          dir, newVer, "rows", "bucket")
+        val newBands = if (m.bandBuckets == 0) m.bandVersions else {
+          val newBhs = newRows.map(_.select(col("sid"), col("bhs")))
+          // the old copies' bbs ∪ the new rows' bbs: every old band row's
+          // bb is in this set, so one anti ∪ new rewrite per bb
+          val tb = bandRowsDF(newBhs.fold(rm.old)(n => rm.old.unionByName(n)), m.bandBuckets)
+            .select(col("bb")).distinct()
+            .collect().map(_.getInt(0)).toSeq // ≤ bandBuckets values
+            .filter(m.bandVersions.contains)
+          if (tb.isEmpty && upserts.isEmpty) m.bandVersions
+          else {
+            val keptB = readBandsAt(spark, dir, m, Some(tb.toSet))
+              .join(rm.ids, Seq("sid"), "left_anti")
+              .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb"))
+            ManifestIO.consolidate(m.bandVersions, tb, writeBands(newBhs.fold(keptB)(n =>
+              keptB.unionByName(bandRowsDF(n, m.bandBuckets))), dir, newVer, m.bandstats),
+              newVer)
+          }
+        }
+        m.copy(version = newVer,
+          bucketVersions = ManifestIO.consolidate(m.bucketVersions, rm.buckets, present, newVer),
+          bandVersions = newBands)
+      }
+    }
+
+  /** Locate by sid ([[deleteByIds]], [[upsert]], [[applyChanges]]) with
+    * NO scan: the candidate buckets are a pure function of the ids, and
+    * one read of just those (~1/B of the index) finds the committed
+    * copies. A pure delete rewrites only buckets that actually hold a
+    * match and is no tick when nothing matches (re-delete-proof); an
+    * upsert rewrites every candidate bucket, where its new rows land. */
+  private[graft] def byIds(ids0: DataFrame, upserting: Boolean): Locate =
+    (spark, dir, m) => {
+      val ids = ids0.select(col("sid")).distinct().localCheckpoint(true)
+      val cand =
+        if (ids.isEmpty) Seq.empty[Int]
+        else ids.select(bucketOf(m.buckets)).distinct()
+          .collect().map(_.getInt(0)).toSeq // ≤ bucket count values
+          .filter(m.bucketVersions.contains)
+      if (ids.isEmpty || (cand.isEmpty && !upserting)) None
+      else {
+        // the matched copies, PINNED: the touched-bucket plan, the band
+        // plan (their bhs) and the no-op gate all read them
+        val old = readRowsAt(spark, dir, m, Some(cand.toSet))
+          .join(ids, Seq("sid"), "left_semi")
+          .select(col("sid"), col("bhs"), col("bucket"))
+          .localCheckpoint(true)
+        val buckets =
+          if (upserting) cand
+          else old.select(col("bucket")).distinct()
+            .collect().map(_.getInt(0)).toSeq // ≤ candidate count values
+        if (buckets.isEmpty && !upserting) None
+        else Some(Removal(ids, buckets, old.select(col("sid"), col("bhs"))))
+      }
+    }
+
+  /** DELETE tick — id-only takedown with NO scan at all ([[byIds]]):
+    * only the requests' buckets are read, anti-joined and consolidated
+    * into the new version (~1/B of the index per batch — better
+    * locality than either sibling's id-only path); the matched rows'
+    * band partitions consolidate in the same commit. Ids never ingested
+    * match nothing and commit nothing. One [[ManifestIO.tick]]. */
+  def deleteByIds(spark: SparkSession, dir: String, ids: DataFrame,
+      txn: Option[(String, Long)] = None): Unit =
+    changeTick(spark, dir, None,
+      byIds(ids.select(col("sid").cast("long").as("sid")), upserting = false), txn)
 
   /** UPSERT tick — the REFRESH verb (the [[Bm25.upsertIndex]]
     * sibling): `docs` carries (id, text) rows whose NEW signature rows
     * REPLACE any committed rows of the same sid, and sids the index
     * has never seen plain-append — one crash-atomic commit, bypassing
     * the admission gate (a refresh is a correction, not a candidate).
-    * sid→bucket is a pure function, so both the old rows and the new
-    * rows of an id live in the SAME buckets: the tick reads ≤ |ids|
-    * bucket dirs and rewrites each once with
-    * (existing − batch sids) ∪ new rows; the affected band partitions
-    * (old rows' bhs ∪ new rows' bhs) rewrite in the same commit. A
-    * doc whose new text is too short to shingle (< n tokens) gets NO
-    * new row — its old rows still leave, the family's totality
-    * convention. Batch deduplicated by id (set semantics; conflicting
-    * revisions reject — [[ManifestIO.dedupBatch]]). */
+    * A doc too short to shingle loses its old rows and gains none.
+    * Conflicting revisions of one id reject
+    * ([[ManifestIO.dedupBatch]]). */
   def upsert(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, textCol: String): Unit =
-    upsertHooked(spark, dir, docs, idCol, textCol, crashPoint = 0)
-
-  /** [[upsert]] carrying a writer transaction. */
-  def upsertTxn(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, textCol: String, appId: String, epoch: Long): Unit =
-    upsertHooked(spark, dir, docs, idCol, textCol, crashPoint = 0,
-      txn = Some((appId, epoch)))
+      idCol: String, textCol: String, txn: Option[(String, Long)] = None): Unit = {
+    val up = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "minhash upsert")
+      .select(col(idCol).cast("long").as("sid"), col(textCol).as("text"))
+    changeTick(spark, dir, Some(up), byIds(up, upserting = true), txn)
+  }
 
   /** CHANGE-APPLY tick — the CDC verb (the [[Bm25.applyChanges]]
     * sibling): ONE mixed micro-batch of upserts and deletes folds into
@@ -678,97 +689,12 @@ object MinhashIndex {
     * semantics — text ignored). An id carrying both ops in one batch
     * is rejected, as are conflicting upsert revisions. */
   def applyChanges(spark: SparkSession, dir: String, changes: DataFrame,
-      opCol: String, idCol: String, textCol: String): Unit =
-    applyChangesHooked(spark, dir, changes, opCol, idCol, textCol,
-      crashPoint = 0)
-
-  /** [[applyChanges]] carrying a writer transaction. */
-  def applyChangesTxn(spark: SparkSession, dir: String, changes: DataFrame,
       opCol: String, idCol: String, textCol: String,
-      appId: String, epoch: Long): Unit =
-    applyChangesHooked(spark, dir, changes, opCol, idCol, textCol,
-      crashPoint = 0, txn = Some((appId, epoch)))
-
-  /** [[applyChanges]] with the standard injectable writer-death
-    * points. */
-  private[graft] def applyChangesHooked(spark: SparkSession, dir: String,
-      changes: DataFrame, opCol: String, idCol: String, textCol: String,
-      crashPoint: Int, txn: Option[(String, Long)] = None): Unit = {
-    val (ups, dels) =
-      ManifestIO.splitChanges(changes, opCol, idCol, Seq(textCol))
-    upsertCore(spark, dir, ups, dels.select(col(idCol).as("sid")),
-      idCol, textCol, crashPoint, txn)
-  }
-
-  /** [[upsert]] with the standard injectable writer-death points. */
-  private[graft] def upsertHooked(spark: SparkSession, dir: String,
-      docs: DataFrame, idCol: String, textCol: String, crashPoint: Int,
       txn: Option[(String, Long)] = None): Unit = {
-    // the uniform intra-batch rule (ManifestIO.dedupBatch): exact
-    // duplicates collapse, two revisions of one id reject loudly
-    val pinned = ManifestIO.dedupBatch(docs, idCol, Seq(textCol),
-      "minhash upsert")
-    upsertCore(spark, dir, pinned,
-      pinned.select(col(idCol).cast("long").as("sid")).limit(0),
-      idCol, textCol, crashPoint, txn)
-  }
-
-  /** The shared replace-or-insert core: `pinned` (id, text) upserts,
-    * `extraDeleteSids` pure removals folded into the same commit —
-    * empty for a plain [[upsert]]. `pinned` must already be pinned and
-    * id-distinct. */
-  private def upsertCore(spark: SparkSession, dir: String,
-      pinned: DataFrame, extraDeleteSids: DataFrame,
-      idCol: String, textCol: String, crashPoint: Int,
-      txn: Option[(String, Long)]): Unit = {
-    val m = readManifest(spark, dir)
-    if (ManifestIO.txnAlreadyApplied(m.txns, txn)) return // retried epoch: already committed
-    val newVer = m.version + 1
-    val upSids = pinned.select(col(idCol).cast("long").as("sid"))
-      .unionByName(extraDeleteSids.select(col("sid")))
-      .distinct().localCheckpoint(true)
-    if (upSids.isEmpty) return // empty batch: the index already is the post-tick state
-    val newRows = Dedup.minhashDocIndex(pinned, idCol, textCol,
-        m.n, m.bands, m.rowsPerBand)
-      .select(col("sid"), col("gs"), col("bhs"), bucketOf(m.buckets))
-      .localCheckpoint(true)
-    // candidate buckets: a pure function of the batch's ids (the new
-    // rows' sids are a subset of the batch's, so their buckets are too)
-    val candB = upSids.select(bucketOf(m.buckets))
-      .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
-    val candOld = candB.filter(m.bucketVersions.contains).toSet
-    // ONE materialization of the candidate buckets' committed rows:
-    // the rewrite (anti-join), and on a banded index the old copies'
-    // band-partition plan (semi-join for their bhs), both read it
-    val candRows = readRowsAt(spark, dir, m, Some(candOld))
-      .localCheckpoint(true)
-    ManifestIO.guardSlot(spark, dir, newVer)
-    val present = ManifestIO.writePartitioned(candRows
-      .join(upSids, Seq("sid"), "left_anti")
-      .select(col("sid"), col("gs"), col("bhs"), col("bucket"))
-      .unionByName(newRows), dir, newVer, "rows", "bucket")
-    // band rewrite: the affected partitions are the OLD copies' bbs
-    // (from their committed bhs) ∪ the NEW rows' bbs — every old band
-    // row's bb is in that set, so one anti ∪ new rewrite per bb
-    val newBands = if (m.bandBuckets == 0) m.bandVersions else {
-      val oldBhs = candRows.join(upSids, Seq("sid"), "left_semi")
-        .select(col("sid"), col("bhs"))
-      val tbOld = bandRowsDF(oldBhs.unionByName(
-          newRows.select(col("sid"), col("bhs"))), m.bandBuckets)
-        .select(col("bb")).distinct()
-        .collect().map(_.getInt(0)) // ≤ bandBuckets values
-        .filter(m.bandVersions.contains)
-      ManifestIO.consolidate(m.bandVersions, tbOld, writeBands(
-        readBandsAt(spark, dir, m, Some(tbOld.toSet))
-          .join(upSids, Seq("sid"), "left_anti")
-          .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb"))
-          .unionByName(bandRowsDF(newRows.select(col("sid"), col("bhs")), m.bandBuckets)),
-        dir, newVer, m.bandstats), newVer)
-    }
-    ManifestIO.commit(spark, dir, newVer, Spec.render(
-      Manifest(newVer, m.buckets, m.n, m.bands, m.rowsPerBand,
-        ManifestIO.consolidate(m.bucketVersions, candOld, present, newVer),
-        ManifestIO.mergeTxn(m.txns, txn), m.bandBuckets, newBands, m.bandstats)), crashPoint)
+    val (ups, dels) = ManifestIO.splitChanges(changes, opCol, idCol, Seq(textCol))
+    val up = ups.select(col(idCol).cast("long").as("sid"), col(textCol).as("text"))
+    changeTick(spark, dir, Some(up), byIds(up.select(col("sid"))
+      .unionByName(dels.select(col(idCol).as("sid"))), upserting = true), txn)
   }
 
   /** COMPACT tick ([[ManifestIO.compact]]): admissions ACCRETE, so
@@ -778,12 +704,7 @@ object MinhashIndex {
     * entry collapses. Returns the compacted `rows` bucket ids (band
     * partitions compact in the same tick, unreported). */
   def compact(spark: SparkSession, dir: String, minVersions: Int = 2): Seq[Int] =
-    compactHooked(spark, dir, minVersions, crashPoint = 0)
-
-  /** [[compact]] with the standard injectable writer-death points. */
-  private[graft] def compactHooked(spark: SparkSession, dir: String,
-      minVersions: Int, crashPoint: Int): Seq[Int] =
-    ManifestIO.compact(spark, dir, Spec, minVersions, crashPoint)
+    ManifestIO.compact(spark, dir, Spec, minVersions, crashPoint = 0)
 
   /** Fixed-point scale of the occupancy metrics ([[indexProfile]] /
     * [[occupancyVerdict]]): floor(mean · 10⁶) as BIGINT — integral

@@ -430,15 +430,6 @@ object Pcap {
     r.load(path).as[Frame]
   }
 
-  /** binaryFile-based fallback (kept for environments where the v2
-    * source is not on the classpath). */
-  def framesViaBinaryFile(spark: SparkSession, path: String): Dataset[Frame] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) => decodeFile(p, bytes) }
-  }
-
   /** S4: DLT dispatch table (`diameter.py:21-25`, `gsm_map.py:15-20`):
     * link-type → (is-IPv4 predicate over the frame, link-header length).
     * DLT 141 (MTP3 on the wire) carries no IP layer — handled by the SS7

@@ -5,25 +5,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Ann, Bm25, MinhashIndex}
 
-/** Streaming maintenance of the standing indexes — the ingest-time
-  * form of the append ticks ([[Bm25.appendToIndex]],
-  * [[Ann.ivfIndexAppend]]): each micro-batch of arriving documents /
-  * vectors runs one committed append tick via `foreachBatch`.
+/** Streaming maintenance of the standing indexes: every micro-batch
+  * runs one committed write tick of any index verb via `foreachBatch`
+  * ([[txnSink]]) — append or admission, with compaction, vacuum and
+  * monitoring on a cadence ([[bm25Sink]], [[ivfSink]], [[minhashSink]]),
+  * or a takedown, refresh or CDC feed.
   *
   * Exactly-once, spelled out: Structured Streaming gives foreachBatch
   * AT-LEAST-ONCE delivery — after a failure between the sink call and
   * the engine's own commit, the SAME (batch, batchId) is re-delivered
-  * on restart. The tick makes the pair exactly-once by recording
-  * (appId, batchId) in the index manifest INSIDE the same atomic
-  * CURRENT flip that publishes the data ([[graft.operators.ManifestIO]]
-  * `txns` LEDGER, the Delta `txnAppId`/`txnVersion` discipline): a
-  * re-delivered epoch the manifest already records is a no-op, and a
-  * tick that crashed before its flip left no record — so its retry
-  * applies cleanly. The ledger is a MAP carried forward on every
-  * commit, so an interleaved manual tick (or a second stream on its
-  * own appId, or a rebuild) can never erase this stream's record.
-  * `appId` must be stable across restarts (choose it like a Delta
-  * txnAppId) and epochs per appId monotone, which batchId is.
+  * on restart. Each verb's `txn` argument (appId, batchId) makes the
+  * pair exactly-once through the manifest's txn ledger
+  * ([[graft.operators.ManifestIO.tick]]). The ledger is a MAP carried
+  * forward on every commit, so an interleaved manual tick (or a second
+  * stream on its own appId, or a rebuild) can never erase this
+  * stream's record. `appId` must be stable across restarts (choose it
+  * like a Delta txnAppId) and epochs per appId monotone, which batchId
+  * is; the checkpoint must be durable.
   *
   * Single writer per index dir, as everywhere in the lifecycle: one
   * maintenance stream per index. A deployment that must share the dir
@@ -62,6 +60,29 @@ object IndexMaintain {
         finally timer.cancel()
       }
 
+  /** THE streaming rail of the index write verbs: a foreachBatch sink
+    * running `verb(batch, Some((appId, epoch)))` once per micro-batch —
+    * e.g. an id-only takedown feed:
+    * `txnSink(app)((b, txn) => Bm25.deleteByIds(b.sparkSession, dir, b, "doc_id", txn))`.
+    * Run ONE maintenance stream per index dir (single-writer
+    * discipline): ingest and takedown for the same index belong in one
+    * stream's foreachBatch, or in separate streams that never run
+    * concurrently, on DISTINCT appIds. A CDC feed interleaving upserts
+    * and deletes runs the applyChanges verb, whose ONE commit carries
+    * both (two verb ticks under one (appId, epoch) would be refused by
+    * the ledger). */
+  def txnSink(appId: String)(
+      verb: (DataFrame, Option[(String, Long)]) => Unit): (DataFrame, Long) => Unit =
+    (batch, epoch) => verb(batch, Some((appId, epoch)))
+
+  /** Start `input` through `sink` under a durable checkpoint. */
+  private def start(input: DataFrame, checkpoint: String,
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(sink)
+      .start()
+
   /** True when epoch `epoch` is a maintenance-cadence tick (vacuum or
     * monitoring) under cadence `every` (0 = off). Epoch-keyed, so a
     * re-started stream re-delivering an epoch re-runs the same
@@ -94,9 +115,9 @@ object IndexMaintain {
       profileEvery: Int = 0, alarmDir: String = ""): (DataFrame, Long) => Unit = {
     require(profileEvery <= 0 || alarmDir.nonEmpty,
       "profileEvery needs an alarmDir — the cadence would write to the filesystem root")
-    (batch, epoch) => {
-      Bm25.appendToIndexTxn(batch.sparkSession, dir, batch, idCol, textCol,
-        appId, epoch)
+    txnSink(appId) { (batch, txn) =>
+      Bm25.appendToIndex(batch.sparkSession, dir, batch, idCol, textCol, txn)
+      val epoch = txn.get._2
       if (due(vacuumEvery, epoch)) {
         Bm25.compactIndex(batch.sparkSession, dir)
         Bm25.vacuumIndex(batch.sparkSession, dir, graceVersions)
@@ -116,11 +137,8 @@ object IndexMaintain {
       textCol: String, appId: String, checkpoint: String,
       vacuumEvery: Int = 0, graceVersions: Long = 2L,
       profileEvery: Int = 0, alarmDir: String = ""): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(bm25Sink(dir, idCol, textCol, appId, vacuumEvery,
-        graceVersions, profileEvery, alarmDir))
-      .start()
+    start(docs, checkpoint, bm25Sink(dir, idCol, textCol, appId, vacuumEvery,
+      graceVersions, profileEvery, alarmDir))
 
   /** The IVF foreachBatch sink body: arriving vectors are assigned
     * under the index's own committed centroids, one idempotent tick
@@ -134,8 +152,9 @@ object IndexMaintain {
       compactMinVersions: Int = 2): (DataFrame, Long) => Unit = {
     require(driftEvery <= 0 || alarmDir.nonEmpty,
       "driftEvery needs an alarmDir — the cadence would write to the filesystem root")
-    (batch, epoch) => {
-      Ann.ivfIndexAppendTxn(batch.sparkSession, dir, batch, appId, epoch)
+    txnSink(appId) { (batch, txn) =>
+      Ann.ivfIndexAppend(batch.sparkSession, dir, batch, txn)
+      val epoch = txn.get._2
       // compaction BEFORE vacuum: the compaction's freshly superseded
       // history is the same epoch's vacuum food (grace still guards
       // pinned readers). A re-delivered cadence epoch re-runs both —
@@ -169,90 +188,8 @@ object IndexMaintain {
       driftEvery: Int = 0, alarmDir: String = "",
       rebuildDropPct: Int = 25, compactEvery: Int = 0,
       compactMinVersions: Int = 2): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(ivfSink(dir, appId, vacuumEvery, graceVersions,
-        driftEvery, alarmDir, rebuildDropPct, compactEvery,
-        compactMinVersions))
-      .start()
-
-  // ── takedown streams: the DELETE verb on the same exactly-once rail ──
-  //
-  // A live deployment receives takedown / opt-out requests as a stream;
-  // each micro-batch runs one committed DELETE tick
-  // ([[graft.operators.Bm25.deleteFromIndex]] /
-  // [[graft.operators.Ann.ivfIndexDelete]]), idempotent under
-  // re-delivery through the same manifest txn ledger the append streams
-  // use. Run ONE maintenance stream per index dir (single-writer
-  // discipline) — ingest and takedown for the same index belong in one
-  // stream's foreachBatch, or in separate epochs of separate streams
-  // that never run concurrently; use DISTINCT appIds if they alternate.
-
-  /** The BM25 takedown sink: one committed delete tick per micro-batch
-    * of (idCol, textCol) rows — the text locates the term buckets. */
-  def bm25DeleteSink(dir: String, idCol: String, textCol: String,
-      appId: String): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      Bm25.deleteFromIndexTxn(batch.sparkSession, dir, batch, idCol, textCol,
-        appId, epoch)
-
-  /** Apply a streaming takedown-request frame to a standing BM25 index. */
-  def takedownBm25(docs: DataFrame, dir: String, idCol: String,
-      textCol: String, appId: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(bm25DeleteSink(dir, idCol, textCol, appId))
-      .start()
-
-  /** The IVF takedown sink: one committed delete tick per micro-batch
-    * of (cid, cvec) rows — the vector locates the cell. */
-  def ivfDeleteSink(dir: String, appId: String): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      Ann.ivfIndexDeleteTxn(batch.sparkSession, dir, batch, appId, epoch)
-
-  /** Apply a streaming takedown-request frame to a committed IVF index. */
-  def takedownIvf(vecs: DataFrame, dir: String, appId: String,
-      checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(ivfDeleteSink(dir, appId))
-      .start()
-
-  // ── id-only takedown streams: the fallback rail for request feeds
-  // that carry bare ids (the common legal opt-out shape) — one
-  // full-scan-locate, local-rewrite delete tick per micro-batch
-  // ([[graft.operators.Bm25.deleteByIds]] /
-  // [[graft.operators.Ann.ivfIndexDeleteByIds]]), exactly-once through
-  // the same txn ledger, re-delete-proof by construction (the stats /
-  // coverage derive from what the index actually holds, so an id
-  // already taken down in an earlier epoch folds to a no-op).
-
-  /** The BM25 id-only takedown sink: batch frame carries `idCol`. */
-  def bm25DeleteIdsSink(dir: String, idCol: String,
-      appId: String): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      Bm25.deleteByIdsTxn(batch.sparkSession, dir, batch, idCol, appId, epoch)
-
-  /** Apply a streaming id-only takedown feed to a standing BM25 index. */
-  def takedownBm25ByIds(ids: DataFrame, dir: String, idCol: String,
-      appId: String, checkpoint: String): StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(bm25DeleteIdsSink(dir, idCol, appId))
-      .start()
-
-  /** The IVF id-only (strict) takedown sink: batch frame carries cid. */
-  def ivfDeleteIdsSink(dir: String, appId: String): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      Ann.ivfIndexDeleteByIdsTxn(batch.sparkSession, dir, batch, appId, epoch)
-
-  /** Apply a streaming id-only takedown feed to a committed IVF index. */
-  def takedownIvfByIds(ids: DataFrame, dir: String, appId: String,
-      checkpoint: String): StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(ivfDeleteIdsSink(dir, appId))
-      .start()
+    start(vecs, checkpoint, ivfSink(dir, appId, vacuumEvery, graceVersions,
+      driftEvery, alarmDir, rebuildDropPct, compactEvery, compactMinVersions))
 
   // ── minhash-index maintenance: the third committed lifecycle on the
   // same rail ([[graft.operators.MinhashIndex]]) — each micro-batch of
@@ -260,8 +197,7 @@ object IndexMaintain {
   // the committed corpus, append only the non-duplicates), with the
   // per-doc verdicts landing under `decisionsDir/epoch=<id>` in
   // overwrite mode (idempotent under re-delivery, the alarm-dir
-  // discipline) so a downstream router can act on them. Takedown
-  // requests run the sid-bucket-local delete tick.
+  // discipline) so a downstream router can act on them.
 
   /** The minhash admission foreachBatch sink body. */
   def minhashSink(dir: String, idCol: String, textCol: String,
@@ -273,15 +209,15 @@ object IndexMaintain {
       occupancyGrowPct: Int = 50): (DataFrame, Long) => Unit = {
     require(driftEvery <= 0 || alarmDir.nonEmpty,
       "driftEvery needs an alarmDir — the cadence would write to the filesystem root")
-    (batch, epoch) => {
+    txnSink(appId) { (batch, txn) =>
+      val epoch = txn.get._2
       // verdicts land from INSIDE the tick, before its commit: a crash
       // on either side of the commit re-delivers the epoch and leaves
       // the decisions dir correct (recomputed-and-rewritten before an
       // uncommitted tick; already-written after a committed one, whose
       // retry no-ops through the ledger without touching the dir)
-      MinhashIndex.admitTxn(batch.sparkSession, dir, batch,
-        idCol, textCol, threshold, appId, epoch,
-        onDecisions = d => d.write.mode("overwrite")
+      MinhashIndex.admit(batch.sparkSession, dir, batch, idCol, textCol, threshold,
+        txn = txn, onDecisions = d => d.write.mode("overwrite")
           .parquet(s"$decisionsDir/epoch=$epoch"))
       // the ivfSink cadence rationale: compact first, vacuum eats the
       // superseded history; both idempotent under re-delivery
@@ -311,115 +247,7 @@ object IndexMaintain {
       graceVersions: Long = 2L, compactEvery: Int = 0,
       compactMinVersions: Int = 2, driftEvery: Int = 0,
       alarmDir: String = "", occupancyGrowPct: Int = 50): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(minhashSink(dir, idCol, textCol, threshold, appId,
-        decisionsDir, vacuumEvery, graceVersions, compactEvery,
-        compactMinVersions, driftEvery, alarmDir, occupancyGrowPct))
-      .start()
-
-  /** The minhash id-only takedown sink: batch frame carries `sid`. */
-  def minhashDeleteIdsSink(dir: String,
-      appId: String): (DataFrame, Long) => Unit =
-    (batch, epoch) =>
-      MinhashIndex.deleteByIdsTxn(batch.sparkSession, dir, batch, appId, epoch)
-
-  /** Apply a streaming id-only takedown feed to a committed minhash
-    * index (bucket-local: sid→bucket is a pure function, no scan). */
-  def takedownMinhashByIds(ids: DataFrame, dir: String, appId: String,
-      checkpoint: String): StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(minhashDeleteIdsSink(dir, appId))
-      .start()
-
-  // ── refresh streams: the UPSERT verb on the same exactly-once rail ──
-  //
-  // A live deployment's corrections arrive as a stream of replacement
-  // documents / vectors; each micro-batch runs one committed UPSERT
-  // tick (old copies out, new rows in, ONE flip —
-  // [[graft.operators.Bm25.upsertIndex]] /
-  // [[graft.operators.Ann.ivfIndexUpsert]] /
-  // [[graft.operators.MinhashIndex.upsert]]), idempotent under
-  // re-delivery through the manifest txn ledger. Single-writer
-  // discipline as everywhere: one maintenance stream per index dir.
-
-  /** Apply a streaming refresh feed (idCol, textCol rows) to a
-    * standing BM25 index: one committed upsert tick per micro-batch. */
-  def refreshBm25(docs: DataFrame, dir: String, idCol: String,
-      textCol: String, appId: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, epoch: Long) =>
-        Bm25.upsertIndexTxn(batch.sparkSession, dir, batch, idCol, textCol,
-          appId, epoch))
-      .start()
-
-  /** Apply a streaming refresh feed (cid, cvec rows) to a committed
-    * IVF index: one committed upsert tick per micro-batch. */
-  def refreshIvf(vecs: DataFrame, dir: String, appId: String,
-      checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, epoch: Long) =>
-        Ann.ivfIndexUpsertTxn(batch.sparkSession, dir, batch, appId, epoch))
-      .start()
-
-  /** Apply a streaming refresh feed (idCol, textCol rows) to a
-    * committed minhash index: one committed upsert tick per
-    * micro-batch (bypasses the admission gate — a refresh is a
-    * correction, not a candidate). */
-  def refreshMinhash(docs: DataFrame, dir: String, idCol: String,
-      textCol: String, appId: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, epoch: Long) =>
-        MinhashIndex.upsertTxn(batch.sparkSession, dir, batch, idCol, textCol,
-          appId, epoch))
-      .start()
-
-  // ── CDC streams: mixed-verb maintenance in one epoch ──
-  //
-  // A change-capture feed interleaves upserts and deletes; running two
-  // verb streams would either need two appIds racing the single-writer
-  // discipline, or two ticks under one (appId, epoch) — which the txn
-  // ledger (correctly) refuses. The CHANGE-APPLY tick
-  // ([[graft.operators.Bm25.applyChanges]] /
-  // [[graft.operators.Ann.ivfApplyChanges]] /
-  // [[graft.operators.MinhashIndex.applyChanges]]) folds the whole
-  // mixed batch in ONE commit: both verbs land atomically or neither.
-
-  /** Apply a streaming change feed (opCol ∈ 'upsert'|'delete', idCol,
-    * textCol) to a standing BM25 index. */
-  def cdcBm25(changes: DataFrame, dir: String, opCol: String, idCol: String,
-      textCol: String, appId: String, checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, epoch: Long) =>
-        Bm25.applyChangesTxn(batch.sparkSession, dir, batch, opCol, idCol,
-          textCol, appId, epoch))
-      .start()
-
-  /** Apply a streaming change feed (opCol, cid, cvec) to a committed
-    * IVF index. */
-  def cdcIvf(changes: DataFrame, dir: String, opCol: String,
-      appId: String, checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, epoch: Long) =>
-        Ann.ivfApplyChangesTxn(batch.sparkSession, dir, batch, opCol,
-          appId, epoch))
-      .start()
-
-  /** Apply a streaming change feed (opCol, idCol, textCol) to a
-    * committed minhash index. */
-  def cdcMinhash(changes: DataFrame, dir: String, opCol: String,
-      idCol: String, textCol: String, appId: String,
-      checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((batch: DataFrame, epoch: Long) =>
-        MinhashIndex.applyChangesTxn(batch.sparkSession, dir, batch, opCol,
-          idCol, textCol, appId, epoch))
-      .start()
+    start(docs, checkpoint, minhashSink(dir, idCol, textCol, threshold, appId,
+      decisionsDir, vacuumEvery, graceVersions, compactEvery,
+      compactMinVersions, driftEvery, alarmDir, occupancyGrowPct))
 }

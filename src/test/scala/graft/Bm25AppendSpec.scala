@@ -108,8 +108,8 @@ class Bm25AppendSpec extends AnyFunSuite {
     // manifest — the in-place tick's hazard window (new postings
     // visible with stale stats); here: absolutely nothing changes
     for (crashPoint <- Seq(1, 2)) {
-      Bm25.appendToIndexHooked(spark, dir, batch.toDF("doc_id", "text"),
-        "doc_id", "text", crashPoint)
+      Bm25.appendTick(spark, dir, batch.toDF("doc_id", "text"),
+        "doc_id", "text", crashPoint = crashPoint)
       assert(Bm25.readStats(spark, dir).select("n", "sdl").head().toSeq == beforeStats,
         s"crashPoint=$crashPoint leaked stats")
       assert(Bm25.serveTopK(spark, dir, q, 5).collect().map(_.toSeq).toSeq == beforeServe,

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Ann, MinhashIndex}
+import graft.operators.{Ann, ManifestIO, MinhashIndex}
 import graft.streaming.IndexMaintain
 
 /** The COMPACT tick of the accretive committed indexes
@@ -35,9 +35,9 @@ class IndexCompactSpec extends AnyFunSuite {
     Ann.ivfIndexBuild((100 until 120).map(i => (i.toLong, vec(i)))
       .toDF("cid", "cvec"), dir, cents)
     (0 until 4).foreach { t =>
-      Ann.ivfIndexAppendTxn(spark, dir,
+      Ann.ivfIndexAppend(spark, dir,
         (10 + t * 5 until 15 + t * 5).map(i => (i.toLong, vec(i)))
-          .toDF("cid", "cvec"), "compact-spec", t.toLong)
+          .toDF("cid", "cvec"), Some(("compact-spec", t.toLong)))
     }
     val before = Ann.readIvfManifest(spark, dir)
     assert(before.cellVersions.values.exists(_.distinct.size >= 3),
@@ -74,9 +74,9 @@ class IndexCompactSpec extends AnyFunSuite {
 
     // a re-delivered append epoch still no-ops through the carried ledger
     val m2 = Ann.readIvfManifest(spark, dir)
-    Ann.ivfIndexAppendTxn(spark, dir,
+    Ann.ivfIndexAppend(spark, dir,
       (10 until 15).map(i => (i.toLong, vec(i))).toDF("cid", "cvec"),
-      "compact-spec", 0L)
+      Some(("compact-spec", 0L)))
     assert(Ann.readIvfManifest(spark, dir) == m2)
 
     // the superseded fragments vacuum away; serving intact; the read
@@ -106,9 +106,9 @@ class IndexCompactSpec extends AnyFunSuite {
       (10 until 20).map(i => (i.toLong, vec(i))).toDF("cid", "cvec"))
     val m = Ann.readIvfManifest(spark, dir)
     val served = serve(dir)
-    Ann.ivfIndexCompactHooked(spark, dir, minVersions = 2, crashPoint = 1)
+    ManifestIO.compact(spark, dir, Ann.IvfSpec, minVersions = 2, crashPoint = 1)
     assert(Ann.readIvfManifest(spark, dir) == m && serve(dir) == served)
-    Ann.ivfIndexCompactHooked(spark, dir, minVersions = 2, crashPoint = 2)
+    ManifestIO.compact(spark, dir, Ann.IvfSpec, minVersions = 2, crashPoint = 2)
     assert(Ann.readIvfManifest(spark, dir) == m && serve(dir) == served)
     // the retry reuses the orphaned slot and commits
     assert(Ann.ivfIndexCompact(spark, dir, minVersions = 2).nonEmpty)
@@ -141,7 +141,7 @@ class IndexCompactSpec extends AnyFunSuite {
       dir => graft.operators.Bm25.serveTopK(spark, dir,
           Seq((1L, "w1"), (1L, "common"), (2L, "w6")).toDF("qid", "term"), 5)
         .orderBy(col("qid"), col("rank")).collect().map(_.toSeq).toSeq,
-      (dir, cp) => graft.operators.Bm25.compactIndexHooked(spark, dir, 2, cp)),
+      (dir, cp) => ManifestIO.compact(spark, dir, graft.operators.Bm25.Spec, 2, cp)),
     CrashCase("ivf",
       dir => {
         Ann.ivfIndexBuild((100 until 110).map(i => (i.toLong, vec(i)))
@@ -152,7 +152,7 @@ class IndexCompactSpec extends AnyFunSuite {
       dir => Ann.readIvfManifest(spark, dir),
       dir => Ann.readIvfManifest(spark, dir).version,
       serve,
-      (dir, cp) => Ann.ivfIndexCompactHooked(spark, dir, 2, cp)),
+      (dir, cp) => ManifestIO.compact(spark, dir, Ann.IvfSpec, 2, cp)),
     CrashCase("minhash",
       dir => {
         MinhashIndex.build((0 until 10).map(i =>
@@ -169,7 +169,7 @@ class IndexCompactSpec extends AnyFunSuite {
           (201L, "totally novel admission number 1 unlike all others ever more"))
           .toDF("doc_id", "text"), "doc_id", "text", Tau)
         .orderBy(col("da"), col("db")).collect().map(_.toSeq).toSeq,
-      (dir, cp) => MinhashIndex.compactHooked(spark, dir, 2, cp)))
+      (dir, cp) => ManifestIO.compact(spark, dir, MinhashIndex.Spec, 2, cp)))
 
   crashCases.foreach { c =>
     test(s"${c.family}: compact crash points 1 and 2 leave manifest and answers unmoved; the retry commits") {
@@ -199,10 +199,10 @@ class IndexCompactSpec extends AnyFunSuite {
     MinhashIndex.build(ref.toDF("doc_id", "text"), "doc_id", "text", dir,
       N, Bands, Rpb, buckets = 8)
     (0 until 3).foreach { t =>
-      MinhashIndex.admitTxn(spark, dir,
+      MinhashIndex.admit(spark, dir,
         Seq((100L + t, s"totally novel admission number $t unlike all others ever"))
           .toDF("doc_id", "text"),
-        "doc_id", "text", Tau, "mh-compact-spec", t.toLong)
+        "doc_id", "text", Tau, txn = Some(("mh-compact-spec", t.toLong)))
     }
     val before = MinhashIndex.readManifest(spark, dir)
     assert(before.bucketVersions.values.exists(_.distinct.size >= 2),

@@ -75,20 +75,20 @@ class IndexDeleteSpec extends AnyFunSuite {
     Bm25.buildIndex((keep ++ gone).toDF("doc_id", "text"), "doc_id", "text", dir)
     val before = Bm25.readManifest(spark, dir)
     // death after data writes: readers unmoved
-    Bm25.deleteFromIndexHooked(spark, dir, gone.toDF("doc_id", "text"),
-      "doc_id", "text", crashPoint = 1, txn = Some(("delA", 0L)))
+    Bm25.changeTick(spark, dir, None, Bm25.byText(gone.toDF("doc_id", "text"),
+      "doc_id", "text"), txn = Some(("delA", 0L)), crashPoint = 1)
     assert(Bm25.readManifest(spark, dir) == before)
     // death after manifest, before flip: still unmoved
-    Bm25.deleteFromIndexHooked(spark, dir, gone.toDF("doc_id", "text"),
-      "doc_id", "text", crashPoint = 2, txn = Some(("delA", 0L)))
+    Bm25.changeTick(spark, dir, None, Bm25.byText(gone.toDF("doc_id", "text"),
+      "doc_id", "text"), txn = Some(("delA", 0L)), crashPoint = 2)
     assert(Bm25.readManifest(spark, dir) == before)
     // the retry applies once; the re-delivery no-ops
-    Bm25.deleteFromIndexTxn(spark, dir, gone.toDF("doc_id", "text"),
-      "doc_id", "text", "delA", 0L)
+    Bm25.deleteFromIndex(spark, dir, gone.toDF("doc_id", "text"),
+      "doc_id", "text", Some(("delA", 0L)))
     val after = Bm25.readManifest(spark, dir)
     assert(after.version > before.version && after.txns.get("delA").contains(0L))
-    Bm25.deleteFromIndexTxn(spark, dir, gone.toDF("doc_id", "text"),
-      "doc_id", "text", "delA", 0L)
+    Bm25.deleteFromIndex(spark, dir, gone.toDF("doc_id", "text"),
+      "doc_id", "text", Some(("delA", 0L)))
     assert(Bm25.readManifest(spark, dir) == after)
     // deleting more docs than the index holds fails loudly
     val tooMany = (100 until 120).map(i => (i.toLong, "a b c"))
@@ -134,10 +134,10 @@ class IndexDeleteSpec extends AnyFunSuite {
 
     // txn re-delivery no-ops
     val m = Ann.readIvfManifest(spark, dir)
-    Ann.ivfIndexDeleteTxn(spark, dir, goneV.toDF("cid", "cvec"), "delV", 3L)
+    Ann.ivfIndexDelete(spark, dir, goneV.toDF("cid", "cvec"), Some(("delV", 3L)))
     val m2 = Ann.readIvfManifest(spark, dir)
     assert(m2.txns.get("delV").contains(3L))
-    Ann.ivfIndexDeleteTxn(spark, dir, goneV.toDF("cid", "cvec"), "delV", 3L)
+    Ann.ivfIndexDelete(spark, dir, goneV.toDF("cid", "cvec"), Some(("delV", 3L)))
     assert(Ann.readIvfManifest(spark, dir) == m2)
     assert(m2.version > m.version, "a delete of absent rows still commits its tick")
 
@@ -157,10 +157,12 @@ class IndexDeleteSpec extends AnyFunSuite {
     gone.grouped(2).foreach(_.toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(dropDir))
     val ckpt = Files.createTempDirectory("bm25takedownckpt").toString
-    val qy = IndexMaintain.takedownBm25(
-      spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(dropDir),
-      dir, "doc_id", "text", appId = "bm25-takedown-spec", checkpoint = ckpt)
+    val qy = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(dropDir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch(IndexMaintain.txnSink("bm25-takedown-spec")((b, txn) =>
+        Bm25.deleteFromIndex(b.sparkSession, dir, b, "doc_id", "text", txn)))
+      .start()
     try assert(StreamSync.drain(qy) {
       Bm25.readManifest(spark, dir).txns.get("bm25-takedown-spec").exists(_ >= 1L)
     }) finally qy.stop()
@@ -180,9 +182,11 @@ class IndexDeleteSpec extends AnyFunSuite {
     val vdrop = Files.createTempDirectory("ivftakedowndrop").toString
     goneV.toDF("cid", "cvec").coalesce(1).write.mode("append").parquet(vdrop)
     val vckpt = Files.createTempDirectory("ivftakedownckpt").toString
-    val qv = IndexMaintain.takedownIvf(
-      spark.readStream.schema("cid LONG, cvec ARRAY<FLOAT>").parquet(vdrop),
-      vdir, "ivf-takedown-spec", vckpt)
+    val qv = spark.readStream.schema("cid LONG, cvec ARRAY<FLOAT>").parquet(vdrop)
+      .writeStream.option("checkpointLocation", vckpt)
+      .foreachBatch(IndexMaintain.txnSink("ivf-takedown-spec")((b, txn) =>
+        Ann.ivfIndexDelete(b.sparkSession, vdir, b, txn)))
+      .start()
     try assert(StreamSync.drain(qv) {
       Ann.readIvfManifest(spark, vdir).txns.contains("ivf-takedown-spec")
     }) finally qv.stop()
@@ -249,15 +253,15 @@ class IndexDeleteSpec extends AnyFunSuite {
     val dirC = Files.createTempDirectory("bm25delidscrash").toString
     Bm25.buildIndex((keep ++ gone).toDF("doc_id", "text"), "doc_id", "text", dirC)
     val beforeC = Bm25.readManifest(spark, dirC)
-    Bm25.deleteByIdsHooked(spark, dirC, gone.map(_._1).toDF("doc_id"), "doc_id",
-      crashPoint = 1, txn = Some(("idsA", 0L)))
+    Bm25.changeTick(spark, dirC, None, Bm25.byIds(gone.map(_._1).toDF("doc_id"),
+      upserting = false), txn = Some(("idsA", 0L)), crashPoint = 1)
     assert(Bm25.readManifest(spark, dirC) == beforeC)
-    Bm25.deleteByIdsTxn(spark, dirC, gone.map(_._1).toDF("doc_id"), "doc_id",
-      "idsA", 0L)
+    Bm25.deleteByIds(spark, dirC, gone.map(_._1).toDF("doc_id"), "doc_id",
+      Some(("idsA", 0L)))
     val afterC = Bm25.readManifest(spark, dirC)
     assert(afterC.txns.get("idsA").contains(0L))
-    Bm25.deleteByIdsTxn(spark, dirC, gone.map(_._1).toDF("doc_id"), "doc_id",
-      "idsA", 0L)
+    Bm25.deleteByIds(spark, dirC, gone.map(_._1).toDF("doc_id"), "doc_id",
+      Some(("idsA", 0L)))
     assert(Bm25.readManifest(spark, dirC) == afterC)
   }
 
@@ -292,7 +296,8 @@ class IndexDeleteSpec extends AnyFunSuite {
     Ann.ivfIndexDeleteByIds(spark, dir, Seq(42L, 999L).toDF("cid"))
     assert(Ann.readIvfManifest(spark, dir) == m)
     // crash injection leaves readers unmoved
-    Ann.ivfIndexDeleteByIdsHooked(spark, dir, Seq(7L).toDF("cid"), crashPoint = 2)
+    Ann.ivfChangeTick(spark, dir, None, Ann.ivfByIds(Seq(7L).toDF("cid"),
+      upserting = false), txn = None, crashPoint = 2)
     assert(Ann.readIvfManifest(spark, dir) == m)
     Ann.ivfIndexDeleteByIds(spark, dir, Seq(7L).toDF("cid"))
     assert(Ann.readIvfCells(spark, dir).count() == 0L)
@@ -571,10 +576,12 @@ class IndexDeleteSpec extends AnyFunSuite {
     gone.map(_._1).grouped(2).foreach(_.toDF("doc_id")
       .coalesce(1).write.mode("append").parquet(dropDir))
     val ckpt = Files.createTempDirectory("bm25tdidsckpt").toString
-    val qy = IndexMaintain.takedownBm25ByIds(
-      spark.readStream.schema("doc_id LONG")
-        .option("maxFilesPerTrigger", 1).parquet(dropDir),
-      dir, "doc_id", appId = "bm25-tdids-spec", checkpoint = ckpt)
+    val qy = spark.readStream.schema("doc_id LONG")
+      .option("maxFilesPerTrigger", 1).parquet(dropDir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch(IndexMaintain.txnSink("bm25-tdids-spec")((b, txn) =>
+        Bm25.deleteByIds(b.sparkSession, dir, b, "doc_id", txn)))
+      .start()
     try assert(StreamSync.drain(qy) {
       Bm25.readManifest(spark, dir).txns.get("bm25-tdids-spec").exists(_ >= 1L)
     }) finally qy.stop()
@@ -594,9 +601,11 @@ class IndexDeleteSpec extends AnyFunSuite {
     val vdrop = Files.createTempDirectory("ivftdidsdrop").toString
     goneV.map(_._1).toDF("cid").coalesce(1).write.mode("append").parquet(vdrop)
     val vckpt = Files.createTempDirectory("ivftdidsckpt").toString
-    val qv = IndexMaintain.takedownIvfByIds(
-      spark.readStream.schema("cid LONG").parquet(vdrop),
-      vdir, "ivf-tdids-spec", vckpt)
+    val qv = spark.readStream.schema("cid LONG").parquet(vdrop)
+      .writeStream.option("checkpointLocation", vckpt)
+      .foreachBatch(IndexMaintain.txnSink("ivf-tdids-spec")((b, txn) =>
+        Ann.ivfIndexDeleteByIds(b.sparkSession, vdir, b, txn)))
+      .start()
     try assert(StreamSync.drain(qv) {
       Ann.readIvfManifest(spark, vdir).txns.contains("ivf-tdids-spec")
     }) finally qv.stop()
@@ -611,9 +620,9 @@ class IndexDeleteSpec extends AnyFunSuite {
       .toDF("cid", "cvec"), dir, cents)
     val before = Ann.readIvfManifest(spark, dir)
     val batch = (100 until 110).map(i => (i.toLong, vec(i))).toDF("cid", "cvec")
-    Ann.ivfIndexDeleteHooked(spark, dir, batch, crashPoint = 1)
+    Ann.ivfChangeTick(spark, dir, None, Ann.byVector(batch), txn = None, crashPoint = 1)
     assert(Ann.readIvfManifest(spark, dir) == before)
-    Ann.ivfIndexDeleteHooked(spark, dir, batch, crashPoint = 2)
+    Ann.ivfChangeTick(spark, dir, None, Ann.byVector(batch), txn = None, crashPoint = 2)
     assert(Ann.readIvfManifest(spark, dir) == before)
     Ann.ivfIndexDelete(spark, dir, batch)
     assert(Ann.readIvfCells(spark, dir).count() == 20L)

@@ -32,11 +32,11 @@ class IndexMaintainSpec extends AnyFunSuite {
     Bm25.buildIndex(initial.toDF("doc_id", "text"), "doc_id", "text", dir)
     val batch = drops.head.toDF("doc_id", "text")
 
-    Bm25.appendToIndexTxn(spark, dir, batch, "doc_id", "text", "appA", 0L)
+    Bm25.appendToIndex(spark, dir, batch, "doc_id", "text", Some(("appA", 0L)))
     val after1 = Bm25.readManifest(spark, dir)
     assert(after1.txns.get("appA").contains(0L))
     // the at-least-once retry: same app, same epoch → nothing moves
-    Bm25.appendToIndexTxn(spark, dir, batch, "doc_id", "text", "appA", 0L)
+    Bm25.appendToIndex(spark, dir, batch, "doc_id", "text", Some(("appA", 0L)))
     assert(Bm25.readManifest(spark, dir) == after1,
       "re-delivered epoch must be a no-op")
     // a different app is NOT gated (independent writers are the
@@ -45,10 +45,10 @@ class IndexMaintainSpec extends AnyFunSuite {
 
     // crashed tick: txn carried but never committed → retry applies
     val batch2 = drops(1).toDF("doc_id", "text")
-    Bm25.appendToIndexHooked(spark, dir, batch2, "doc_id", "text",
+    Bm25.appendTick(spark, dir, batch2, "doc_id", "text",
       crashPoint = 1, txn = Some(("appA", 1L)))
     assert(Bm25.readManifest(spark, dir) == after1, "crashed tick must not commit")
-    Bm25.appendToIndexTxn(spark, dir, batch2, "doc_id", "text", "appA", 1L)
+    Bm25.appendToIndex(spark, dir, batch2, "doc_id", "text", Some(("appA", 1L)))
     val after2 = Bm25.readManifest(spark, dir)
     assert(after2.txns.get("appA").contains(1L) && after2.version == after1.version + 1)
     assert(Bm25.readStats(spark, dir).select("n").head().getLong(0) ==
@@ -139,9 +139,9 @@ class IndexMaintainSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("ivfmaint").toString
     Ann.ivfIndexBuild(base.toDF("cid", "cvec"), dir, cents)
     // unit-level idempotence first
-    Ann.ivfIndexAppendTxn(spark, dir, vdrops.head.toDF("cid", "cvec"), "appV", 0L)
+    Ann.ivfIndexAppend(spark, dir, vdrops.head.toDF("cid", "cvec"), Some(("appV", 0L)))
     val m1 = Ann.readIvfManifest(spark, dir)
-    Ann.ivfIndexAppendTxn(spark, dir, vdrops.head.toDF("cid", "cvec"), "appV", 0L)
+    Ann.ivfIndexAppend(spark, dir, vdrops.head.toDF("cid", "cvec"), Some(("appV", 0L)))
     assert(Ann.readIvfManifest(spark, dir) == m1,
       "re-delivered vector epoch must be a no-op")
 
@@ -387,7 +387,7 @@ class IndexMaintainSpec extends AnyFunSuite {
     Bm25.buildIndex(initial.toDF("doc_id", "text"), "doc_id", "text", dir)
     // maintenance stream commits epoch 7
     val epoch7 = drops.head.toDF("doc_id", "text")
-    Bm25.appendToIndexTxn(spark, dir, epoch7, "doc_id", "text", "streamA", 7L)
+    Bm25.appendToIndex(spark, dir, epoch7, "doc_id", "text", Some(("streamA", 7L)))
     // an operator interleaves a MANUAL tick (txn = None) — legal under
     // the single-writer discipline (writers are sequential, not
     // single-purpose); before the ledger this erased streamA's record
@@ -398,12 +398,12 @@ class IndexMaintainSpec extends AnyFunSuite {
       "the manual tick must carry the ledger forward")
     // stream crashed post-sink pre-commit: epoch 7 re-delivered → no-op
     val before = Bm25.readManifest(spark, dir)
-    Bm25.appendToIndexTxn(spark, dir, epoch7, "doc_id", "text", "streamA", 7L)
+    Bm25.appendToIndex(spark, dir, epoch7, "doc_id", "text", Some(("streamA", 7L)))
     assert(Bm25.readManifest(spark, dir) == before,
       "re-delivered epoch must no-op across an interleaved manual tick")
     // two independent streams keep independent ledger entries
-    Bm25.appendToIndexTxn(spark, dir, drops(1).toDF("doc_id", "text"),
-      "doc_id", "text", "streamB", 2L)
+    Bm25.appendToIndex(spark, dir, drops(1).toDF("doc_id", "text"),
+      "doc_id", "text", Some(("streamB", 2L)))
     val m2 = Bm25.readManifest(spark, dir)
     assert(m2.txns.get("streamA").contains(7L) && m2.txns.get("streamB").contains(2L))
     // and a REBUILD over the union corpus keeps the whole ledger: a
@@ -413,7 +413,7 @@ class IndexMaintainSpec extends AnyFunSuite {
     val m3 = Bm25.readManifest(spark, dir)
     assert(m3.txns == m2.txns, "rebuild must carry the txn ledger forward")
     val afterRebuild = Bm25.readManifest(spark, dir)
-    Bm25.appendToIndexTxn(spark, dir, epoch7, "doc_id", "text", "streamA", 7L)
+    Bm25.appendToIndex(spark, dir, epoch7, "doc_id", "text", Some(("streamA", 7L)))
     assert(Bm25.readManifest(spark, dir) == afterRebuild)
   }
 
@@ -423,14 +423,14 @@ class IndexMaintainSpec extends AnyFunSuite {
     Ann.ivfIndexBuild((100 until 120).map(i => (i.toLong, vec(i)))
       .toDF("cid", "cvec"), dir, cents)
     val epoch3 = (10 until 15).map(i => (i.toLong, vec(i))).toDF("cid", "cvec")
-    Ann.ivfIndexAppendTxn(spark, dir, epoch3, "streamV", 3L)
+    Ann.ivfIndexAppend(spark, dir, epoch3, Some(("streamV", 3L)))
     // interleaved manual tick (txn = None)
     Ann.ivfIndexAppend(spark, dir,
       Seq((50L, vec(50))).toDF("cid", "cvec"))
     assert(Ann.readIvfManifest(spark, dir).txns.get("streamV").contains(3L),
       "the manual tick must carry the ledger forward")
     val before = Ann.readIvfManifest(spark, dir)
-    Ann.ivfIndexAppendTxn(spark, dir, epoch3, "streamV", 3L)
+    Ann.ivfIndexAppend(spark, dir, epoch3, Some(("streamV", 3L)))
     assert(Ann.readIvfManifest(spark, dir) == before,
       "re-delivered epoch must no-op across an interleaved manual tick")
   }

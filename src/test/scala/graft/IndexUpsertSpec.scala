@@ -88,19 +88,20 @@ class IndexUpsertSpec extends AnyFunSuite {
       "both old copies' stats contributions must roll out")
     // crash injection: data written, nothing committed → readers unmoved
     val m = Bm25.readManifest(spark, dir)
-    Bm25.upsertIndexHooked(spark, dir, Seq((2L, "changed text entirely"))
-      .toDF("doc_id", "text"), "doc_id", "text", crashPoint = 1)
+    val changed = Seq((2L, "changed text entirely")).toDF("doc_id", "text")
+    Bm25.changeTick(spark, dir, Some(changed), Bm25.byIds(changed, upserting = true),
+      crashPoint = 1)
     assert(Bm25.readManifest(spark, dir) == m)
-    Bm25.upsertIndexHooked(spark, dir, Seq((2L, "changed text entirely"))
-      .toDF("doc_id", "text"), "doc_id", "text", crashPoint = 2)
+    Bm25.changeTick(spark, dir, Some(changed), Bm25.byIds(changed, upserting = true),
+      crashPoint = 2)
     assert(Bm25.readManifest(spark, dir) == m)
     // txn: applied once, re-delivery no-ops
-    Bm25.upsertIndexTxn(spark, dir, Seq((2L, "changed text entirely"))
-      .toDF("doc_id", "text"), "doc_id", "text", "ups-spec", 7L)
+    Bm25.upsertIndex(spark, dir, Seq((2L, "changed text entirely"))
+      .toDF("doc_id", "text"), "doc_id", "text", Some(("ups-spec", 7L)))
     val m2 = Bm25.readManifest(spark, dir)
     assert(m2.txns.get("ups-spec").contains(7L))
-    Bm25.upsertIndexTxn(spark, dir, Seq((2L, "some other text"))
-      .toDF("doc_id", "text"), "doc_id", "text", "ups-spec", 7L)
+    Bm25.upsertIndex(spark, dir, Seq((2L, "some other text"))
+      .toDF("doc_id", "text"), "doc_id", "text", Some(("ups-spec", 7L)))
     assert(Bm25.readManifest(spark, dir) == m2)
   }
 
@@ -135,15 +136,16 @@ class IndexUpsertSpec extends AnyFunSuite {
     assert(mapOf(dir) == mapOf(dirU))
     // crash + txn
     val m = Ann.readIvfManifest(spark, dir)
-    Ann.ivfIndexUpsertHooked(spark, dir, Seq((7L, vec3(0.9f, 0f, 0.1f)))
-      .toDF("cid", "cvec"), crashPoint = 1)
+    val moved = Seq((7L, vec3(0.9f, 0f, 0.1f))).toDF("cid", "cvec")
+    Ann.ivfChangeTick(spark, dir, Some(moved), Ann.ivfByIds(moved, upserting = true),
+      crashPoint = 1)
     assert(Ann.readIvfManifest(spark, dir) == m)
-    Ann.ivfIndexUpsertTxn(spark, dir, Seq((7L, vec3(0.9f, 0f, 0.1f)))
-      .toDF("cid", "cvec"), "ivf-ups", 3L)
+    Ann.ivfIndexUpsert(spark, dir, Seq((7L, vec3(0.9f, 0f, 0.1f)))
+      .toDF("cid", "cvec"), Some(("ivf-ups", 3L)))
     val m2 = Ann.readIvfManifest(spark, dir)
     assert(m2.txns.get("ivf-ups").contains(3L))
-    Ann.ivfIndexUpsertTxn(spark, dir, Seq((7L, vec3(0f, 0.9f, 0.1f)))
-      .toDF("cid", "cvec"), "ivf-ups", 3L)
+    Ann.ivfIndexUpsert(spark, dir, Seq((7L, vec3(0f, 0.9f, 0.1f)))
+      .toDF("cid", "cvec"), Some(("ivf-ups", 3L)))
     assert(Ann.readIvfManifest(spark, dir) == m2)
   }
 
@@ -184,18 +186,19 @@ class IndexUpsertSpec extends AnyFunSuite {
     assert(gate(dir) == gate(dirU) && gate(dir).nonEmpty)
     // crash + txn
     val m = MinhashIndex.readManifest(spark, dir)
-    MinhashIndex.upsertHooked(spark, dir,
-      Seq((2L, "replacement text for the second document right here"))
-        .toDF("doc_id", "text"), "doc_id", "text", crashPoint = 2)
+    val replaced = Seq((2L, "replacement text for the second document right here"))
+      .toDF("sid", "text")
+    MinhashIndex.changeTick(spark, dir, Some(replaced),
+      MinhashIndex.byIds(replaced, upserting = true), crashPoint = 2)
     assert(MinhashIndex.readManifest(spark, dir) == m)
-    MinhashIndex.upsertTxn(spark, dir,
+    MinhashIndex.upsert(spark, dir,
       Seq((2L, "replacement text for the second document right here"))
-        .toDF("doc_id", "text"), "doc_id", "text", "mh-ups", 11L)
+        .toDF("doc_id", "text"), "doc_id", "text", Some(("mh-ups", 11L)))
     val m2 = MinhashIndex.readManifest(spark, dir)
     assert(m2.txns.get("mh-ups").contains(11L))
-    MinhashIndex.upsertTxn(spark, dir,
+    MinhashIndex.upsert(spark, dir,
       Seq((2L, "different replacement")).toDF("doc_id", "text"),
-      "doc_id", "text", "mh-ups", 11L)
+      "doc_id", "text", Some(("mh-ups", 11L)))
     assert(MinhashIndex.readManifest(spark, dir) == m2)
   }
 
@@ -241,15 +244,15 @@ class IndexUpsertSpec extends AnyFunSuite {
     }
     // txn: one epoch, both verbs exactly-once under re-delivery
     val m2 = Bm25.readManifest(spark, dir)
-    Bm25.applyChangesTxn(spark, dir,
+    Bm25.applyChanges(spark, dir,
       Seq(("delete", 300L, null.asInstanceOf[String]),
         ("upsert", 4L, "kumquat fig")).toDF("op", "doc_id", "text"),
-      "op", "doc_id", "text", "cdc-spec", 5L)
+      "op", "doc_id", "text", Some(("cdc-spec", 5L)))
     val m3 = Bm25.readManifest(spark, dir)
     assert(m3.version == m2.version + 1 && m3.txns.get("cdc-spec").contains(5L))
-    Bm25.applyChangesTxn(spark, dir,
+    Bm25.applyChanges(spark, dir,
       Seq(("delete", 4L, null.asInstanceOf[String])).toDF("op", "doc_id", "text"),
-      "op", "doc_id", "text", "cdc-spec", 5L)
+      "op", "doc_id", "text", Some(("cdc-spec", 5L)))
     assert(Bm25.readManifest(spark, dir) == m3, "re-delivered epoch no-ops")
   }
 
@@ -318,10 +321,12 @@ class IndexUpsertSpec extends AnyFunSuite {
     ).foreach(_.toDF("op", "doc_id", "text")
       .coalesce(1).write.mode("append").parquet(dropDir))
     val ckpt = Files.createTempDirectory("bm25cdcckpt").toString
-    val qy = IndexMaintain.cdcBm25(
-      spark.readStream.schema("op STRING, doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(dropDir),
-      dir, "op", "doc_id", "text", appId = "bm25-cdc-spec", checkpoint = ckpt)
+    val qy = spark.readStream.schema("op STRING, doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(dropDir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch(IndexMaintain.txnSink("bm25-cdc-spec")((b, txn) =>
+        Bm25.applyChanges(b.sparkSession, dir, b, "op", "doc_id", "text", txn)))
+      .start()
     try assert(StreamSync.drain(qy) {
       Bm25.readManifest(spark, dir).txns.get("bm25-cdc-spec").exists(_ >= 1L)
     }) finally qy.stop()
@@ -342,10 +347,12 @@ class IndexUpsertSpec extends AnyFunSuite {
     up.grouped(2).foreach(_.toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(dropDir))
     val ckpt = Files.createTempDirectory("bm25refreshckpt").toString
-    val qy = IndexMaintain.refreshBm25(
-      spark.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1).parquet(dropDir),
-      dir, "doc_id", "text", appId = "bm25-refresh-spec", checkpoint = ckpt)
+    val qy = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", 1).parquet(dropDir)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch(IndexMaintain.txnSink("bm25-refresh-spec")((b, txn) =>
+        Bm25.upsertIndex(b.sparkSession, dir, b, "doc_id", "text", txn)))
+      .start()
     try assert(StreamSync.drain(qy) {
       Bm25.readManifest(spark, dir).txns.get("bm25-refresh-spec").exists(_ >= 1L)
     }) finally qy.stop()

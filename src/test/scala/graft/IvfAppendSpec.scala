@@ -67,7 +67,7 @@ class IvfAppendSpec extends AnyFunSuite {
     val beforeManifest = Ann.readIvfManifest(spark, dir)
 
     for (crashPoint <- Seq(1, 2)) {
-      Ann.ivfIndexAppendHooked(spark, dir, appended.toDF("cid", "cvec"), crashPoint)
+      Ann.ivfAppendTick(spark, dir, appended.toDF("cid", "cvec"), crashPoint = crashPoint)
       assert(Ann.readIvfManifest(spark, dir) == beforeManifest,
         s"crashPoint=$crashPoint moved the committed manifest")
       assert(serveNow() == beforeServe,

@@ -44,7 +44,7 @@ class ManifestCommitSpec extends AnyFunSuite {
     // tick's live manifest now references), NOT silently unpublish or
     // damage the inner tick's append
     intercept[IllegalStateException] {
-      Bm25.appendToIndexHooked(spark, dir, outer, "doc_id", "text",
+      Bm25.appendTick(spark, dir, outer, "doc_id", "text",
         crashPoint = 0,
         interleave = () => Bm25.appendToIndex(spark, dir, inner, "doc_id", "text"))
     }
@@ -68,8 +68,8 @@ class ManifestCommitSpec extends AnyFunSuite {
     Bm25.buildIndex(Seq((1L, "a b")).toDF("doc_id", "text"), "doc_id", "text", dir)
     val batch = Seq((2L, "c d")).toDF("doc_id", "text")
     // die after data writes, then after manifest write: neither flips
-    Bm25.appendToIndexHooked(spark, dir, batch, "doc_id", "text", crashPoint = 1)
-    Bm25.appendToIndexHooked(spark, dir, batch, "doc_id", "text", crashPoint = 2)
+    Bm25.appendTick(spark, dir, batch, "doc_id", "text", crashPoint = 1)
+    Bm25.appendTick(spark, dir, batch, "doc_id", "text", crashPoint = 2)
     // the retry allocates the same version and the guard lets it flip
     Bm25.appendToIndex(spark, dir, batch, "doc_id", "text")
     assert(Bm25.readManifest(spark, dir).version == 2L)
@@ -80,9 +80,29 @@ class ManifestCommitSpec extends AnyFunSuite {
     val vdir = Files.createTempDirectory("guardretryivf").toString
     Ann.ivfIndexBuild(Seq((1L, Seq(1f, 0.1f))).toDF("cid", "cvec"), vdir, cents)
     val vbatch = Seq((2L, Seq(0.1f, 1f))).toDF("cid", "cvec")
-    Ann.ivfIndexAppendHooked(spark, vdir, vbatch, crashPoint = 2)
+    Ann.ivfAppendTick(spark, vdir, vbatch, crashPoint = 2)
     Ann.ivfIndexAppend(spark, vdir, vbatch)
     assert(Ann.readIvfManifest(spark, vdir).version == 2L)
     assert(Ann.readIvfCells(spark, vdir).count() == 2L)
+  }
+
+  test("a hostile txn appId is rejected before the tick writes any data") {
+    val dir = Files.createTempDirectory("hostileapp").toString
+    Bm25.buildIndex(Seq((1L, "a b")).toDF("doc_id", "text"), "doc_id", "text", dir)
+    val before = Bm25.readManifest(spark, dir)
+    for (app <- Seq("bad;app", "bad\napp")) {
+      intercept[IllegalArgumentException] {
+        Bm25.appendToIndex(spark, dir, Seq((2L, "c d")).toDF("doc_id", "text"),
+          "doc_id", "text", Some((app, 1L)))
+      }
+      // an empty batch no-ops AFTER the check, so it must reject too
+      intercept[IllegalArgumentException] {
+        Bm25.appendToIndex(spark, dir, Seq.empty[(Long, String)].toDF("doc_id", "text"),
+          "doc_id", "text", Some((app, 1L)))
+      }
+    }
+    assert(!new java.io.File(s"$dir/data/${before.version + 1}").exists(),
+      "the rejected tick must not have written its data slot")
+    assert(Bm25.readManifest(spark, dir) == before)
   }
 }

@@ -86,22 +86,22 @@ class MinhashIndexSpec extends AnyFunSuite {
     MinhashIndex.build(ref.toDF("doc_id", "text"), "doc_id", "text", dir,
       N, Bands, Rpb)
     val before = MinhashIndex.readManifest(spark, dir)
-    MinhashIndex.admitHooked(spark, dir, batchA.toDF("doc_id", "text"),
+    MinhashIndex.admitTick(spark, dir, batchA.toDF("doc_id", "text"),
       "doc_id", "text", Tau, Int.MaxValue, crashPoint = 1,
       txn = Some(("mhA", 0L)))
     assert(MinhashIndex.readManifest(spark, dir) == before)
-    MinhashIndex.admitHooked(spark, dir, batchA.toDF("doc_id", "text"),
+    MinhashIndex.admitTick(spark, dir, batchA.toDF("doc_id", "text"),
       "doc_id", "text", Tau, Int.MaxValue, crashPoint = 2,
       txn = Some(("mhA", 0L)))
     assert(MinhashIndex.readManifest(spark, dir) == before)
     // retry applies once; re-delivery no-ops with an empty verdict frame
-    val first = MinhashIndex.admitTxn(spark, dir, batchA.toDF("doc_id", "text"),
-      "doc_id", "text", Tau, "mhA", 0L)
+    val first = MinhashIndex.admit(spark, dir, batchA.toDF("doc_id", "text"),
+      "doc_id", "text", Tau, txn = Some(("mhA", 0L)))
     assert(first.appended > 0L)
     val after = MinhashIndex.readManifest(spark, dir)
     assert(after.txns.get("mhA").contains(0L))
-    val retry = MinhashIndex.admitTxn(spark, dir, batchA.toDF("doc_id", "text"),
-      "doc_id", "text", Tau, "mhA", 0L)
+    val retry = MinhashIndex.admit(spark, dir, batchA.toDF("doc_id", "text"),
+      "doc_id", "text", Tau, txn = Some(("mhA", 0L)))
     assert(retry.appended == 0L && retry.decisions.isEmpty)
     assert(MinhashIndex.readManifest(spark, dir) == after)
     // replay defense: a manual re-admission of the same docs admits
@@ -195,9 +195,11 @@ class MinhashIndexSpec extends AnyFunSuite {
     val tdrop = Files.createTempDirectory("mhtddrop").toString
     Seq(10L, 11L).toDF("sid").coalesce(1).write.mode("append").parquet(tdrop)
     val tckpt = Files.createTempDirectory("mhtdckpt").toString
-    val qt = IndexMaintain.takedownMinhashByIds(
-      spark.readStream.schema("sid LONG").parquet(tdrop),
-      dir, "mh-takedown-spec", tckpt)
+    val qt = spark.readStream.schema("sid LONG").parquet(tdrop)
+      .writeStream.option("checkpointLocation", tckpt)
+      .foreachBatch(IndexMaintain.txnSink("mh-takedown-spec")((b, txn) =>
+        MinhashIndex.deleteByIds(b.sparkSession, dir, b, txn)))
+      .start()
     try assert(StreamSync.drain(qt) {
       MinhashIndex.readManifest(spark, dir).txns.contains("mh-takedown-spec")
     }) finally qt.stop()

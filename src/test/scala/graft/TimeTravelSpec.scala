@@ -46,7 +46,7 @@ class TimeTravelSpec extends AnyFunSuite {
     // the manifest surface agrees
     assert(Bm25.readManifestVersion(spark, dir, 2L).version == 2L)
     // an orphan manifest (crashed tick, never flipped) is NOT servable
-    Bm25.appendToIndexHooked(spark, dir, Seq((11L, "zz yy")).toDF("doc_id", "text"),
+    Bm25.appendTick(spark, dir, Seq((11L, "zz yy")).toDF("doc_id", "text"),
       "doc_id", "text", crashPoint = 2)
     intercept[IllegalArgumentException] { at(4L) }
     // history: versions 1..4 on disk, 4 not servable, 3 current

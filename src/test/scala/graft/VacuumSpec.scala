@@ -94,7 +94,7 @@ class VacuumSpec extends AnyFunSuite {
     // tick overwrites the same slot (orphans self-heal, they cannot
     // accumulate)
     val cur = Bm25.readManifest(spark, dir).version
-    Bm25.appendToIndexHooked(spark, dir,
+    Bm25.appendTick(spark, dir,
       Seq((102L, "w4 orphan")).toDF("doc_id", "text"), "doc_id", "text",
       crashPoint = 1)
     assert(dataVersions(dir).contains(cur + 1))
