@@ -30,16 +30,6 @@ object Bench {
       // proven config. On a real cluster at 100 TB the bytes dominate
       // and it should be ON.
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // listing ≤1024 leaf dirs is one cheap FS/NameNode RPC each;
-      // Spark's default threshold (32) launches a DISTRIBUTED listing
-      // job beyond 32 paths, whose scheduler round costs more than it
-      // saves — the minhash gate's 64 band-partition read paid a 0.28 s
-      // listing job per serve (r18 profile; t58 3.9→2.5 s with this).
-      // NOT a local-only tune: the explicit-leaf-dir index reads list
-      // few-file dirs at any scale; a deployment reading >1024
-      // partitions per query re-engages the distributed listing.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

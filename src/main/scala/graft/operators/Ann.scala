@@ -832,20 +832,16 @@ object Ann extends Serializable {
     * round-16 verdict's weak flag: the previous rewrite-on-append paid
     * ~N/B existing rows per touched cbucket, index-bound IO per tick),
     * so superseded versions retire through the ordinary vacuum.
-    * cbucket is a pure function of cid, so the accreted partitions
-    * read FUSED (one scan stage across contributing versions — the
-    * [[ManifestIO.readVersionedArtifactFused]] rationale). Empty for
-    * a pre-cidmap legacy dir. */
+    * Empty for a pre-cidmap legacy dir. */
   def readIvfCidmapAt(spark: SparkSession, dir: String, m: IvfManifest,
       onlyCbuckets: Option[Set[Int]] = None): DataFrame = {
     val wanted = onlyCbuckets match {
       case Some(ks) => m.cidVersions.filter { case (k, _) => ks(k) }
       case None => m.cidVersions
     }
-    ManifestIO.readVersionedArtifactFused(spark, dir, "cidmap", "cbucket",
+    ManifestIO.readVersionedArtifact(spark, dir, "cidmap", "cbucket",
       "cid BIGINT, cell INT, cbucket INT",
-      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) },
-      cidCbucket(col("cid"), m.cells))
+      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
   }
 
   /** Write the reverse-map rows of the members just written under
@@ -1080,22 +1076,25 @@ object Ann extends Serializable {
     * [[ivfApplyChanges]]) — EVERY copy of a cid, including a stale
     * update-by-append vector in another cell: the cid→cell reverse map
     * is read from the ids' cbuckets only (≤ |ids| dirs, no cells scan);
-    * a pre-cidmap legacy dir pays ONE full cells scan instead. A pure
-    * delete whose ids match nothing is no tick. */
-  private[graft] def ivfByIds(ids0: DataFrame, upserting: Boolean): IvfLocate =
+    * a pre-cidmap legacy dir pays ONE full cells scan instead. Only the
+    * cells and cbuckets holding a match are rewritten, plus every
+    * candidate cbucket of the `upserted` cids, where their new rows
+    * land; a pure delete whose ids match nothing is no tick. */
+  private[graft] def ivfByIds(ids0: DataFrame, upserted: Option[DataFrame]): IvfLocate =
     (spark, dir, m) => {
       val ids = ids0.select(col("cid")).distinct().localCheckpoint(true)
       if (ids.isEmpty) None
       else {
-        val cbuckets = cbucketsOf(ids, m)
-        val cells = (if (m.cidVersions.nonEmpty)
-            readIvfCidmapAt(spark, dir, m, Some(cbuckets.toSet))
-          else readIvfCellsAt(spark, dir, m))
-          .join(ids, Seq("cid"), "left_semi").select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSeq // ≤ cell count values
-          .filter(m.cellVersions.contains)
-        if (cells.isEmpty && !upserting) None
-        else Some(IvfRemoval(ids, cells, cbuckets))
+        val matched = (if (m.cidVersions.nonEmpty)
+            readIvfCidmapAt(spark, dir, m, Some(cbucketsOf(ids, m).toSet))
+          else readIvfCellsAt(spark, dir, m).withColumn("cbucket", lit(null).cast("int")))
+          .join(ids, Seq("cid"), "left_semi").select(col("cell"), col("cbucket")).distinct()
+          .collect() // ≤ cells × cbuckets pairs
+        val cells = matched.map(_.getInt(0)).distinct.toSeq.filter(m.cellVersions.contains)
+        if (cells.isEmpty && upserted.isEmpty) None
+        else Some(IvfRemoval(ids, cells,
+          (matched.filterNot(_.isNullAt(1)).map(_.getInt(1)).toSeq ++
+            upserted.toSeq.flatMap(cbucketsOf(_, m))).distinct.filter(m.cidVersions.contains)))
       }
     }
 
@@ -1127,7 +1126,7 @@ object Ann extends Serializable {
   def ivfIndexDeleteByIds(spark: SparkSession, dir: String,
       ids: DataFrame, txn: Option[(String, Long)] = None): Unit =
     ivfChangeTick(spark, dir, None,
-      ivfByIds(ids.select(col("cid").cast("long").as("cid")), upserting = false), txn)
+      ivfByIds(ids.select(col("cid").cast("long").as("cid")), None), txn)
 
   /** UPSERT tick of the committed-IVF lifecycle — the REFRESH verb
     * (the [[Bm25.upsertIndex]] sibling): `batch` carries (cid, cvec)
@@ -1142,7 +1141,7 @@ object Ann extends Serializable {
     val up = ManifestIO.dedupBatch(
       batch.select(col("cid").cast("long").as("cid"), col("cvec")),
       "cid", Seq("cvec"), "IVF upsert")
-    ivfChangeTick(spark, dir, Some(up), ivfByIds(up, upserting = true), txn)
+    ivfChangeTick(spark, dir, Some(up), ivfByIds(up, Some(up)), txn)
   }
 
   /** MIGRATION tick — the [[Bm25.buildDocmap]] sibling: retrofit the
@@ -1180,7 +1179,7 @@ object Ann extends Serializable {
       changes.select(col(opCol), col("cid").cast("long").as("cid"), col("cvec")),
       opCol, "cid", Seq("cvec"))
     ivfChangeTick(spark, dir, Some(ups),
-      ivfByIds(ups.select(col("cid")).unionByName(dels), upserting = true), txn)
+      ivfByIds(ups.select(col("cid")).unionByName(dels), Some(ups)), txn)
   }
 
   /** COMPACT tick of the committed-IVF lifecycle

@@ -289,9 +289,9 @@ object Bm25 {
   def readManifest(spark: SparkSession, dir: String): IndexManifest =
     Spec.current(spark, dir)
 
-  /** The committed postings frame: buckets grouped by owning data
-    * version, each group read from its explicit bucket paths (basePath
-    * keeps the `bucket` partition column) — readers never see an
+  /** The committed postings frame: every (version, bucket) dir the
+    * manifest lists, read from its explicit path in one scan
+    * ([[ManifestIO.readVersionedArtifact]]) — readers never see an
     * uncommitted tick's files. `onlyBuckets` restricts the read to the
     * given bucket ids — the serve path's partition pruning, made
     * literal: unneeded buckets are not even listed. */
@@ -316,10 +316,9 @@ object Bm25 {
     // every contributing version — so df = rows per term inside the
     // pruned read is complete); legacy files that still carry a stored
     // df simply have the column pruned away
-    ManifestIO.readVersionedArtifactFused(spark, dir, "postings", "bucket",
+    ManifestIO.readVersionedArtifact(spark, dir, "postings", "bucket",
       "t STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, bucket INT",
-      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) },
-      pmod(xxhash64(col("t")), lit(m.buckets)))
+      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) })
   }
 
   /** The committed TERM-STATS sidecar (t, df, bucket) — the Lucene
@@ -337,10 +336,9 @@ object Bm25 {
       case Some(bs) => m.bucketVersions.filter { case (b, _) => bs(b) }
       case None => m.bucketVersions
     }
-    ManifestIO.readVersionedArtifactFused(spark, dir, "termstats", "bucket",
+    ManifestIO.readVersionedArtifact(spark, dir, "termstats", "bucket",
       "t STRING, df BIGINT, bucket INT",
-      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) },
-      pmod(xxhash64(col("t")), lit(m.buckets)))
+      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) })
   }
 
   /** Derive one tick's term-stats sidecar from its JUST-WRITTEN
@@ -427,10 +425,9 @@ object Bm25 {
       case Some(ks) => m.docVersions.filter { case (k, _) => ks(k) }
       case None => m.docVersions
     }
-    ManifestIO.readVersionedArtifactFused(spark, dir, "docmap", "dbucket",
+    ManifestIO.readVersionedArtifact(spark, dir, "docmap", "dbucket",
       "doc_id BIGINT, dl BIGINT, tbuckets ARRAY<INT>, dbucket INT",
-      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) },
-      pmod(xxhash64(col("doc_id")), lit(m.buckets)))
+      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
   }
 
   /** The committed 1-row stats table (n, sdl). */
@@ -440,7 +437,8 @@ object Bm25 {
   /** [[readStats]] against an already-read manifest (see
     * [[readPostingsAt]] for why multi-artifact readers must pin one). */
   def readStatsAt(spark: SparkSession, dir: String, m: IndexManifest): DataFrame =
-    spark.read.parquet(s"$dir/data/${m.statsVersion}/stats")
+    spark.read.schema("n BIGINT, sdl BIGINT")
+      .parquet(s"$dir/data/${m.statsVersion}/stats")
 
   /** Build the standing inverted index at `dir`: FULL postings — one
     * row per (term, doc) with tf, the doc's length and the term's df
@@ -497,15 +495,13 @@ object Bm25 {
         termstats = true)))
   }
 
-  /** Serve-path regime boundary: up to this many distinct query terms,
-    * the term list is collected and pushed as a parquet row-group
-    * `t isin (...)` filter inside the pruned buckets (the low-latency
-    * small-batch shape, one driver round-trip of term strings). Past
-    * it, the serve flips to the distributed shape: a semi-join against
-    * the term frame — NO term collect at any batch size, so a
-    * 100k-query sweep never serializes through the driver. Bucket
-    * planning never collects terms in either regime (see
-    * [[serveTopK]]). */
+  /** Serve-path regime boundary: a query batch of up to this many
+    * rows is collected to the driver once, and its distinct terms are
+    * pushed as a parquet row-group `t isin (...)` filter inside the
+    * pruned buckets (the low-latency small-batch shape). Past it, the
+    * serve flips to the distributed shape: a semi-join against the term
+    * frame — NO term collect at any batch size, so a 100k-query sweep
+    * never serializes through the driver. */
   val MaxServeTerms = 100000
 
   /** Serve a query batch from a persisted [[buildIndex]] index.
@@ -513,10 +509,13 @@ object Bm25 {
     * pruning, same score arithmetic, same fold order.
     *
     * Driver traffic is REGIME-CONSTANT, never O(batch): one bounded
-    * collect of ≤ [[MaxServeTerms]]+1 (term, bucket) rows decides the
-    * regime — in the small regime that single snapshot supplies both
-    * the pushed `t isin (...)` row-group filter and the bucket plan;
-    * in the big regime the pinned distinct-term frame is planned from
+    * collect of ≤ [[MaxServeTerms]]+1 batch rows decides the regime.
+    * In the small regime that snapshot is the whole plan input: the
+    * bucket plan and the term filter come from it, one more bounded
+    * collect brings (n, sdl) and the queried terms' termstats rows, the
+    * prune rule runs on the driver, and scoring reads the pruned
+    * postings against literal n/avgdl and one broadcast (qid, t, df)
+    * relation. In the big regime the pinned term frame is planned from
     * (≤ bucket-count ids cross the driver) and semi-joined against —
     * no term list ever serializes through the driver at any batch
     * size. Buckets are selected by Spark's own xxhash64 — the function
@@ -535,14 +534,15 @@ object Bm25 {
     // and the scoring join must all see the same rows even when the
     // caller's frame is non-deterministic — without the pin, a term
     // materializing only at join time is silently dropped (its bucket
-    // was never planned, the isin/semi-join filters it), the bug class
-    // the big regime's r13 fix killed and the small regime still had.
-    // The pin is query-batch-sized, which the serve materializes
-    // anyway (small regime broadcasts q; big regime shuffles it).
-    servePlanned(spark, indexDir,
-      queries.select(col("qid").cast("long").as("qid"),
-        col("term").as("t")).distinct().localCheckpoint(true),
+    // was never planned, the isin/semi-join filters it). The pin is a
+    // narrow copy of the batch (no distinct shuffle: duplicates collapse
+    // on the driver in the small regime, inside the plan in the big one)
+    servePlanned(spark, indexDir, queryRows(queries).localCheckpoint(true),
       k, maxCollectedTerms)
+
+  /** The serve's (qid, t) view of a (qid, term) query frame. */
+  private def queryRows(queries: DataFrame): DataFrame =
+    queries.select(col("qid").cast("long").as("qid"), col("term").as("t"))
 
   /** [[serveTopK]] for a caller that ALREADY pinned the query frame
     * (one localCheckpoint upstream, e.g. [[Hybrid.servedTopK]] pinning
@@ -563,10 +563,7 @@ object Bm25 {
     * reads the manifest once to both serve from it and REPORT it). */
   private[graft] def serveTopKPinnedAt(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, m: IndexManifest): DataFrame =
-    servePlannedAt(spark, indexDir,
-      queries.select(col("qid").cast("long").as("qid"),
-        col("term").as("t")).distinct(),
-      k, MaxServeTerms, m)
+    servePlannedAt(spark, indexDir, queryRows(queries), k, MaxServeTerms, m)
 
   /** TIME-TRAVEL serve: [[serveTopK]] against the index AS OF a
     * committed historical `version` — the reproducibility/debugging
@@ -577,9 +574,7 @@ object Bm25 {
     * vacuumed versions fail loudly). */
   def serveTopKVersion(spark: SparkSession, indexDir: String, version: Long,
       queries: DataFrame, k: Int): DataFrame =
-    servePlannedAt(spark, indexDir,
-      queries.select(col("qid").cast("long").as("qid"),
-        col("term").as("t")).distinct().localCheckpoint(true),
+    servePlannedAt(spark, indexDir, queryRows(queries).localCheckpoint(true),
       k, MaxServeTerms, readManifestVersion(spark, indexDir, version))
 
   /** The committed manifest AS OF a historical version (time travel —
@@ -599,69 +594,113 @@ object Bm25 {
       readManifest(spark, indexDir))
 
   /** [[servePlanned]] against an already-read manifest — the shared
-    * body of the CURRENT serve and the time-travel serve. */
+    * body of the CURRENT serve and the time-travel serve. `q` is
+    * (qid, t) and may repeat rows. */
   private def servePlannedAt(spark: SparkSession, indexDir: String,
       q: DataFrame, k: Int, maxCollectedTerms: Int,
       m: IndexManifest): DataFrame = {
+    val bucketOf = pmod(xxhash64(col("t")), lit(m.buckets)).cast("int")
+    // one bounded driver round trip (≤ maxCollectedTerms+1 batch rows —
+    // regime-constant, batch-size-independent) decides the regime AND,
+    // in the small regime, is the whole query-side plan input
+    val probe = ManifestIO.collectAtMost(q.select(col("qid"), col("t"), bucketOf.as("b")),
+      maxCollectedTerms)
+    val scored =
+      if (probe.length <= maxCollectedTerms) scoreSmall(spark, indexDir, m, probe)
+      else scoreBig(spark, indexDir, m, q, bucketOf)
+    rankTopK(scored.groupBy(col("qid"), col("doc_id")).agg(sum(col("s")).as("score")), k)
+      .select(col("qid"), col("doc_id"), col("score"), col("rank"))
+  }
+
+  /** Small-regime scoring from the collected batch `probe`
+    * (qid, t, bucket rows): the distinct (qid, t) pairs, terms and
+    * buckets are taken on the driver; ONE bounded collect brings the
+    * 1-row stats and the queried terms' termstats rows (one row per
+    * term per contributing version of its bucket — a pre-sidecar legacy
+    * dir counts the pruned postings instead, one row per term); df
+    * sums and the prune rule run on the driver; the postings of the
+    * KEPT terms' buckets are scored against literal n/avgdl and one
+    * broadcast (qid, t, df) relation. Null terms match nothing and are
+    * dropped. (qid, doc_id, s) rows. */
+  private def scoreSmall(spark: SparkSession, indexDir: String, m: IndexManifest,
+      probe: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val rows = probe.filterNot(_.isNullAt(1))
+    val termBucket = rows.map(r => r.getString(1) -> r.getInt(2)).toMap
+    val terms = termBucket.keys.toSeq.sorted
+    val buckets = Some(termBucket.values.toSet)
+    val dfRows =
+      if (m.termstats)
+        readTermstatsAt(spark, indexDir, m, buckets)
+          .filter(col("t").isin(terms: _*)).select(col("t"), col("df"))
+      else readPostingsAt(spark, indexDir, m, buckets)
+        .filter(col("t").isin(terms: _*)).groupBy(col("t")).agg(count(lit(1)).as("df"))
+    // one row per term per contributing version of its bucket, plus
+    // the stats row
+    val bound = termBucket.values.toSeq
+      .map(b => m.bucketVersions.get(b).fold(0)(_.distinct.size)).sum + 1
+    val got = ManifestIO.collectAtMost(
+      readStatsAt(spark, indexDir, m).select(lit(null).cast("string").as("t"),
+          col("n").as("df"), col("sdl"))
+        .unionByName(dfRows.select(col("t"), col("df"), lit(null).cast("long").as("sdl"))),
+      bound)
+    require(got.length <= bound,
+      s"BM25 serve: the stats and termstats read returned more than $bound rows " +
+        s"for ${terms.size} distinct batch terms at $indexDir — a termstats " +
+        "partition holds duplicate term rows")
+    val (statsRow, tsRows) = got.partition(_.isNullAt(0))
+    require(statsRow.length == 1, s"BM25 serve: no 1-row stats at $indexDir")
+    val n = statsRow.head.getLong(1)
+    val avgdl = statsRow.head.getLong(2).toDouble / n
+    val kept = tsRows.groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+      .filter { case (_, df) => df * PruneDfDen < n * PruneDfNum }
+    val qtd = rows.map(r => (r.get(0), r.getString(1))).distinct
+      .collect { case (qid, t) if kept.contains(t) =>
+        org.apache.spark.sql.Row(qid, t, kept(t)) }
+    val rel = spark.createDataFrame(java.util.Arrays.asList(qtd: _*),
+      org.apache.spark.sql.types.StructType.fromDDL("qid BIGINT, t STRING, df BIGINT"))
+    readPostingsAt(spark, indexDir, m, Some(kept.keys.map(termBucket).toSet))
+      .filter(col("t").isin(kept.keys.toSeq.sorted: _*))
+      .join(broadcast(rel), "t")
+      .select(col("qid"), col("doc_id"),
+        termScoreFp(col("tf"), col("df"), lit(n), col("dl"), lit(avgdl)).as("s"))
+  }
+
+  /** Big-regime scoring: the distinct-term frame is semi-joined, never
+    * collected; ≤ bucket-count ids cross the driver for the bucket
+    * plan. df is a READ-TIME aggregate (the accretive-append model): a
+    * term's bucket is read whole across its contributing versions, so
+    * rows-per-term IS the document frequency — the exact batchTopK
+    * computation. On a sidecar'd index it comes from the
+    * VOCABULARY-sized termstats artifact (per-version deltas summed —
+    * the postings are scanned exactly ONCE, by the scoring branch); a
+    * pre-sidecar legacy dir recomputes it from the pruned postings. The
+    * kept df map is O(distinct batch terms), so it joins as an ordinary
+    * shuffle: broadcasting it would collect an unbounded term frame
+    * driver-side, the exact OOM the regime split prevents. */
+  private def scoreBig(spark: SparkSession, indexDir: String, m: IndexManifest,
+      q: DataFrame, bucketOf: Column): DataFrame = {
     val terms0 = q.select(col("t")).distinct()
-    // one bounded driver round-trip (≤ maxCollectedTerms+1 (term,
-    // bucket) rows — regime-constant, batch-size-independent) decides
-    // the regime AND, in the small regime, supplies both the term
-    // filter and the bucket plan from the SAME snapshot
-    val probe = terms0
-      .select(col("t"), pmod(xxhash64(col("t")), lit(m.buckets)).cast("int").as("b"))
-      .limit(maxCollectedTerms + 1).collect()
-    val smallTerms = probe.length <= maxCollectedTerms
-    val bucketIds: Set[Int] =
-      if (smallTerms) probe.map(_.getInt(1)).toSet
-      // ≤ m.buckets ints cross the driver — batch-size-independent
-      else terms0
-        .select(pmod(xxhash64(col("t")), lit(m.buckets)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+    val bucketIds = terms0.select(bucketOf.as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet // ≤ m.buckets values
     val stats = readStatsAt(spark, indexDir, m).select(col("n"),
       (col("sdl").cast("double") / col("n")).as("avgdl"))
-    val pruned = readPostingsAt(spark, indexDir, m, Some(bucketIds))
-    val post =
-      if (smallTerms)
-        pruned.filter(col("t").isin(
-          probe.toIndexedSeq.map(_.getString(0).asInstanceOf[Any]): _*))
-      else pruned.join(terms0, Seq("t"), "left_semi")
-    // df is a READ-TIME aggregate (the accretive-append model): a
-    // term's bucket is read whole across its contributing versions, so
-    // rows-per-term IS the document frequency — the exact batchTopK
-    // computation, hence bit-identity holds with no stored value to go
-    // stale. On a sidecar'd index the aggregate comes from the
-    // VOCABULARY-sized termstats artifact (per-version deltas summed —
-    // the postings are scanned exactly ONCE, by the scoring branch); a
-    // pre-sidecar legacy dir recomputes it from the pruned postings
-    // (one extra scan of the matched row groups, the documented legacy
-    // price until a rebuild).
+    val post = readPostingsAt(spark, indexDir, m, Some(bucketIds))
+      .join(terms0, Seq("t"), "left_semi")
     val dfreq =
-      if (m.termstats) {
-        val ts = readTermstatsAt(spark, indexDir, m, Some(bucketIds))
-        val tsf =
-          if (smallTerms) ts.filter(col("t").isin(
-            probe.toIndexedSeq.map(_.getString(0).asInstanceOf[Any]): _*))
-          else ts.join(terms0, Seq("t"), "left_semi")
-        tsf.groupBy(col("t")).agg(sum(col("df")).as("df"))
-      } else post.groupBy(col("t")).agg(count(lit(1)).as("df"))
+      if (m.termstats)
+        readTermstatsAt(spark, indexDir, m, Some(bucketIds))
+          .join(terms0, Seq("t"), "left_semi")
+          .groupBy(col("t")).agg(sum(col("df")).as("df"))
+      else post.groupBy(col("t")).agg(count(lit(1)).as("df"))
     val kept = dfreq
       .crossJoin(broadcast(stats.select(col("n"))))
       .filter(col("df") * PruneDfDen < col("n") * PruneDfNum)
       .select(col("t"), col("df"))
-    // kept is O(distinct batch terms): broadcastable only in the small
-    // regime. The big regime exists so NO term-sized frame serializes
-    // through the driver at any batch size — broadcasting kept there
-    // would collect the unbounded df map driver-side, the exact OOM the
-    // regime split prevents; it joins as an ordinary shuffle instead.
-    val scored = post
-      .join(if (smallTerms) broadcast(kept) else kept, "t")
+    post.join(kept, "t")
       .crossJoin(broadcast(stats))
-      .join(if (smallTerms) broadcast(q) else q, "t")
+      .join(q.distinct(), "t")
       .select(col("qid"), col("doc_id"),
         termScoreFp(col("tf"), col("df"), col("n"), col("dl"), col("avgdl")).as("s"))
-    rankTopK(scored.groupBy(col("qid"), col("doc_id")).agg(sum(col("s")).as("score")), k)
-      .select(col("qid"), col("doc_id"), col("score"), col("rank"))
   }
 
   /** Monitoring profile of the committed BM25 index, computed from the
@@ -955,17 +994,17 @@ object Bm25 {
     * the documented deviation). The roll derives from the INDEX: ids
     * never ingested, deleted earlier or repeated roll nothing. One row
     * per docmap ROW, not per doc: an id re-ingested under a violated
-    * append contract loses EVERY copy. A pure delete whose ids match
-    * nothing is no tick; an upsert rewrites every candidate dbucket,
-    * where its new rows land. */
-  private[graft] def byIds(ids0: DataFrame, upserting: Boolean): Locate =
+    * append contract loses EVERY copy. Only the dbuckets holding a match
+    * are rewritten, plus every candidate dbucket of the `upserted` ids,
+    * where their new rows land; a pure delete whose ids match nothing
+    * is no tick. */
+  private[graft] def byIds(ids0: DataFrame, upserted: Option[DataFrame]): Locate =
     (spark, dir, m) => {
       val ids = ids0.select(col("doc_id")).distinct().localCheckpoint(true)
       if (ids.isEmpty) None
       else {
-        val candD = dbucketsOf(ids, m)
         val matched = (if (m.docVersions.nonEmpty) {
-          readDocmapAt(spark, dir, m, Some(candD.toSet))
+          readDocmapAt(spark, dir, m, Some(dbucketsOf(ids, m).toSet))
             .join(ids, Seq("doc_id"), "left_semi")
             .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
         } else {
@@ -976,11 +1015,11 @@ object Bm25 {
         }).localCheckpoint(true)
         val rm = matched
           .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
-        if (rm.getLong(0) == 0L && !upserting) None
+        if (rm.getLong(0) == 0L && upserted.isEmpty) None
         else Some(Removal(ids, rm.getLong(0), rm.getLong(1),
           matched.select(explode(col("buckets"))).distinct()
             .collect().map(_.getInt(0)).toSeq.filter(m.bucketVersions.contains),
-          if (upserting) candD else dbucketsOf(matched, m)))
+          (dbucketsOf(matched, m) ++ upserted.toSeq.flatMap(dbucketsOf(_, m))).distinct))
       }
     }
 
@@ -1022,7 +1061,7 @@ object Bm25 {
   def deleteByIds(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String, txn: Option[(String, Long)] = None): Unit =
     changeTick(spark, dir, None,
-      byIds(ids.select(col(idCol).cast("long").as("doc_id")), upserting = false), txn)
+      byIds(ids.select(col(idCol).cast("long").as("doc_id")), None), txn)
 
   /** MIGRATION tick: retrofit the doc→bucket reverse index onto a
     * pre-docmap legacy dir, paying the full postings scan ONCE so
@@ -1068,7 +1107,7 @@ object Bm25 {
       idCol: String, textCol: String, txn: Option[(String, Long)] = None): Unit = {
     val up = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "BM25 upsert")
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
-    changeTick(spark, dir, Some(up), byIds(up, upserting = true), txn)
+    changeTick(spark, dir, Some(up), byIds(up, Some(up)), txn)
   }
 
   /** CHANGE-APPLY tick — the CDC verb: ONE mixed micro-batch of
@@ -1087,6 +1126,6 @@ object Bm25 {
     val (ups, dels) = ManifestIO.splitChanges(changes, opCol, idCol, Seq(textCol))
     val up = ups.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
     changeTick(spark, dir, Some(up), byIds(up.select(col("doc_id"))
-      .unionByName(dels.select(col(idCol).as("doc_id"))), upserting = true), txn)
+      .unionByName(dels.select(col(idCol).as("doc_id"))), Some(up)), txn)
   }
 }

@@ -508,74 +508,47 @@ private[graft] object ManifestIO {
     } else (1L, Map.empty[String, Long])
   }
 
-  /** Shared union reader for the version-owned, partition-pruned index
-    * artifacts (BM25 postings/docmap, IVF cells, minhash rows): each
-    * wanted (version, partition) pair is read from its EXPLICIT
-    * committed path — `dir/data/<v>/<artifact>/<partCol>=<p>` —
-    * grouped into one parquet read per contributing data version
-    * (basePath keeps the partition column), so uncommitted ticks'
-    * files are invisible and unwanted partitions are never even
-    * listed: the serve/delete paths' pruning, made literal.
-    * `schemaDDL` orders the data columns and names the partition
-    * column LAST (cast to int — a path-derived partition value parses
-    * as int); no pairs → an empty frame of that schema. */
+  /** The one reader of the version-owned, partition-pruned index
+    * artifacts (BM25 postings, termstats and docmap; IVF cells and
+    * cidmap; minhash rows, bands and bandstats): every wanted
+    * (version, partition) pair is read from its EXPLICIT committed leaf
+    * dir — `dir/data/<v>/<artifact>/<partCol>=<p>` — in ONE scan, so
+    * uncommitted ticks' files are invisible, unwanted partitions are
+    * never even listed (the serve/delete paths' pruning, made literal)
+    * and an accreted partition costs extra FILES in one scan stage,
+    * never an extra scan stage per contributing version (on a
+    * 2-version BM25 index, dropping the per-version union halved serve
+    * latency).
+    * The partition value of each row is the pair's own `p`. The driver
+    * lists the leaf dirs itself and the scan carries `schemaDDL`
+    * ([[org.apache.spark.sql.GraftBridge.parquetLeafDirs]]), so a read
+    * naming any number of dirs runs no listing job and no
+    * schema-inference job; the explicit schema also pins the read
+    * across versions (a legacy file's extra columns — e.g. a pre-r16
+    * stored df — are pruned, never inferred). `schemaDDL` names the
+    * partition column LAST; no pairs → an empty frame of that schema. */
   def readVersionedArtifact(spark: SparkSession, dir: String,
       artifact: String, partCol: String, schemaDDL: String,
       pairs: Seq[(Long, Int)]): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
     require(schema.fields.last.name == partCol,
       s"schemaDDL must end with the partition column $partCol: $schemaDDL")
-    val byVer = pairs.groupBy(_._1).toSeq.sortBy(_._1)
-    if (byVer.isEmpty) {
+    if (pairs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val dataCols = schema.fields.init.map(f => col(f.name)).toSeq
-      byVer.map { case (v, ps) =>
-        spark.read.option("basePath", s"$dir/data/$v/$artifact")
-          .parquet(ps.map(_._2).distinct.sorted
-            .map(p => s"$dir/data/$v/$artifact/$partCol=$p"): _*)
-          .select(dataCols :+ col(partCol).cast("int").as(partCol): _*)
-      }.reduce(_ unionByName _)
-    }
+    else
+      org.apache.spark.sql.GraftBridge.parquetLeafDirs(spark,
+        pairs.distinct.sorted.map { case (v, p) => (s"$dir/data/$v/$artifact/$partCol=$p", p) },
+        org.apache.spark.sql.types.StructType(schema.fields.init), partCol)
   }
 
-  /** [[readVersionedArtifact]] for artifacts whose partition column is
-    * a PURE FUNCTION of the data columns (BM25 term buckets and
-    * termstats — bucket = hash(t); the docmap — dbucket = hash(id);
-    * minhash signature rows — bucket = hash(sid); minhash band rows —
-    * bb = hash(band, bucket)): every wanted (version, partition) leaf
-    * dir is read in ONE scan with an explicit schema and the partition
-    * column RECOMPUTED via `partValue`, instead of one read group per
-    * contributing version unioned together. An accreted partition then
-    * costs extra FILES in one scan stage, never extra scan stages — on
-    * a 2-version BM25 index this halved serve latency (the grouped
-    * union ran a full extra scan stage per version). IVF cells keep
-    * the grouped reader (a member's cell is assignment state, not a
-    * function of its columns). */
-  def readVersionedArtifactFused(spark: SparkSession, dir: String,
-      artifact: String, partCol: String, schemaDDL: String,
-      pairs: Seq[(Long, Int)],
-      partValue: org.apache.spark.sql.Column): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
-    require(schema.fields.last.name == partCol,
-      s"schemaDDL must end with the partition column $partCol: $schemaDDL")
-    val dataSchema = org.apache.spark.sql.types.StructType(schema.fields.init)
-    if (pairs.isEmpty) {
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      val dataCols = dataSchema.fields.map(f => col(f.name)).toSeq
-      // the explicit schema pins the read across versions (a legacy
-      // file's extra columns — e.g. a pre-r16 stored df — are pruned,
-      // never inferred); leaf dirs are listed explicitly, so
-      // uncommitted ticks' files stay invisible
-      spark.read.schema(dataSchema)
-        .parquet(pairs.distinct.sorted
-          .map { case (v, p) => s"$dir/data/$v/$artifact/$partCol=$p" }: _*)
-        .select(dataCols :+ partValue.cast("int").as(partCol): _*)
-    }
-  }
+  /** At most `bound` + 1 rows of `df` on the driver — the bounded
+    * collect of the serve paths' plan inputs; a caller seeing more than
+    * `bound` rows flips regime or fails loudly. ONE task in ONE job: a
+    * plain `limit(..).collect()` scans partitions in rounds, one job
+    * per round. */
+  def collectAtMost(df: DataFrame, bound: Int): Array[org.apache.spark.sql.Row] =
+    df.coalesce(1).limit(bound + 1).collect()
 
   /** Writer-transaction LEDGER manifest line
     * (`txns2=<appId>:<epoch>;<appId>:<epoch>;…`, keys escaped) — the

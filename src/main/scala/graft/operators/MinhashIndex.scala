@@ -172,10 +172,9 @@ object MinhashIndex {
       case Some(bs) => m.bucketVersions.filter { case (b, _) => bs(b) }
       case None => m.bucketVersions
     }
-    ManifestIO.readVersionedArtifactFused(spark, dir, "rows", "bucket",
+    ManifestIO.readVersionedArtifact(spark, dir, "rows", "bucket",
       "sid BIGINT, gs ARRAY<BIGINT>, bhs ARRAY<BIGINT>, bucket INT",
-      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) },
-      pmod(xxhash64(col("sid")), lit(m.buckets)))
+      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) })
   }
 
   /** [[readRowsAt]] against a fresh CURRENT read. */
@@ -191,10 +190,9 @@ object MinhashIndex {
       case Some(ks) => m.bandVersions.filter { case (k, _) => ks(k) }
       case None => m.bandVersions
     }
-    ManifestIO.readVersionedArtifactFused(spark, dir, "bands", "bb",
+    ManifestIO.readVersionedArtifact(spark, dir, "bands", "bb",
       "band INT, bucket BIGINT, sid BIGINT, bhs ARRAY<BIGINT>, bb INT",
-      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) },
-      pmod(xxhash64(col("band"), col("bucket")), lit(m.bandBuckets)))
+      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
   }
 
   /** Write one tick's band rows (band, bucket, sid, bhs, bb) under
@@ -235,10 +233,9 @@ object MinhashIndex {
     * reference list and vacuum scopes it by the same refs. */
   private def readBandstatsAt(spark: SparkSession, dir: String,
       m: Manifest): DataFrame =
-    ManifestIO.readVersionedArtifactFused(spark, dir, "bandstats", "bb",
+    ManifestIO.readVersionedArtifact(spark, dir, "bandstats", "bb",
       "band INT, bucket BIGINT, c BIGINT, bb INT",
-      m.bandVersions.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) },
-      pmod(xxhash64(col("band"), col("bucket")), lit(m.bandBuckets)))
+      m.bandVersions.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
 
   /** BUILD (or offline rebuild): compute the corpus's signature rows
     * once ([[Dedup.minhashDocIndex]] — docs with < n tokens have no
@@ -323,41 +320,77 @@ object MinhashIndex {
       idCol, textCol, threshold, maxBucket)
 
   /** The shared gate body against an already-read manifest: pruned
-    * kernel on a banded index, legacy full fan-out otherwise. */
+    * kernel on a banded index, legacy full fan-out otherwise. Both apply
+    * the uniform intra-batch duplicate-id rule of the tick verbs
+    * ([[ManifestIO.dedupBatch]]) to the READ verb too: a probe doc
+    * re-submitted within one batch gates ONCE. Without it the two
+    * kernels DISAGREE on duplicate-id batches — the full fan-out emits
+    * each pair once per duplicate batch row, while the pruned kernel's
+    * verify join SQUARES the multiplicity — so the dedup is what makes
+    * "bit-identical across kernels" hold for every input. Two different
+    * texts under one probe id reject loudly (whose near-dups would the
+    * (da, db) rows mean?). */
   private def gateAt(spark: SparkSession, dir: String, m: Manifest,
       newDocs: DataFrame, idCol: String, textCol: String, threshold: Double,
-      maxBucket: Int): DataFrame = {
-    // the uniform intra-batch duplicate-id rule, applied to the READ
-    // verb too ([[ManifestIO.dedupBatch]], the admit tick's preamble):
-    // a probe doc re-submitted within one batch gates ONCE. Without
-    // this the two kernels DISAGREE on duplicate-id batches — the full
-    // fan-out emits each pair once per duplicate batch row, while the
-    // pruned kernel's verify join (cand ⋈ daGs, both carrying one row
-    // per duplicate) SQUARES the multiplicity — so the dedup is what
-    // makes "bit-identical across kernels" hold for every input. Two
-    // different texts under one probe id reject loudly (whose
-    // near-dups would the (da, db) rows mean?).
-    val batchDocs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol),
-      "minhash gate")
+      maxBucket: Int): DataFrame =
     if (m.bandBuckets > 0) {
-      // ONE tokenize+minhash scan of the batch, pinned: the bb-set
-      // plan, the candidate pairing and the verify all read it
-      val batchIndex = Dedup.minhashDocIndex(batchDocs, idCol, textCol,
-        m.n, m.bands, m.rowsPerBand).localCheckpoint(true)
-      gatePairsPruned(spark, dir, m, batchIndex, threshold, maxBucket)
+      val (batchIndex, probeBbs) = gateBatch(spark, m, newDocs, idCol, textCol)
+      gatePairsPruned(spark, dir, m, batchIndex, probeBbs, threshold, maxBucket)
     } else
-      Dedup.minhashLshPairsAcrossIndexed(batchDocs, readRowsAt(spark, dir, m),
-        idCol, textCol, m.n, m.bands, m.rowsPerBand, threshold, maxBucket)
+      Dedup.minhashLshPairsAcrossIndexed(
+        ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol), "minhash gate"),
+        readRowsAt(spark, dir, m), idCol, textCol, m.n, m.bands, m.rowsPerBand,
+        threshold, maxBucket)
+
+  /** The gate's plan inputs in ONE pin and ONE driver round trip: the
+    * pin holds the batch's distinct (id, text) rows as (sid, gs, bhs) —
+    * one tokenize+minhash pass, gs/bhs null for a doc too short to
+    * shingle — and one bounded collect of (sid, bb partitions of its
+    * bands) rows both checks the duplicate-id rule and plans the band
+    * partitions to probe. Returns the PINNED doc index of the batch's
+    * shingled docs and the probe plan. The batch is driver-sized by
+    * contract: past [[Ann.MaxDriverQueryRows]] distinct docs it fails
+    * loudly. */
+  private def gateBatch(spark: SparkSession, m: Manifest, newDocs: DataFrame,
+      idCol: String, textCol: String): (DataFrame, Seq[Int]) = {
+    import spark.implicits._
+    val (n, bands, rowsPerBand) = (m.n, m.bands, m.rowsPerBand)
+    val pinned = newDocs.select(col(idCol).cast("long"), col(textCol)).distinct()
+      .as[(Long, String)]
+      .mapPartitions { rows =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        rows.map { case (sid, text) =>
+          val sig = Dedup.minhashBandRowsOf(sid, text, n, bands, rowsPerBand, md)
+            .take(1).toSeq.headOption
+          (sid, sig.map(_._4).orNull, sig.map(_._5).orNull)
+        }
+      }
+      .toDF("sid", "gs", "bhs").localCheckpoint(true)
+    // bb of band i = the band artifact's partition key of (i, bhs(i)),
+    // the expression bandRowsDF writes by
+    val bbs = transform(col("bhs"), (bucket, band) =>
+      pmod(xxhash64(band, bucket), lit(m.bandBuckets)).cast("int"))
+    val bound = Ann.MaxDriverQueryRows
+    val rows = ManifestIO.collectAtMost(pinned.select(col("sid"), bbs), bound)
+    require(rows.length <= bound,
+      s"minhash gate: probe batch exceeds $bound distinct docs — the gate plans " +
+        "its band partitions on the driver; split the batch")
+    val dup = rows.groupBy(_.getLong(0)).collectFirst { case (sid, rs) if rs.length > 1 => sid }
+    require(dup.isEmpty, s"id ${dup.orNull} carries conflicting payloads in one " +
+      "minhash gate batch — collapse revisions per key upstream")
+    (pinned.filter(col("gs").isNotNull),
+      rows.filterNot(_.isNullAt(1)).flatMap(_.getSeq[Int](1)).distinct.toSeq)
   }
 
   /** The PRUNED gate kernel — the Bm25 queried-buckets serve
     * discipline applied to the LSH key. `batchIndex` must be the
-    * PINNED (sid, gs, bhs) doc index of the probe batch.
+    * PINNED (sid, gs, bhs) doc index of the probe batch and `probeBbs`
+    * the band partitions its signatures hash to.
     *
     * Three stages, each reading only what the batch determines:
-    *   1. PLAN: the batch's (band, bucket) pairs → bb partition ids —
-    *      a pure function of its signatures (same expression the
-    *      writers partition by); ≤ bandBuckets ints cross the driver.
+    *   1. PLAN (the caller's): the batch's (band, bucket) pairs → bb
+    *      partition ids — a pure function of its signatures (same
+    *      expression the writers partition by).
     *   2. CANDIDATES: batch band rows ∪ ONLY those bb partitions'
     *      committed band rows, one (band, bucket) exchange,
     *      boundary-only pairing with the canonical-band rule (each
@@ -375,24 +408,20 @@ object MinhashIndex {
     *      operation order as the in-bucket verify, so the emitted
     *      doubles are bit-identical to the full kernel's. */
   private[graft] def gatePairsPruned(spark: SparkSession, dir: String,
-      m: Manifest, batchIndex: DataFrame, threshold: Double,
+      m: Manifest, batchIndex: DataFrame, probeBbs: Seq[Int], threshold: Double,
       maxBucket: Int): DataFrame = {
     import spark.implicits._
     val bands = m.bands
     val empty = Seq.empty[(Long, Long, Double)].toDF("da", "db", "jaccard")
-    // 1. PLAN
-    val probeBbs = bandRowsDF(batchIndex, m.bandBuckets)
-      .select(col("bb")).distinct()
-      .collect().map(_.getInt(0)) // ≤ bandBuckets values
-      .filter(m.bandVersions.contains)
-    if (probeBbs.isEmpty) return empty
+    val readBbs = probeBbs.filter(m.bandVersions.contains)
+    if (readBbs.isEmpty) return empty
     // 2. CANDIDATES
     val newRows = batchIndex.select(col("sid"), col("bhs"))
       .as[(Long, Array[Long])]
       .flatMap { case (sid, bhs) =>
         Iterator.tabulate(bands)(b => (b, bhs(b), sid, bhs, true))
       }
-    val refRows = readBandsAt(spark, dir, m, Some(probeBbs.toSet))
+    val refRows = readBandsAt(spark, dir, m, Some(readBbs.toSet))
       .select(col("band"), col("bucket"), col("sid"), col("bhs"))
       .as[(Int, Long, Long, Array[Long])]
       .map { case (b, bk, sid, bhs) => (b, bk, sid, bhs, false) }
@@ -427,17 +456,19 @@ object MinhashIndex {
       // candidate-sized pin: consumed by the db-bucket plan AND the
       // verify join below
       .localCheckpoint(true)
-    if (cand.isEmpty) return empty
-    // 3. VERIFY
+    // 3. VERIFY — one task reads the pinned candidates for the plan; no
+    // candidates plan no bucket, so an empty plan is the empty answer
     val dbBuckets = cand
       .select(pmod(xxhash64(col("db")), lit(m.buckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)) // ≤ bucket count values
+      .coalesce(1).distinct().collect().map(_.getInt(0)) // ≤ bucket count values
       .filter(m.bucketVersions.contains)
+    if (dbBuckets.isEmpty) return empty
+    // the candidates' committed gs: the inner join on db keeps exactly
+    // the candidate ids' rows of the planned sid-buckets
     val daGs = batchIndex.select(col("sid").as("da"), col("gs").as("ga"))
-    val dbGs = readRowsAt(spark, dir, m, Some(dbBuckets.toSet))
-      .join(cand.select(col("db").as("sid")).distinct(), Seq("sid"), "left_semi")
+    readRowsAt(spark, dir, m, Some(dbBuckets.toSet))
       .select(col("sid").as("db"), col("gs").as("gb"))
-    cand.join(daGs, "da").join(dbGs, "db")
+      .join(cand.join(daGs, "da"), "db")
       .select(col("da"), col("db"), col("ga"), col("gb"))
       .as[(Long, Long, Array[Long], Array[Long])]
       .map { case (da, db, ga, gb) =>
@@ -508,7 +539,10 @@ object MinhashIndex {
       else {
         val gatePairs =
           if (m.bandBuckets > 0)
-            gatePairsPruned(spark, dir, m, batchIndex, threshold, maxBucket)
+            gatePairsPruned(spark, dir, m, batchIndex,
+              bandRowsDF(batchIndex, m.bandBuckets).select(col("bb")).distinct()
+                .collect().map(_.getInt(0)).toSeq, // ≤ bandBuckets values
+              threshold, maxBucket)
           else Dedup.acrossPairs(
             Dedup.indexBandRows(batchIndex, m.bands, isNew = true)
               .unionAll(Dedup.indexBandRows(readRowsAt(spark, dir, m), m.bands,

@@ -24,6 +24,44 @@ object GraftBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.tableFunctionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** A parquet scan over EXPLICIT leaf dirs, each with its value of the
+    * one int partition column `partCol`. The driver lists every dir
+    * itself, one `listStatus` each (what Spark's own file index does
+    * below `parallelPartitionDiscovery.threshold` paths), and the file
+    * index is planned from that listing with the given schemas: no
+    * distributed listing job and no schema-inference job at any dir
+    * count, and no session conf touched. A missing dir fails loudly
+    * (FileNotFoundException), as `DataFrameReader.parquet` does. */
+  def parquetLeafDirs(spark: SparkSession, leafDirs: Seq[(String, Int)],
+      dataSchema: org.apache.spark.sql.types.StructType, partCol: String): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.newHadoopConf()
+    val listed = leafDirs.map { case (d, p) =>
+      val raw = new Path(d)
+      val fs = raw.getFileSystem(conf)
+      val path = fs.makeQualified(raw)
+      (path, p, fs.listStatus(path).filter(st => st.isFile &&
+        !org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(st.getPath.getName)))
+    }
+    val byDir = listed.map { case (path, _, files) => path -> files }.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byDir.get(path)
+      def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val partSchema = StructType(Seq(StructField(partCol, IntegerType, nullable = false)))
+    val spec = PartitionSpec(partSchema,
+      listed.map { case (path, p, _) => PartitionPath(InternalRow(p), path) })
+    val index = new InMemoryFileIndex(session, listed.map(_._1), Map.empty, None,
+      cache, Some(spec))
+    session.baseRelationToDataFrame(HadoopFsRelation(index, partSchema, dataSchema,
+      None, new parquet.ParquetFileFormat, Map.empty)(session))
+  }
+
   /** Analyzed-input logical plan of a DataFrame (classic backend). */
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.DataFrame].queryExecution.logical

@@ -137,21 +137,22 @@ class Bm25BatchSpec extends AnyFunSuite {
         "doc_id", "text", q, 5)
       .orderBy("qid", "rank").collect().map(_.toSeq).toSeq
     assert(served.orderBy("qid", "rank").collect().map(_.toSeq).toSeq == expected)
-    // the df branch reads the vocabulary-sized sidecar, so the pruned
-    // POSTINGS are scanned exactly once (by the scoring branch)
-    assert(served.inputFiles.exists(_.contains("/termstats/")),
-      "a sidecar'd serve must resolve df from the termstats artifact")
-    // strip the manifest flag and remove the sidecar: the legacy
-    // fallback recomputes df from the postings — same answers
+    // the df branch reads the vocabulary-sized sidecar (in the serve's
+    // one bounded stats collect), so the pruned POSTINGS are scanned
+    // exactly once (by the scoring branch): with the sidecar removed
+    // and the manifest still naming it, the serve fails
     val m = Bm25.readManifest(spark, dir)
     val f = graft.operators.ManifestIO.fs(spark, dir)
+    (1L to m.version).foreach { v =>
+      f.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$v/termstats"), true)
+    }
+    intercept[java.io.FileNotFoundException] { Bm25.serveTopK(spark, dir, q, 5).collect() }
+    // strip the manifest flag too: the legacy fallback recomputes df
+    // from the postings — same answers
     val mp = new org.apache.hadoop.fs.Path(s"$dir/manifest/v${m.version}.txt")
     val body = graft.operators.ManifestIO.readText(f, mp)
       .linesIterator.filterNot(_.startsWith("termstats=")).mkString("\n") + "\n"
     graft.operators.ManifestIO.writeText(f, mp, body)
-    (1L to m.version).foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$v/termstats"), true)
-    }
     val legacy = Bm25.serveTopK(spark, dir, q, 5)
     assert(legacy.orderBy("qid", "rank").collect().map(_.toSeq).toSeq == expected)
     assert(!legacy.inputFiles.exists(_.contains("/termstats/")))

@@ -76,8 +76,9 @@ class Bm25ServeIoSpec extends AnyFunSuite {
     // (a hint forces the broadcast regardless of size; the planner may
     // still auto-broadcast genuinely small frames on a test corpus,
     // which is fine and vanishes at scale): the big regime may hint
-    // only its two 1-ROW stats cross joins; the small regime
-    // additionally hints kept and q.
+    // only its two 1-ROW stats cross joins; the small regime scores
+    // against literal n/avgdl and hints only its one driver-built
+    // (qid, t, df) relation.
     val dir = Files.createTempDirectory("bm25bigplan").toString
     val docs = (0 until 40).map(i => (i.toLong, s"w${i % 13} common tail$i"))
     Bm25.buildIndex(docs.toDF("doc_id", "text"), "doc_id", "text", dir)
@@ -90,8 +91,9 @@ class Bm25ServeIoSpec extends AnyFunSuite {
       "big regime must hint exactly the two 1-row stats cross joins:\n" +
         big.queryExecution.optimizedPlan.toString)
     val small = Bm25.serveTopKBounded(spark, dir, q, 5, maxCollectedTerms = 100)
-    assert(hints(small) >= 4,
-      "small regime keeps its kept/q broadcast hints (the low-latency shape)")
+    assert(hints(small) == 1,
+      "small regime hints exactly its (qid, t, df) relation (the low-latency shape):\n" +
+        small.queryExecution.optimizedPlan.toString)
     assert(big.collect().map(_.toSeq).toSeq == small.collect().map(_.toSeq).toSeq)
   }
 }

@@ -254,7 +254,7 @@ class IndexDeleteSpec extends AnyFunSuite {
     Bm25.buildIndex((keep ++ gone).toDF("doc_id", "text"), "doc_id", "text", dirC)
     val beforeC = Bm25.readManifest(spark, dirC)
     Bm25.changeTick(spark, dirC, None, Bm25.byIds(gone.map(_._1).toDF("doc_id"),
-      upserting = false), txn = Some(("idsA", 0L)), crashPoint = 1)
+      None), txn = Some(("idsA", 0L)), crashPoint = 1)
     assert(Bm25.readManifest(spark, dirC) == beforeC)
     Bm25.deleteByIds(spark, dirC, gone.map(_._1).toDF("doc_id"), "doc_id",
       Some(("idsA", 0L)))
@@ -297,7 +297,7 @@ class IndexDeleteSpec extends AnyFunSuite {
     assert(Ann.readIvfManifest(spark, dir) == m)
     // crash injection leaves readers unmoved
     Ann.ivfChangeTick(spark, dir, None, Ann.ivfByIds(Seq(7L).toDF("cid"),
-      upserting = false), txn = None, crashPoint = 2)
+      None), txn = None, crashPoint = 2)
     assert(Ann.readIvfManifest(spark, dir) == m)
     Ann.ivfIndexDeleteByIds(spark, dir, Seq(7L).toDF("cid"))
     assert(Ann.readIvfCells(spark, dir).count() == 0L)

@@ -89,10 +89,10 @@ class IndexUpsertSpec extends AnyFunSuite {
     // crash injection: data written, nothing committed → readers unmoved
     val m = Bm25.readManifest(spark, dir)
     val changed = Seq((2L, "changed text entirely")).toDF("doc_id", "text")
-    Bm25.changeTick(spark, dir, Some(changed), Bm25.byIds(changed, upserting = true),
+    Bm25.changeTick(spark, dir, Some(changed), Bm25.byIds(changed, Some(changed)),
       crashPoint = 1)
     assert(Bm25.readManifest(spark, dir) == m)
-    Bm25.changeTick(spark, dir, Some(changed), Bm25.byIds(changed, upserting = true),
+    Bm25.changeTick(spark, dir, Some(changed), Bm25.byIds(changed, Some(changed)),
       crashPoint = 2)
     assert(Bm25.readManifest(spark, dir) == m)
     // txn: applied once, re-delivery no-ops
@@ -137,7 +137,7 @@ class IndexUpsertSpec extends AnyFunSuite {
     // crash + txn
     val m = Ann.readIvfManifest(spark, dir)
     val moved = Seq((7L, vec3(0.9f, 0f, 0.1f))).toDF("cid", "cvec")
-    Ann.ivfChangeTick(spark, dir, Some(moved), Ann.ivfByIds(moved, upserting = true),
+    Ann.ivfChangeTick(spark, dir, Some(moved), Ann.ivfByIds(moved, Some(moved)),
       crashPoint = 1)
     assert(Ann.readIvfManifest(spark, dir) == m)
     Ann.ivfIndexUpsert(spark, dir, Seq((7L, vec3(0.9f, 0f, 0.1f)))

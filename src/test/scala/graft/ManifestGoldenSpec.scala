@@ -16,7 +16,8 @@ import graft.operators.{Ann, Bm25, MinhashIndex}
   * committed format: sidecar flags, the `p:v1|v2,…` version maps of
   * every artifact, and the `txns2=` ledger line. A second lifecycle
   * per family pins the consolidating ticks — an id delete holding one
-  * unknown id, a content delete, a plain upsert — so a change in which
+  * unknown id, a content delete, a plain upsert (and, for BM25, a CDC
+  * tick whose delete ids match nothing) — so a change in which
   * partitions a tick rewrites shows up as a version-map diff.
   */
 class ManifestGoldenSpec extends AnyFunSuite {
@@ -150,6 +151,22 @@ class ManifestGoldenSpec extends AnyFunSuite {
         "docVersions=0:3,1:5,2:5,3:4", "termstats=1")))
   }
 
+  test("bm25: a CDC delete id matching nothing rewrites none of its partitions") {
+    val dir = Files.createTempDirectory("goldenbm25cdc").toString
+    val docs = (0 until 12).map(i => (i.toLong, s"w${i % 5} topic${i % 3} shared"))
+    Bm25.buildIndex(docs.toDF("doc_id", "text"), "doc_id", "text", dir, buckets = 4)
+    // 3 is upserted; 998 and 999 were never ingested, so only the
+    // dbucket doc 3's new row lands in (3) moves
+    Bm25.applyChanges(spark, dir,
+      Seq(("upsert", 3L, "w0 replaced text"), ("delete", 998L, null), ("delete", 999L, null))
+        .toDF("op", "doc_id", "text"), "op", "doc_id", "text")
+    check(dir, Seq(
+      body("version=1", "buckets=4", "stats=1", "bucketVersions=0:1,1:1,2:1,3:1",
+        "docVersions=0:1,1:1,2:1,3:1", "termstats=1"),
+      body("version=2", "buckets=4", "stats=2", "bucketVersions=0:2,1:2,2:2,3:2",
+        "docVersions=0:1,1:1,2:1,3:2", "termstats=1")))
+  }
+
   test("ivf: manifest bytes of id delete, content delete and upsert ticks") {
     val dir = Files.createTempDirectory("goldenivfc").toString
     Ann.ivfIndexBuild((100 until 116).map(i => (i.toLong, vec(i)))
@@ -166,10 +183,11 @@ class ManifestGoldenSpec extends AnyFunSuite {
         "cidVersions=0:1,1:1,2:1,3:1", "cellstats=1"),
       body("version=2", "cells=4", "centroids=1", "cellVersions=0:1|2,1:1|2,2:1|2,3:1|2",
         "cidVersions=0:1|2,1:1|2,2:1|2,3:1|2", "cellstats=1"),
+      // only cid 11's cbucket (3) moves; 999's (2) is never rewritten
       body("version=3", "cells=4", "centroids=1", "cellVersions=0:1|2,1:3,2:1|2,3:1|2",
-        "cidVersions=0:1|2,1:1|2,2:3,3:3", "cellstats=1"),
+        "cidVersions=0:1|2,1:1|2,2:1|2,3:3", "cellstats=1"),
       body("version=4", "cells=4", "centroids=1", "cellVersions=0:1|2,1:4,2:1|2,3:1|2",
-        "cidVersions=0:4,1:1|2,2:3,3:3", "cellstats=1"),
+        "cidVersions=0:4,1:1|2,2:1|2,3:3", "cellstats=1"),
       body("version=5", "cells=4", "centroids=1", "cellVersions=0:1|2,1:5,2:5,3:1|2",
         "cidVersions=0:5,1:1|2,2:5,3:3", "cellstats=1")))
   }
