@@ -670,46 +670,57 @@ object Ann extends Serializable {
     * data version contributing rows (ACCRETIVE since round 17, like
     * `cellVersions` and the BM25 docmap's dbuckets — an append writes
     * only its batch's rows; delete/upsert consolidate, compact
-    * collapses; empty for a pre-cidmap legacy dir, whose id-only
-    * takedowns fall back to the full cells scan). `cellstats` marks
-    * the per-(version, cell) DRIFT-STATS sidecar (member count + the
-    * BIGINT fixed-point cosine sum vs the committed centroids — the
-    * termstats/bandstats discipline applied to the drift alarm):
-    * present on every dir this code builds; a pre-sidecar dir
-    * recomputes drift from the full cells scan, the documented legacy
-    * price until a rebuild. */
+    * collapses). Every version also carries the per-(version, cell)
+    * DRIFT-STATS sidecar `cellstats` (member count + the BIGINT
+    * fixed-point cosine sum vs the committed centroids — the
+    * termstats/bandstats discipline applied to the drift alarm). */
   final case class IvfManifest(version: Long, cells: Int, centroidsVersion: Long,
-      cellVersions: Map[Int, Seq[Long]], txns: Map[String, Long] = Map.empty,
-      cidVersions: Map[Int, Seq[Long]] = Map.empty,
-      cellstats: Boolean = false)
+      cellVersions: Map[Int, Seq[Long]], txns: Map[String, Long],
+      cidVersions: Map[Int, Seq[Long]])
 
   /** The IVF layout for the shared lifecycle verbs. The drift-stats
     * sidecar is one directory per version: the drift read filters it
     * to the referenced (version, cell) pairs. */
   private[graft] object IvfSpec extends ManifestIO.IndexSpec[IvfManifest] {
     val what = "IVF index"
+    val upgradeVerb = "Ann.ivfIndexUpgrade (SQL ivf_index_upgrade)"
 
+    // an empty cidmap renders no line; the cellstats line marks the
+    // sidecar every version carries
     def render(m: IvfManifest): String =
       s"version=${m.version}\ncells=${m.cells}\ncentroids=${m.centroidsVersion}\n" +
         s"cellVersions=${ManifestIO.renderVersions(m.cellVersions)}\n" +
         (if (m.cidVersions.isEmpty) ""
          else s"cidVersions=${ManifestIO.renderVersions(m.cidVersions)}\n") +
-        (if (m.cellstats) "cellstats=1\n" else "") + ManifestIO.renderTxns(m.txns)
+        "cellstats=1\n" + ManifestIO.renderTxns(m.txns)
 
-    // cidVersions and cellstats are OPTIONAL: a pre-cidmap manifest
-    // parses to an empty reverse map, a pre-sidecar one to false (drift
-    // falls back to the full cells scan)
     def parse(text: String): IvfManifest = {
       val kv = ManifestIO.parseKv(text)
       IvfManifest(kv("version").toLong, kv("cells").toInt, kv("centroids").toLong,
         ManifestIO.parseVersions(kv("cellVersions")), ManifestIO.parseTxns(kv),
-        kv.get("cidVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty),
-        kv.get("cellstats").contains("1"))
+        kv.get("cidVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty))
     }
+
+    // every member has a reverse-map row, so cells without a
+    // cidVersions line are a dir written before the cidmap existed
+    def missing(body: String): Seq[String] = {
+      val kv = ManifestIO.parseKv(body)
+      (if (!kv.contains("cidVersions") && kv("cellVersions").nonEmpty) Seq("cidmap")
+       else Nil) ++ (if (kv.get("cellstats").contains("1")) Nil else Seq("cellstats"))
+    }
+
+    // the cid→cell reverse map from ONE full cells scan
+    def derive(spark: SparkSession, dir: String, m: IvfManifest,
+        gone: Seq[String], ver: Long): IvfManifest =
+      if (!gone.contains("cidmap")) m
+      else m.copy(cidVersions = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m)
+          .select(col("cid"), col("cell")).distinct()
+          .withColumn("cbucket", cidCbucket(col("cid"), m.cells)),
+        dir, ver, "cidmap", "cbucket").map(_ -> Seq(ver)).toMap)
 
     def accreting(m: IvfManifest): Seq[ManifestIO.Accreting] = Seq(
       ManifestIO.Accreting("cells", "cell", m.cellVersions,
-        Some(ManifestIO.Sidecar("cellstats", perPartition = false, m.cellstats))),
+        Some(ManifestIO.Sidecar("cellstats", perPartition = false))),
       ManifestIO.Accreting("cidmap", "cbucket", m.cidVersions))
 
     override def single(m: IvfManifest): Seq[(String, Long)] =
@@ -797,15 +808,9 @@ object Ann extends Serializable {
 
   /** [[readIvfCells]] against an already-read manifest. */
   def readIvfCellsAt(spark: SparkSession, dir: String, m: IvfManifest,
-      onlyCells: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyCells match {
-      case Some(cs) => m.cellVersions.filter { case (c, _) => cs(c) }
-      case None => m.cellVersions
-    }
+      onlyCells: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "cells", "cell",
-      "cid BIGINT, cvec ARRAY<FLOAT>, cell INT",
-      wanted.toSeq.flatMap { case (c, vs) => vs.map(v => (v, c)) })
-  }
+      "cid BIGINT, cvec ARRAY<FLOAT>, cell INT", m.cellVersions, onlyCells)
 
   /** [[readIvfCidmapAt]] with its own CURRENT read — the monitoring /
     * TVF surface; composed readers must thread one manifest instead. */
@@ -828,21 +833,12 @@ object Ann extends Serializable {
     * scan-free. cbuckets are ACCRETIVE (an append writes only its
     * batch's rows and appends its version to the touched cbuckets'
     * lists; delete/upsert consolidate a cbucket back to one version,
-    * [[ivfIndexCompact]] collapses long lists — round 17, closing the
-    * round-16 verdict's weak flag: the previous rewrite-on-append paid
-    * ~N/B existing rows per touched cbucket, index-bound IO per tick),
-    * so superseded versions retire through the ordinary vacuum.
-    * Empty for a pre-cidmap legacy dir. */
+    * [[ivfIndexCompact]] collapses long lists), so superseded versions
+    * retire through the ordinary vacuum. */
   def readIvfCidmapAt(spark: SparkSession, dir: String, m: IvfManifest,
-      onlyCbuckets: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyCbuckets match {
-      case Some(ks) => m.cidVersions.filter { case (k, _) => ks(k) }
-      case None => m.cidVersions
-    }
+      onlyCbuckets: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "cidmap", "cbucket",
-      "cid BIGINT, cell INT, cbucket INT",
-      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
-  }
+      "cid BIGINT, cell INT, cbucket INT", m.cidVersions, onlyCbuckets)
 
   /** Write the reverse-map rows of the members just written under
     * `data/<ver>/cells` (read back from the committed-to-be artifact —
@@ -929,8 +925,7 @@ object Ann extends Serializable {
     // the drift-stats sidecar rides every build (see [[writeCellstats]])
     writeCellstats(spark, dir, ver, cents)
     ManifestIO.commit(spark, dir, ver,
-      IvfSpec.render(IvfManifest(ver, cents.length, ver, present, priorTxns, cidVers,
-        cellstats = true)))
+      IvfSpec.render(IvfManifest(ver, cents.length, ver, present, priorTxns, cidVers)))
   }
 
   /** APPEND tick of the committed served-IVF lifecycle
@@ -968,18 +963,13 @@ object Ann extends Serializable {
         // batch's (cid, cell) rows only, the version appended onto the
         // touched cbuckets' lists (O(batch) at any index size).
         // delete/upsert consolidate; [[ivfIndexCompact]] collapses long
-        // lists. Maintained iff the index HAS a cidmap (or is being
-        // born) — starting one mid-life on a pre-cidmap legacy dir would
-        // leave a map that silently misses every pre-existing member.
-        val newCidVers =
-          if (m.cidVersions.isEmpty && m.cellVersions.nonEmpty) m.cidVersions
-          else ManifestIO.accrete(m.cidVersions, writeCidmap(spark, dir, newVer, m.cells),
-            newVer)
-        // the drift-stats sidecar rides the same write (batch-sized)
-        if (m.cellstats) writeCellstats(spark, dir, newVer, cents)
+        // lists. The drift-stats sidecar rides the same write
+        // (batch-sized).
+        writeCellstats(spark, dir, newVer, cents)
         m.copy(version = newVer,
           cellVersions = ManifestIO.accrete(m.cellVersions, touched, newVer),
-          cidVersions = newCidVers)
+          cidVersions = ManifestIO.accrete(m.cidVersions,
+            writeCidmap(spark, dir, newVer, m.cells), newVer))
       }
     }
 
@@ -1020,11 +1010,8 @@ object Ann extends Serializable {
           if (touched.isEmpty) Seq.empty[Int]
           else ManifestIO.writePartitioned(assigned.fold(kept)(a => kept.unionByName(a)),
             dir, newVer, "cells", "cell")
-        val maintainCidmap =
-          m.cidVersions.nonEmpty || (upserts.isDefined && m.cellVersions.isEmpty)
         val newCidVers =
-          if (!maintainCidmap ||
-              (upserts.isEmpty && (rm.cells.isEmpty || rm.cbuckets.isEmpty))) m.cidVersions
+          if (upserts.isEmpty && (rm.cells.isEmpty || rm.cbuckets.isEmpty)) m.cidVersions
           else {
             // a cid's old and new reverse rows share one cbucket (a pure
             // function of the id); a copy in an untouched cell keeps its
@@ -1038,7 +1025,7 @@ object Ann extends Serializable {
                 .withColumn("cbucket", cidCbucket(col("cid"), m.cells))).distinct()),
               dir, newVer, "cidmap", "cbucket"), newVer)
           }
-        if (m.cellstats && touched.nonEmpty) writeCellstats(spark, dir, newVer, cents)
+        if (touched.nonEmpty) writeCellstats(spark, dir, newVer, cents)
         m.copy(version = newVer,
           cellVersions = ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
           cidVersions = newCidVers)
@@ -1046,10 +1033,9 @@ object Ann extends Serializable {
     }
 
   /** The materialized reverse-map cbuckets of `ids` (cid) — a pure
-    * function of the ids; empty on a pre-cidmap dir. */
+    * function of the ids. */
   private def cbucketsOf(ids: DataFrame, m: IvfManifest): Seq[Int] =
-    if (m.cidVersions.isEmpty) Seq.empty
-    else ids.select(cidCbucket(col("cid"), m.cells))
+    ids.select(cidCbucket(col("cid"), m.cells))
       .distinct().collect().map(_.getInt(0)).toSeq // ≤ cell count values
       .filter(m.cidVersions.contains)
 
@@ -1075,8 +1061,8 @@ object Ann extends Serializable {
   /** Locate by cid ([[ivfIndexDeleteByIds]], [[ivfIndexUpsert]],
     * [[ivfApplyChanges]]) — EVERY copy of a cid, including a stale
     * update-by-append vector in another cell: the cid→cell reverse map
-    * is read from the ids' cbuckets only (≤ |ids| dirs, no cells scan);
-    * a pre-cidmap legacy dir pays ONE full cells scan instead. Only the
+    * is read from the ids' cbuckets only (≤ |ids| dirs, no cells scan).
+    * Only the
     * cells and cbuckets holding a match are rewritten, plus every
     * candidate cbucket of the `upserted` cids, where their new rows
     * land; a pure delete whose ids match nothing is no tick. */
@@ -1085,15 +1071,13 @@ object Ann extends Serializable {
       val ids = ids0.select(col("cid")).distinct().localCheckpoint(true)
       if (ids.isEmpty) None
       else {
-        val matched = (if (m.cidVersions.nonEmpty)
-            readIvfCidmapAt(spark, dir, m, Some(cbucketsOf(ids, m).toSet))
-          else readIvfCellsAt(spark, dir, m).withColumn("cbucket", lit(null).cast("int")))
+        val matched = readIvfCidmapAt(spark, dir, m, Some(cbucketsOf(ids, m).toSet))
           .join(ids, Seq("cid"), "left_semi").select(col("cell"), col("cbucket")).distinct()
           .collect() // ≤ cells × cbuckets pairs
         val cells = matched.map(_.getInt(0)).distinct.toSeq.filter(m.cellVersions.contains)
         if (cells.isEmpty && upserted.isEmpty) None
         else Some(IvfRemoval(ids, cells,
-          (matched.filterNot(_.isNullAt(1)).map(_.getInt(1)).toSeq ++
+          (matched.map(_.getInt(1)).toSeq ++
             upserted.toSeq.flatMap(cbucketsOf(_, m))).distinct.filter(m.cidVersions.contains)))
       }
     }
@@ -1144,26 +1128,15 @@ object Ann extends Serializable {
     ivfChangeTick(spark, dir, Some(up), ivfByIds(up, Some(up)), txn)
   }
 
-  /** MIGRATION tick — the [[Bm25.buildDocmap]] sibling: retrofit the
-    * cid→cell reverse map onto a pre-cidmap legacy dir with ONE full
-    * cells scan, so every later strict id-only takedown/upsert locates
-    * by the pure id→cbucket function. (Appends refuse to start a
-    * partial map; this builds the complete one in one committed
-    * version.) A dir that already has a cidmap is a no-op (returns
-    * false). One [[ManifestIO.tick]]. */
-  def ivfBuildCidmap(spark: SparkSession, dir: String): Boolean =
-    ManifestIO.tick(spark, dir, IvfSpec, None) { m =>
-      // already maintained, or empty (the next append starts one): no tick
-      if (m.cidVersions.nonEmpty || m.cellVersions.isEmpty) None
-      else Some { newVer =>
-        // ONE full cells scan — the price the map exists to retire
-        val presentD = ManifestIO.writePartitioned(readIvfCellsAt(spark, dir, m)
-          .select(col("cid"), col("cell")).distinct()
-          .withColumn("cbucket", cidCbucket(col("cid"), m.cells)),
-          dir, newVer, "cidmap", "cbucket")
-        m.copy(version = newVer, cidVersions = presentD.map(_ -> Seq(newVer)).toMap)
-      }
-    }
+  /** UPGRADE tick — the [[Bm25.upgrade]] sibling
+    * ([[ManifestIO.upgrade]]): bring a dir written before the cid→cell
+    * reverse map or the drift-stats sidecar existed to the current
+    * layout — every cell rewritten with its drift stats, the reverse
+    * map derived from one full cells scan. Every other verb refuses
+    * such a dir until this ran. False (no tick) when nothing is
+    * missing. */
+  def ivfIndexUpgrade(spark: SparkSession, dir: String): Boolean =
+    ManifestIO.upgrade(spark, dir, IvfSpec)
 
   /** CHANGE-APPLY tick — the CDC verb (the [[Bm25.applyChanges]]
     * sibling): ONE mixed micro-batch of upserts and deletes folds into
@@ -1238,13 +1211,11 @@ object Ann extends Serializable {
     * Determinism: each member contributes floor(cos·10⁶) as BIGINT —
     * an order-independent integer sum (double sums through groupBy are
     * accumulation-order-dependent); `mean_cos_fp` is BIGINT integral
-    * division. Scale shape (round 17): on a sidecar'd index the whole
-    * report derives from the cells-COUNT-sized drift-stats artifact
-    * ([[writeCellstats]] — per-(version, cell) partial sums written by
-    * every cells-writing tick), so the `driftEvery` alarm cadence
-    * never scans a committed vector; a pre-sidecar legacy dir pays one
-    * cells scan shuffling only (version, cos_fp) aggregates, centroids
-    * broadcast — the documented legacy price until a rebuild. */
+    * division. Scale shape (round 17): the whole report derives from
+    * the cells-COUNT-sized drift-stats artifact ([[writeCellstats]] —
+    * per-(version, cell) partial sums written by every cells-writing
+    * tick), so the `driftEvery` alarm cadence never scans a committed
+    * vector. */
   def ivfGeometryDrift(spark: SparkSession, dir: String): DataFrame =
     ivfGeometryDriftAt(spark, dir, readIvfManifest(spark, dir))
 
@@ -1254,7 +1225,6 @@ object Ann extends Serializable {
     * point). */
   private def ivfGeometryDriftAt(spark: SparkSession, dir: String,
       m: IvfManifest): DataFrame = {
-    import spark.implicits._
     val byVer = m.cellVersions.toSeq
       .flatMap { case (c, vs) => vs.map(v => (v, c)) }
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -1266,41 +1236,17 @@ object Ann extends Serializable {
         org.apache.spark.sql.types.StructType.fromDDL(
           "version BIGINT, n_vectors BIGINT, sum_cos_fp BIGINT, mean_cos_fp BIGINT"))
     }
-    // per-version (n, Σcos_fp): from the cells-COUNT-sized drift-stats
-    // sidecar when the index carries one (each version's per-cell
-    // partial sums, restricted to the cells the manifest still
-    // references — a later consolidation that superseded SOME of a
-    // version's cells drops exactly their rows); a pre-sidecar legacy
-    // dir recomputes them from the full committed cells, the
-    // documented legacy price. Identical integers either way: BIGINT
-    // partial sums are order-independent and additive.
-    val agg =
-      if (m.cellstats)
-        byVer.map { case (v, cs) =>
-          spark.read.parquet(s"$dir/data/$v/cellstats")
-            .filter(col("cell").isin(cs.map(_._2).map(Int.box): _*))
-            .select(lit(v).as("version"), col("n"), col("sum_cos_fp"))
-        }.reduce(_ unionByName _)
-          .groupBy(col("version"))
-          .agg(sum(col("n")).as("n_vectors"),
-            sum(col("sum_cos_fp")).as("sum_cos_fp"))
-      else {
-        val cents = readIvfCentroidsAt(spark, dir, m)
-        val members = byVer.map { case (v, cs) =>
-          spark.read.option("basePath", s"$dir/data/$v/cells")
-            .parquet(cs.map(_._2).sorted.map(c => s"$dir/data/$v/cells/cell=$c"): _*)
-            .select(lit(v).as("version"), col("cvec"),
-              col("cell").cast("int").as("cell"))
-        }.reduce(_ unionByName _)
-        val centDf = cents.toSeq.zipWithIndex
-          .map { case (cv, c) => (c, cv.toSeq) }.toDF("cell", "centvec")
-        members.join(broadcast(centDf), "cell")
-          .select(col("version"),
-            floor(cosine(col("cvec"), col("centvec")) * lit(1000000.0)).cast("long")
-              .as("cos_fp"))
-          .groupBy(col("version"))
-          .agg(count(lit(1)).as("n_vectors"), sum(col("cos_fp")).as("sum_cos_fp"))
-      }
+    // per-version (n, Σcos_fp) from the cells-COUNT-sized drift-stats
+    // sidecar: each version's per-cell partial sums, restricted to the
+    // cells the manifest still references — a later consolidation that
+    // superseded SOME of a version's cells drops exactly their rows
+    val agg = byVer.map { case (v, cs) =>
+        spark.read.parquet(s"$dir/data/$v/cellstats")
+          .filter(col("cell").isin(cs.map(_._2).map(Int.box): _*))
+          .select(lit(v).as("version"), col("n"), col("sum_cos_fp"))
+      }.reduce(_ unionByName _)
+      .groupBy(col("version"))
+      .agg(sum(col("n")).as("n_vectors"), sum(col("sum_cos_fp")).as("sum_cos_fp"))
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.{EvalMode, IntegralDivide}
     agg.select(col("version"), col("n_vectors"), col("sum_cos_fp"),
@@ -1329,8 +1275,7 @@ object Ann extends Serializable {
     * reference reports rebuild_due = false — geometry that bad needs a
     * human, not a threshold). A single-version index (nothing appended
     * yet) is its own reference: rebuild_due = false. Empty index →
-    * empty frame. Reads the drift-stats sidecar like the report (a
-    * legacy dir pays the one cells scan). */
+    * empty frame. Reads the drift-stats sidecar like the report. */
   def ivfDriftVerdict(spark: SparkSession, dir: String,
       rebuildDropPct: Int = 25): DataFrame = {
     require(rebuildDropPct >= 0 && rebuildDropPct < 100,

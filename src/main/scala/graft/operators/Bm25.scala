@@ -226,40 +226,52 @@ object Bm25 {
     * the exactly-once gate for streaming maintenance). */
   final case class IndexManifest(version: Long, buckets: Int,
       statsVersion: Long, bucketVersions: Map[Int, Seq[Long]],
-      txns: Map[String, Long] = Map.empty,
-      docVersions: Map[Int, Seq[Long]] = Map.empty,
-      termstats: Boolean = false)
+      txns: Map[String, Long], docVersions: Map[Int, Seq[Long]])
 
   /** The BM25 layout for the shared lifecycle verbs. */
   private[graft] object Spec extends ManifestIO.IndexSpec[IndexManifest] {
     val what = "BM25 index"
+    val upgradeVerb = "Bm25.upgrade (SQL bm25_index_upgrade)"
 
+    // an empty docmap renders no line; the termstats line marks the
+    // sidecar every version carries
     def render(m: IndexManifest): String =
       s"version=${m.version}\nbuckets=${m.buckets}\nstats=${m.statsVersion}\n" +
         s"bucketVersions=${ManifestIO.renderVersions(m.bucketVersions)}\n" +
         (if (m.docVersions.isEmpty) ""
          else s"docVersions=${ManifestIO.renderVersions(m.docVersions)}\n") +
-        (if (m.termstats) "termstats=1\n" else "") + ManifestIO.renderTxns(m.txns)
+        "termstats=1\n" + ManifestIO.renderTxns(m.txns)
 
-    // docVersions is OPTIONAL: a manifest committed before the docmap
-    // existed parses to an empty map, and every reader treats that as
-    // "no reverse index" (deleteByIds falls back to its postings scan).
-    // termstats is OPTIONAL too: a pre-sidecar manifest parses to false
-    // and the serve recomputes df from the postings themselves (one
-    // extra scan of the pruned read — the documented legacy price; a
-    // rebuild upgrades, since the sidecar's versions must mirror the
-    // postings')
     def parse(text: String): IndexManifest = {
       val kv = ManifestIO.parseKv(text)
       IndexManifest(kv("version").toLong, kv("buckets").toInt, kv("stats").toLong,
         ManifestIO.parseVersions(kv("bucketVersions")), ManifestIO.parseTxns(kv),
-        kv.get("docVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty),
-        kv.get("termstats").contains("1"))
+        kv.get("docVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty))
     }
+
+    // every doc with postings has a docmap row, so postings without a
+    // docVersions line are a dir written before the docmap existed
+    def missing(body: String): Seq[String] = {
+      val kv = ManifestIO.parseKv(body)
+      (if (!kv.contains("docVersions") && kv("bucketVersions").nonEmpty) Seq("docmap")
+       else Nil) ++ (if (kv.get("termstats").contains("1")) Nil else Seq("termstats"))
+    }
+
+    // the docmap from ONE full postings scan: per doc its dl and the
+    // buckets holding its postings. A zero-token legacy doc left no
+    // postings, so it stays invisible to id-only deletes
+    def derive(spark: SparkSession, dir: String, m: IndexManifest,
+        gone: Seq[String], ver: Long): IndexManifest =
+      if (!gone.contains("docmap")) m
+      else m.copy(docVersions = ManifestIO.writePartitioned(readPostingsAt(spark, dir, m)
+          .groupBy(col("doc_id"))
+          .agg(first(col("dl")).as("dl"), array_sort(collect_set(col("bucket"))).as("tbuckets"))
+          .withColumn("dbucket", pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int")),
+        dir, ver, "docmap", "dbucket").map(_ -> Seq(ver)).toMap)
 
     def accreting(m: IndexManifest): Seq[ManifestIO.Accreting] = Seq(
       ManifestIO.Accreting("postings", "bucket", m.bucketVersions,
-        Some(ManifestIO.Sidecar("termstats", perPartition = true, m.termstats))),
+        Some(ManifestIO.Sidecar("termstats", perPartition = true))),
       ManifestIO.Accreting("docmap", "dbucket", m.docVersions))
 
     override def single(m: IndexManifest): Seq[(String, Long)] =
@@ -306,20 +318,11 @@ object Bm25 {
     * would hand them new stats against old postings — exactly the torn
     * state the commit protocol exists to prevent. */
   def readPostingsAt(spark: SparkSession, dir: String, m: IndexManifest,
-      onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyBuckets match {
-      case Some(bs) => m.bucketVersions.filter { case (b, _) => bs(b) }
-      case None => m.bucketVersions
-    }
-    // NO df column: since appends became accretive, document frequency
-    // is a READ-TIME aggregate (a term's bucket is always read whole —
-    // every contributing version — so df = rows per term inside the
-    // pruned read is complete); legacy files that still carry a stored
-    // df simply have the column pruned away
+      onlyBuckets: Option[Set[Int]] = None): DataFrame =
+    // NO df column: document frequency is a READ-TIME aggregate (a
+    // term's bucket is always read whole — every contributing version)
     ManifestIO.readVersionedArtifact(spark, dir, "postings", "bucket",
-      "t STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, bucket INT",
-      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) })
-  }
+      "t STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, bucket INT", m.bucketVersions, onlyBuckets)
 
   /** The committed TERM-STATS sidecar (t, df, bucket) — the Lucene
     * term-dictionary idea applied to the accretive layout: every tick
@@ -331,15 +334,9 @@ object Bm25 {
     * exactly (same ticks, same buckets), so the manifest needs no new
     * reference list and vacuum scopes it by the same refs. */
   def readTermstatsAt(spark: SparkSession, dir: String, m: IndexManifest,
-      onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyBuckets match {
-      case Some(bs) => m.bucketVersions.filter { case (b, _) => bs(b) }
-      case None => m.bucketVersions
-    }
+      onlyBuckets: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "termstats", "bucket",
-      "t STRING, df BIGINT, bucket INT",
-      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) })
-  }
+      "t STRING, df BIGINT, bucket INT", m.bucketVersions, onlyBuckets)
 
   /** Derive one tick's term-stats sidecar from its JUST-WRITTEN
     * postings (read-back, so the two artifacts agree even for
@@ -354,12 +351,11 @@ object Bm25 {
         .select(col("t"), col("df"), col("bucket")), dir, ver, "termstats", "bucket")
   }
 
-  /** Write one tick's postings rows under `ver` plus, on a sidecar'd
-    * index, their term-stats delta; returns the materialized buckets. */
-  private def writePostings(rows: DataFrame, dir: String, ver: Long,
-      termstats: Boolean): Seq[Int] = {
+  /** Write one tick's postings rows under `ver` plus their term-stats
+    * delta; returns the materialized buckets. */
+  private def writePostings(rows: DataFrame, dir: String, ver: Long): Seq[Int] = {
     val present = ManifestIO.writePartitioned(rows, dir, ver, "postings", "bucket")
-    if (termstats) writeTermstats(rows.sparkSession, dir, ver)
+    writeTermstats(rows.sparkSession, dir, ver)
     present
   }
 
@@ -415,20 +411,13 @@ object Bm25 {
     * its batch's rows and appends its version to the touched dbuckets'
     * lists; delete/upsert consolidate a dbucket back to one version,
     * compact collapses long lists), so the append tick's reverse-map
-    * IO is O(batch) at any index size — the same model the postings
-    * adopted in round 16, closing the round-16 verdict's one weak
-    * flag. Superseded versions retire through the ordinary vacuum.
-    * Empty for a pre-docmap legacy index. */
+    * IO is O(batch) at any index size. Superseded versions retire
+    * through the ordinary vacuum. */
   def readDocmapAt(spark: SparkSession, dir: String, m: IndexManifest,
-      onlyDbuckets: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyDbuckets match {
-      case Some(ks) => m.docVersions.filter { case (k, _) => ks(k) }
-      case None => m.docVersions
-    }
+      onlyDbuckets: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "docmap", "dbucket",
-      "doc_id BIGINT, dl BIGINT, tbuckets ARRAY<INT>, dbucket INT",
-      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
-  }
+      "doc_id BIGINT, dl BIGINT, tbuckets ARRAY<INT>, dbucket INT", m.docVersions,
+      onlyDbuckets)
 
   /** The committed 1-row stats table (n, sdl). */
   def readStats(spark: SparkSession, dir: String): DataFrame =
@@ -482,7 +471,7 @@ object Bm25 {
     // it instead of scanning the pruned postings twice
     val present = writePostings(
       rows.select(col("t"), col("doc_id"), col("tf"), col("dl"), col("bucket")),
-      dir, ver, termstats = true).map(_ -> Seq(ver)).toMap
+      dir, ver).map(_ -> Seq(ver)).toMap
     dl.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$ver/stats")
     // the doc→bucket reverse index rides every build (doc-sized — one
@@ -491,8 +480,7 @@ object Bm25 {
     val presentD = ManifestIO.writePartitioned(docmapRows(docs, idCol, textCol, buckets),
       dir, ver, "docmap", "dbucket").map(_ -> Seq(ver)).toMap
     ManifestIO.commit(spark, dir, ver,
-      Spec.render(IndexManifest(ver, buckets, ver, present, priorTxns, presentD,
-        termstats = true)))
+      Spec.render(IndexManifest(ver, buckets, ver, present, priorTxns, presentD)))
   }
 
   /** Serve-path regime boundary: a query batch of up to this many
@@ -616,9 +604,8 @@ object Bm25 {
     * (qid, t, bucket rows): the distinct (qid, t) pairs, terms and
     * buckets are taken on the driver; ONE bounded collect brings the
     * 1-row stats and the queried terms' termstats rows (one row per
-    * term per contributing version of its bucket — a pre-sidecar legacy
-    * dir counts the pruned postings instead, one row per term); df
-    * sums and the prune rule run on the driver; the postings of the
+    * term per contributing version of its bucket); df sums and the
+    * prune rule run on the driver; the postings of the
     * KEPT terms' buckets are scored against literal n/avgdl and one
     * broadcast (qid, t, df) relation. Null terms match nothing and are
     * dropped. (qid, doc_id, s) rows. */
@@ -627,13 +614,8 @@ object Bm25 {
     val rows = probe.filterNot(_.isNullAt(1))
     val termBucket = rows.map(r => r.getString(1) -> r.getInt(2)).toMap
     val terms = termBucket.keys.toSeq.sorted
-    val buckets = Some(termBucket.values.toSet)
-    val dfRows =
-      if (m.termstats)
-        readTermstatsAt(spark, indexDir, m, buckets)
-          .filter(col("t").isin(terms: _*)).select(col("t"), col("df"))
-      else readPostingsAt(spark, indexDir, m, buckets)
-        .filter(col("t").isin(terms: _*)).groupBy(col("t")).agg(count(lit(1)).as("df"))
+    val dfRows = readTermstatsAt(spark, indexDir, m, Some(termBucket.values.toSet))
+      .filter(col("t").isin(terms: _*)).select(col("t"), col("df"))
     // one row per term per contributing version of its bucket, plus
     // the stats row
     val bound = termBucket.values.toSeq
@@ -670,12 +652,11 @@ object Bm25 {
     * plan. df is a READ-TIME aggregate (the accretive-append model): a
     * term's bucket is read whole across its contributing versions, so
     * rows-per-term IS the document frequency — the exact batchTopK
-    * computation. On a sidecar'd index it comes from the
-    * VOCABULARY-sized termstats artifact (per-version deltas summed —
-    * the postings are scanned exactly ONCE, by the scoring branch); a
-    * pre-sidecar legacy dir recomputes it from the pruned postings. The
-    * kept df map is O(distinct batch terms), so it joins as an ordinary
-    * shuffle: broadcasting it would collect an unbounded term frame
+    * computation. It comes from the VOCABULARY-sized termstats
+    * artifact (per-version deltas summed — the postings are scanned
+    * exactly ONCE, by the scoring branch). The kept df map is
+    * O(distinct batch terms), so it joins as an ordinary shuffle:
+    * broadcasting it would collect an unbounded term frame
     * driver-side, the exact OOM the regime split prevents. */
   private def scoreBig(spark: SparkSession, indexDir: String, m: IndexManifest,
       q: DataFrame, bucketOf: Column): DataFrame = {
@@ -686,13 +667,9 @@ object Bm25 {
       (col("sdl").cast("double") / col("n")).as("avgdl"))
     val post = readPostingsAt(spark, indexDir, m, Some(bucketIds))
       .join(terms0, Seq("t"), "left_semi")
-    val dfreq =
-      if (m.termstats)
-        readTermstatsAt(spark, indexDir, m, Some(bucketIds))
-          .join(terms0, Seq("t"), "left_semi")
-          .groupBy(col("t")).agg(sum(col("df")).as("df"))
-      else post.groupBy(col("t")).agg(count(lit(1)).as("df"))
-    val kept = dfreq
+    val kept = readTermstatsAt(spark, indexDir, m, Some(bucketIds))
+      .join(terms0, Seq("t"), "left_semi")
+      .groupBy(col("t")).agg(sum(col("df")).as("df"))
       .crossJoin(broadcast(stats.select(col("n"))))
       .filter(col("df") * PruneDfDen < col("n") * PruneDfNum)
       .select(col("t"), col("df"))
@@ -715,9 +692,8 @@ object Bm25 {
     * model has no stored per-row df to audit — and therefore no
     * staleness class to alarm on); `sum_df` equals `postings_rows` by
     * construction (Σ_t df(t) = #(t, doc) pairs) and both columns stay
-    * for the monitoring-schema contract. On a sidecar'd index the
-    * whole row derives from the VOCABULARY-sized termstats artifact —
-    * no postings scan at all; a legacy dir pays one postings scan.
+    * for the monitoring-schema contract. The whole row derives from
+    * the VOCABULARY-sized termstats artifact — no postings scan at all.
     *
     * The vocabulary-sized read is this row's FLOOR, not an oversight
     * (contrast the minhash occupancy / IVF drift verdicts, whose
@@ -732,15 +708,9 @@ object Bm25 {
   def indexProfile(spark: SparkSession, dir: String): DataFrame = {
     val m = readManifest(spark, dir)
     val stats = readStatsAt(spark, dir, m).select(col("n"), col("sdl"))
-    // per-term df: version deltas summed from the sidecar, or one
-    // postings scan on a pre-sidecar dir
-    val dfreq =
-      if (m.termstats)
-        readTermstatsAt(spark, dir, m)
-          .groupBy(col("t")).agg(sum(col("df")).as("df"))
-      else readPostingsAt(spark, dir, m)
-        .groupBy(col("t")).agg(count(lit(1)).as("df"))
-    val terms = dfreq
+    // per-term df: version deltas summed from the sidecar
+    val terms = readTermstatsAt(spark, dir, m)
+      .groupBy(col("t")).agg(sum(col("df")).as("df"))
       .crossJoin(broadcast(stats.select(col("n"))))
       .agg(count(lit(1)).as("distinct_terms"),
         coalesce(sum(col("df")), lit(0L)).as("sum_df"),
@@ -793,14 +763,9 @@ object Bm25 {
     * to the touched buckets' manifest lists; the committed files are
     * never read, so per-append cost is O(batch) however large the
     * index has grown — the IVF-cell/minhash accrete-then-compact
-    * model. (The previous design rewrote every touched bucket IN FULL
-    * to refresh a df value denormalized onto the rows; a small
-    * broad-vocabulary batch therefore paid INDEX-sized writes — the
-    * round-15 verdict's write-amplification asymmetry. Document
-    * frequency is now a read-time aggregate: a term lives in exactly
-    * one bucket and a serve reads that bucket's every contributing
-    * version, so rows-per-term inside the pruned read is always the
-    * fresh df — nothing stored can go stale.) [[compactIndex]] bounds
+    * model. Document frequency is a read-time aggregate (the termstats
+    * deltas of a bucket's every contributing version), so nothing
+    * stored can go stale. [[compactIndex]] bounds
     * the read amplification a long append history accretes; the 1-row
     * stats table rolls forward from its old values + the batch's
     * (n, Σdl) — no corpus re-scan anywhere.
@@ -854,28 +819,18 @@ object Bm25 {
         // at any index size (df resolves at read time; see readPostingsAt)
         // (plus the version's batch-vocabulary-sized term-stats delta)
         if (touched.nonEmpty)
-          writePostings(newTf.select(postingCols: _*), dir, newVer, m.termstats)
+          writePostings(newTf.select(postingCols: _*), dir, newVer)
         val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
         writeStats(spark, dir, newVer,
           old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1))
         // docmap maintenance — ACCRETIVE, like the postings above: the
         // batch's doc-sized reverse-map rows only, the version appended
-        // onto the touched dbuckets' lists (O(batch) at any index size;
-        // the previous rewrite of each touched dbucket with
-        // (existing ∪ batch) was index-bound, the round-16 verdict's
-        // weak flag). delete/upsert consolidate a dbucket back to one
-        // version; [[compactIndex]] collapses long lists. Maintained iff
-        // the index HAS a docmap (or is empty — a fresh lifecycle starts
-        // one): accreting onto a pre-docmap legacy index would leave a
-        // map that silently misses every older doc, worse than no map.
-        val newDocVers =
-          if (m.docVersions.isEmpty && m.bucketVersions.nonEmpty) m.docVersions
-          else ManifestIO.accrete(m.docVersions, ManifestIO.writePartitioned(
-            docmapRows(docs, idCol, textCol, m.buckets), dir, newVer, "docmap", "dbucket"),
-            newVer)
+        // onto the touched dbuckets' lists.
         m.copy(version = newVer, statsVersion = newVer,
           bucketVersions = ManifestIO.accrete(m.bucketVersions, touched, newVer),
-          docVersions = newDocVers)
+          docVersions = ManifestIO.accrete(m.docVersions, ManifestIO.writePartitioned(
+            docmapRows(docs, idCol, textCol, m.buckets), dir, newVer, "docmap", "dbucket"),
+            newVer))
       }
     }
 
@@ -926,16 +881,14 @@ object Bm25 {
             .select(postingCols: _*).join(rm.ids, Seq("doc_id"), "left_anti")
           val present =
             if (touched.isEmpty) Seq.empty[Int]
-            else writePostings(newTf.fold(kept)(t => kept.unionByName(t)), dir, newVer, m.termstats)
+            else writePostings(newTf.fold(kept)(t => kept.unionByName(t)), dir, newVer)
           writeStats(spark, dir, newVer,
             old.getLong(0) - rm.n + add.fold(0L)(_.getLong(0)),
             old.getLong(1) - rm.sdl + add.fold(0L)(_.getLong(1)))
           // an id's old and new docmap rows share one dbucket (a pure
-          // function of the id); a fresh index starts its docmap here
-          val maintainDocmap =
-            m.docVersions.nonEmpty || (upserts.isDefined && m.bucketVersions.isEmpty)
+          // function of the id)
           val newDocVers =
-            if (!maintainDocmap || (rm.dbuckets.isEmpty && upserts.isEmpty)) m.docVersions
+            if (rm.dbuckets.isEmpty && upserts.isEmpty) m.docVersions
             else {
               val keptD = readDocmapAt(spark, dir, m, Some(rm.dbuckets.toSet))
                 .join(rm.ids, Seq("doc_id"), "left_anti")
@@ -951,10 +904,9 @@ object Bm25 {
     }
 
   /** The materialized docmap dbuckets of `ids` (doc_id) — a pure
-    * function of the ids; empty on a pre-docmap dir. */
+    * function of the ids. */
   private def dbucketsOf(ids: DataFrame, m: IndexManifest): Seq[Int] =
-    if (m.docVersions.isEmpty) Seq.empty
-    else ids.select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int"))
+    ids.select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq // ≤ bucket count values
       .filter(m.docVersions.contains)
 
@@ -988,10 +940,8 @@ object Bm25 {
     * the ids' dbuckets are a PURE FUNCTION of the ids, so the docmap
     * rows of the committed copies are read from ≤ |ids| dbucket dirs —
     * no postings scan — and carry both the term buckets to rewrite and
-    * the dl to roll back by (a null-text doc's (1, 0) included). A
-    * pre-docmap legacy dir pays ONE full postings scan instead (per-doc
-    * dl off the denormalized rows; zero-token docs are invisible there,
-    * the documented deviation). The roll derives from the INDEX: ids
+    * the dl to roll back by (a null-text doc's (1, 0) included). The
+    * roll derives from the INDEX: ids
     * never ingested, deleted earlier or repeated roll nothing. One row
     * per docmap ROW, not per doc: an id re-ingested under a violated
     * append contract loses EVERY copy. Only the dbuckets holding a match
@@ -1003,16 +953,10 @@ object Bm25 {
       val ids = ids0.select(col("doc_id")).distinct().localCheckpoint(true)
       if (ids.isEmpty) None
       else {
-        val matched = (if (m.docVersions.nonEmpty) {
-          readDocmapAt(spark, dir, m, Some(dbucketsOf(ids, m).toSet))
-            .join(ids, Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
-        } else {
-          readPostingsAt(spark, dir, m)
-            .join(ids, Seq("doc_id"), "left_semi")
-            .groupBy(col("doc_id"))
-            .agg(first(col("dl")).as("dl"), collect_set(col("bucket")).as("buckets"))
-        }).localCheckpoint(true)
+        val matched = readDocmapAt(spark, dir, m, Some(dbucketsOf(ids, m).toSet))
+          .join(ids, Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
+          .localCheckpoint(true)
         val rm = matched
           .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
         if (rm.getLong(0) == 0L && upserted.isEmpty) None
@@ -1063,34 +1007,13 @@ object Bm25 {
     changeTick(spark, dir, None,
       byIds(ids.select(col(idCol).cast("long").as("doc_id")), None), txn)
 
-  /** MIGRATION tick: retrofit the doc→bucket reverse index onto a
-    * pre-docmap legacy dir, paying the full postings scan ONCE so
-    * every later id-only takedown/upsert locates by the pure
-    * id→dbucket function instead of re-paying it per request. (The
-    * append tick deliberately refuses to START a map mid-life — an
-    * incrementally grown one would silently miss every older doc; this
-    * tick builds the COMPLETE map in one committed version.) The
-    * migrated map covers exactly what the postings know: a zero-token
-    * legacy doc left no rows, so it stays invisible to id-only deletes
-    * — the same blind spot the legacy fallback always had, now frozen
-    * into the map rather than re-derived per scan. A dir that already
-    * has a docmap is a no-op (returns false). One [[ManifestIO.tick]]. */
-  def buildDocmap(spark: SparkSession, dir: String): Boolean =
-    ManifestIO.tick(spark, dir, Spec, None) { m =>
-      // already maintained, or empty (the next append starts one): no tick
-      if (m.docVersions.nonEmpty || m.bucketVersions.isEmpty) None
-      else Some { newVer =>
-        // ONE full postings scan — the price the map exists to retire
-        val presentD = ManifestIO.writePartitioned(readPostingsAt(spark, dir, m)
-          .groupBy(col("doc_id"))
-          .agg(first(col("dl")).as("dl"),
-            array_sort(collect_set(col("bucket"))).as("tbuckets"))
-          .withColumn("dbucket",
-            pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int")),
-          dir, newVer, "docmap", "dbucket")
-        m.copy(version = newVer, docVersions = presentD.map(_ -> Seq(newVer)).toMap)
-      }
-    }
+  /** UPGRADE tick ([[ManifestIO.upgrade]]): bring a dir written before
+    * the docmap or the term-stats sidecar existed to the current layout
+    * — every postings bucket rewritten with its termstats, the docmap
+    * derived from one full postings scan. Every other verb refuses such
+    * a dir until this ran. False (no tick) when nothing is missing. */
+  def upgrade(spark: SparkSession, dir: String): Boolean =
+    ManifestIO.upgrade(spark, dir, Spec)
 
   /** UPSERT tick of the standing-index lifecycle — the REFRESH verb:
     * `docs` carries (id, text) rows that REPLACE any committed copy of

@@ -155,12 +155,10 @@ private[graft] object ManifestIO {
 
   /** Deep-copy one subtree of an index dir verbatim (e.g.
     * `data/5/postings/bucket=3`), creating parents at the destination.
-    * Returns false when the source subtree does not exist (an export
-    * caller's referenced-but-optional artifact, e.g. a version that
-    * wrote no docmap). Refuses to overwrite: the destination of an
-    * export is a FRESH dir by contract. */
-  private[graft] def copySubtree(spark: SparkSession, srcDir: String,
-      destDir: String, rel: String): Boolean = {
+    * Refuses to overwrite: the destination of an export is a FRESH dir
+    * by contract. */
+  private def copySubtree(spark: SparkSession, srcDir: String,
+      destDir: String, rel: String): Unit = {
     // source and destination resolve their OWN filesystems — the
     // promotion/DR shape is exactly a cross-cluster (or hdfs→file)
     // copy, where addressing dst through the source FS would throw
@@ -168,7 +166,6 @@ private[graft] object ManifestIO {
     val srcFs = fs(spark, srcDir)
     val dstFs = fs(spark, destDir)
     val src = new org.apache.hadoop.fs.Path(s"$srcDir/$rel")
-    if (!srcFs.exists(src)) return false
     val dst = new org.apache.hadoop.fs.Path(s"$destDir/$rel")
     require(!dstFs.exists(dst), s"export destination $dst already exists — " +
       "export targets a fresh dir")
@@ -194,20 +191,21 @@ private[graft] object ManifestIO {
         "(a crashed export's debris? delete it first) — export targets a fresh dir")
   }
 
-  /** The shared export skeleton: freshness guard, copy every referenced
-    * subtree (`required = false` marks sidecars a legacy version may
-    * legitimately lack), publish the manifest body verbatim. Each
+  /** The shared export skeleton: freshness guard, every referenced
+    * subtree checked present BEFORE the first copy (a clone whose
+    * manifest names a file it does not hold would fail at its first
+    * serve instead), copy, publish the manifest body verbatim. Each
     * family supplies only its manifest→subtree mapping, so the
     * copy/publish protocol lives exactly once. */
-  private[graft] def exportReferenced(spark: SparkSession, srcDir: String,
+  private def exportReferenced(spark: SparkSession, srcDir: String,
       destDir: String, version: Long, manifestBody: String,
-      subtrees: Seq[(String, Boolean)]): Long = {
+      subtrees: Seq[String]): Long = {
     requireFreshExportDest(spark, destDir)
-    subtrees.foreach { case (rel, required) =>
-      val copied = copySubtree(spark, srcDir, destDir, rel)
-      require(copied || !required,
-        s"referenced subtree $rel is missing at $srcDir (vacuumed?)")
-    }
+    val f = fs(spark, srcDir)
+    val gone = subtrees.filterNot(rel => f.exists(new org.apache.hadoop.fs.Path(s"$srcDir/$rel")))
+    require(gone.isEmpty,
+      s"referenced subtrees ${gone.mkString(", ")} are missing at $srcDir (vacuumed?)")
+    subtrees.foreach(copySubtree(spark, srcDir, destDir, _))
     publishExport(spark, destDir, version, manifestBody)
     version
   }
@@ -510,9 +508,11 @@ private[graft] object ManifestIO {
 
   /** The one reader of the version-owned, partition-pruned index
     * artifacts (BM25 postings, termstats and docmap; IVF cells and
-    * cidmap; minhash rows, bands and bandstats): every wanted
-    * (version, partition) pair is read from its EXPLICIT committed leaf
-    * dir — `dir/data/<v>/<artifact>/<partCol>=<p>` — in ONE scan, so
+    * cidmap; minhash rows, bands and bandstats): every (version,
+    * partition) pair of the manifest's `versions` map — restricted to
+    * the `only` partitions when given — is read from its EXPLICIT
+    * committed leaf dir — `dir/data/<v>/<artifact>/<partCol>=<p>` — in
+    * ONE scan, so
     * uncommitted ticks' files are invisible, unwanted partitions are
     * never even listed (the serve/delete paths' pruning, made literal)
     * and an accreted partition costs extra FILES in one scan stage,
@@ -529,10 +529,12 @@ private[graft] object ManifestIO {
     * partition column LAST; no pairs → an empty frame of that schema. */
   def readVersionedArtifact(spark: SparkSession, dir: String,
       artifact: String, partCol: String, schemaDDL: String,
-      pairs: Seq[(Long, Int)]): DataFrame = {
+      versions: Map[Int, Seq[Long]], only: Option[Set[Int]] = None): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)
     require(schema.fields.last.name == partCol,
       s"schemaDDL must end with the partition column $partCol: $schemaDDL")
+    val pairs = versions.toSeq.filter { case (p, _) => only.forall(_(p)) }
+      .flatMap { case (p, vs) => vs.map(v => (v, p)) }
     if (pairs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -633,13 +635,13 @@ private[graft] object ManifestIO {
     }
 
   /** THE TICK SKELETON — every write of the three index families
-    * (append, delete, upsert, CDC, compact, the reverse-map and band
-    * migrations) runs through it, so the commit protocol is spelled
-    * once:
+    * (append, delete, upsert, CDC, compact, upgrade) runs through it,
+    * so the commit protocol is spelled once:
     *   1. a malformed txn appId is rejected before anything is read or
     *      written;
-    *   2. CURRENT is read ONCE and every artifact the tick reads
-    *      resolves from that pinned manifest;
+    *   2. CURRENT is read ONCE ([[IndexSpec.open]]: a legacy layout
+    *      fails loudly, naming the family's [[upgrade]]) and every
+    *      artifact the tick reads resolves from that pinned manifest;
     *   3. EXACTLY-ONCE: a `txn` (appId, epoch) the committed ledger
     *      already records — the app at this or a later epoch — makes
     *      the tick a no-op, so a micro-batch re-delivered by
@@ -661,13 +663,20 @@ private[graft] object ManifestIO {
     * mid-tick. True iff the tick committed. */
   def tick[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
       txn: Option[(String, Long)], crashPoint: Int = 0,
-      interleave: () => Unit = () => ())(plan: M => Option[Long => M]): Boolean = {
+      interleave: () => Unit = () => ())(plan: M => Option[Long => M]): Boolean =
+    tickOn(spark, dir, spec, spec.open(dir, _), txn, crashPoint, interleave)((m, _) => plan(m))
+
+  /** [[tick]] with the manifest opened by `open` and `plan` also seeing
+    * the raw committed body — [[upgrade]] opens a legacy layout. */
+  private def tickOn[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
+      open: String => M, txn: Option[(String, Long)], crashPoint: Int,
+      interleave: () => Unit)(plan: (M, String) => Option[Long => M]): Boolean = {
     requireAppId(txn)
     val (cur, body) = readCurrent(spark, dir, spec.what)
-    val m = spec.parse(body)
+    val m = open(body)
     if (txnAlreadyApplied(spec.txns(m), txn)) return false
     interleave()
-    plan(m).exists { write =>
+    plan(m, body).exists { write =>
       val ver = cur + 1
       guardSlot(spark, dir, ver)
       val next = spec.withTxns(write(ver), mergeTxn(spec.txns(m), txn))
@@ -743,9 +752,8 @@ private[graft] object ManifestIO {
     * the parent's just-written partitions — so its versions mirror the
     * parent's and the manifest needs no reference list of its own:
     * per partition (`data/<v>/<name>/<partCol>=<p>`) or one directory
-    * per version (`data/<v>/<name>`). `present` is the manifest's flag;
-    * a dir built before the sidecar existed lacks it. */
-  final case class Sidecar(name: String, perPartition: Boolean, present: Boolean)
+    * per version (`data/<v>/<name>`). */
+  final case class Sidecar(name: String, perPartition: Boolean)
 
   /** An accreting artifact as one manifest references it: every version
     * listed under partition `p` owns `data/<v>/<name>/<partCol>=<p>`. */
@@ -755,12 +763,24 @@ private[graft] object ManifestIO {
   /** What one index family supplies to the shared verbs: its manifest
     * codec, the artifacts a manifest references (accreting ones primary
     * first, plus single-version ones), the readers and sidecar writer
-    * it already has, and "this manifest at a new version with new
-    * version maps" (the ledger rides along unchanged). */
+    * it already has, "this manifest at a new version with new version
+    * maps" (the ledger rides along unchanged), and the two halves of
+    * [[upgrade]]. */
   trait IndexSpec[M] {
     def what: String
+    /** The family's upgrade verb, named by every refusal of a legacy layout. */
+    def upgradeVerb: String
+    /** The raw codec: any committed body, legacy layouts included. */
     def parse(body: String): M
     def render(m: M): String
+    /** The artifacts a committed body lacks because it was written
+      * before they existed (a reverse map, the band artifact, a stats
+      * sidecar), read from the body alone — the one place a family
+      * knows a legacy layout exists. */
+    def missing(body: String): Seq[String]
+    /** Derive the reverse map or band artifact `gone` names from `m`'s
+      * primary rows under `ver`; `m` with their version maps. */
+    def derive(spark: SparkSession, dir: String, m: M, gone: Seq[String], ver: Long): M
     def accreting(m: M): Seq[Accreting]
     def single(m: M): Seq[(String, Long)] = Seq.empty
     /** Artifact `name`'s committed rows of `parts`, columns as written
@@ -773,13 +793,29 @@ private[graft] object ManifestIO {
     def txns(m: M): Map[String, Long]
     def withTxns(m: M, txns: Map[String, Long]): M
 
+    /** The one open step of every serve, tick, time-travel read and
+      * export: `body` parsed, failing loudly on a legacy layout. */
+    def open(dir: String, body: String): M = {
+      val gone = missing(body)
+      require(gone.isEmpty, s"$what at $dir lacks ${gone.mkString(" and ")} " +
+        s"(a layout written before they existed): run $upgradeVerb on it once; " +
+        "versions committed before that upgrade are not servable")
+      parse(body)
+    }
+
     /** The committed manifest. */
     def current(spark: SparkSession, dir: String): M =
-      parse(readCurrent(spark, dir, what)._2)
+      open(dir, readCurrent(spark, dir, what)._2)
 
     /** The manifest AS OF a committed historical version ([[readVersion]]). */
     def at(spark: SparkSession, dir: String, version: Long): M =
-      parse(readVersion(spark, dir, version, what))
+      open(dir, readVersion(spark, dir, version, what))
+
+    /** The committed manifests [[at]] serves, oldest first: inside the
+      * vacuum grace window and written in the current layout. */
+    def servable(spark: SparkSession, dir: String): Iterator[M] =
+      history(spark, dir).iterator.collect { case (v, true, _) =>
+        readVersion(spark, dir, v, what) }.filter(missing(_).isEmpty).map(parse)
   }
 
   /** COMPACT tick — the read-amplification bound accreting appends
@@ -807,19 +843,52 @@ private[graft] object ManifestIO {
       if (picked.forall(_._2.isEmpty)) None // nothing fragmented: no tick
       else Some { newVer =>
         primary = picked.head._2
-        spec.updated(m, newVer, picked.map { case (a, ps) =>
-          val present = if (ps.isEmpty) Seq.empty else {
-            val out = writePartitioned(spec.read(spark, dir, m, a.name, ps.toSet),
-              dir, newVer, a.name, a.partCol)
-            if (a.sidecar.exists(_.present)) spec.writeSidecar(spark, dir, m, newVer)
-            out
-          }
-          a.name -> consolidate(a.versions, ps, present, newVer)
-        }.toMap)
+        rewrite(spark, dir, spec, m, newVer, picked)
       }
     }
     if (committed) primary else Seq.empty
   }
+
+  /** The write step of [[compact]] and [[upgrade]]: each artifact's
+    * `picked` partitions are rewritten into ONE new data version `ver`
+    * with the artifact's sidecar recomputed from the rewrite (rows
+    * bit-identical), and their entries collapse to `ver`. */
+  private def rewrite[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
+      m: M, ver: Long, picked: Seq[(Accreting, Seq[Int])]): M =
+    spec.updated(m, ver, picked.map { case (a, ps) =>
+      val present = if (ps.isEmpty) Seq.empty else {
+        val out = writePartitioned(spec.read(spark, dir, m, a.name, ps.toSet),
+          dir, ver, a.name, a.partCol)
+        if (a.sidecar.nonEmpty) spec.writeSidecar(spark, dir, m, ver)
+        out
+      }
+      a.name -> consolidate(a.versions, ps, present, ver)
+    }.toMap)
+
+  /** UPGRADE tick — the one step that brings a dir written before its
+    * family's reverse map, band artifact or stats sidecar existed to
+    * the current layout, so no verb branches on a missing artifact.
+    * Every partition of an artifact whose sidecar `spec.missing` names
+    * is rewritten into the new version with it ([[compact]]'s rewrite
+    * at every partition); the family then derives a missing reverse map
+    * or band artifact from the primary rows. Rows, answers and the txn
+    * ledger carry through; the rewritten artifacts' version history
+    * collapses as under a compaction, and the versions before the
+    * upgrade are no longer servable (time travel to them fails loudly).
+    * One [[tick]] (`crashPoint` as there); false when nothing is
+    * missing. */
+  def upgrade[M](spark: SparkSession, dir: String, spec: IndexSpec[M],
+      crashPoint: Int = 0): Boolean =
+    tickOn(spark, dir, spec, spec.parse, None, crashPoint, () => ()) { (m, body) =>
+      val gone = spec.missing(body)
+      if (gone.isEmpty) None
+      else Some { ver =>
+        val picked = spec.accreting(m).map(a => a ->
+          (if (a.sidecar.exists(sc => gone.contains(sc.name))) a.versions.keys.toSeq.sorted
+           else Seq.empty))
+        spec.derive(spark, dir, rewrite(spark, dir, spec, m, ver, picked), gone, ver)
+      }
+    }
 
   /** EXPORT (deep clone) of the index AS OF `version` (default CURRENT,
     * -1) into the FRESH dir `destDir` — the promotion / DR / branching
@@ -840,24 +909,23 @@ private[graft] object ManifestIO {
     * when `version` is uncommitted or already vacuumed — so an export
     * racing a maintenance stream's vacuum can die mid-copy like any
     * deep reader; run it under [[WriterLease.withLease]] there, or
-    * export a version the grace window protects. Sidecars are optional
-    * subtrees (a legacy version may lack them). Returns the exported
-    * version. */
+    * export a version the grace window protects. A legacy layout
+    * refuses ([[IndexSpec.open]]), and so does a version missing any
+    * referenced subtree, sidecars included, before anything is copied.
+    * Returns the exported version. */
   def exportIndex[M](spark: SparkSession, srcDir: String, destDir: String,
       version: Long, spec: IndexSpec[M]): Long = {
     val ver = if (version < 0) readCurrent(spark, srcDir, spec.what)._1 else version
     val body = readVersion(spark, srcDir, ver, spec.what)
-    val m = spec.parse(body)
+    val m = spec.open(srcDir, body)
     val subtrees = spec.accreting(m).flatMap { a =>
-      val side = a.sidecar.filter(_.present)
       a.versions.toSeq.flatMap { case (p, vs) =>
         vs.distinct.flatMap(v =>
-          (s"data/$v/${a.name}/${a.partCol}=$p", true) +:
-            side.filter(_.perPartition)
-              .map(sc => (s"data/$v/${sc.name}/${a.partCol}=$p", false)).toSeq)
-      } ++ side.filterNot(_.perPartition).toSeq.flatMap(sc =>
-        a.versions.values.flatten.toSeq.distinct.map(v => (s"data/$v/${sc.name}", false)))
-    } ++ spec.single(m).map { case (name, v) => (s"data/$v/$name", true) }
+          s"data/$v/${a.name}/${a.partCol}=$p" +:
+            a.sidecar.filter(_.perPartition).map(sc => s"data/$v/${sc.name}/${a.partCol}=$p").toSeq)
+      } ++ a.sidecar.filterNot(_.perPartition).toSeq.flatMap(sc =>
+        a.versions.values.flatten.toSeq.distinct.map(v => s"data/$v/${sc.name}"))
+    } ++ spec.single(m).map { case (name, v) => s"data/$v/$name" }
     exportReferenced(spark, srcDir, destDir, ver, body, subtrees)
   }
 

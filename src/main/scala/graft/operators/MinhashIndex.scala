@@ -54,9 +54,9 @@ import org.apache.spark.sql.functions._
   * sid-buckets — a candidate-bounded read — so the band artifact
   * costs ~bands·(8 + 8·bands) bytes per doc, not bands× the index.
   *
-  * A dir built before the band artifact existed (bandBuckets = 0 in
-  * its manifest) gates through the legacy full-fan-out kernel;
-  * [[buildBands]] retrofits the artifact in one committed tick.
+  * A dir built before the band artifact or its occupancy sidecar
+  * existed is refused by every verb until [[upgrade]] brings it to
+  * this layout in one committed tick.
   */
 object MinhashIndex {
 
@@ -68,61 +68,58 @@ object MinhashIndex {
   val BandBuckets = 64
 
   /** Committed index state: minhash params ride the manifest so every
-    * reader/writer derives the signature scheme from the index.
-    * `bandBuckets` = 0 marks a pre-band legacy dir (gate falls back to
-    * the full fan-out; [[buildBands]] migrates). `bandstats` marks the
-    * band-OCCUPANCY sidecar (per-tick (band, bucket) count deltas — the
-    * [[Bm25]] termstats discipline applied to monitoring): present on
-    * every dir this code builds (and on [[buildBands]]-migrated dirs,
-    * whose band artifact is born with it); a dir BANDED before the
-    * sidecar existed recomputes occupancy from the full band artifact
-    * until a REBUILD — the sidecar's versions must mirror the band
-    * artifact's, and retrofitting files into committed version dirs
-    * would break their immutability (the termstats upgrade rule). */
+    * reader/writer derives the signature scheme from the index. Every
+    * version carries the band artifact (partitioned into `bandBuckets`)
+    * and its band-OCCUPANCY sidecar `bandstats` (per-tick (band,
+    * bucket) count deltas — the [[Bm25]] termstats discipline applied
+    * to monitoring). */
   final case class Manifest(version: Long, buckets: Int, n: Int,
       bands: Int, rowsPerBand: Int, bucketVersions: Map[Int, Seq[Long]],
-      txns: Map[String, Long] = Map.empty,
-      bandBuckets: Int = 0,
-      bandVersions: Map[Int, Seq[Long]] = Map.empty,
-      bandstats: Boolean = false)
+      txns: Map[String, Long], bandBuckets: Int,
+      bandVersions: Map[Int, Seq[Long]])
 
   /** The minhash layout for the shared lifecycle verbs. */
   private[graft] object Spec extends ManifestIO.IndexSpec[Manifest] {
     val what = "minhash index"
+    val upgradeVerb = "MinhashIndex.upgrade (SQL minhash_index_upgrade)"
 
-    def render(m: Manifest): String = {
-      val bandLines =
-        if (m.bandBuckets > 0)
-          s"bandBuckets=${m.bandBuckets}\n" +
-            s"bandVersions=${ManifestIO.renderVersions(m.bandVersions)}\n" +
-            (if (m.bandstats) "bandstats=1\n" else "")
-        else ""
+    def render(m: Manifest): String =
       s"version=${m.version}\nbuckets=${m.buckets}\n" +
         s"params=${m.n}:${m.bands}:${m.rowsPerBand}\n" +
-        s"bucketVersions=${ManifestIO.renderVersions(m.bucketVersions)}\n" + bandLines +
-        ManifestIO.renderTxns(m.txns)
-    }
+        s"bucketVersions=${ManifestIO.renderVersions(m.bucketVersions)}\n" +
+        s"bandBuckets=${m.bandBuckets}\n" +
+        s"bandVersions=${ManifestIO.renderVersions(m.bandVersions)}\n" +
+        "bandstats=1\n" + ManifestIO.renderTxns(m.txns)
 
     def parse(text: String): Manifest = {
       val kv = ManifestIO.parseKv(text)
       val Array(n, bands, rpb) = kv("params").split(":").map(_.toInt)
-      // band fields are OPTIONAL: a manifest committed before the band
-      // artifact existed parses to bandBuckets = 0, and every reader
-      // treats that as "no band artifact" (gate falls back to the full
-      // fan-out, ticks don't maintain a partial artifact); bandstats is
-      // OPTIONAL the same way (occupancy falls back to the full band
-      // read on a pre-sidecar dir)
       Manifest(kv("version").toLong, kv("buckets").toInt, n, bands, rpb,
         ManifestIO.parseVersions(kv("bucketVersions")), ManifestIO.parseTxns(kv),
-        kv.get("bandBuckets").map(_.toInt).getOrElse(0),
-        kv.get("bandVersions").map(ManifestIO.parseVersions).getOrElse(Map.empty),
-        kv.get("bandstats").contains("1"))
+        kv.get("bandBuckets").fold(0)(_.toInt),
+        kv.get("bandVersions").fold(Map.empty[Int, Seq[Long]])(ManifestIO.parseVersions))
     }
+
+    def missing(body: String): Seq[String] = {
+      val kv = ManifestIO.parseKv(body)
+      (if (kv.contains("bandBuckets")) Nil else Seq("bands")) ++
+        (if (kv.get("bandstats").contains("1")) Nil else Seq("bandstats"))
+    }
+
+    // the band artifact at the default [[BandBuckets]], from one full
+    // read of the signature rows
+    def derive(spark: SparkSession, dir: String, m: Manifest,
+        gone: Seq[String], ver: Long): Manifest =
+      if (!gone.contains("bands")) m
+      else m.copy(bandBuckets = BandBuckets, bandVersions =
+        if (m.bucketVersions.isEmpty) Map.empty
+        else writeBands(bandRowsDF(readRowsAt(spark, dir, m).select(col("sid"), col("bhs")),
+          BandBuckets), dir, ver).map(_ -> Seq(ver)).toMap)
 
     def accreting(m: Manifest): Seq[ManifestIO.Accreting] = Seq(
       ManifestIO.Accreting("rows", "bucket", m.bucketVersions),
       ManifestIO.Accreting("bands", "bb", m.bandVersions,
-        Some(ManifestIO.Sidecar("bandstats", perPartition = true, m.bandstats))))
+        Some(ManifestIO.Sidecar("bandstats", perPartition = true))))
 
     def read(spark: SparkSession, dir: String, m: Manifest, name: String,
         parts: Set[Int]): DataFrame =
@@ -167,15 +164,9 @@ object MinhashIndex {
     * entry lists; with `onlyBuckets` the others are never listed (the
     * delete tick's partition pruning, made literal). */
   def readRowsAt(spark: SparkSession, dir: String, m: Manifest,
-      onlyBuckets: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyBuckets match {
-      case Some(bs) => m.bucketVersions.filter { case (b, _) => bs(b) }
-      case None => m.bucketVersions
-    }
+      onlyBuckets: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "rows", "bucket",
-      "sid BIGINT, gs ARRAY<BIGINT>, bhs ARRAY<BIGINT>, bucket INT",
-      wanted.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) })
-  }
+      "sid BIGINT, gs ARRAY<BIGINT>, bhs ARRAY<BIGINT>, bucket INT", m.bucketVersions, onlyBuckets)
 
   /** [[readRowsAt]] against a fresh CURRENT read. */
   def readRows(spark: SparkSession, dir: String,
@@ -185,23 +176,16 @@ object MinhashIndex {
   /** The committed band rows (band, bucket, sid, bhs, bb), pruned to
     * `onlyBbs` — the gate's probe read. */
   def readBandsAt(spark: SparkSession, dir: String, m: Manifest,
-      onlyBbs: Option[Set[Int]] = None): DataFrame = {
-    val wanted = onlyBbs match {
-      case Some(ks) => m.bandVersions.filter { case (k, _) => ks(k) }
-      case None => m.bandVersions
-    }
+      onlyBbs: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "bands", "bb",
-      "band INT, bucket BIGINT, sid BIGINT, bhs ARRAY<BIGINT>, bb INT",
-      wanted.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
-  }
+      "band INT, bucket BIGINT, sid BIGINT, bhs ARRAY<BIGINT>, bb INT", m.bandVersions, onlyBbs)
 
   /** Write one tick's band rows (band, bucket, sid, bhs, bb) under
-    * `data/<ver>/bands` plus, on a sidecar'd index, their occupancy
-    * deltas; returns the materialized bb ids. */
-  private def writeBands(bandRows: DataFrame, dir: String, ver: Long,
-      bandstats: Boolean): Seq[Int] = {
+    * `data/<ver>/bands` plus their occupancy deltas; returns the
+    * materialized bb ids. */
+  private def writeBands(bandRows: DataFrame, dir: String, ver: Long): Seq[Int] = {
     val present = ManifestIO.writePartitioned(bandRows, dir, ver, "bands", "bb")
-    if (bandstats) writeBandstats(bandRows.sparkSession, dir, ver)
+    writeBandstats(bandRows.sparkSession, dir, ver)
     present
   }
 
@@ -234,8 +218,7 @@ object MinhashIndex {
   private def readBandstatsAt(spark: SparkSession, dir: String,
       m: Manifest): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "bandstats", "bb",
-      "band INT, bucket BIGINT, c BIGINT, bb INT",
-      m.bandVersions.toSeq.flatMap { case (k, vs) => vs.map(v => (v, k)) })
+      "band INT, bucket BIGINT, c BIGINT, bb INT", m.bandVersions)
 
   /** BUILD (or offline rebuild): compute the corpus's signature rows
     * once ([[Dedup.minhashDocIndex]] — docs with < n tokens have no
@@ -251,7 +234,7 @@ object MinhashIndex {
       buckets: Int = Bm25.IndexBuckets,
       bandBuckets: Int = BandBuckets): Unit = {
     require(buckets > 0, s"bucket count must be positive, got $buckets")
-    require(bandBuckets >= 0, s"band bucket count must be >= 0, got $bandBuckets")
+    require(bandBuckets > 0, s"band bucket count must be positive, got $bandBuckets")
     val spark = docs.sparkSession
     val (ver, priorTxns) = ManifestIO.buildSlot(spark, dir)
     ManifestIO.guardSlot(spark, dir, ver)
@@ -261,48 +244,31 @@ object MinhashIndex {
       dir, ver, "rows", "bucket").map(_ -> Seq(ver)).toMap
     // the occupancy sidecar rides every build (see [[writeBandstats]])
     val presentBb =
-      if (bandBuckets > 0 && present.nonEmpty)
-        writeBands(bandRowsDF(spark.read.parquet(s"$dir/data/$ver/rows")
-          .select("sid", "bhs"), bandBuckets), dir, ver, bandstats = true)
-          .map(_ -> Seq(ver)).toMap
-      else Map.empty[Int, Seq[Long]]
+      if (present.isEmpty) Map.empty[Int, Seq[Long]]
+      else writeBands(bandRowsDF(spark.read.parquet(s"$dir/data/$ver/rows")
+        .select("sid", "bhs"), bandBuckets), dir, ver).map(_ -> Seq(ver)).toMap
     ManifestIO.commit(spark, dir, ver,
       Spec.render(Manifest(ver, buckets, n, bands, rowsPerBand, present, priorTxns,
-        bandBuckets, presentBb, bandstats = bandBuckets > 0)))
+        bandBuckets, presentBb)))
   }
 
-  /** MIGRATION tick: retrofit the band-partitioned gate artifact onto
-    * a pre-band legacy dir, paying one full signature read so every
-    * later gate/admit probe reads only its batch's (band, bucket)
-    * partitions instead of the whole index. (The ticks deliberately
-    * refuse to START the artifact mid-life — an incrementally grown
-    * one would silently miss every older doc's band rows and the gate
-    * would stop catching their near-dups; this tick builds the
-    * COMPLETE artifact in one committed version.) A dir that already
-    * has one is a no-op (returns false). One [[ManifestIO.tick]]. */
-  def buildBands(spark: SparkSession, dir: String,
-      bandBuckets: Int = BandBuckets): Boolean = {
-    require(bandBuckets > 0, s"band bucket count must be positive, got $bandBuckets")
-    ManifestIO.tick(spark, dir, Spec, None) { m =>
-      if (m.bandBuckets > 0) None // already maintained: no tick
-      else Some { newVer =>
-        val presentBb =
-          if (m.bucketVersions.isEmpty) Map.empty[Int, Seq[Long]]
-          else writeBands(bandRowsDF(readRowsAt(spark, dir, m).select(col("sid"), col("bhs")),
-            bandBuckets), dir, newVer, bandstats = true).map(_ -> Seq(newVer)).toMap
-        m.copy(version = newVer, bandBuckets = bandBuckets, bandVersions = presentBb,
-          bandstats = true)
-      }
-    }
-  }
+  /** UPGRADE tick — the [[Bm25.upgrade]] sibling
+    * ([[ManifestIO.upgrade]]): bring a dir written before the band
+    * artifact or its occupancy sidecar existed to the current layout —
+    * a missing band artifact is derived at [[BandBuckets]] from one
+    * full signature read, with its sidecar; a band artifact lacking
+    * the sidecar is rewritten with it. Every other verb refuses such a
+    * dir until this ran. False (no tick) when nothing is missing. */
+  def upgrade(spark: SparkSession, dir: String): Boolean =
+    ManifestIO.upgrade(spark, dir, Spec)
 
   /** GATE (serve): which batch documents near-duplicate the committed
     * corpus. Emits (da = batch id, db = committed id, jaccard ≥
-    * `threshold`); the signature scheme comes from the manifest. On a
-    * banded index the probe reads ONLY the batch's (band, bucket)
-    * partitions plus the candidates' sid-buckets (see
-    * [[gatePairsPruned]]); a legacy dir pays the documented full
-    * fan-out ([[Dedup.minhashLshPairsAcrossIndexed]]). */
+    * `threshold`); the signature scheme comes from the manifest. The
+    * probe reads ONLY the batch's (band, bucket) partitions plus the
+    * candidates' sid-buckets (see [[gatePairsPruned]]); its pairs equal
+    * the full fan-out kernel's
+    * ([[Dedup.minhashLshPairsAcrossIndexed]]). */
   def gate(spark: SparkSession, dir: String, newDocs: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       maxBucket: Int = Int.MaxValue): DataFrame =
@@ -319,28 +285,18 @@ object MinhashIndex {
     gateAt(spark, dir, readManifestVersion(spark, dir, version), newDocs,
       idCol, textCol, threshold, maxBucket)
 
-  /** The shared gate body against an already-read manifest: pruned
-    * kernel on a banded index, legacy full fan-out otherwise. Both apply
-    * the uniform intra-batch duplicate-id rule of the tick verbs
-    * ([[ManifestIO.dedupBatch]]) to the READ verb too: a probe doc
-    * re-submitted within one batch gates ONCE. Without it the two
-    * kernels DISAGREE on duplicate-id batches — the full fan-out emits
-    * each pair once per duplicate batch row, while the pruned kernel's
-    * verify join SQUARES the multiplicity — so the dedup is what makes
-    * "bit-identical across kernels" hold for every input. Two different
-    * texts under one probe id reject loudly (whose near-dups would the
-    * (da, db) rows mean?). */
+  /** The shared gate body against an already-read manifest. It applies
+    * the uniform intra-batch duplicate-id rule of the tick verbs to
+    * the READ verb too ([[gateBatch]]): a probe doc re-submitted within
+    * one batch gates ONCE — without it the verify join would SQUARE
+    * the pair multiplicity. Two different texts under one probe id
+    * reject loudly (whose near-dups would the (da, db) rows mean?). */
   private def gateAt(spark: SparkSession, dir: String, m: Manifest,
       newDocs: DataFrame, idCol: String, textCol: String, threshold: Double,
-      maxBucket: Int): DataFrame =
-    if (m.bandBuckets > 0) {
-      val (batchIndex, probeBbs) = gateBatch(spark, m, newDocs, idCol, textCol)
-      gatePairsPruned(spark, dir, m, batchIndex, probeBbs, threshold, maxBucket)
-    } else
-      Dedup.minhashLshPairsAcrossIndexed(
-        ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol), "minhash gate"),
-        readRowsAt(spark, dir, m), idCol, textCol, m.n, m.bands, m.rowsPerBand,
-        threshold, maxBucket)
+      maxBucket: Int): DataFrame = {
+    val (batchIndex, probeBbs) = gateBatch(spark, m, newDocs, idCol, textCol)
+    gatePairsPruned(spark, dir, m, batchIndex, probeBbs, threshold, maxBucket)
+  }
 
   /** The gate's plan inputs in ONE pin and ONE driver round trip: the
     * pin holds the batch's distinct (id, text) rows as (sid, gs, bhs) —
@@ -537,17 +493,10 @@ object MinhashIndex {
         m.n, m.bands, m.rowsPerBand).localCheckpoint(true)
       if (batchIndex.isEmpty) None
       else {
-        val gatePairs =
-          if (m.bandBuckets > 0)
-            gatePairsPruned(spark, dir, m, batchIndex,
-              bandRowsDF(batchIndex, m.bandBuckets).select(col("bb")).distinct()
-                .collect().map(_.getInt(0)).toSeq, // ≤ bandBuckets values
-              threshold, maxBucket)
-          else Dedup.acrossPairs(
-            Dedup.indexBandRows(batchIndex, m.bands, isNew = true)
-              .unionAll(Dedup.indexBandRows(readRowsAt(spark, dir, m), m.bands,
-                isNew = false)),
-            threshold, maxBucket)
+        val gatePairs = gatePairsPruned(spark, dir, m, batchIndex,
+          bandRowsDF(batchIndex, m.bandBuckets).select(col("bb")).distinct()
+            .collect().map(_.getInt(0)).toSeq, // ≤ bandBuckets values
+          threshold, maxBucket)
         val matches = gatePairs.groupBy(col("da").as("sid"))
           .agg(count(lit(1)).as("n_ref_matches"))
         // a replayed sid (already committed) pairs with nothing through
@@ -586,11 +535,8 @@ object MinhashIndex {
           // the band artifact accretes the same admitted docs (derived
           // from the same two pins, so rows and bands cannot diverge);
           // the occupancy sidecar rides the same write
-          val touchedBb =
-            if (m.bandBuckets > 0)
-              writeBands(bandRowsDF(admittedRows.select(col("sid"), col("bhs")),
-                m.bandBuckets), dir, newVer, m.bandstats)
-            else Seq.empty
+          val touchedBb = writeBands(bandRowsDF(admittedRows.select(col("sid"), col("bhs")),
+            m.bandBuckets), dir, newVer)
           m.copy(version = newVer,
             bucketVersions = ManifestIO.accrete(m.bucketVersions, touched, newVer),
             bandVersions = ManifestIO.accrete(m.bandVersions, touchedBb, newVer))
@@ -634,24 +580,22 @@ object MinhashIndex {
           .select(col("sid"), col("gs"), col("bhs"), col("bucket"))
         val present = ManifestIO.writePartitioned(newRows.fold(kept)(n => kept.unionByName(n)),
           dir, newVer, "rows", "bucket")
-        val newBands = if (m.bandBuckets == 0) m.bandVersions else {
-          val newBhs = newRows.map(_.select(col("sid"), col("bhs")))
-          // the old copies' bbs ∪ the new rows' bbs: every old band row's
-          // bb is in this set, so one anti ∪ new rewrite per bb
-          val tb = bandRowsDF(newBhs.fold(rm.old)(n => rm.old.unionByName(n)), m.bandBuckets)
-            .select(col("bb")).distinct()
-            .collect().map(_.getInt(0)).toSeq // ≤ bandBuckets values
-            .filter(m.bandVersions.contains)
+        val newBhs = newRows.map(_.select(col("sid"), col("bhs")))
+        // the old copies' bbs ∪ the new rows' bbs: every old band row's
+        // bb is in this set, so one anti ∪ new rewrite per bb
+        val tb = bandRowsDF(newBhs.fold(rm.old)(n => rm.old.unionByName(n)), m.bandBuckets)
+          .select(col("bb")).distinct()
+          .collect().map(_.getInt(0)).toSeq // ≤ bandBuckets values
+          .filter(m.bandVersions.contains)
+        val newBands =
           if (tb.isEmpty && upserts.isEmpty) m.bandVersions
           else {
             val keptB = readBandsAt(spark, dir, m, Some(tb.toSet))
               .join(rm.ids, Seq("sid"), "left_anti")
               .select(col("band"), col("bucket"), col("sid"), col("bhs"), col("bb"))
             ManifestIO.consolidate(m.bandVersions, tb, writeBands(newBhs.fold(keptB)(n =>
-              keptB.unionByName(bandRowsDF(n, m.bandBuckets))), dir, newVer, m.bandstats),
-              newVer)
+              keptB.unionByName(bandRowsDF(n, m.bandBuckets))), dir, newVer), newVer)
           }
-        }
         m.copy(version = newVer,
           bucketVersions = ManifestIO.consolidate(m.bucketVersions, rm.buckets, present, newVer),
           bandVersions = newBands)
@@ -661,31 +605,29 @@ object MinhashIndex {
   /** Locate by sid ([[deleteByIds]], [[upsert]], [[applyChanges]]) with
     * NO scan: the candidate buckets are a pure function of the ids, and
     * one read of just those (~1/B of the index) finds the committed
-    * copies. A pure delete rewrites only buckets that actually hold a
-    * match and is no tick when nothing matches (re-delete-proof); an
-    * upsert rewrites every candidate bucket, where its new rows land. */
-  private[graft] def byIds(ids0: DataFrame, upserting: Boolean): Locate =
+    * copies. Only the buckets holding a match are rewritten, plus every
+    * candidate bucket of the `upserted` sids, where their new rows land;
+    * a pure delete whose ids match nothing is no tick (re-delete-proof). */
+  private[graft] def byIds(ids0: DataFrame, upserted: Option[DataFrame]): Locate =
     (spark, dir, m) => {
       val ids = ids0.select(col("sid")).distinct().localCheckpoint(true)
-      val cand =
-        if (ids.isEmpty) Seq.empty[Int]
-        else ids.select(bucketOf(m.buckets)).distinct()
+      def candidates(sids: DataFrame): Seq[Int] =
+        sids.select(bucketOf(m.buckets)).distinct()
           .collect().map(_.getInt(0)).toSeq // ≤ bucket count values
           .filter(m.bucketVersions.contains)
-      if (ids.isEmpty || (cand.isEmpty && !upserting)) None
+      if (ids.isEmpty) None
       else {
         // the matched copies, PINNED: the touched-bucket plan, the band
         // plan (their bhs) and the no-op gate all read them
-        val old = readRowsAt(spark, dir, m, Some(cand.toSet))
+        val old = readRowsAt(spark, dir, m, Some(candidates(ids).toSet))
           .join(ids, Seq("sid"), "left_semi")
           .select(col("sid"), col("bhs"), col("bucket"))
           .localCheckpoint(true)
-        val buckets =
-          if (upserting) cand
-          else old.select(col("bucket")).distinct()
-            .collect().map(_.getInt(0)).toSeq // ≤ candidate count values
-        if (buckets.isEmpty && !upserting) None
-        else Some(Removal(ids, buckets, old.select(col("sid"), col("bhs"))))
+        val matched = old.select(col("bucket")).distinct()
+          .collect().map(_.getInt(0)).toSeq // ≤ candidate count values
+        if (matched.isEmpty && upserted.isEmpty) None
+        else Some(Removal(ids, (matched ++ upserted.toSeq.flatMap(candidates)).distinct,
+          old.select(col("sid"), col("bhs"))))
       }
     }
 
@@ -698,7 +640,7 @@ object MinhashIndex {
   def deleteByIds(spark: SparkSession, dir: String, ids: DataFrame,
       txn: Option[(String, Long)] = None): Unit =
     changeTick(spark, dir, None,
-      byIds(ids.select(col("sid").cast("long").as("sid")), upserting = false), txn)
+      byIds(ids.select(col("sid").cast("long").as("sid")), None), txn)
 
   /** UPSERT tick — the REFRESH verb (the [[Bm25.upsertIndex]]
     * sibling): `docs` carries (id, text) rows whose NEW signature rows
@@ -712,7 +654,7 @@ object MinhashIndex {
       idCol: String, textCol: String, txn: Option[(String, Long)] = None): Unit = {
     val up = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "minhash upsert")
       .select(col(idCol).cast("long").as("sid"), col(textCol).as("text"))
-    changeTick(spark, dir, Some(up), byIds(up, upserting = true), txn)
+    changeTick(spark, dir, Some(up), byIds(up, Some(up)), txn)
   }
 
   /** CHANGE-APPLY tick — the CDC verb (the [[Bm25.applyChanges]]
@@ -728,7 +670,7 @@ object MinhashIndex {
     val (ups, dels) = ManifestIO.splitChanges(changes, opCol, idCol, Seq(textCol))
     val up = ups.select(col(idCol).cast("long").as("sid"), col(textCol).as("text"))
     changeTick(spark, dir, Some(up), byIds(up.select(col("sid"))
-      .unionByName(dels.select(col(idCol).as("sid"))), upserting = true), txn)
+      .unionByName(dels.select(col(idCol).as("sid"))), Some(up)), txn)
   }
 
   /** COMPACT tick ([[ManifestIO.compact]]): admissions ACCRETE, so
@@ -764,30 +706,22 @@ object MinhashIndex {
     * GATE's health meter: every probe pays candidate pairing
     * proportional to the depth of the buckets it lands in, so
     * near-dup mass accumulating past the admission threshold shows up
-    * here before it shows up as gate latency. All-zero for a pre-band
-    * legacy manifest. */
+    * here before it shows up as gate latency. */
   private def occupancyAt(spark: SparkSession, dir: String,
-      m: Manifest): DataFrame = {
-    // on a sidecar'd index the group counts come from the
-    // group-count-sized bandstats deltas (summed across each
-    // partition's contributing versions — see [[writeBandstats]]); a
-    // pre-sidecar banded dir recomputes them from the full band
-    // artifact, the documented legacy price. Identical integers either
-    // way: Σ per-version counts per (band, bucket) IS the group size.
-    val occ =
-      if (m.bandstats)
-        readBandstatsAt(spark, dir, m)
-          .groupBy(col("band"), col("bucket")).agg(sum(col("c")).as("c"))
-      else readBandsAt(spark, dir, m)
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("c"))
-    occ.agg(coalesce(sum(col("c")), lit(0L)).as("band_rows"),
+      m: Manifest): DataFrame =
+    // the group counts come from the group-count-sized bandstats
+    // deltas, summed across each partition's contributing versions
+    // (see [[writeBandstats]]): Σ per-version counts per (band, bucket)
+    // IS the group size
+    readBandstatsAt(spark, dir, m)
+      .groupBy(col("band"), col("bucket")).agg(sum(col("c")).as("c"))
+      .agg(coalesce(sum(col("c")), lit(0L)).as("band_rows"),
         count(lit(1)).as("distinct_band_buckets"),
         coalesce(max(col("c")), lit(0L)).as("max_band_bucket"))
       .select(col("band_rows"), col("distinct_band_buckets"),
         col("max_band_bucket"),
         coalesce(intDiv(col("band_rows") * lit(OccupancyScale),
           col("distinct_band_buckets")), lit(0L)).as("mean_occupancy_fp"))
-  }
 
   /** Monitoring profile of the committed minhash index, computed from
     * the COMMITTED ARTIFACTS ALONE (one CURRENT read pins both) — the
@@ -830,18 +764,14 @@ object MinhashIndex {
     * growing, which is exactly when gate probes start paying
     * quadratic in-bucket pairing — re-tune the signature scheme
     * (bands/rowsPerBand) or tighten the admission threshold and
-    * rebuild. A pre-band legacy dir reports zeros and never alarms. */
+    * rebuild. */
   def occupancyVerdict(spark: SparkSession, dir: String,
       growPct: Int = 50): DataFrame = {
     require(growPct >= 0, s"growPct must be >= 0, got $growPct")
     val m = readManifest(spark, dir)
-    // the oldest servable manifest that already had a band artifact —
-    // the reference the verdict measures growth against
-    val refM = ManifestIO.history(spark, dir)
-      .collect { case (v, true, false) => v }.sorted
-      .iterator.map(v => readManifestVersion(spark, dir, v))
-      .find(_.bandBuckets > 0)
-      .getOrElse(m)
+    // the oldest servable manifest — the reference the verdict
+    // measures growth against
+    val refM = Spec.servable(spark, dir).find(_.version < m.version).getOrElse(m)
     val ref = occupancyAt(spark, dir, refM)
       .select(lit(refM.version).as("ref_version"),
         col("mean_occupancy_fp").as("ref_occupancy_fp"))

@@ -230,17 +230,16 @@ object SqlFrontDoor {
           "doc_id")
         graft.operators.Bm25.readStats(s, a.head)
       }),
-      // bm25_index_build_docmap(index_dir): MIGRATION — retrofit the
-      // doc→bucket reverse map onto a pre-docmap legacy dir (one full
-      // postings scan, paid once; later id-only takedowns are
-      // scan-free)
-      ("bm25_index_build_docmap", 1, a => {
-        graft.operators.Bm25.buildDocmap(s, a.head)
+      // bm25_index_upgrade(index_dir): bring a dir written before the
+      // docmap or the term-stats sidecar existed to the current layout
+      // in one tick (every other verb refuses such a dir)
+      ("bm25_index_upgrade", 1, a => {
+        graft.operators.Bm25.upgrade(s, a.head)
         graft.operators.Bm25.readStats(s, a.head)
       }),
       // bm25_index_docmap(index_dir): the committed doc→bucket reverse
       // index (doc_id, dl, tbuckets, dbucket) — what the id-only
-      // takedown locates through; empty for a pre-docmap legacy dir
+      // takedown locates through
       ("bm25_index_docmap", 1, a =>
         graft.operators.Bm25.readDocmapAt(s, a.head,
           graft.operators.Bm25.readManifest(s, a.head))),
@@ -718,12 +717,11 @@ object SqlFrontDoor {
       ("minhash_index_occupancy", 2, a =>
         graft.operators.MinhashIndex.occupancyVerdict(s, a.head,
           a(1).trim.toInt)),
-      // minhash_index_build_bands(index_dir): MIGRATION — retrofit the
-      // band-partitioned gate artifact onto a pre-band legacy dir (one
-      // full signature read, paid once; later gate/admit probes read
-      // only their batch's (band, bucket) partitions)
-      ("minhash_index_build_bands", 1, a => {
-        graft.operators.MinhashIndex.buildBands(s, a.head)
+      // minhash_index_upgrade(index_dir): bring a dir written before
+      // the band artifact or its occupancy sidecar existed to the
+      // current layout in one tick (every other verb refuses such a dir)
+      ("minhash_index_upgrade", 1, a => {
+        graft.operators.MinhashIndex.upgrade(s, a.head)
         minhashManifestSummary(a.head)
       }),
       // minhash_index_export(src_dir, dest_dir) /
@@ -875,8 +873,7 @@ object SqlFrontDoor {
       // vector an update-by-append left in another cell (the gap the
       // assignment-local ivf_index_delete documents); locates through
       // the cid→cell reverse map (≤ |ids| cbucket dirs read — no cells
-      // scan; legacy pre-cidmap dirs fall back to one full scan);
-      // returns the commit receipt
+      // scan); returns the commit receipt
       ("ivf_index_delete_ids", 2, a => {
         graft.operators.Ann.ivfIndexDeleteByIds(s, a.head, s.read.parquet(a(1)))
         ivfManifestSummary(a.head)
@@ -923,16 +920,16 @@ object SqlFrontDoor {
         Seq(graft.operators.Ann.ivfIndexExport(sp, a.head, a(1),
           a(2).trim.toLong)).toDF("exported_version")
       }),
-      // ivf_index_build_cidmap(index_dir): MIGRATION — retrofit the
-      // cid→cell reverse map onto a pre-cidmap legacy dir (one full
-      // cells scan, paid once; later id-only takedowns are scan-free)
-      ("ivf_index_build_cidmap", 1, a => {
-        graft.operators.Ann.ivfBuildCidmap(s, a.head)
+      // ivf_index_upgrade(index_dir): bring a dir written before the
+      // cid→cell reverse map or the drift-stats sidecar existed to the
+      // current layout in one tick (every other verb refuses such a dir)
+      ("ivf_index_upgrade", 1, a => {
+        graft.operators.Ann.ivfIndexUpgrade(s, a.head)
         ivfManifestSummary(a.head)
       }),
       // ivf_index_cidmap(index_dir): the committed cid→cell reverse
       // map (cid, cell, cbucket) — what the id-only takedown locates
-      // through; empty for a pre-cidmap legacy dir
+      // through
       ("ivf_index_cidmap", 1, a =>
         graft.operators.Ann.readIvfCidmap(s, a.head)),
       // ivf_drift_verdict(index_dir, rebuild_drop_pct): the drift

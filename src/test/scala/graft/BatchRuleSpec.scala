@@ -143,11 +143,12 @@ class BatchRuleSpec extends AnyFunSuite {
     assert(n == 1L, "the duplicate row must ingest exactly once")
   }
 
-  test("minhash gate: duplicate probe rows gate once on BOTH kernels; conflicting texts throw") {
-    // without the rule the two kernels DISAGREE on a duplicate-id
-    // probe: the full fan-out doubles each pair's multiplicity, the
-    // pruned kernel's verify join (cand ⋈ daGs) SQUARES it — the
-    // round-16 ADVICE finding, pinned here
+  test("minhash gate: duplicate probe rows gate once; conflicting texts throw") {
+    // without the rule the gate's verify join (cand ⋈ daGs) SQUARES a
+    // duplicate-id probe's pair multiplicity, where the full fan-out
+    // reference kernel doubles it — the round-16 ADVICE finding,
+    // pinned here (the gate's equality with that reference kernel is
+    // MinhashBandsSpec's)
     val refDocs = (0 until 40).map(i =>
       (i.toLong, s"alpha bravo charlie delta echo w$i x${i % 7} y${i % 5}"))
     val probe = Seq((2000L, "alpha bravo charlie delta echo w3 x3 y3"))
@@ -156,19 +157,16 @@ class BatchRuleSpec extends AnyFunSuite {
           "doc_id", "text", 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
         .sorted
-    for (bb <- Seq(16, 0)) { // pruned kernel AND legacy full fan-out
-      val dir = Files.createTempDirectory(s"brGate$bb").toString
-      MinhashIndex.build(refDocs.toDF("doc_id", "text"), "doc_id", "text",
-        dir, n = 3, bands = 6, rowsPerBand = 2, buckets = 8, bandBuckets = bb)
-      val once = pairsOf(dir, probe)
-      assert(once.nonEmpty, "fixture must produce pairs")
-      assert(pairsOf(dir, probe ++ probe) == once,
-        s"bandBuckets=$bb: a duplicated probe row must gate once " +
-          "(pair multiplicities included)")
-      val ex = intercept[IllegalArgumentException] {
-        pairsOf(dir, probe ++ Seq((2000L, "another text same id entirely")))
-      }
-      assert(ex.getMessage.contains("conflicting"))
+    val dir = Files.createTempDirectory("brGate").toString
+    MinhashIndex.build(refDocs.toDF("doc_id", "text"), "doc_id", "text",
+      dir, n = 3, bands = 6, rowsPerBand = 2, buckets = 8, bandBuckets = 16)
+    val once = pairsOf(dir, probe)
+    assert(once.nonEmpty, "fixture must produce pairs")
+    assert(pairsOf(dir, probe ++ probe) == once,
+      "a duplicated probe row must gate once (pair multiplicities included)")
+    val ex = intercept[IllegalArgumentException] {
+      pairsOf(dir, probe ++ Seq((2000L, "another text same id entirely")))
     }
+    assert(ex.getMessage.contains("conflicting"))
   }
 }

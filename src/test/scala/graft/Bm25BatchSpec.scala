@@ -119,7 +119,7 @@ class Bm25BatchSpec extends AnyFunSuite {
     assert(out.filter(_._1 == 1L).map(_._2).sorted === Seq(0L, 1L))
   }
 
-  test("serve resolves df from the term-stats sidecar; a stripped legacy dir falls back identically") {
+  test("serve resolves df from the term-stats sidecar; a stripped legacy dir serves identically once upgraded") {
     val spark = SparkTest.spark
     import spark.implicits._
     val docs = (0L until 40L).map(id => id -> s"w${id % 7} shared common")
@@ -147,14 +147,19 @@ class Bm25BatchSpec extends AnyFunSuite {
       f.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$v/termstats"), true)
     }
     intercept[java.io.FileNotFoundException] { Bm25.serveTopK(spark, dir, q, 5).collect() }
-    // strip the manifest flag too: the legacy fallback recomputes df
-    // from the postings — same answers
+    // strip the manifest flag too — a dir written before the sidecar
+    // existed: the serve refuses it, naming the upgrade (there is no
+    // df-from-postings fallback any more)
     val mp = new org.apache.hadoop.fs.Path(s"$dir/manifest/v${m.version}.txt")
     val body = graft.operators.ManifestIO.readText(f, mp)
       .linesIterator.filterNot(_.startsWith("termstats=")).mkString("\n") + "\n"
     graft.operators.ManifestIO.writeText(f, mp, body)
-    val legacy = Bm25.serveTopK(spark, dir, q, 5)
-    assert(legacy.orderBy("qid", "rank").collect().map(_.toSeq).toSeq == expected)
-    assert(!legacy.inputFiles.exists(_.contains("/termstats/")))
+    val ex = intercept[IllegalArgumentException] { Bm25.serveTopK(spark, dir, q, 5) }
+    assert(ex.getMessage.contains("Bm25.upgrade"), ex.getMessage)
+    // the upgrade rewrites every bucket with its termstats: same answers
+    assert(Bm25.upgrade(spark, dir))
+    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/data/${m.version + 1}/termstats")))
+    val upgraded = Bm25.serveTopK(spark, dir, q, 5)
+    assert(upgraded.orderBy("qid", "rank").collect().map(_.toSeq).toSeq == expected)
   }
 }

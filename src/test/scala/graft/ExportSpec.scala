@@ -181,4 +181,18 @@ class ExportSpec extends AnyFunSuite {
     assert(MinhashIndex.readManifest(spark, dest) ==
       MinhashIndex.readManifest(spark, src))
   }
+
+  test("export refuses a version missing a referenced sidecar; the destination gets no CURRENT") {
+    val spark = SparkTest.spark
+    import spark.implicits._
+    val src = Files.createTempDirectory("exp_side_src").toString
+    Bm25.buildIndex((0 until 12).map(i => (i.toLong, s"w${i % 5} shared"))
+      .toDF("doc_id", "text"), "doc_id", "text", src, buckets = 4)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$src/data/1/termstats"))
+    val dest = Files.createTempDirectory("exp_side_dst").toString + "/clone"
+    val ex = intercept[IllegalArgumentException](Bm25.exportIndex(spark, src, dest))
+    assert(ex.getMessage.contains("termstats"), ex.getMessage)
+    assert(!new java.io.File(s"$dest/CURRENT").exists, "a refused export publishes nothing")
+    assert(!new java.io.File(s"$dest/data").exists, "and copies nothing")
+  }
 }

@@ -376,42 +376,57 @@ class IndexDeleteSpec extends AnyFunSuite {
     assert(Ann.readIvfCidmapAt(spark, dir, m,
         Some(Set(cbucketOf(42L, 3)))).count() == 0L,
       "the request's cbucket no longer holds the deleted id")
-    // legacy fallback on the same layout: the locate is a full cells
-    // scan, so the corrupted untouched cell IS read — and throws
+    // on the legacy layout the id-only delete refuses (naming the
+    // upgrade), and the one legacy path — the upgrade — is a full
+    // cells scan, so the corrupted untouched cell IS read — and throws
     val dirL = Files.createTempDirectory("ivfcidmaplegacy").toString
     seed(dirL)
-    val f = graft.operators.ManifestIO.fs(spark, dirL)
-    val (v, body) = graft.operators.ManifestIO.readCurrent(spark, dirL, "legacy spec")
-    graft.operators.ManifestIO.writeText(f,
-      new org.apache.hadoop.fs.Path(s"$dirL/manifest/v$v.txt"),
-      body.linesIterator.filterNot(_.startsWith("cidVersions="))
-        .mkString("", "\n", "\n"))
-    assert(Ann.readIvfManifest(spark, dirL).cidVersions.isEmpty)
+    stripManifest(dirL, "cidVersions")
     corrupt(s"$dirL/data/1/cells/cell=2")
-    intercept[Exception] {
+    assertNamesUpgrade("Ann.ivfIndexUpgrade") {
       Ann.ivfIndexDeleteByIds(spark, dirL, Seq(42L).toDF("cid"))
     }
+    intercept[Exception] { Ann.ivfIndexUpgrade(spark, dirL) }
   }
 
-  test("cidmap: a pre-cidmap legacy dir keeps working and appends don't start a partial map") {
-    val cents = Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f), Array(0f, 0f, 1f))
-    val dir = Files.createTempDirectory("ivfprecidmap").toString
-    Ann.ivfIndexBuild(Seq((42L, Seq(0.9f, 0.1f, 0f)), (7L, Seq(0f, 0.1f, 0.9f)))
-      .toDF("cid", "cvec"), dir, cents)
+  /** Strip `key` from the committed manifest — the body a writer that
+    * predates the artifact committed. */
+  private def stripManifest(dir: String, key: String): Unit = {
     val f = graft.operators.ManifestIO.fs(spark, dir)
     val (v, body) = graft.operators.ManifestIO.readCurrent(spark, dir, "legacy spec")
     graft.operators.ManifestIO.writeText(f,
       new org.apache.hadoop.fs.Path(s"$dir/manifest/v$v.txt"),
-      body.linesIterator.filterNot(_.startsWith("cidVersions="))
+      body.linesIterator.filterNot(_.startsWith(s"$key="))
         .mkString("", "\n", "\n"))
-    assert(Ann.readIvfManifest(spark, dir).cidVersions.isEmpty)
-    // an append onto the legacy dir does NOT start an incomplete map
-    // (accreting only new members would silently miss old copies)
+  }
+
+  private def assertNamesUpgrade(verb: String)(op: => Any): Unit = {
+    val ex = intercept[IllegalArgumentException](op)
+    assert(ex.getMessage.contains(verb), ex.getMessage)
+  }
+
+  test("cidmap: a pre-cidmap legacy dir refuses ticks until upgraded; appends never start a partial map") {
+    val cents = Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f), Array(0f, 0f, 1f))
+    val dir = Files.createTempDirectory("ivfprecidmap").toString
+    Ann.ivfIndexBuild(Seq((42L, Seq(0.9f, 0.1f, 0f)), (7L, Seq(0f, 0.1f, 0.9f)))
+      .toDF("cid", "cvec"), dir, cents)
+    stripManifest(dir, "cidVersions")
+    // an append onto the legacy dir refuses — so it cannot start an
+    // incomplete map (accreting only new members would silently miss
+    // old copies) — and so does the id-only delete
+    assertNamesUpgrade("Ann.ivfIndexUpgrade") {
+      Ann.ivfIndexAppend(spark, dir, Seq((8L, Seq(0f, 0.9f, 0.1f))).toDF("cid", "cvec"))
+    }
+    assertNamesUpgrade("Ann.ivfIndexUpgrade") {
+      Ann.ivfIndexDeleteByIds(spark, dir, Seq(42L).toDF("cid"))
+    }
+    // once upgraded, the append maintains the complete map and the
+    // id-only delete equals the rebuild over the remainder
+    assert(Ann.ivfIndexUpgrade(spark, dir))
     Ann.ivfIndexAppend(spark, dir, Seq((8L, Seq(0f, 0.9f, 0.1f)))
       .toDF("cid", "cvec"))
-    assert(Ann.readIvfManifest(spark, dir).cidVersions.isEmpty)
-    // the id-only delete still equals the rebuild over the remainder —
-    // through the documented full-scan fallback
+    assert(Ann.readIvfCidmap(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet == Set((42L, 0), (7L, 2), (8L, 1)))
     Ann.ivfIndexDeleteByIds(spark, dir, Seq(42L).toDF("cid"))
     val dirU = Files.createTempDirectory("ivfprecidmapU").toString
     Ann.ivfIndexBuild(Seq((7L, Seq(0f, 0.1f, 0.9f)), (8L, Seq(0f, 0.9f, 0.1f)))
@@ -486,21 +501,35 @@ class IndexDeleteSpec extends AnyFunSuite {
       Bm25.serveTopK(spark, dirU, queries, 5).collect().map(_.toSeq).toSeq)
   }
 
-  test("docmap: a pre-docmap legacy index falls back to the locate scan") {
+  test("docmap: a pre-docmap legacy index refuses ticks until upgrade retrofits the complete map") {
     val dir = Files.createTempDirectory("bm25legacy").toString
     Bm25.buildIndex((keep ++ gone).toDF("doc_id", "text"), "doc_id", "text", dir,
       buckets = 64)
     // surgically strip the docVersions line — the manifest shape every
-    // pre-docmap build committed (parse treats the missing key as
-    // "no reverse index")
-    val f = graft.operators.ManifestIO.fs(spark, dir)
-    val (v, body) = graft.operators.ManifestIO.readCurrent(spark, dir, "legacy spec")
-    graft.operators.ManifestIO.writeText(f,
-      new org.apache.hadoop.fs.Path(s"$dir/manifest/v$v.txt"),
-      body.linesIterator.filterNot(_.startsWith("docVersions="))
-        .mkString("", "\n", "\n"))
-    assert(Bm25.readManifest(spark, dir).docVersions.isEmpty)
-    // the id-only delete still works — one full postings scan locates
+    // pre-docmap build committed
+    stripManifest(dir, "docVersions")
+    // the id-only delete refuses, naming the upgrade; so does an append
+    // (which therefore cannot start an incomplete docmap)
+    assertNamesUpgrade("Bm25.upgrade") {
+      Bm25.deleteByIds(spark, dir, gone.map(_._1).toDF("doc_id"), "doc_id")
+    }
+    assertNamesUpgrade("Bm25.upgrade") {
+      Bm25.appendToIndex(spark, dir, Seq((300L, "papaya quince")).toDF("doc_id", "text"),
+        "doc_id", "text")
+    }
+    // UPGRADE: one full-scan tick retrofits the COMPLETE map — it
+    // equals what a fresh build writes (tbuckets compared as sets: the
+    // scan derives them from postings buckets, the build from token
+    // hashes — same set)
+    assert(Bm25.upgrade(spark, dir))
+    assert(!Bm25.upgrade(spark, dir), "a second upgrade is a no-op")
+    def docmapSet(d: String) = Bm25.readDocmapAt(spark, d, Bm25.readManifest(spark, d))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2).toSet)).toSet
+    val dirB = Files.createTempDirectory("bm25migB").toString
+    Bm25.buildIndex((keep ++ gone).toDF("doc_id", "text"), "doc_id", "text", dirB,
+      buckets = 64)
+    assert(docmapSet(dir) == docmapSet(dirB))
+    // the id-only delete now runs the docmap path: == rebuild
     Bm25.deleteByIds(spark, dir, gone.map(_._1).toDF("doc_id"), "doc_id")
     val dirU = Files.createTempDirectory("bm25legacyU").toString
     Bm25.buildIndex(keep.toDF("doc_id", "text"), "doc_id", "text", dirU, buckets = 64)
@@ -508,28 +537,18 @@ class IndexDeleteSpec extends AnyFunSuite {
       Bm25.serveTopK(spark, dirU, queries, 5).collect().map(_.toSeq).toSeq)
     assert(Bm25.readStats(spark, dir).select("n", "sdl").head().toSeq ==
       Bm25.readStats(spark, dirU).select("n", "sdl").head().toSeq)
-    // and an append onto the legacy index does NOT start an incomplete
-    // docmap (accreting only new docs would silently miss old ones)
+    // appends maintain the map again
     Bm25.appendToIndex(spark, dir, Seq((300L, "papaya quince")).toDF("doc_id", "text"),
       "doc_id", "text")
-    assert(Bm25.readManifest(spark, dir).docVersions.isEmpty)
-    // MIGRATION: one full-scan tick retrofits the COMPLETE map — after
-    // it, the map equals what a fresh build writes (tbuckets compared
-    // as sets: the scan derives them from postings buckets, the build
-    // from token hashes — same set) and appends maintain it again
-    assert(Bm25.buildDocmap(spark, dir))
-    assert(!Bm25.buildDocmap(spark, dir), "a second migration is a no-op")
     val dirF = Files.createTempDirectory("bm25migF").toString
     Bm25.buildIndex((keep :+ (300L, "papaya quince")).toDF("doc_id", "text"),
       "doc_id", "text", dirF, buckets = 64)
-    def docmapSet(d: String) = Bm25.readDocmapAt(spark, d, Bm25.readManifest(spark, d))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2).toSet)).toSet
     assert(docmapSet(dir) == docmapSet(dirF))
     Bm25.appendToIndex(spark, dir, Seq((301L, "lychee rambutan"))
       .toDF("doc_id", "text"), "doc_id", "text")
     assert(Bm25.readDocmapAt(spark, dir, Bm25.readManifest(spark, dir))
       .filter(col("doc_id") === 301L).count() == 1L,
-      "post-migration appends maintain the map")
+      "post-upgrade appends maintain the map")
     // the id-only delete now runs the docmap path and still == rebuild
     Bm25.deleteByIds(spark, dir, Seq(300L, 301L).toDF("doc_id"), "doc_id")
     assert(Bm25.serveTopK(spark, dir, queries, 5).collect().map(_.toSeq).toSeq ==
@@ -544,22 +563,16 @@ class IndexDeleteSpec extends AnyFunSuite {
     Ann.ivfIndexBuild(Seq((42L, Seq(0.9f, 0.1f, 0f)),
       (keeper, Seq(0f, 0.1f, 0.9f))).toDF("cid", "cvec"), dir, cents)
     // strip to the legacy shape
-    val f = graft.operators.ManifestIO.fs(spark, dir)
-    val (v, body) = graft.operators.ManifestIO.readCurrent(spark, dir, "mig spec")
-    graft.operators.ManifestIO.writeText(f,
-      new org.apache.hadoop.fs.Path(s"$dir/manifest/v$v.txt"),
-      body.linesIterator.filterNot(_.startsWith("cidVersions="))
-        .mkString("", "\n", "\n"))
-    assert(Ann.readIvfManifest(spark, dir).cidVersions.isEmpty)
-    // migrate: the retrofitted map equals the member set
-    assert(Ann.ivfBuildCidmap(spark, dir))
-    assert(!Ann.ivfBuildCidmap(spark, dir), "a second migration is a no-op")
+    stripManifest(dir, "cidVersions")
+    // upgrade: the retrofitted map equals the member set
+    assert(Ann.ivfIndexUpgrade(spark, dir))
+    assert(!Ann.ivfIndexUpgrade(spark, dir), "a second upgrade is a no-op")
     assert(Ann.readIvfCidmap(spark, dir).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet ==
       Set((42L, 0), (keeper, 2)))
     // and the strict delete is scan-free again: corrupt the untouched
-    // cell AND cbucket — the tick must still succeed (the audit that
-    // FAILED on this dir before the migration, by the legacy test)
+    // cell AND cbucket — the tick must still succeed (the same audit
+    // makes the upgrade itself throw: it scans every cell)
     corrupt(s"$dir/data/1/cells/cell=2")
     corrupt(s"$dir/data/2/cidmap/cbucket=${cbucketOf(keeper, 3)}")
     Ann.ivfIndexDeleteByIds(spark, dir, Seq(42L).toDF("cid"))

@@ -189,7 +189,7 @@ class IndexUpsertSpec extends AnyFunSuite {
     val replaced = Seq((2L, "replacement text for the second document right here"))
       .toDF("sid", "text")
     MinhashIndex.changeTick(spark, dir, Some(replaced),
-      MinhashIndex.byIds(replaced, upserting = true), crashPoint = 2)
+      MinhashIndex.byIds(replaced, Some(replaced)), crashPoint = 2)
     assert(MinhashIndex.readManifest(spark, dir) == m)
     MinhashIndex.upsert(spark, dir,
       Seq((2L, "replacement text for the second document right here"))

@@ -137,7 +137,8 @@ class IvfDriftSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(report.nonEmpty)
     val m = Ann.readIvfManifest(spark, dir)
-    assert(m.cellstats, "new indexes must carry the drift-stats sidecar")
+    assert(graft.operators.ManifestIO.readCurrent(spark, dir, "IVF index")._2
+      .linesIterator.contains("cellstats=1"), "new indexes must carry the drift-stats sidecar")
     val f = graft.operators.ManifestIO.fs(spark, dir)
     m.cellVersions.values.flatten.toSet[Long].foreach { v =>
       f.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$v/cells"), true)

@@ -16,9 +16,9 @@ import graft.operators.{Ann, Bm25, MinhashIndex}
   * committed format: sidecar flags, the `p:v1|v2,…` version maps of
   * every artifact, and the `txns2=` ledger line. A second lifecycle
   * per family pins the consolidating ticks — an id delete holding one
-  * unknown id, a content delete, a plain upsert (and, for BM25, a CDC
-  * tick whose delete ids match nothing) — so a change in which
-  * partitions a tick rewrites shows up as a version-map diff.
+  * unknown id, a content delete, a plain upsert (and, for BM25 and
+  * MinHash, a CDC tick whose delete ids match nothing) — so a change
+  * in which partitions a tick rewrites shows up as a version-map diff.
   */
 class ManifestGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -218,5 +218,25 @@ class ManifestGoldenSpec extends AnyFunSuite {
         "bandBuckets=8", "bandVersions=0:1,1:1,2:3,3:1,4:3,5:1,6:3,7:3", "bandstats=1"),
       body("version=4", "buckets=4", "params=3:4:2", "bucketVersions=0:3,1:4,2:4,3:1",
         "bandBuckets=8", "bandVersions=0:4,1:4,2:4,3:4,4:4,5:4,6:3,7:3", "bandstats=1")))
+  }
+
+  test("minhash: a CDC delete id matching nothing rewrites none of its partitions") {
+    val dir = Files.createTempDirectory("goldenmhcdc").toString
+    val ref = (0 until 8).map(i =>
+      (i.toLong, s"document number $i about topic ${i % 3} with enough tokens"))
+    MinhashIndex.build(ref.toDF("doc_id", "text"), "doc_id", "text", dir,
+      3, 4, 2, buckets = 4, bandBuckets = 8)
+    // 2 is upserted; 997, 998 and 999 were never ingested, so only doc
+    // 2's sid-bucket (1) and the band partitions of its old and new
+    // signatures move
+    MinhashIndex.applyChanges(spark, dir,
+      Seq(("upsert", 2L, "document two rewritten with a brand new long text body"),
+        ("delete", 997L, null), ("delete", 998L, null), ("delete", 999L, null))
+        .toDF("op", "doc_id", "text"), "op", "doc_id", "text")
+    check(dir, Seq(
+      body("version=1", "buckets=4", "params=3:4:2", "bucketVersions=0:1,1:1,2:1,3:1",
+        "bandBuckets=8", "bandVersions=0:1,1:1,2:1,3:1,4:1,5:1,6:1,7:1", "bandstats=1"),
+      body("version=2", "buckets=4", "params=3:4:2", "bucketVersions=0:1,1:2,2:1,3:1",
+        "bandBuckets=8", "bandVersions=0:2,1:1,2:2,3:1,4:1,5:2,6:1,7:1", "bandstats=1")))
   }
 }

@@ -80,26 +80,37 @@ class MinhashBandsSpec extends AnyFunSuite {
         "reading only the probed band partitions + candidate sid-buckets")
   }
 
-  test("buildBands migrates a legacy dir: gate answers identically before and after; no-op when banded") {
+  test("upgrade migrates a pre-band legacy dir: the gate refuses before and equals the full kernel after; no-op when banded") {
     val dir = Files.createTempDirectory("mhBandsMig").toString
-    // a pre-band dir (bandBuckets = 0): the legacy full-fan-out gate
     MinhashIndex.build(refDocs, "doc_id", "text", dir, N, Bands, Rpb,
-      buckets = 8, bandBuckets = 0)
-    val m0 = MinhashIndex.readManifest(spark, dir)
-    assert(m0.bandBuckets == 0 && m0.bandVersions.isEmpty)
-    val legacy = MinhashIndex.gate(spark, dir, batch, "doc_id", "text", 0.5)
+      buckets = 8, bandBuckets = 16)
+    // the reference answer: the full fan-out kernel over every row
+    val expected = Dedup.minhashLshPairsAcrossIndexed(batch,
+        MinhashIndex.readRows(spark, dir), "doc_id", "text", N, Bands, Rpb, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(legacy.nonEmpty)
-    // one committed migration tick retrofits the artifact
-    assert(MinhashIndex.buildBands(spark, dir, bandBuckets = 16))
+    assert(expected.nonEmpty)
+    // strip to a pre-band dir: the manifest shape written before the
+    // band artifact existed (no band lines at all)
+    val f = ManifestIO.fs(spark, dir)
+    val (v0, body) = ManifestIO.readCurrent(spark, dir, "minhash index")
+    ManifestIO.writeText(f, new org.apache.hadoop.fs.Path(s"$dir/manifest/v$v0.txt"),
+      body.linesIterator.filterNot(l => Seq("bandBuckets=", "bandVersions=", "bandstats=")
+        .exists(l.startsWith)).mkString("", "\n", "\n"))
+    val ex = intercept[IllegalArgumentException] {
+      MinhashIndex.gate(spark, dir, batch, "doc_id", "text", 0.5)
+    }
+    assert(ex.getMessage.contains("MinhashIndex.upgrade"), ex.getMessage)
+    // one committed upgrade tick retrofits the artifact at the default
+    // band-bucket count
+    assert(MinhashIndex.upgrade(spark, dir))
     val m1 = MinhashIndex.readManifest(spark, dir)
-    assert(m1.version == m0.version + 1 && m1.bandBuckets == 16 &&
+    assert(m1.version == v0 + 1 && m1.bandBuckets == MinhashIndex.BandBuckets &&
       m1.bandVersions.nonEmpty)
     val pruned = MinhashIndex.gate(spark, dir, batch, "doc_id", "text", 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(pruned == legacy)
+    assert(pruned == expected)
     // already banded: no tick
-    assert(!MinhashIndex.buildBands(spark, dir))
+    assert(!MinhashIndex.upgrade(spark, dir))
     assert(MinhashIndex.readManifest(spark, dir).version == m1.version)
   }
 

@@ -129,7 +129,8 @@ class MinhashProfileSpec extends AnyFunSuite {
     val verdict = MinhashIndex.occupancyVerdict(spark, dir, growPct = 50)
       .collect().map(_.toSeq).toSeq
     val m = MinhashIndex.readManifest(spark, dir)
-    assert(m.bandstats, "new indexes must carry the sidecar")
+    assert(graft.operators.ManifestIO.readCurrent(spark, dir, "minhash index")._2
+      .linesIterator.contains("bandstats=1"), "new indexes must carry the sidecar")
     val f = graft.operators.ManifestIO.fs(spark, dir)
     m.bandVersions.values.flatten.toSet[Long].foreach { v =>
       f.delete(new org.apache.hadoop.fs.Path(s"$dir/data/$v/bands"), true)
