@@ -69,7 +69,7 @@ object Bench {
       // one UNCHARGED warm run at the target SF immediately before the
       // timed runs: the round-9 closing window recorded q6_sessionize
       // at 12.27s — reproducible ONLY as "first job of a cold JVM"
-      // (Q6Ab: cold 11.7-13.6s, steady-state 0.53s, 32-thread
+      // (one-JVM A/B: cold 11.7-13.6s, steady-state 0.53s, 32-thread
       // contention only 1.8x, AQE coalesce no effect). The global
       // sf0.001 warmup above is the intended cold-cost absorber, but
       // if it is ineffective in a given window this per-query warm run

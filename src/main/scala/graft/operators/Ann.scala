@@ -72,6 +72,19 @@ object Ann extends Serializable {
       when(dot(vec, typedLit(plane)) >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** [[lshBucket]] over a typed vector: bit p is set iff the projection
+    * on plane p is >= 0 ([[dotD]] equals the codegen'd fold bit for
+    * bit, so both forms bucket identically). */
+  private def signBits(v: Array[Float], planes: Array[Array[Float]]): Long = {
+    var b = 0L
+    var p = 0
+    while (p < planes.length) {
+      if (dotD(v, planes(p)) >= 0) b |= 1L << p
+      p += 1
+    }
+    b
+  }
+
   /** Johnson–Lindenstrauss dimensionality reduction with the same
     * deterministic ±1 Rademacher vectors the LSH family hashes with —
     * but keeping the projection VALUES instead of their sign bits:
@@ -180,16 +193,7 @@ object Ann extends Serializable {
         .filter(col(id).isNotNull && col(vec).isNotNull)
         .as[(Long, Array[Float])]
         .flatMap { case (rid, v) =>
-          planesArr.indices.iterator.map { t =>
-            val pl = planesArr(t)
-            var b = 0L
-            var p = 0
-            while (p < pl.length) {
-              if (dotD(v, pl(p)) >= 0) b |= 1L << p
-              p += 1
-            }
-            (t, b, rid)
-          }
+          planesArr.indices.iterator.map(t => (t, signBits(v, planesArr(t)), rid))
         }
         .toDF("t", "bucket", id)
     }
@@ -208,18 +212,6 @@ object Ann extends Serializable {
     topK(scored, k)
   }
 
-  /** Embedding near-duplicate pairs via hyperplane-LSH bucketing: only
-    * same-bucket pairs are scored. Fused like the MinHash pair kernel —
-    * ONE narrow pass computes each vector's bucket (same sign bits as
-    * [[lshBucket]], typed fold = the codegen'd fold bit-for-bit), one
-    * shuffle groups buckets, and in-bucket pairs are cosine-verified in
-    * place. The earlier self-join formulation scanned and shuffled the
-    * vector frame TWICE to meet itself on the bucket id; this halves
-    * that, and bucket population is bounded by LSH design so the
-    * per-group loop stays small. Single-probe: a near-pair split
-    * across buckets is missed (recall < 1), which is the documented
-    * LSH trade; the exact small-N oracle stays available as the
-    * brute-force query. */
   /** Embedding dup-CLUSTER resolution — the t14/m14 discipline on the
     * vector side: [[lshNearDupPairs]]' pairwise verdicts closed into
     * connected components, so an a~b~c similarity chain yields ONE
@@ -250,6 +242,18 @@ object Ann extends Serializable {
       .select(col("vec_id"), coalesce(col("component"), col("vec_id")).as("cluster"))
   }
 
+  /** Embedding near-duplicate pairs via hyperplane-LSH bucketing: only
+    * same-bucket pairs are scored. Fused like the MinHash pair kernel —
+    * ONE narrow pass computes each vector's bucket (same sign bits as
+    * [[lshBucket]], typed fold = the codegen'd fold bit-for-bit), one
+    * shuffle groups buckets, and in-bucket pairs are cosine-verified in
+    * place. The earlier self-join formulation scanned and shuffled the
+    * vector frame TWICE to meet itself on the bucket id; this halves
+    * that, and bucket population is bounded by LSH design so the
+    * per-group loop stays small. Single-probe: a near-pair split
+    * across buckets is missed (recall < 1), which is the documented
+    * LSH trade; the exact small-N oracle stays available as the
+    * brute-force query. */
   def lshNearDupPairs(vecs: DataFrame, idCol: String, vecCol: String,
       planes: Seq[Seq[Float]], threshold: Double,
       maxBucket: Int = Int.MaxValue,
@@ -272,15 +276,7 @@ object Ann extends Serializable {
     val planesArr = planes.map(_.toArray).toArray
     vecs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        var b = 0L
-        var p = 0
-        while (p < planesArr.length) {
-          if (dotD(v, planesArr(p)) >= 0) b |= 1L << p
-          p += 1
-        }
-        (b, id, v)
-      }
+      .map { case (id, v) => (signBits(v, planesArr), id, v) }
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
         val capped = Dedup.cappedBucket(it, maxBucket, skipped)
@@ -361,6 +357,14 @@ object Ann extends Serializable {
     best
   }
 
+  /** The highest cosine of `v` to any center (−∞ with no centers). */
+  private def maxCosine(cs: Array[Array[Float]], v: Array[Float]): Double = {
+    var best = Double.NegativeInfinity
+    var c = 0
+    while (c < cs.length) { val s = cosineD(v, cs(c)); if (s > best) best = s; c += 1 }
+    best
+  }
+
   /** The `nprobe` max-cosine cells for a vector, nearest first
     * (deterministic index tie-break) — the probe set shared by
     * [[ivfTopK]] and [[graft.streaming.AnnStream]]. */
@@ -378,16 +382,8 @@ object Ann extends Serializable {
     val bc = spark.sparkContext.broadcast(cents)
     vecs.select(col(vecCol)).as[Array[Float]]
       .mapPartitions { it =>
-        val cs = bc.value
         var s = 0.0
-        it.foreach { v =>
-          var best = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val sim = cosineD(v, cs(c)); if (sim > best) best = sim; c += 1
-          }
-          s += 1.0 - best
-        }
+        it.foreach(v => s += 1.0 - maxCosine(bc.value, v))
         Iterator.single(s)
       }
       .collect().sum
@@ -419,12 +415,8 @@ object Ann extends Serializable {
     val l = if (oversample > 0) oversample else 2 * k
     val ds = vecs.select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
-    def dist(v: Array[Float], cs: Array[Array[Float]]): Double = {
-      var best = Double.NegativeInfinity
-      var c = 0
-      while (c < cs.length) { val s = cosineD(v, cs(c)); if (s > best) best = s; c += 1 }
-      math.max(0.0, 1.0 - best)
-    }
+    def dist(v: Array[Float], cs: Array[Array[Float]]): Double =
+      math.max(0.0, 1.0 - maxCosine(cs, v))
     // deterministic uniform coin in [0, 1) from (id, round)
     def coin(id: Long, round: Int): Double = {
       val h = XXH64.hashLong(id, 4242L + round)
@@ -458,17 +450,7 @@ object Ann extends Serializable {
     // treeAggregate (as in kmeansCentroids): one job, a cands-length
     // long array to the driver, no conf-width exchange for l·rounds rows
     val weights = ds.rdd.treeAggregate(new Array[Long](cands.length))(
-      seqOp = { case (w, (_, v)) =>
-        val cs = bcAll.value
-        var best = 0
-        var bestSim = Double.NegativeInfinity
-        var c = 0
-        while (c < cs.length) {
-          val s = cosineD(v, cs(c)); if (s > bestSim) { bestSim = s; best = c }; c += 1
-        }
-        w(best) += 1
-        w
-      },
+      seqOp = { case (w, (_, v)) => w(nearestCell(bcAll.value, v)) += 1; w },
       combOp = { (x, y) =>
         var i = 0
         while (i < x.length) { x(i) += y(i); i += 1 }
@@ -495,12 +477,7 @@ object Ann extends Serializable {
         val v = cands(ci)
         val w = weights(ci).toDouble
         if (w > 0) {
-          var best = 0
-          var bestSim = Double.NegativeInfinity
-          var c = 0
-          while (c < cs.length) {
-            val s = cosineD(v, cs(c)); if (s > bestSim) { bestSim = s; best = c }; c += 1
-          }
+          val best = nearestCell(cs, v)
           val a = acc(best)
           var i = 0
           val n = math.min(dim, v.length)
@@ -1403,24 +1380,9 @@ object Ann extends Serializable {
     * CURRENT serve, the time-travel serve and the version-reporting
     * hybrid caller. */
   private[graft] def ivfServedTopKFrom(spark: SparkSession, dir: String,
-      m: IvfManifest, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    import spark.implicits._
-    val cents = readIvfCentroidsAt(spark, dir, m)
-    val qRows = collectQueryBatch(queries, MaxDriverQueryRows, "ivfServedTopK")
-    val probeRows = qRows.flatMap { case (qid, v) =>
-      nearestCells(cents, v, nprobe).map(c => (qid, v, c))
-    }
-    val probes = probeRows.toSeq.toDF("qid", "qvec", "cell")
-      .withColumn("_ql", l2norm(col("qvec")))
-    val members = readIvfCellsAt(spark, dir, m, Some(probeRows.map(_._3).toSet))
-    val scored = members
-      .withColumn("_cl", l2norm(col("cvec")))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        cosinePre(dot(col("qvec"), col("cvec")), col("_ql"), col("_cl")).as("cosine"))
-    topK(scored, k)
-  }
+      m: IvfManifest, queries: DataFrame, k: Int, nprobe: Int): DataFrame =
+    ivfProbeTopK(queries, readIvfCentroidsAt(spark, dir, m), k, nprobe,
+      "ivfServedTopK")(cells => readIvfCellsAt(spark, dir, m, Some(cells)))
 
   /** IVF search against a PRE-ASSIGNED inverted file — the SERVE half
     * of the deployment split: `assigned` is [[assignCells]]'s output,
@@ -1432,21 +1394,27 @@ object Ann extends Serializable {
     * p/cells of the corpus from storage, the actual 10⁹-vector serving
     * story, vs. re-scanning and re-assigning the corpus per batch. */
   def ivfTopKAssigned(assigned: DataFrame, queries: DataFrame,
-      cents: Array[Array[Float]], k: Int, nprobe: Int): DataFrame = {
-    val spark = assigned.sparkSession
+      cents: Array[Array[Float]], k: Int, nprobe: Int): DataFrame =
+    ivfProbeTopK(queries, cents, k, nprobe, "ivfTopKAssigned")(cells =>
+      assigned.filter(col("cell").isInCollection(cells)))
+
+  /** The probe-and-score body of every driver-batch IVF serve: each
+    * query of the batch (driver-sized by contract — it broadcasts;
+    * bigger frames take [[ivfTopK]]'s distributed path) probes its
+    * `nprobe` nearest cells ([[nearestCells]]), `members` reads the
+    * (cid, cvec, cell) rows of only the probed cells, and the probes
+    * join them on the cell id for an exact cosine rank. */
+  private def ivfProbeTopK(queries: DataFrame, cents: Array[Array[Float]],
+      k: Int, nprobe: Int, caller: String)(members: Set[Int] => DataFrame): DataFrame = {
+    val spark = queries.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    // the serve contract is a driver-sized query batch (it broadcasts);
-    // callers with bigger frames get the distributed path via [[ivfTopK]]
-    val qRows = collectQueryBatch(queries, MaxDriverQueryRows, "ivfTopKAssigned")
+    val qRows = collectQueryBatch(queries, MaxDriverQueryRows, caller)
     val probeRows = qRows.flatMap { case (qid, v) =>
-      nearestCells(bc.value, v, nprobe).map(c => (qid, v, c))
+      nearestCells(cents, v, nprobe).map(c => (qid, v, c))
     }
-    val probedCells = probeRows.map(_._3).distinct.toSeq
     val probes = probeRows.toSeq.toDF("qid", "qvec", "cell")
       .withColumn("_ql", l2norm(col("qvec")))
-    val scored = assigned
-      .filter(col("cell").isInCollection(probedCells))
+    val scored = members(probeRows.map(_._3).toSet)
       .withColumn("_cl", l2norm(col("cvec")))
       .join(broadcast(probes), Seq("cell"))
       .filter(col("qid") =!= col("cid"))
@@ -1455,11 +1423,45 @@ object Ann extends Serializable {
     topK(scored, k)
   }
 
-  private def l2sub(v: Array[Float], off: Int, c: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < c.length) { val d = v(off + i).toDouble - c(i); s += d * d; i += 1 }
-    s
+  /** (m, k, sub) of a PQ codebook set: `m` subspaces of `sub`
+    * coordinates, `k` sub-centroids each. A code is one byte per
+    * subspace, so k is at most 256. */
+  private def pqShape(books: Array[Array[Array[Float]]]): (Int, Int, Int) = {
+    require(books(0).length <= 256,
+      s"PQ codes are one byte per subspace: at most 256 sub-centroids, got ${books(0).length}")
+    (books.length, books(0).length, books(0)(0).length)
+  }
+
+  /** The PQ encoder: subspace `mi` of the residual `v − base` becomes
+    * the index of its L2-nearest sub-centroid (lowest index on ties).
+    * With the origin as `base` the residual is `v` itself, bit for bit
+    * (`x − 0f` is exact in IEEE arithmetic). */
+  private def pqEncode(v: Array[Float], base: Array[Float],
+      books: Array[Array[Array[Float]]]): Array[Byte] = {
+    val sub = books(0)(0).length
+    val code = new Array[Byte](books.length)
+    var mi = 0
+    while (mi < books.length) {
+      val off = mi * sub
+      var best = 0
+      var bestD = Double.MaxValue
+      var ci = 0
+      while (ci < books(mi).length) {
+        val c = books(mi)(ci)
+        var dd = 0.0
+        var i = 0
+        while (i < sub) {
+          val d = (v(off + i) - base(off + i)).toDouble - c(i)
+          dd += d * d
+          i += 1
+        }
+        if (dd < bestD) { bestD = dd; best = ci }
+        ci += 1
+      }
+      code(mi) = best.toByte
+      mi += 1
+    }
+    code
   }
 
   /** Product-quantization codebooks: the vector space is split into `m`
@@ -1482,9 +1484,8 @@ object Ann extends Serializable {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     val rdd = ds.rdd
-    val m = init.length
-    val k = init(0).length
-    val sub = init(0)(0).length
+    val (m, k, sub) = pqShape(init)
+    val origin = new Array[Float](m * sub)
     var books = init
     for (_ <- 0 until iters) {
       val bc = spark.sparkContext.broadcast(books)
@@ -1493,21 +1494,13 @@ object Ann extends Serializable {
       val (acc, cnt) = rdd.treeAggregate(
         (Array.fill(m, k)(new Array[Double](sub)), Array.fill(m, k)(0L)))(
         seqOp = { case (z, v) =>
-          val bs = bc.value
+          val code = pqEncode(v, origin, bc.value)
           var mi = 0
           while (mi < m) {
-            val off = mi * sub
-            var best = 0
-            var bestD = Double.MaxValue
-            var ci = 0
-            while (ci < k) {
-              val dd = l2sub(v, off, bs(mi)(ci))
-              if (dd < bestD) { bestD = dd; best = ci }
-              ci += 1
-            }
+            val best = code(mi) & 0xff
             val a = z._1(mi)(best)
             var i = 0
-            while (i < sub) { a(i) += v(off + i); i += 1 }
+            while (i < sub) { a(i) += v(mi * sub + i); i += 1 }
             z._2(mi)(best) += 1
             mi += 1
           }
@@ -1545,107 +1538,15 @@ object Ann extends Serializable {
     * approximates `dot(q, x) ≈ Σ_m table[m][code_m]` by per-query lookup
     * tables, keeps a bounded top-`refine` candidate heap per query per
     * partition, and re-ranks ONLY the surviving candidates against their
-    * full vectors. Composes with [[ivfTopK]]'s cell routing for the full
-    * IVF-PQ design (cells bound the scan, PQ bounds the bytes); kept
-    * orthogonal here so each trade is measurable on its own.
+    * full vectors. This is [[ivfPqTopK]]'s kernel with one cell at the
+    * origin: every vector's residual is the vector itself and every
+    * centroid term of the score is an exact zero.
     *
     * The approximate norm ‖x̂‖² = Σ_m ‖c_{m,code_m}‖² is exact for the
     * reconstruction because subspaces partition the coordinates. */
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       books: Array[Array[Array[Float]]], k: Int, refine: Int): DataFrame =
-    pqTopKBounded(corpus, queries, books, k, refine, MaxDriverQueryRows)
-
-  /** [[pqTopK]] with an injectable driver-batch bound (specs force the
-    * guard on small frames through it). The ADC plan is broadcast-query
-    * by construction — per-query lookup tables live on every executor —
-    * so past the bound it fails loudly rather than falling back: a
-    * corpus-sized query frame belongs on [[ivfTopK]]'s distributed
-    * probe path, not on a quadratic per-partition table build. */
-  private[graft] def pqTopKBounded(corpus: DataFrame, queries: DataFrame,
-      books: Array[Array[Array[Float]]], k: Int, refine: Int,
-      maxDriverRows: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val m = books.length
-    val kc = books(0).length
-    val sub = books(0)(0).length
-    val bcBooks = spark.sparkContext.broadcast(books)
-    val qRows = collectQueryBatch(queries, maxDriverRows, "pqTopK")
-    val bcQ = spark.sparkContext.broadcast(qRows)
-    // ADC scan: encode + score + bounded per-query heap, one pass
-    val candidates = corpus.select(col("cid"), col("cvec")).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val bs = bcBooks.value
-        val qs = bcQ.value
-        // per-query lookup tables: dot(q_m, c) and the code's ‖c‖²
-        val tabDot = Array.ofDim[Double](qs.length, m, kc)
-        val tabN2 = Array.ofDim[Double](m, kc)
-        for (mi <- 0 until m; ci <- 0 until kc) {
-          val c = bs(mi)(ci)
-          var n2 = 0.0
-          var i = 0
-          while (i < sub) { n2 += c(i).toDouble * c(i); i += 1 }
-          tabN2(mi)(ci) = n2
-          for (qi <- qs.indices) {
-            val qv = qs(qi)._2
-            var s = 0.0
-            var j = 0
-            while (j < sub) { s += qv(mi * sub + j).toDouble * c(j); j += 1 }
-            tabDot(qi)(mi)(ci) = s
-          }
-        }
-        val qNorm = qs.map(q => math.sqrt(dotD(q._2, q._2)))
-        // bounded candidate heaps: evict smallest approx score, larger
-        // cid first on ties (deterministic, favors smaller ids)
-        val heapOrd = Ordering.by[(Double, Long), (Double, Long)](p => (p._1, -p._2)).reverse
-        val heaps = Array.fill(qs.length)(new scala.collection.mutable.PriorityQueue[(Double, Long)]()(heapOrd))
-        val code = new Array[Int](m)
-        it.foreach { case (cid, v) =>
-          var mi = 0
-          while (mi < m) {
-            val off = mi * sub
-            var best = 0
-            var bestD = Double.MaxValue
-            var ci = 0
-            while (ci < kc) {
-              val dd = l2sub(v, off, bs(mi)(ci))
-              if (dd < bestD) { bestD = dd; best = ci }
-              ci += 1
-            }
-            code(mi) = best
-            mi += 1
-          }
-          var qi = 0
-          while (qi < qs.length) {
-            if (qs(qi)._1 != cid) {
-              var ad = 0.0
-              var an2 = 0.0
-              var j = 0
-              while (j < m) { ad += tabDot(qi)(j)(code(j)); an2 += tabN2(j)(code(j)); j += 1 }
-              val score = ad / (qNorm(qi) * math.sqrt(an2))
-              val h = heaps(qi)
-              if (h.size < refine) h.enqueue((score, cid))
-              // h.head is the WORST kept candidate (heapOrd is reversed);
-              // replace it when the new one beats it
-              else if (heapOrd.lt((score, cid), h.head)) { h.dequeue(); h.enqueue((score, cid)) }
-            }
-            qi += 1
-          }
-        }
-        for (qi <- qs.indices.iterator; (score, cid) <- heaps(qi).iterator)
-          yield (qs(qi)._1, cid, score)
-      }
-      .toDF("qid", "cid", "approx")
-    // global candidate cut, then exact re-rank of only those candidates
-    val w = Window.partitionBy(col("qid")).orderBy(col("approx").desc, col("cid"))
-    val cut = candidates.withColumn("r", row_number().over(w)).filter(col("r") <= refine)
-      .select(col("qid"), col("cid"))
-    val scored = cut
-      .join(corpus.select(col("cid"), col("cvec")), Seq("cid"))
-      .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid"))
-      .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    topK(scored, k)
-  }
+    adcTopKBounded(corpus, None, queries, None, books, k, 1, refine, MaxDriverQueryRows)
 
   /** Per-vector residuals against each vector's max-cosine cell centroid
     * — the training input for IVF-PQ codebooks (quantizing residuals
@@ -1686,133 +1587,8 @@ object Ann extends Serializable {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame,
       cents: Array[Array[Float]], books: Array[Array[Array[Float]]],
       k: Int, nprobe: Int, refine: Int): DataFrame =
-    ivfPqTopKBounded(corpus, queries, cents, books, k, nprobe, refine,
+    adcTopKBounded(corpus, None, queries, Some(cents), books, k, nprobe, refine,
       MaxDriverQueryRows)
-
-  /** [[ivfPqTopK]] with an injectable driver-batch bound (specs force
-    * the guard on small frames through it); see [[pqTopKBounded]] for
-    * why past the bound this fails loudly instead of falling back. */
-  private[graft] def ivfPqTopKBounded(corpus: DataFrame, queries: DataFrame,
-      cents: Array[Array[Float]], books: Array[Array[Array[Float]]],
-      k: Int, nprobe: Int, refine: Int, maxDriverRows: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val m = books.length
-    val kc = books(0).length
-    val sub = books(0)(0).length
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcB = spark.sparkContext.broadcast(books)
-    val qRows = collectQueryBatch(queries, maxDriverRows, "ivfPqTopK")
-    val bcQ = spark.sparkContext.broadcast(qRows)
-    val candidates = corpus.select(col("cid"), col("cvec")).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        val bs = bcB.value
-        val qs = bcQ.value
-        // query-independent tables
-        val tabN2 = Array.ofDim[Double](m, kc) // ‖c_{m,code}‖²
-        val tabCent = Array.ofDim[Double](cs.length, m, kc) // dot(cent_m, c)
-        for (mi <- 0 until m; ci <- 0 until kc) {
-          val c = bs(mi)(ci)
-          var n2 = 0.0
-          var i = 0
-          while (i < sub) { n2 += c(i).toDouble * c(i); i += 1 }
-          tabN2(mi)(ci) = n2
-          for (cell <- cs.indices) {
-            var s = 0.0
-            var j = 0
-            while (j < sub) { s += cs(cell)(mi * sub + j).toDouble * c(j); j += 1 }
-            tabCent(cell)(mi)(ci) = s
-          }
-        }
-        val centN2 = cs.map(c => dotD(c, c))
-        // per-query tables: dot(q_m, c) and dot(q, cent), plus which
-        // queries probe each cell (so a corpus row only scores against
-        // the queries that would ever scan its cell)
-        val tabQ = Array.ofDim[Double](qs.length, m, kc)
-        val qCentDot = Array.ofDim[Double](qs.length, cs.length)
-        val probesByCell = Array.fill(cs.length)(List.newBuilder[Int])
-        for (qi <- qs.indices) {
-          val qv = qs(qi)._2
-          for (mi <- 0 until m; ci <- 0 until kc) {
-            val c = bs(mi)(ci)
-            var s = 0.0
-            var j = 0
-            while (j < sub) { s += qv(mi * sub + j).toDouble * c(j); j += 1 }
-            tabQ(qi)(mi)(ci) = s
-          }
-          for (cell <- cs.indices) qCentDot(qi)(cell) = dotD(qv, cs(cell))
-          cs.indices
-            .sortBy(cell => (-qCentDot(qi)(cell) / math.sqrt(centN2(cell)), cell))
-            .take(math.min(nprobe, cs.length))
-            .foreach(cell => probesByCell(cell) += qi)
-        }
-        val probing = probesByCell.map(_.result().toArray)
-        val qNorm = qs.map(q => math.sqrt(dotD(q._2, q._2)))
-        val heapOrd = Ordering.by[(Double, Long), (Double, Long)](p => (p._1, -p._2)).reverse
-        val heaps = Array.fill(qs.length)(new scala.collection.mutable.PriorityQueue[(Double, Long)]()(heapOrd))
-        val code = new Array[Int](m)
-        it.foreach { case (cid, v) =>
-          val cell = nearestCell(cs, v)
-          val qids = probing(cell)
-          if (qids.nonEmpty) {
-            // encode the residual
-            var mi = 0
-            while (mi < m) {
-              val off = mi * sub
-              var best = 0
-              var bestD = Double.MaxValue
-              var ci = 0
-              while (ci < kc) {
-                val c = bs(mi)(ci)
-                var dd = 0.0
-                var i = 0
-                while (i < sub) {
-                  val d = (v(off + i) - cs(cell)(off + i)).toDouble - c(i)
-                  dd += d * d
-                  i += 1
-                }
-                if (dd < bestD) { bestD = dd; best = ci }
-                ci += 1
-              }
-              code(mi) = best
-              mi += 1
-            }
-            // reconstruction norm: ‖cent‖² + 2·dot(cent, r̂) + ‖r̂‖²
-            var cr = 0.0
-            var rn2 = 0.0
-            var j = 0
-            while (j < m) { cr += tabCent(cell)(j)(code(j)); rn2 += tabN2(j)(code(j)); j += 1 }
-            val xn2 = centN2(cell) + 2 * cr + rn2
-            var qi0 = 0
-            while (qi0 < qids.length) {
-              val qi = qids(qi0)
-              if (qs(qi)._1 != cid) {
-                var rd = 0.0
-                var jj = 0
-                while (jj < m) { rd += tabQ(qi)(jj)(code(jj)); jj += 1 }
-                val score = (qCentDot(qi)(cell) + rd) / (qNorm(qi) * math.sqrt(xn2))
-                val h = heaps(qi)
-                if (h.size < refine) h.enqueue((score, cid))
-                else if (heapOrd.lt((score, cid), h.head)) { h.dequeue(); h.enqueue((score, cid)) }
-              }
-              qi0 += 1
-            }
-          }
-        }
-        for (qi <- qs.indices.iterator; (score, cid) <- heaps(qi).iterator)
-          yield (qs(qi)._1, cid, score)
-      }
-      .toDF("qid", "cid", "approx")
-    val w = Window.partitionBy(col("qid")).orderBy(col("approx").desc, col("cid"))
-    val cut = candidates.withColumn("r", row_number().over(w)).filter(col("r") <= refine)
-      .select(col("qid"), col("cid"))
-    val scored = cut
-      .join(corpus.select(col("cid"), col("cvec")), Seq("cid"))
-      .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid"))
-      .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    topK(scored, k)
-  }
 
   /** The TRAIN-ONCE artifact of the IVF-PQ deployment split: every
     * corpus vector's cell assignment plus its m residual codes — one
@@ -1825,42 +1601,24 @@ object Ann extends Serializable {
       books: Array[Array[Array[Float]]]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val m = books.length
-    val kc = books(0).length
-    val sub = books(0)(0).length
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcB = spark.sparkContext.broadcast(books)
+    pqShape(books)
+    val bc = spark.sparkContext.broadcast((cents, books))
     corpus.select(col("cid"), col("cvec")).as[(Long, Array[Float])]
-      .map { case (cid, v) =>
-        val cs = bcC.value
-        val bs = bcB.value
-        val cell = nearestCell(cs, v)
-        val code = new Array[Byte](m)
-        var mi = 0
-        while (mi < m) {
-          val off = mi * sub
-          var best = 0
-          var bestD = Double.MaxValue
-          var ci = 0
-          while (ci < kc) {
-            val c = bs(mi)(ci)
-            var dd = 0.0
-            var i = 0
-            while (i < sub) {
-              val d = (v(off + i) - cs(cell)(off + i)).toDouble - c(i)
-              dd += d * d
-              i += 1
-            }
-            if (dd < bestD) { bestD = dd; best = ci }
-            ci += 1
-          }
-          code(mi) = best.toByte
-          mi += 1
-        }
-        (cid, cell, code)
-      }
+      .mapPartitions(it => pqRows(bc.value._1, bc.value._2, _ => true, it))
       .toDF("cid", "cell", "code")
   }
+
+  /** (cid, cell, code) for each vector whose max-cosine cell `keep`
+    * admits; the others are never encoded. With one cell there is
+    * nothing to assign. */
+  private def pqRows(cs: Array[Array[Float]], books: Array[Array[Array[Float]]],
+      keep: Int => Boolean,
+      it: Iterator[(Long, Array[Float])]): Iterator[(Long, Int, Array[Byte])] =
+    it.flatMap { case (cid, v) =>
+      val cell = if (cs.length == 1) 0 else nearestCell(cs, v)
+      if (keep(cell)) Iterator.single((cid, cell, pqEncode(v, cs(cell), books)))
+      else Iterator.empty
+    }
 
   /** The SERVE half of the IVF-PQ deployment split: ADC over
     * PRE-ENCODED codes ([[ivfPqEncode]]'s output, read back from a
@@ -1869,106 +1627,143 @@ object Ann extends Serializable {
     * re-rank that fetches full vectors ONLY for the survivors — one
     * narrow equi-join against the vector table (refine·|Q| rows). The
     * query batch is driver-sized by contract ([[collectQueryBatch]]
-    * guards the cliff like the other serve entries). Scoring uses the
-    * same reconstruction identities as the in-line [[ivfPqTopK]]
-    * kernel, so recall matches it at equal parameters. */
+    * guards the cliff like the other serve entries). Scoring is the
+    * in-line [[ivfPqTopK]] kernel itself, so at equal artifacts both
+    * return the same rows. */
   def ivfPqTopKEncoded(codes: DataFrame, corpus: DataFrame, queries: DataFrame,
       cents: Array[Array[Float]], books: Array[Array[Array[Float]]],
-      k: Int, nprobe: Int, refine: Int): DataFrame = {
-    val spark = codes.sparkSession
+      k: Int, nprobe: Int, refine: Int): DataFrame =
+    adcTopKBounded(corpus, Some(codes), queries, Some(cents), books, k, nprobe, refine,
+      MaxDriverQueryRows)
+
+  /** The driver side of every ADC verb, with an injectable driver-batch
+    * bound (specs force the guard on small frames through it). The
+    * query batch is collected, each query's `nprobe` cells are picked
+    * by [[nearestCells]], and [[adcScan]] scores `(cid, cell, code)`
+    * rows of the probed cells: `codes` when pre-encoded
+    * ([[ivfPqTopKEncoded]]), else the corpus encoded in-line. `cents`
+    * None is [[pqTopK]]: one cell at the origin. The plan is
+    * broadcast-query by construction — per-query lookup tables live on
+    * every executor — so past the bound it fails loudly rather than
+    * falling back: a corpus-sized query frame belongs on [[ivfTopK]]'s
+    * distributed probe path, not on a quadratic per-partition table
+    * build. */
+  private[graft] def adcTopKBounded(corpus: DataFrame, codes: Option[DataFrame],
+      queries: DataFrame, cents: Option[Array[Array[Float]]],
+      books: Array[Array[Array[Float]]], k: Int, nprobe: Int, refine: Int,
+      maxDriverRows: Int): DataFrame = {
+    val rerank = refineRerank(corpus, queries, k, refine)
+    val spark = corpus.sparkSession
     import spark.implicits._
-    val m = books.length
-    val kc = books(0).length
-    val sub = books(0)(0).length
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcB = spark.sparkContext.broadcast(books)
-    val qRows = collectQueryBatch(queries, MaxDriverQueryRows, "ivfPqTopKEncoded")
-    val bcQ = spark.sparkContext.broadcast(qRows)
-    val probed = qRows.flatMap { case (_, v) => nearestCells(cents, v, nprobe) }
-      .distinct.toSeq
-    val candidates = codes
-      .filter(col("cell").isInCollection(probed))
-      .select(col("cid"), col("cell"), col("code")).as[(Long, Int, Array[Byte])]
-      .mapPartitions { it =>
-        val cs = bcC.value
-        val bs = bcB.value
-        val qs = bcQ.value
-        // query-independent tables (identical to ivfPqTopKBounded)
-        val tabN2 = Array.ofDim[Double](m, kc)
-        val tabCent = Array.ofDim[Double](cs.length, m, kc)
-        for (mi <- 0 until m; ci <- 0 until kc) {
-          val c = bs(mi)(ci)
-          var n2 = 0.0
-          var i = 0
-          while (i < sub) { n2 += c(i).toDouble * c(i); i += 1 }
-          tabN2(mi)(ci) = n2
-          for (cell <- cs.indices) {
-            var s = 0.0
-            var j = 0
-            while (j < sub) { s += cs(cell)(mi * sub + j).toDouble * c(j); j += 1 }
-            tabCent(cell)(mi)(ci) = s
+    val (m, _, sub) = pqShape(books)
+    val cs = cents.getOrElse(Array(new Array[Float](m * sub)))
+    val verb =
+      if (codes.isDefined) "ivfPqTopKEncoded" else if (cents.isDefined) "ivfPqTopK" else "pqTopK"
+    val qRows = collectQueryBatch(queries, maxDriverRows, verb)
+    val probes = qRows.map { case (_, v) => nearestCells(cs, v, nprobe) }
+    val probed = probes.flatten.toSet
+    val bc = spark.sparkContext.broadcast((cs, books, qRows, probes))
+    val candidates = codes match {
+      case Some(c) =>
+        c.filter(col("cell").isInCollection(probed))
+          .select(col("cid"), col("cell"), col("code")).as[(Long, Int, Array[Byte])]
+          .mapPartitions { it =>
+            val (cs, bs, qs, ps) = bc.value
+            adcScan(cs, bs, qs, ps, refine, it)
           }
-        }
-        val centN2 = cs.map(c => dotD(c, c))
-        val tabQ = Array.ofDim[Double](qs.length, m, kc)
-        val qCentDot = Array.ofDim[Double](qs.length, cs.length)
-        val probesByCell = Array.fill(cs.length)(List.newBuilder[Int])
-        for (qi <- qs.indices) {
-          val qv = qs(qi)._2
-          for (mi <- 0 until m; ci <- 0 until kc) {
-            val c = bs(mi)(ci)
-            var s = 0.0
-            var j = 0
-            while (j < sub) { s += qv(mi * sub + j).toDouble * c(j); j += 1 }
-            tabQ(qi)(mi)(ci) = s
+      case None =>
+        corpus.select(col("cid"), col("cvec")).as[(Long, Array[Float])]
+          .mapPartitions { it =>
+            val (cs, bs, qs, ps) = bc.value
+            adcScan(cs, bs, qs, ps, refine, pqRows(cs, bs, probed, it))
           }
-          for (cell <- cs.indices) qCentDot(qi)(cell) = dotD(qv, cs(cell))
-          nearestCells(cs, qv, nprobe).foreach(cell => probesByCell(cell) += qi)
+    }
+    rerank(candidates.toDF("qid", "cid", "approx"))
+  }
+
+  /** The ADC scan of one partition: (cid, cell, code) rows in, each
+    * query's bounded top-`refine` candidates out as (qid, cid, approx).
+    * A row scores only against the queries probing its cell (`probes`
+    * holds each query's cells), by [[ivfPqTopK]]'s reconstruction
+    * identities — every term a lookup in tables built once per
+    * partition. */
+  private def adcScan(cs: Array[Array[Float]], books: Array[Array[Array[Float]]],
+      qs: Array[(Long, Array[Float])], probes: Array[Array[Int]], refine: Int,
+      rows: Iterator[(Long, Int, Array[Byte])]): Iterator[(Long, Long, Double)] = {
+    val (m, kc, sub) = pqShape(books)
+    // sequential-fold dot of a's `sub` coordinates from `off` with b
+    def subDot(a: Array[Float], off: Int, b: Array[Float]): Double = {
+      var s = 0.0
+      var j = 0
+      while (j < sub) { s += a(off + j).toDouble * b(j); j += 1 }
+      s
+    }
+    val tabN2 = Array.tabulate(m, kc)((mi, ci) => subDot(books(mi)(ci), 0, books(mi)(ci)))
+    val tabCent = Array.tabulate(cs.length, m, kc)((cell, mi, ci) =>
+      subDot(cs(cell), mi * sub, books(mi)(ci)))
+    val tabQ = Array.tabulate(qs.length, m, kc)((qi, mi, ci) =>
+      subDot(qs(qi)._2, mi * sub, books(mi)(ci)))
+    val centN2 = cs.map(c => dotD(c, c))
+    val qCentDot = Array.tabulate(qs.length, cs.length)((qi, cell) => dotD(qs(qi)._2, cs(cell)))
+    val qNorm = qs.map(q => math.sqrt(dotD(q._2, q._2)))
+    val probing = Array.tabulate(cs.length)(cell =>
+      qs.indices.filter(qi => probes(qi).contains(cell)).toArray)
+    // bounded candidate heaps: evict smallest approx score, larger
+    // cid first on ties (deterministic, favors smaller ids)
+    val heapOrd = Ordering.by[(Double, Long), (Double, Long)](p => (p._1, -p._2)).reverse
+    val heaps = Array.fill(qs.length)(
+      new scala.collection.mutable.PriorityQueue[(Double, Long)]()(heapOrd))
+    rows.foreach { case (cid, cell, code) =>
+      val qids = probing(cell)
+      if (qids.nonEmpty) {
+        var cr = 0.0
+        var rn2 = 0.0
+        var j = 0
+        while (j < m) {
+          val cj = code(j) & 0xff
+          cr += tabCent(cell)(j)(cj); rn2 += tabN2(j)(cj); j += 1
         }
-        val probing = probesByCell.map(_.result().toArray)
-        val qNorm = qs.map(q => math.sqrt(dotD(q._2, q._2)))
-        val heapOrd = Ordering.by[(Double, Long), (Double, Long)](p => (p._1, -p._2)).reverse
-        val heaps = Array.fill(qs.length)(new scala.collection.mutable.PriorityQueue[(Double, Long)]()(heapOrd))
-        it.foreach { case (cid, cell, code) =>
-          val qids = probing(cell)
-          if (qids.nonEmpty) {
-            // reconstruction norm: ‖cent‖² + 2·dot(cent, r̂) + ‖r̂‖²
-            var cr = 0.0
-            var rn2 = 0.0
-            var j = 0
-            while (j < m) {
-              val cj = code(j) & 0xff
-              cr += tabCent(cell)(j)(cj); rn2 += tabN2(j)(cj); j += 1
-            }
-            val xn2 = centN2(cell) + 2 * cr + rn2
-            var qi0 = 0
-            while (qi0 < qids.length) {
-              val qi = qids(qi0)
-              if (qs(qi)._1 != cid) {
-                var rd = 0.0
-                var jj = 0
-                while (jj < m) { rd += tabQ(qi)(jj)(code(jj) & 0xff); jj += 1 }
-                val score = (qCentDot(qi)(cell) + rd) / (qNorm(qi) * math.sqrt(xn2))
-                val h = heaps(qi)
-                if (h.size < refine) h.enqueue((score, cid))
-                else if (heapOrd.lt((score, cid), h.head)) { h.dequeue(); h.enqueue((score, cid)) }
-              }
-              qi0 += 1
-            }
+        val xn2 = centN2(cell) + 2 * cr + rn2
+        var qi0 = 0
+        while (qi0 < qids.length) {
+          val qi = qids(qi0)
+          if (qs(qi)._1 != cid) {
+            var rd = 0.0
+            var jj = 0
+            while (jj < m) { rd += tabQ(qi)(jj)(code(jj) & 0xff); jj += 1 }
+            val score = (qCentDot(qi)(cell) + rd) / (qNorm(qi) * math.sqrt(xn2))
+            val h = heaps(qi)
+            if (h.size < refine) h.enqueue((score, cid))
+            // h.head is the WORST kept candidate (heapOrd is reversed);
+            // replace it when the new one beats it
+            else if (heapOrd.lt((score, cid), h.head)) { h.dequeue(); h.enqueue((score, cid)) }
           }
+          qi0 += 1
         }
-        for (qi <- qs.indices.iterator; (score, cid) <- heaps(qi).iterator)
-          yield (qs(qi)._1, cid, score)
       }
-      .toDF("qid", "cid", "approx")
-    val w = Window.partitionBy(col("qid")).orderBy(col("approx").desc, col("cid"))
-    val cut = candidates.withColumn("r", row_number().over(w)).filter(col("r") <= refine)
-      .select(col("qid"), col("cid"))
-    val scored = cut
-      .join(corpus.select(col("cid"), col("cvec")), Seq("cid"))
-      .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid"))
-      .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    topK(scored, k)
+    }
+    for (qi <- qs.indices.iterator; (score, cid) <- heaps(qi).iterator)
+      yield (qs(qi)._1, cid, score)
+  }
+
+  /** The tail of every quantized top-k verb: each query's candidates
+    * are cut to the top `refine` by (approx desc, cid), and only the
+    * survivors are re-ranked by exact cosine against their full vectors
+    * (joined back by cid, never the corpus). `refine < k` would return
+    * fewer than k rows per query, so it is refused before any work. */
+  private def refineRerank(corpus: DataFrame, queries: DataFrame, k: Int,
+      refine: Int): DataFrame => DataFrame = {
+    require(refine >= k, s"refine=$refine must be >= k=$k")
+    approx => {
+      val w = Window.partitionBy(col("qid")).orderBy(col("approx").desc, col("cid"))
+      val cut = approx.withColumn("r", row_number().over(w)).filter(col("r") <= refine)
+        .select(col("qid"), col("cid"))
+      val scored = cut
+        .join(corpus.select(col("cid"), col("cvec")), Seq("cid"))
+        .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid"))
+        .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("cosine"))
+      topK(scored, k)
+    }
   }
 
   /** Multi-probe hyperplane LSH (Lv et al.'s perturbation idea in its
@@ -1987,10 +1782,8 @@ object Ann extends Serializable {
       lshBucket(col("cvec"), planes).as("bucket"))
     val qb = queries.select(col("qid"), col("qvec")).as[(Long, Array[Float])]
       .flatMap { case (qid, v) =>
+        val base = signBits(v, planesArr)
         val projs = planesArr.map(dotD(v, _))
-        var base = 0L
-        var i = 0
-        while (i < projs.length) { if (projs(i) >= 0) base |= 1L << i; i += 1 }
         val order = projs.indices.sortBy(i => (math.abs(projs(i)), i))
         (0 until math.min(nprobe, order.length + 1)).map { j =>
           (qid, v, if (j == 0) base else base ^ (1L << order(j - 1)))
@@ -2042,7 +1835,7 @@ object Ann extends Serializable {
     * vectors joined back for candidates, never the corpus). Same
     * (cosine desc, cid) ranking contract as every other ANN path. */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int, refine: Int): DataFrame = {
-    require(refine >= k, s"refine=$refine must be >= k=$k")
+    val rerank = refineRerank(corpus, queries, k, refine)
     // dequantized vector and its norm are PER-ROW invariants: compute
     // each once (N + Q folds total), not inside every pairwise cosine
     // (3·Q·N folds — measured 2.8 s → sub-second on the v16 corpus).
@@ -2056,20 +1849,12 @@ object Ann extends Serializable {
     val q = queries
       .withColumn("qd", transform(col("qvec"), x => x.cast("double")))
       .withColumn("qnorm", sqrt(dotArr(col("qd"), col("qd"))))
-      .select(col("qid"), col("qvec"), col("qd"), col("qnorm"))
+      .select(col("qid"), col("qd"), col("qnorm"))
     val approx = codes.as("c")
       .join(broadcast(q.as("q")), col("q.qid") =!= col("c.cid"))
       .select(col("q.qid"), col("c.cid"),
         (dotArr(col("q.qd"), col("c.dv")) / (col("q.qnorm") * col("c.dnorm"))).as("approx"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("approx").desc, col("cid"))
-    val cands = approx.withColumn("arn", row_number().over(w))
-      .filter(col("arn") <= refine)
-      .select(col("qid"), col("cid"))
-    val scored = cands
-      .join(corpus, "cid")
-      .join(broadcast(queries), "qid")
-      .select(col("qid"), col("cid"), cosine(col("qvec"), col("cvec")).as("cosine"))
-    topK(scored, k)
+    rerank(approx)
   }
 
   /** Sequential-fold dot over two DOUBLE-array columns — the codegen'd

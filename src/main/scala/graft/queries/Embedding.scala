@@ -66,7 +66,7 @@ object Embedding {
     s"read_parquet('$ArtifactRoot/$name/*.parquet')"
 
   /** Sequential fold Σ (aᵢ − bᵢ)² with per-element DOUBLE promotion —
-    * the DuckDB counterpart of [[Ann]]'s `l2sub` (PQ code assignment). */
+    * the DuckDB counterpart of [[Ann]]'s `pqEncode` (PQ code assignment). */
   private def sqlL2(a: String, b: String): String =
     s"""list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b),
        |      x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))), (acc, v) -> acc + v)""".stripMargin

@@ -152,18 +152,19 @@ class AnnSpec extends AnyFunSuite {
     // refuse (the plan broadcasts the batch — silent collect would be
     // the driver-OOM cliff), naming themselves in the message
     val e1 = intercept[IllegalArgumentException] {
-      Ann.pqTopKBounded(corpus, queries, books, k = 3, refine = 8, maxDriverRows = 1)
+      Ann.adcTopKBounded(corpus, None, queries, None, books, k = 3, nprobe = 1,
+        refine = 8, maxDriverRows = 1)
     }
     assert(e1.getMessage.contains("pqTopK"))
     val e2 = intercept[IllegalArgumentException] {
-      Ann.ivfPqTopKBounded(corpus, queries, cents, books, k = 3, nprobe = 2,
+      Ann.adcTopKBounded(corpus, None, queries, Some(cents), books, k = 3, nprobe = 2,
         refine = 8, maxDriverRows = 1)
     }
     assert(e2.getMessage.contains("ivfPqTopK"))
     // within the bound the same calls serve normally
-    assert(Ann.pqTopKBounded(corpus, queries, books, k = 3, refine = 8,
-      maxDriverRows = 5).count() > 0)
-    assert(Ann.ivfPqTopKBounded(corpus, queries, cents, books, k = 3, nprobe = 2,
+    assert(Ann.adcTopKBounded(corpus, None, queries, None, books, k = 3, nprobe = 1,
+      refine = 8, maxDriverRows = 5).count() > 0)
+    assert(Ann.adcTopKBounded(corpus, None, queries, Some(cents), books, k = 3, nprobe = 2,
       refine = 8, maxDriverRows = 5).count() > 0)
   }
 
@@ -208,10 +209,10 @@ class AnnSpec extends AnyFunSuite {
     val rIvfPq = recallAt5(ivfpq, exact)
     assert(rIvfPq >= 0.9, s"IVF-PQ recall@5 = $rIvfPq")
     // the encoded serve path shares v10's training and scoring math, so
-    // its recall must hold the same floor (kernel-level equality with
-    // the in-line plan is pinned on shared artifacts in the dedicated
-    // ivf-pq serve-split test — two independent trainings here could
-    // differ in the last float ulp)
+    // its recall must hold the same floor (both plans are pinned bit for
+    // bit against a driver-side reference on shared artifacts in
+    // QuantizedExactSpec — two independent trainings here could differ
+    // in the last float ulp)
     val served = graft.queries.Embedding.v12IvfPqServed.run(spark, d)
     val rServed = recallAt5(served, exact)
     assert(rServed >= 0.9, s"IVF-PQ served recall@5 = $rServed")

@@ -76,9 +76,20 @@ class Sq8Spec extends AnyFunSuite {
     import spark.implicits._
     val corpus = vecs(4, 8).toDF("cid", "cvec")
     val queries = vecs(1, 8).toDF("qid", "qvec")
-    val e = intercept[IllegalArgumentException] {
-      Ann.sq8TopK(corpus, queries, k = 5, refine = 3)
+    // the ADC verbs share the refine tail: 2 subspaces × 2 sub-centroids
+    val books = Array.tabulate(2, 2)((mi, ci) =>
+      Array.tabulate(4)(j => math.cos(0.11 * (mi * 8 + ci * 4 + j)).toFloat))
+    val cents = Array.tabulate(2)(c => Array.tabulate(8)(j => math.sin(0.5 * (c * 8 + j)).toFloat))
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "sq8TopK" -> (() => Ann.sq8TopK(corpus, queries, k = 5, refine = 3)),
+      "pqTopK" -> (() => Ann.pqTopK(corpus, queries, books, k = 5, refine = 3)),
+      "ivfPqTopK" -> (() => Ann.ivfPqTopK(corpus, queries, cents, books,
+        k = 5, nprobe = 2, refine = 3)),
+      "ivfPqTopKEncoded" -> (() => Ann.ivfPqTopKEncoded(Ann.ivfPqEncode(corpus, cents, books),
+        corpus, queries, cents, books, k = 5, nprobe = 2, refine = 3)))
+    verbs.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("refine"), name)
     }
-    assert(e.getMessage.contains("refine"))
   }
 }
