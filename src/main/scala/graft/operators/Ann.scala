@@ -709,8 +709,8 @@ object Ann extends Serializable {
       else readIvfCidmapAt(spark, dir, m, Some(parts))
 
     def writeSidecar(spark: SparkSession, dir: String, m: IvfManifest,
-        ver: Long): Unit =
-      writeCellstats(spark, dir, ver, readIvfCentroidsAt(spark, dir, m))
+        ver: Long, parts: Seq[Int]): Unit =
+      writeCellstats(spark, dir, ver, parts, readIvfCentroidsAt(spark, dir, m))
 
     def updated(m: IvfManifest, version: Long,
         versions: Map[String, Map[Int, Seq[Long]]]): IvfManifest =
@@ -786,8 +786,15 @@ object Ann extends Serializable {
   /** [[readIvfCells]] against an already-read manifest. */
   def readIvfCellsAt(spark: SparkSession, dir: String, m: IvfManifest,
       onlyCells: Option[Set[Int]] = None): DataFrame =
+    readCellsOf(spark, dir, m.cellVersions, onlyCells)
+
+  /** The cells artifact of the given (cell → versions) map — a
+    * manifest's, or the cells a tick just wrote under its version —
+    * read with its explicit schema (no listing or schema-inference job). */
+  private def readCellsOf(spark: SparkSession, dir: String, versions: Map[Int, Seq[Long]],
+      onlyCells: Option[Set[Int]] = None): DataFrame =
     ManifestIO.readVersionedArtifact(spark, dir, "cells", "cell",
-      "cid BIGINT, cvec ARRAY<FLOAT>, cell INT", m.cellVersions, onlyCells)
+      "cid BIGINT, cvec ARRAY<FLOAT>, cell INT", versions, onlyCells)
 
   /** [[readIvfCidmapAt]] with its own CURRENT read — the monitoring /
     * TVF surface; composed readers must thread one manifest instead. */
@@ -818,22 +825,23 @@ object Ann extends Serializable {
       "cid BIGINT, cell INT, cbucket INT", m.cidVersions, onlyCbuckets)
 
   /** Write the reverse-map rows of the members just written under
-    * `data/<ver>/cells` (read back from the committed-to-be artifact —
-    * no second corpus assignment) and return the materialized cbucket
-    * ids. Batch rows ONLY — the accretive model's write shape; the
-    * caller accretes (append) or replaces (build) the manifest
-    * entries. */
+    * `data/<ver>/cells` into the `written` cells (read back from the
+    * committed-to-be artifact — no second corpus assignment) and return
+    * the materialized cbucket ids. Batch rows ONLY — the accretive
+    * model's write shape; the caller accretes (append) or replaces
+    * (build) the manifest entries. */
   private def writeCidmap(spark: SparkSession, dir: String,
-      ver: Long, cells: Int): Seq[Int] = {
-    ManifestIO.writePartitioned(spark.read.parquet(s"$dir/data/$ver/cells")
-      .select(col("cid"), col("cell").cast("int").as("cell"))
+      ver: Long, written: Seq[Int], cells: Int): Seq[Int] = {
+    ManifestIO.writePartitioned(readCellsOf(spark, dir, written.map(_ -> Seq(ver)).toMap)
+      .select(col("cid"), col("cell"))
       .distinct()
       .withColumn("cbucket", cidCbucket(col("cid"), cells)),
       dir, ver, "cidmap", "cbucket")
   }
 
-  /** Derive one tick's DRIFT-STATS sidecar from its JUST-WRITTEN cells
-    * (read-back, the termstats/bandstats discipline): one
+  /** Derive one tick's DRIFT-STATS sidecar from the `written` cells it
+    * JUST WROTE under `ver` (read-back, the termstats/bandstats
+    * discipline, explicit schema): one
     * (cell, n, sum_cos_fp) row per cell the version wrote — the member
     * count and the order-independent BIGINT sum of floor(cos·10⁶) vs
     * the manifest's committed centroids, exactly the per-row quantity
@@ -847,10 +855,9 @@ object Ann extends Serializable {
     * scanning every committed vector. No-op when the version wrote no
     * cells. */
   private def writeCellstats(spark: SparkSession, dir: String, ver: Long,
-      cents: Array[Array[Float]]): Unit = {
+      written: Seq[Int], cents: Array[Array[Float]]): Unit = {
     import spark.implicits._
-    val cellsDir = s"$dir/data/$ver/cells"
-    if (ManifestIO.partitionIds(spark, cellsDir, "cell=").nonEmpty) {
+    if (written.nonEmpty) {
       // centroid norms once on the 16-row broadcast side, member norm
       // once per row — not 3 dots per (member, centroid) pair; the
       // Scala-side sqrt(dotD) equals the codegen'd sqrt(fvec_dot)
@@ -858,8 +865,8 @@ object Ann extends Serializable {
       val centDf = cents.toSeq.zipWithIndex
         .map { case (cv, c) => (c, cv.toSeq, math.sqrt(dotD(cv, cv))) }
         .toDF("cell", "centvec", "_centl2")
-      spark.read.parquet(cellsDir)
-        .select(col("cell").cast("int").as("cell"), col("cvec"))
+      readCellsOf(spark, dir, written.map(_ -> Seq(ver)).toMap)
+        .select(col("cell"), col("cvec"))
         .join(broadcast(centDf), "cell")
         .select(col("cell"),
           floor(cosinePre(dot(col("cvec"), col("centvec")),
@@ -897,10 +904,10 @@ object Ann extends Serializable {
     // the cid→cell reverse map, fresh with the build
     val cidVers =
       if (present.isEmpty) Map.empty[Int, Seq[Long]]
-      else writeCidmap(spark, dir, ver, cents.length)
+      else writeCidmap(spark, dir, ver, present.keys.toSeq, cents.length)
         .map(_ -> Seq(ver)).toMap
     // the drift-stats sidecar rides every build (see [[writeCellstats]])
-    writeCellstats(spark, dir, ver, cents)
+    writeCellstats(spark, dir, ver, present.keys.toSeq, cents)
     ManifestIO.commit(spark, dir, ver,
       IvfSpec.render(IvfManifest(ver, cents.length, ver, present, priorTxns, cidVers)))
   }
@@ -942,11 +949,11 @@ object Ann extends Serializable {
         // delete/upsert consolidate; [[ivfIndexCompact]] collapses long
         // lists. The drift-stats sidecar rides the same write
         // (batch-sized).
-        writeCellstats(spark, dir, newVer, cents)
+        writeCellstats(spark, dir, newVer, touched, cents)
         m.copy(version = newVer,
           cellVersions = ManifestIO.accrete(m.cellVersions, touched, newVer),
           cidVersions = ManifestIO.accrete(m.cidVersions,
-            writeCidmap(spark, dir, newVer, m.cells), newVer))
+            writeCidmap(spark, dir, newVer, touched, m.cells), newVer))
       }
     }
 
@@ -1002,7 +1009,7 @@ object Ann extends Serializable {
                 .withColumn("cbucket", cidCbucket(col("cid"), m.cells))).distinct()),
               dir, newVer, "cidmap", "cbucket"), newVer)
           }
-        if (touched.nonEmpty) writeCellstats(spark, dir, newVer, cents)
+        writeCellstats(spark, dir, newVer, present, cents)
         m.copy(version = newVer,
           cellVersions = ManifestIO.consolidate(m.cellVersions, touched, present, newVer),
           cidVersions = newCidVers)

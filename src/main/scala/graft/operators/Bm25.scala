@@ -283,7 +283,7 @@ object Bm25 {
       else readDocmapAt(spark, dir, m, Some(parts))
 
     def writeSidecar(spark: SparkSession, dir: String, m: IndexManifest,
-        ver: Long): Unit = writeTermstats(spark, dir, ver)
+        ver: Long, parts: Seq[Int]): Unit = writeTermstats(spark, dir, ver, parts)
 
     def updated(m: IndexManifest, version: Long,
         versions: Map[String, Map[Int, Seq[Long]]]): IndexManifest =
@@ -321,8 +321,10 @@ object Bm25 {
       onlyBuckets: Option[Set[Int]] = None): DataFrame =
     // NO df column: document frequency is a READ-TIME aggregate (a
     // term's bucket is always read whole — every contributing version)
-    ManifestIO.readVersionedArtifact(spark, dir, "postings", "bucket",
-      "t STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, bucket INT", m.bucketVersions, onlyBuckets)
+    ManifestIO.readVersionedArtifact(spark, dir, "postings", "bucket", PostingsDDL,
+      m.bucketVersions, onlyBuckets)
+
+  private val PostingsDDL = "t STRING, doc_id BIGINT, tf BIGINT, dl BIGINT, bucket INT"
 
   /** The committed TERM-STATS sidecar (t, df, bucket) — the Lucene
     * term-dictionary idea applied to the accretive layout: every tick
@@ -338,32 +340,38 @@ object Bm25 {
     ManifestIO.readVersionedArtifact(spark, dir, "termstats", "bucket",
       "t STRING, df BIGINT, bucket INT", m.bucketVersions, onlyBuckets)
 
-  /** Derive one tick's term-stats sidecar from its JUST-WRITTEN
-    * postings (read-back, so the two artifacts agree even for
-    * non-deterministic inputs — the MinhashIndex bands discipline).
-    * No-op when the version wrote no postings. */
-  private def writeTermstats(spark: SparkSession, dir: String,
-      ver: Long): Unit = {
-    val postingsDir = s"$dir/data/$ver/postings"
-    if (ManifestIO.partitionIds(spark, postingsDir, "bucket=").nonEmpty)
-      ManifestIO.writePartitioned(spark.read.parquet(postingsDir)
+  /** Derive one tick's term-stats sidecar from the `buckets` of
+    * postings it JUST WROTE under `ver` (read-back, so the two artifacts
+    * agree even for non-deterministic inputs — the MinhashIndex bands
+    * discipline). The read names those leaf dirs and the postings
+    * schema, so it runs no listing or schema-inference job. No-op when
+    * the version wrote no postings. */
+  private def writeTermstats(spark: SparkSession, dir: String, ver: Long,
+      buckets: Seq[Int]): Unit =
+    if (buckets.nonEmpty)
+      ManifestIO.writePartitioned(ManifestIO.readVersionedArtifact(spark, dir, "postings",
+          "bucket", PostingsDDL, buckets.map(_ -> Seq(ver)).toMap)
         .groupBy(col("bucket"), col("t")).agg(count(lit(1)).as("df"))
         .select(col("t"), col("df"), col("bucket")), dir, ver, "termstats", "bucket")
-  }
 
   /** Write one tick's postings rows under `ver` plus their term-stats
     * delta; returns the materialized buckets. */
   private def writePostings(rows: DataFrame, dir: String, ver: Long): Seq[Int] = {
     val present = ManifestIO.writePartitioned(rows, dir, ver, "postings", "bucket")
-    writeTermstats(rows.sparkSession, dir, ver)
+    writeTermstats(rows.sparkSession, dir, ver, present)
     present
   }
 
-  /** Write one tick's 1-row (n, sdl) stats under `ver`. */
+  /** Write one tick's 1-row (n, sdl) stats under `ver`. An explicit
+    * schema needs no TypeTag-derived encoder, so this branch does no
+    * Scala runtime reflection while the tick's other branches plan
+    * their queries. */
   private def writeStats(spark: SparkSession, dir: String, ver: Long,
       n: Long, sdl: Long): Unit = {
-    import spark.implicits._
-    Seq((n, sdl)).toDF("n", "sdl")
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(n, sdl)),
+        StructType(Seq(StructField("n", LongType, nullable = false),
+          StructField("sdl", LongType, nullable = false))))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/data/$ver/stats")
   }
 
@@ -792,57 +800,77 @@ object Bm25 {
       txn: Option[(String, Long)] = None, crashPoint: Int = 0,
       interleave: () => Unit = () => ()): Unit =
     ManifestIO.tick(spark, dir, Spec, txn, crashPoint, interleave) { m =>
-      // ONE pinned, id-distinct materialization of the batch
-      // (ManifestIO.dedupBatch — the uniform intra-batch rule all tick
-      // verbs share): the stats roll, the touched-bucket plan and the
-      // postings write must all see the same rows even for a
-      // non-deterministic caller frame (a torn batch would commit stats
-      // counting rows the postings never gained); a row re-submitted
-      // within one micro-batch ingests ONCE (rebuild-over-union of the
-      // DISTINCT batch is the contract), and two texts under one id in
-      // one batch reject loudly instead of double-counting n/sdl
-      val docs = ManifestIO.dedupBatch(newDocs, idCol, Seq(textCol), "BM25 append")
+      // ONE pinned, distinct materialization of the batch (the uniform
+      // intra-batch rule all tick verbs share, ManifestIO.dedupBatch):
+      // the stats roll and the postings and docmap writes must all see
+      // the same rows even for a non-deterministic caller frame (a torn
+      // batch would commit stats counting rows the postings never
+      // gained); a row re-submitted within one micro-batch ingests ONCE
+      // (rebuild-over-union of the DISTINCT batch is the contract), and
+      // two texts under one id in one batch reject loudly instead of
+      // double-counting n/sdl
+      val docs = ManifestIO.pinDistinct(newDocs, idCol, Seq(textCol))
+      val plan = planBatch(spark, dir, m, docs, idCol, textCol, "BM25 append")
       // the no-op gate is the batch ROW count, not the touched-bucket
       // count: a nonempty batch of zero-token docs rewrites no postings
       // but must still roll (n, sdl) forward
-      val batch = docs.select(size(tokens(col(textCol))).cast("long").as("dl"))
-        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl"))
-        .head()
-      if (batch.getLong(0) == 0L) None
+      if (plan.rows == 0L) None
       else Some { newVer =>
-        val newTf = tfRows(docs, idCol, textCol)
-          .withColumn("bucket", pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
-        val touched = newTf.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)) // ≤ manifest bucket count values
-        // the ACCRETIVE write: batch rows only — the committed postings
-        // are neither read nor rewritten, so the tick's IO is O(batch)
-        // at any index size (df resolves at read time; see readPostingsAt)
-        // (plus the version's batch-vocabulary-sized term-stats delta)
-        if (touched.nonEmpty)
-          writePostings(newTf.select(postingCols: _*), dir, newVer)
-        val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-        writeStats(spark, dir, newVer,
-          old.getLong(0) + batch.getLong(0), old.getLong(1) + batch.getLong(1))
-        // docmap maintenance — ACCRETIVE, like the postings above: the
-        // batch's doc-sized reverse-map rows only, the version appended
-        // onto the touched dbuckets' lists.
+        // the ACCRETIVE writes, side by side: the batch's postings rows
+        // (plus their batch-vocabulary-sized term-stats delta) and its
+        // doc-sized reverse-map rows only — the committed files are
+        // neither read nor rewritten, so the tick's IO is O(batch) at
+        // any index size (df resolves at read time; see readPostingsAt)
+        val Seq(touched, dbuckets, _) = ManifestIO.sideBySide(spark)(
+          // Σdl = 0: no doc has a token, so there are no postings rows
+          () => if (plan.sdl == 0L) Seq.empty[Int]
+            else writePostings(tfRows(docs, idCol, textCol)
+              .withColumn("bucket", pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
+              .select(postingCols: _*), dir, newVer),
+          () => ManifestIO.writePartitioned(docmapRows(docs, idCol, textCol, m.buckets),
+            dir, newVer, "docmap", "dbucket"),
+          () => {
+            writeStats(spark, dir, newVer, plan.committedN + plan.rows,
+              plan.committedSdl + plan.sdl)
+            Nil
+          })
         m.copy(version = newVer, statsVersion = newVer,
           bucketVersions = ManifestIO.accrete(m.bucketVersions, touched, newVer),
-          docVersions = ManifestIO.accrete(m.docVersions, ManifestIO.writePartitioned(
-            docmapRows(docs, idCol, textCol, m.buckets), dir, newVer, "docmap", "dbucket"),
-            newVer))
+          docVersions = ManifestIO.accrete(m.docVersions, dbuckets, newVer))
       }
     }
+
+  /** A pinned batch's (rows, Σdl) and the committed (n, sdl) of `m`. */
+  private final case class BatchPlan(rows: Long, sdl: Long, committedN: Long,
+      committedSdl: Long)
+
+  /** The ONE plan aggregate of a text-carrying tick over its
+    * [[ManifestIO.pinDistinct]] batch: rows, distinct ids (a batch with
+    * more rows than ids carries two texts under one id and is
+    * rejected), Σdl, and the committed (n, sdl) from a cross-join with
+    * the stats row — one driver round trip where the batch count, the
+    * conflict check and the stats read each took their own. */
+  private def planBatch(spark: SparkSession, dir: String, m: IndexManifest,
+      docs: DataFrame, idCol: String, textCol: String, what: String): BatchPlan = {
+    val r = docs.select(struct(col(idCol)).as("_id"),
+        size(tokens(col(textCol))).cast("long").as("dl"))
+      .agg(count(lit(1)), countDistinct(col("_id")), coalesce(sum(col("dl")), lit(0L)))
+      .crossJoin(readStatsAt(spark, dir, m))
+      .head()
+    ManifestIO.requireOneRevision(docs, idCol, what, r.getLong(0), r.getLong(1))
+    BatchPlan(r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))
+  }
 
   private val postingCols = Seq("t", "doc_id", "tf", "dl", "bucket").map(col)
 
   /** What a consolidating tick takes out of the index, located against
-    * the tick's pinned manifest: the doc ids leaving (distinct), the
-    * (n, Σdl) the stats roll back by, the materialized term buckets
-    * holding their postings and the materialized docmap dbuckets to
-    * rewrite. */
+    * the tick's pinned manifest: the doc ids leaving, the (n, Σdl) the
+    * stats roll back by, the materialized term buckets holding their
+    * postings, the materialized docmap dbuckets to rewrite, and the
+    * committed (n, sdl) the roll starts from — read in the locate's
+    * own plan round trip. */
   private[graft] final case class Removal(ids: DataFrame, n: Long, sdl: Long,
-      buckets: Seq[Int], dbuckets: Seq[Int])
+      buckets: Seq[Int], dbuckets: Seq[Int], committedN: Long, committedSdl: Long)
 
   /** A removal locator: None = nothing to do, no commit. */
   private[graft] type Locate = (SparkSession, String, IndexManifest) => Option[Removal]
@@ -854,18 +882,18 @@ object Bm25 {
     * is read-time, so nothing else needs refreshing; a bucket emptied
     * by the rewrite leaves the manifest); the stats roll by
     * (− removal + new rows); the docmap's located dbuckets rewrite the
-    * same way. `upserts` are pinned, id-distinct (doc_id, text) rows.
-    * The verbs differ only in how they locate. Contract:
-    * tick == rebuild over (corpus − removed) ∪ upserts. */
+    * same way. The three artifacts write side by side. `upserts` are
+    * pinned, id-distinct (doc_id, text) rows. The verbs differ only in
+    * how they locate. Contract: tick == rebuild over
+    * (corpus − removed) ∪ upserts. */
   private[graft] def changeTick(spark: SparkSession, dir: String,
       upserts: Option[DataFrame], locate: Locate,
       txn: Option[(String, Long)] = None, crashPoint: Int = 0): Unit =
     ManifestIO.tick(spark, dir, Spec, txn, crashPoint) { m =>
       locate(spark, dir, m).map { rm =>
-        val old = readStatsAt(spark, dir, m).select(col("n"), col("sdl")).head()
-        require(old.getLong(0) >= rm.n && old.getLong(1) >= rm.sdl,
+        require(rm.committedN >= rm.n && rm.committedSdl >= rm.sdl,
           s"delete batch (${rm.n} docs, ${rm.sdl} tokens) exceeds " +
-            s"the index stats (${old.getLong(0)}, ${old.getLong(1)}) — " +
+            s"the index stats (${rm.committedN}, ${rm.committedSdl}) — " +
             "the batch must be previously ingested documents")
         newVer => {
           val add = upserts.map(_
@@ -879,60 +907,61 @@ object Bm25 {
             .distinct().collect().map(_.getInt(0)))).distinct // ≤ bucket count values
           val kept = readPostingsAt(spark, dir, m, Some(touched.toSet))
             .select(postingCols: _*).join(rm.ids, Seq("doc_id"), "left_anti")
-          val present =
-            if (touched.isEmpty) Seq.empty[Int]
-            else writePostings(newTf.fold(kept)(t => kept.unionByName(t)), dir, newVer)
-          writeStats(spark, dir, newVer,
-            old.getLong(0) - rm.n + add.fold(0L)(_.getLong(0)),
-            old.getLong(1) - rm.sdl + add.fold(0L)(_.getLong(1)))
           // an id's old and new docmap rows share one dbucket (a pure
           // function of the id)
-          val newDocVers =
-            if (rm.dbuckets.isEmpty && upserts.isEmpty) m.docVersions
-            else {
+          val docmapTouched = rm.dbuckets.nonEmpty || upserts.nonEmpty
+          val Seq(present, presentD, _) = ManifestIO.sideBySide(spark)(
+            () => if (touched.isEmpty) Seq.empty[Int]
+              else writePostings(newTf.fold(kept)(t => kept.unionByName(t)), dir, newVer),
+            () => if (!docmapTouched) Seq.empty[Int] else {
               val keptD = readDocmapAt(spark, dir, m, Some(rm.dbuckets.toSet))
                 .join(rm.ids, Seq("doc_id"), "left_anti")
-              ManifestIO.consolidate(m.docVersions, rm.dbuckets, ManifestIO.writePartitioned(
-                upserts.fold(keptD)(d => keptD.unionByName(docmapRows(d, "doc_id", "text",
-                  m.buckets))), dir, newVer, "docmap", "dbucket"), newVer)
-            }
+              ManifestIO.writePartitioned(upserts.fold(keptD)(d => keptD.unionByName(
+                docmapRows(d, "doc_id", "text", m.buckets))), dir, newVer, "docmap", "dbucket")
+            },
+            () => {
+              writeStats(spark, dir, newVer,
+                rm.committedN - rm.n + add.fold(0L)(_.getLong(0)),
+                rm.committedSdl - rm.sdl + add.fold(0L)(_.getLong(1)))
+              Nil
+            })
           m.copy(version = newVer, statsVersion = newVer,
             bucketVersions = ManifestIO.consolidate(m.bucketVersions, touched, present, newVer),
-            docVersions = newDocVers)
+            docVersions =
+              if (docmapTouched) ManifestIO.consolidate(m.docVersions, rm.dbuckets, presentD, newVer)
+              else m.docVersions)
         }
       }
     }
 
-  /** The materialized docmap dbuckets of `ids` (doc_id) — a pure
-    * function of the ids. */
+  /** The distinct docmap dbuckets of `ids` (doc_id) — a pure function
+    * of the ids; materialized or not. */
   private def dbucketsOf(ids: DataFrame, m: IndexManifest): Seq[Int] =
     ids.select(pmod(xxhash64(col("doc_id")), lit(m.buckets)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq // ≤ bucket count values
-      .filter(m.docVersions.contains)
 
   /** Locate a text-carrying takedown batch ([[deleteFromIndex]]): one
-    * pinned, id-distinct copy ([[ManifestIO.dedupBatch]] — a torn batch
-    * could plan buckets for one row set and anti-join another, leaving
-    * a legally deleted document servable with its epoch applied; two
-    * texts under one id reject, since the roll trusts the text); the
-    * term buckets come from its tokens, the roll from its own
-    * (count, Σdl). None for an empty batch. */
+    * pinned, id-distinct copy (the [[ManifestIO.dedupBatch]] rule — a
+    * torn batch could plan buckets for one row set and anti-join
+    * another, leaving a legally deleted document servable with its
+    * epoch applied; two texts under one id reject, since the roll
+    * trusts the text) and its plan aggregate; the term buckets come
+    * from its tokens, the roll from its own (count, Σdl). None for an
+    * empty batch. */
   private[graft] def byText(docs: DataFrame, idCol: String, textCol: String): Locate =
-    (_, _, m) => {
-      val pinned = ManifestIO.dedupBatch(docs, idCol, Seq(textCol), "BM25 delete")
-      val dl = pinned.select(col(idCol).cast("long").as("doc_id"),
-        size(tokens(col(textCol))).cast("long").as("dl"))
-      val batch = dl
-        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
-      if (batch.getLong(0) == 0L) None
+    (spark, dir, m) => {
+      val pinned = ManifestIO.pinDistinct(docs, idCol, Seq(textCol))
+      val plan = planBatch(spark, dir, m, pinned, idCol, textCol, "BM25 delete")
+      if (plan.rows == 0L) None
       else {
         val buckets = pinned
           .select(explode(tokens(col(textCol))).as("t"))
           .select(pmod(xxhash64(col("t")), lit(m.buckets)).cast("int"))
           .distinct().collect().map(_.getInt(0)).toSeq // ≤ bucket count values
           .filter(m.bucketVersions.contains) // only materialized buckets hold rows
-        val ids = dl.select(col("doc_id")).distinct()
-        Some(Removal(ids, batch.getLong(0), batch.getLong(1), buckets, dbucketsOf(ids, m)))
+        val ids = pinned.select(col(idCol).cast("long").as("doc_id")).distinct()
+        Some(Removal(ids, plan.rows, plan.sdl, buckets,
+          dbucketsOf(ids, m).filter(m.docVersions.contains), plan.committedN, plan.committedSdl))
       }
     }
 
@@ -940,30 +969,39 @@ object Bm25 {
     * the ids' dbuckets are a PURE FUNCTION of the ids, so the docmap
     * rows of the committed copies are read from ≤ |ids| dbucket dirs —
     * no postings scan — and carry both the term buckets to rewrite and
-    * the dl to roll back by (a null-text doc's (1, 0) included). The
-    * roll derives from the INDEX: ids
-    * never ingested, deleted earlier or repeated roll nothing. One row
-    * per docmap ROW, not per doc: an id re-ingested under a violated
-    * append contract loses EVERY copy. Only the dbuckets holding a match
-    * are rewritten, plus every candidate dbucket of the `upserted` ids,
-    * where their new rows land; a pure delete whose ids match nothing
-    * is no tick. */
+    * the dl to roll back by (a null-text doc's (1, 0) included). One
+    * collect of the pinned ids' dbuckets (none: no ids), then ONE
+    * aggregate over the matched docmap rows brings the roll, the term
+    * buckets, the matched dbuckets and the committed stats. The roll
+    * derives from the INDEX: ids never ingested, deleted earlier or
+    * repeated roll nothing. One row per docmap ROW, not per doc: an id
+    * re-ingested under a violated append contract loses EVERY copy.
+    * Only the dbuckets holding a match are rewritten, plus every
+    * candidate dbucket of the `upserted` ids, where their new rows
+    * land; a pure delete whose ids match nothing is no tick. */
   private[graft] def byIds(ids0: DataFrame, upserted: Option[DataFrame]): Locate =
     (spark, dir, m) => {
-      val ids = ids0.select(col("doc_id")).distinct().localCheckpoint(true)
-      if (ids.isEmpty) None
+      val ids = ids0.select(col("doc_id")).localCheckpoint(true)
+      val candidates = dbucketsOf(ids, m)
+      if (candidates.isEmpty) None
       else {
-        val matched = readDocmapAt(spark, dir, m, Some(dbucketsOf(ids, m).toSet))
+        // each docmap row once at its first term bucket (or its one
+        // null row when it has none) for the roll; every term bucket
+        // for the rewrite plan — the sets are ≤ bucket count values
+        val first = col("pos").isNull || col("pos") === 0
+        val r = readDocmapAt(spark, dir, m, Some(candidates.filter(m.docVersions.contains).toSet))
           .join(ids, Seq("doc_id"), "left_semi")
-          .select(col("doc_id"), col("dl"), col("tbuckets").as("buckets"))
-          .localCheckpoint(true)
-        val rm = matched
-          .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
-        if (rm.getLong(0) == 0L && upserted.isEmpty) None
-        else Some(Removal(ids, rm.getLong(0), rm.getLong(1),
-          matched.select(explode(col("buckets"))).distinct()
-            .collect().map(_.getInt(0)).toSeq.filter(m.bucketVersions.contains),
-          (dbucketsOf(matched, m) ++ upserted.toSeq.flatMap(dbucketsOf(_, m))).distinct))
+          .select(col("dl"), col("dbucket"), posexplode_outer(col("tbuckets")).as(Seq("pos", "b")))
+          .agg(count(when(first, lit(1))), coalesce(sum(when(first, col("dl"))), lit(0L)),
+            collect_set(col("b")), collect_set(col("dbucket")))
+          .crossJoin(readStatsAt(spark, dir, m))
+          .head()
+        if (r.getLong(0) == 0L && upserted.isEmpty) None
+        else Some(Removal(ids, r.getLong(0), r.getLong(1),
+          r.getSeq[Int](2).filter(m.bucketVersions.contains),
+          (r.getSeq[Int](3) ++ upserted.toSeq.flatMap(dbucketsOf(_, m))
+            .filter(m.docVersions.contains)).distinct,
+          r.getLong(4), r.getLong(5)))
       }
     }
 

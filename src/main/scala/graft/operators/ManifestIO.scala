@@ -479,15 +479,31 @@ private[graft] object ManifestIO {
     * jobs (stats roll, postings write, reverse maps) without tearing. */
   def dedupBatch(docs: DataFrame, idCol: String, payload: Seq[String],
       what: String): DataFrame = {
-    val uniq = docs.select((idCol +: payload).map(col): _*)
-      .distinct().localCheckpoint(true)
-    val conflicts = uniq.groupBy(col(idCol)).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).collect()
-    require(conflicts.isEmpty,
-      s"id ${conflicts.headOption.map(_.get(0)).orNull} carries conflicting " +
-        s"payloads in one $what batch — collapse revisions per key upstream")
+    val uniq = pinDistinct(docs, idCol, payload)
+    val conflict = conflictingId(uniq, idCol)
+    require(conflict.isEmpty, conflictMessage(conflict.orNull, what))
     uniq
   }
+
+  /** [[dedupBatch]]'s pin without its conflict check, for a tick that
+    * counts the pinned rows and their distinct ids in its own plan
+    * aggregate and then calls [[requireOneRevision]]. */
+  def pinDistinct(docs: DataFrame, idCol: String, payload: Seq[String]): DataFrame =
+    docs.select((idCol +: payload).map(col): _*).distinct().localCheckpoint(true)
+
+  /** [[dedupBatch]]'s rejection from counts: a [[pinDistinct]] batch of
+    * `rows` rows over `ids` distinct ids carries two payloads under one
+    * id iff the two differ. The conflicting id is looked up only then. */
+  def requireOneRevision(uniq: DataFrame, idCol: String, what: String,
+      rows: Long, ids: Long): Unit =
+    require(rows == ids, conflictMessage(conflictingId(uniq, idCol).orNull, what))
+
+  private def conflictingId(uniq: DataFrame, idCol: String): Option[Any] =
+    uniq.groupBy(col(idCol)).agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1).limit(1).collect().headOption.map(_.get(0))
+
+  private def conflictMessage(id: Any, what: String): String =
+    s"id $id carries conflicting payloads in one $what batch — collapse revisions per key upstream"
 
   /** BUILD/REBUILD slot allocation, shared by the three index builds:
     * the data version the build writes (committed + 1, or 1 on a fresh
@@ -723,6 +739,40 @@ private[graft] object ManifestIO {
 
   // ───────────────────────── shared lifecycle ─────────────────────────
 
+  /** Run a tick's INDEPENDENT artifact writes side by side and return
+    * their results in branch order. A one-task write stage leaves the
+    * other cores idle, so the artifacts of one tick (e.g. BM25's
+    * postings→termstats chain, docmap and stats row) overlap instead of
+    * queueing. One fresh thread per branch, so the branch count is the
+    * artifact count; a thread started here inherits the caller's Spark
+    * local properties (job group, description, scheduler pool) and
+    * active session, so a listener or a job-group cancel sees the tick
+    * as one unit. Every branch is joined before this returns or
+    * rethrows: on a failure, no sibling is still writing under
+    * `data/<v>` when a retry allocates the same slot. The first failing
+    * branch's exception (in branch order) is rethrown, the others'
+    * suppressed onto it. A caller inside a query's analysis (a SQL
+    * table function runs its tick there) holds the session catalog's
+    * monitor, which every branch needs to plan its own query: there the
+    * branches run one after the other on the caller. */
+  def sideBySide[T](spark: SparkSession)(branches: (() => T)*): Seq[T] =
+    if (Thread.holdsLock(spark.sessionState.catalog)) branches.map(_())
+    else {
+      val done = new Array[scala.util.Try[T]](branches.size)
+      val threads = branches.zipWithIndex.map { case (b, i) =>
+        val t = new Thread(() => done(i) =
+          try scala.util.Success(b()) catch { case e: Throwable => scala.util.Failure(e) },
+          s"index-tick-write-$i")
+        t.setDaemon(true)
+        t.start()
+        t
+      }
+      threads.foreach(_.join())
+      val failures = done.toSeq.collect { case scala.util.Failure(e) => e }
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+      done.toSeq.map(_.get)
+    }
+
   /** `p:v1|v2,…` — the version-map codec of every accreting artifact,
     * sorted by partition. A legacy single-owner entry (`p:v`) parses as
     * a one-element list, so pre-accretion dirs read unchanged. */
@@ -787,8 +837,9 @@ private[graft] object ManifestIO {
       * (partition column last). */
     def read(spark: SparkSession, dir: String, m: M, name: String,
         parts: Set[Int]): DataFrame
-    /** Write the sidecar of the artifact just rewritten under `ver`. */
-    def writeSidecar(spark: SparkSession, dir: String, m: M, ver: Long): Unit
+    /** Write the sidecar of the artifact whose `parts` were just
+      * rewritten under `ver`. */
+    def writeSidecar(spark: SparkSession, dir: String, m: M, ver: Long, parts: Seq[Int]): Unit
     def updated(m: M, version: Long, versions: Map[String, Map[Int, Seq[Long]]]): M
     def txns(m: M): Map[String, Long]
     def withTxns(m: M, txns: Map[String, Long]): M
@@ -859,7 +910,7 @@ private[graft] object ManifestIO {
       val present = if (ps.isEmpty) Seq.empty else {
         val out = writePartitioned(spec.read(spark, dir, m, a.name, ps.toSet),
           dir, ver, a.name, a.partCol)
-        if (a.sidecar.nonEmpty) spec.writeSidecar(spark, dir, m, ver)
+        if (a.sidecar.nonEmpty) spec.writeSidecar(spark, dir, m, ver, out)
         out
       }
       a.name -> consolidate(a.versions, ps, present, ver)

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Ann, Bm25, MinhashIndex}
@@ -22,46 +20,11 @@ class ServeJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
   import spark.implicits._
 
-  /** (job description, stage names) of every job, per job group. */
-  private final class Jobs extends SparkListener {
-    val byGroup = new ConcurrentHashMap[String, Vector[(String, Seq[String])]]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-      // a stage's name, plus the engine frame that planned it when the
-      // name is only a thread-pool frame (broadcasts, adaptive stages)
-      val job = (prop("spark.job.description").getOrElse(""), e.stageInfos.map(st =>
-        st.name + st.details.linesIterator.find(_.contains("graft.operators"))
-          .fold("")(" via " + _.trim)))
-      byGroup.merge(prop("spark.jobGroup.id").getOrElse("-"), Vector(job), _ ++ _)
-    }
-  }
+  private def jobsOf[T](group: String)(body: => T): (T, Vector[JobsOf.Job]) =
+    JobsOf(spark, group)(body)
 
-  /** The jobs `body` ran. A sentinel job in its own group follows it;
-    * the listener bus delivers in order, so once the sentinel is seen
-    * every job of the call has been counted. */
-  private def jobsOf[T](group: String)(body: => T): (T, Vector[(String, Seq[String])]) = {
-    val sc = spark.sparkContext
-    val jobs = new Jobs
-    sc.addSparkListener(jobs)
-    try {
-      sc.setJobGroup(group, group)
-      val out = body
-      sc.setJobGroup(s"$group.sentinel", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 60000L
-      while (!jobs.byGroup.containsKey(s"$group.sentinel")) {
-        assert(System.currentTimeMillis() < deadline, "listener never saw the sentinel job")
-        Thread.sleep(10)
-      }
-      (out, jobs.byGroup.getOrDefault(group, Vector.empty))
-    } finally sc.removeSparkListener(jobs)
-  }
-
-  private def checkJobs(what: String, jobs: Vector[(String, Seq[String])], budget: Int): Unit = {
-    val planning = jobs.filter { case (desc, stages) =>
-      desc.contains("Listing leaf files") || stages.exists(_.startsWith("parquet at "))
-    }
+  private def checkJobs(what: String, jobs: Vector[JobsOf.Job], budget: Int): Unit = {
+    val planning = JobsOf.planning(jobs)
     assert(planning.isEmpty, s"$what ran listing or schema-inference jobs: $planning")
     assert(jobs.size <= budget, s"$what ran ${jobs.size} jobs (budget $budget): $jobs")
   }
